@@ -59,4 +59,23 @@ object GraftSession {
         spark.experimental.extraOptimizations :+ graft.plans.IntervalBroadcastRule
     spark
   }
+
+  /** Run `body` with the given session conf keys set, restoring every key
+    * to its value from BEFORE the call in a finally — whatever `body` did
+    * to it meanwhile, and also when `body` throws. A leaked override (AQE
+    * off, a narrowed shuffle width) would silently change every later
+    * query in a long-lived session. The settings are session-global for
+    * the body's duration: a query planned concurrently on the SAME
+    * session sees them too.
+    */
+  def withConf[A](spark: SparkSession, settings: (String, String)*)(body: => A): A = {
+    val was = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally was.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.GraftSession
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -97,8 +98,8 @@ object Bpe {
     * and materializing query stages per round — fixed driver latency
     * that dominates a loop over a few hundred rows. For the loop only,
     * AQE goes off and the shuffle width is sized to the symbol volume
-    * (the same rows/2000 rule the rank loop uses); both settings restore
-    * in a finally. Pair counts, the (cnt desc, sym, nxt) argmax, and the
+    * (the same rows/2000 rule the rank loop uses); GraftSession.withConf
+    * restores both. Pair counts, the (cnt desc, sym, nxt) argmax, and the
     * merge windows are partitioning-independent, so results are
     * unchanged on any width.
     */
@@ -106,24 +107,22 @@ object Bpe {
       (List[(Int, String, String, Long)], DataFrame) = {
     val spark = wf.sparkSession
     // The tuning below mutates SESSION-global conf for the loop's
-    // duration (restored in the finally): any query planned concurrently
+    // duration (restored on exit): any query planned concurrently
     // on the SAME SparkSession would run at the narrowed width / without
     // AQE. Every declared gate runs its queries sequentially on one
     // session, so the assumption holds here; a deployment that shares a
     // session across threads must confine the loop to its own
     // spark.newSession() (DataFrames would need re-binding — not done
     // here because nothing in this repo runs concurrent queries).
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
     val pWas = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // the width is listed at its current value so that the narrowed width
+    // learnTuned sets mid-loop is restored on exit
+    GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> pWas) {
       // pWas can hold a non-integer on exotic deployments ("auto" under
       // some resource managers): fall back to the Spark default
       learnTuned(spark, wf, rounds,
         scala.util.Try(pWas.toInt).getOrElse(200))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", pWas)
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -61,15 +62,9 @@ object LinkAnalysis {
     // to improve — but it would re-plan and materialize query stages every
     // round, and the driver-side latency of ~40 extra micro-jobs dominates
     // an iterative loop over node-sized tables (measured ~2x at sf0.1).
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       iterateNoAqe(spark, edges, srcCol, dstCol, iters, dampNum, dampDen,
         scale, seeds, lazyFinal)
-    } finally {
-      // restore even when a round fails — a leaked adaptive=false would
-      // silently degrade every later query in a long-lived session
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
     }
   }
 
@@ -268,9 +263,7 @@ object LinkAnalysis {
     // CollectMetrics node — the observation would never fire and the
     // final get would block forever
     require(k >= 1, s"hitsTopK needs k >= 1, got $k")
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val e0 = edges.select(col(srcCol).cast("long").as("src"),
           col(dstCol).cast("long").as("dst"))
@@ -389,8 +382,6 @@ object LinkAnalysis {
       }
       spark.createDataFrame(
         spark.sparkContext.parallelize(normed, 1), outSchema)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
     }
   }
 

@@ -1202,7 +1202,10 @@ object WarehouseQueries {
         .withColumn("minute_total", sum(col("slots_milli")).over(perMinute))
         .select(col("minute_idx"), col("job_id"), col("slots_milli"),
           col("n_jobs"), col("minute_total"),
-          (col("slots_milli").cast("double") / col("minute_total")).as("share"))
+          // a minute whose every job floors to 0 milli-slots has no
+          // demand to share: NULL, as in the oracle's NULLIF
+          (col("slots_milli").cast("double") /
+            nullif(col("minute_total"), lit(0L))).as("share"))
     }),
 
     // S9+ (audit breadth): the tableDataRead event leg — the reference's
@@ -3822,6 +3825,7 @@ object WarehouseQueries {
         |FROM r JOIN g ON r.job_id = g.job_id""".stripMargin,
 
     // timeline fan-out + exact integer per-minute totals, shares row-level
+    // (NULL where the minute's total demand is 0)
     "s9_audit_slots" ->
       """WITH base AS (
         |  SELECT event_id % 997 AS job_id, event_type, ts, value,
@@ -3854,7 +3858,7 @@ object WarehouseQueries {
         |  FROM tl GROUP BY 1)
         |SELECT tl.minute_idx, tl.job_id, tl.slots_milli,
         |  tot.n_jobs, tot.minute_total,
-        |  CAST(tl.slots_milli AS DOUBLE) / tot.minute_total AS share
+        |  CAST(tl.slots_milli AS DOUBLE) / NULLIF(tot.minute_total, 0) AS share
         |FROM tl JOIN tot USING (minute_idx)""".stripMargin,
 
     "a5_cube" ->

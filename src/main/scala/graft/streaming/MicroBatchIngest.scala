@@ -4,7 +4,6 @@ import graft.core.{Batch, BatchId, BatchWindow}
 import graft.operators.DelIns
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
 /** Micro-batch ingestion as Structured Streaming.
@@ -12,7 +11,7 @@ import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
   * The reference's "streams" are 10-minute cron DAGs
   * (reference dags/history_tables_dag.py:43, a 10-minute cron) that export a
   * ledger range to NDJSON and del-ins load it. Structurally that is a file
-  * stream with Trigger.AvailableNow: each trigger drains the files that
+  * stream with an AvailableNow trigger: each trigger drains the files that
   * arrived since the last checkpoint, stamps batch lineage, and writes via
   * the same idempotent del-ins path — rerunning a failed trigger overwrites
   * the same batch partitions, so end-to-end semantics stay exactly-once
@@ -62,18 +61,13 @@ object MicroBatchIngest {
       .option("mode", "FAILFAST")
       .json(inputGlob)
 
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val stamped = Batch
-          .stampLineage(batch, BatchId(runId, alias), window, insertTs = window.end)
-          .withColumn("p_batch", lit(f"$runId%s-$batchId%06d"))
-        new DelIns.Warehouse(spark, warehousePath, Seq("p_batch")).loadBatch(stamped)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Drain.run(stream, checkpoint) { (batch: DataFrame, batchId: Long) =>
+      val stamped = Batch
+        .stampLineage(batch, BatchId(runId, alias), window, insertTs = window.end)
+        .withColumn("p_batch", lit(f"$runId%s-$batchId%06d"))
+      new DelIns.Warehouse(spark, warehousePath, Seq("p_batch")).loadBatch(stamped)
+      ()
+    }
   }
 
   /** Streaming upsert into a warehouse table: each micro-batch MERGES its
@@ -111,42 +105,24 @@ object MicroBatchIngest {
     // be recovered from storage — an in-memory pointer alone would fold
     // the first post-restart batch against nothing and silently drop
     // every pre-restart key. Each batch reads the newest state version
-    // STRICTLY BELOW its own batch id: a replayed batch (crash after its
-    // state write but before its checkpoint commit) then reads its
-    // predecessor and overwrites its own possibly-partial dir — never the
-    // dir it is reading — and batch 0 of a fresh checkpoint reads nothing
-    // even if the stateRoot holds leftovers from a dead run (ck and
-    // stateRoot form one logical stream; pair them).
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(stateRoot), spark.sparkContext.hadoopConfiguration)
-    val rootPath = new org.apache.hadoop.fs.Path(stateRoot)
-    def newestBelow(id: Long): Option[String] =
-      if (!fs.exists(rootPath)) None
-      else fs.listStatus(rootPath).toSeq
-        .map(_.getPath.getName)
-        .filter(_.matches("state_v\\d+"))
-        .map(_.stripPrefix("state_v").toLong)
-        .filter(_ < id)
-        .sorted.lastOption.map(v => s"$stateRoot/state_v$v")
+    // STRICTLY BELOW its own batch id (Drain.stateBefore), and batch 0 of
+    // a fresh checkpoint reads nothing even if the stateRoot holds
+    // leftovers from a dead run (ck and stateRoot form one logical
+    // stream; pair them).
     // tracks the newest version THIS run wrote, for the return value only
     @volatile var lastWritten: Option[String] = None
-    val q = changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev = newestBelow(batchId).map(spark.read.parquet(_))
-        val union = prev.fold(batch)(_.unionByName(batch))
-        val next = graft.operators.CurrentState
-          .lastByKeyAgg(union, keys, Seq(versionCol))
-        val out = s"$stateRoot/state_v$batchId"
-        next.write.mode("overwrite").parquet(out)
-        lastWritten = Some(out)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Drain.run(changes, checkpoint) { (batch: DataFrame, batchId: Long) =>
+      val prev = Drain.stateBefore(spark, stateRoot, batchId).map(spark.read.parquet(_))
+      val union = prev.fold(batch)(_.unionByName(batch))
+      val next = graft.operators.CurrentState
+        .lastByKeyAgg(union, keys, Seq(versionCol))
+      val out = s"$stateRoot/state_v$batchId"
+      next.write.mode("overwrite").parquet(out)
+      lastWritten = Some(out)
+      ()
+    }
     // no new batches on a resume: the newest committed version IS the state
-    lastWritten.orElse(newestBelow(Long.MaxValue))
+    lastWritten.orElse(Drain.stateBefore(spark, stateRoot, Long.MaxValue))
       .getOrElse(sys.error("mergeDrain: no batches and no prior state"))
   }
 

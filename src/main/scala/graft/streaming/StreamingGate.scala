@@ -1,17 +1,17 @@
 package graft.streaming
 
+import graft.core.GraftSession
 import graft.sources.Tables
-import graft.typed.{Event, Session}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import graft.typed.Event
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DecimalType, TimestampNTZType, TimestampType}
 
 /** Batch-callable drains of the streaming pipelines, so the stateful
   * operators go through the SAME oracle hash gate as the batch ones.
   *
   * Each gate stages a deterministic input under a scratch dir, runs the
-  * real Structured Streaming pipeline over it with Trigger.AvailableNow
+  * real Structured Streaming pipeline over it through [[Drain.run]]
   * (fresh checkpoint per run — the drain is the unit under test), spills
   * every micro-batch's output to parquet via foreachBatch (distributed —
   * no driver collect), and returns a batch DataFrame over the drained
@@ -29,17 +29,22 @@ object StreamingGate {
   private def cleanDir(spark: SparkSession, path: String): Unit =
     graft.core.Scratch.clean(spark, path)
 
-  /** Run `body` with shuffle partitions sized to DRAIN state volume (8 --
-    * ample for a gate's micro-batches; a cluster sizes this in its own
-    * conf), restoring the session setting afterwards. ONE definition:
-    * the save/set/restore block hand-copied per gate invites a missing
-    * `finally` that leaves every later batch query running at 8. */
-  private def withDrainPartitions[A](spark: SparkSession)(body: => A): A = {
-    val pWas = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try body
-    finally spark.conf.set("spark.sql.shuffle.partitions", pWas)
-  }
+  /** [[Drain.run]] with shuffle partitions scoped to DRAIN state volume.
+    * Stateful-operator partitions are fixed at the query's FIRST start
+    * from spark.sql.shuffle.partitions, and every state store instance
+    * pays open+commit fsyncs per micro-batch (a stream-stream join keeps
+    * FOUR stores per partition — measured taskSum 116 s vs cpuSum 3 s at
+    * 32 partitions on the drain volume). State partitioning is sized to
+    * the state volume, not the session's scan parallelism: 8 is ample
+    * for a gate drain; a cluster deployment sizes this in its own conf
+    * (the setting is scoped to the drain and restored).
+    */
+  private[streaming] def scopedDrain[T](ds: Dataset[T], ck: String,
+                                        outputMode: String = "append")
+                                       (fn: (Dataset[T], Long) => Unit): Unit =
+    GraftSession.withConf(ds.sparkSession, "spark.sql.shuffle.partitions" -> "8") {
+      Drain.run(ds, ck, outputMode)(fn)
+    }
 
   /** Stage `df` to parquet and reopen it as a file stream (the shape real
     * ingest has: files arriving in a directory).
@@ -50,31 +55,33 @@ object StreamingGate {
     spark.readStream.schema(df.schema).parquet(in)
   }
 
+  /** Stage `df` as `n` parquet files (round-robin, or hashed on `by`) and
+    * reopen them as a stream of SINGLE-FILE micro-batches, so a fold
+    * really runs once per file (the default would drain all files in
+    * one batch).
+    */
+  private def stageSlices(spark: SparkSession, df: DataFrame, n: Int, in: String,
+                          by: Column*): DataFrame = {
+    cleanDir(spark, in)
+    (if (by.isEmpty) df.repartition(n) else df.repartition(n, by: _*))
+      .write.mode("overwrite").parquet(in)
+    spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(in)
+  }
+
+  /** The input version of batch `id` in a versioned-fold gate: the newest
+    * `state_v<j>`, j < id, under `root` ([[Drain.stateBefore]]), else the
+    * gate's seed state at `root/seed`.
+    */
+  private def stateOrSeed(spark: SparkSession, root: String)(id: Long): String =
+    Drain.stateBefore(spark, root, id).getOrElse(s"$root/seed")
+
   private def drain[T](ds: Dataset[T], out: String, ck: String,
                        withBatchId: Boolean = false,
                        outputMode: String = "append"): Unit = {
-    val spark = ds.sparkSession
-    cleanDir(spark, out); cleanDir(spark, ck)
-    // Stateful-operator partitions are fixed at the query's FIRST start
-    // from spark.sql.shuffle.partitions, and every state store instance
-    // pays open+commit fsyncs per micro-batch (a stream-stream join keeps
-    // FOUR stores per partition — measured taskSum 116 s vs cpuSum 3 s at
-    // 32 partitions on the drain volume). State partitioning is sized to
-    // the state volume, not the session's scan parallelism: 8 is ample
-    // for a gate drain; a cluster deployment sizes this in its own conf
-    // (the setting is scoped to the drain and restored).
-    withDrainPartitions(spark) {
-      val q = ds.writeStream
-        .outputMode(outputMode)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: Dataset[T], id: Long) =>
-          val df = if (withBatchId) b.toDF().withColumn("__batch", lit(id)) else b.toDF()
-          df.write.mode("append").parquet(out)
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    cleanDir(ds.sparkSession, out); cleanDir(ds.sparkSession, ck)
+    scopedDrain(ds, ck, outputMode) { (b: Dataset[T], id: Long) =>
+      val df = if (withBatchId) b.toDF().withColumn("__batch", lit(id)) else b.toDF()
+      df.write.mode("append").parquet(out)
     }
   }
 
@@ -222,13 +229,7 @@ object StreamingGate {
     // (a stale checkpoint would skip the re-staged input's batches)
     cleanDir(spark, state)
     cleanDir(spark, ck)
-    // several staged files AND maxFilesPerTrigger=1 -> the fold really runs
-    // once per micro-batch (the default would drain all files in one)
-    val staged = seed.unionByName(changes).repartition(4)
-    cleanDir(spark, in)
-    staged.write.mode("overwrite").parquet(in)
-    val stream = spark.readStream.schema(staged.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
+    val stream = stageSlices(spark, seed.unionByName(changes), 4, in)
     val fin = MicroBatchIngest.mergeDrain(
       stream, Seq("o_orderkey"), "version", state, ck)
     spark.read.parquet(fin)
@@ -281,7 +282,7 @@ object StreamingGate {
     val idxRoot = scratch("incr_idx", dir)
     val mapRoot = scratch("incr_map", dir)
     val ck = scratch("incr_ck", dir)
-    Seq(in, idxRoot, mapRoot, ck).foreach(cleanDir(spark, _))
+    Seq(idxRoot, mapRoot, ck).foreach(cleanDir(spark, _))
     // the gate gets its own EVOLVING copy of the index (appended per
     // batch) so the shared staged artifact stays immutable for the batch
     // gates — a raw FILE copy of the immutable parquet dirs, not a Spark
@@ -299,54 +300,26 @@ object StreamingGate {
           false, conf)
       }
     }
-    mapping0.write.mode("overwrite").parquet(s"$mapRoot/v_init")
-    // two deterministic files (hash-partitioned on doc_id % 2) +
-    // maxFilesPerTrigger=1 -> the fold really runs once per micro-batch,
-    // with near-dup pairs genuinely straddling the batch boundary. Two
-    // batches exercise everything a third did — cross-batch candidates,
-    // index append, mapping fold — at one fold less of fixed micro-batch
-    // machinery; slicing-independence itself is pinned by the oracle
-    // (ANY slicing must equal the full recompute) and by the batch
-    // incremental spec.
-    delta.withColumn("__b", pmod(col("doc_id"), lit(2)))
-      .repartition(2, col("__b")).drop("__b")
-      .write.mode("overwrite").parquet(in)
-    val stream = spark.readStream.schema(delta.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    // foreachBatch runs serially on the driver, so the version pointer is
-    // plain local state; it only advances after a batch fully commits
-    var cur = s"$mapRoot/v_init"
-    withDrainPartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          if (!b.isEmpty) {
-            val next = s"$mapRoot/v$id"
-            graft.operators.Dedup.ingestDeltaCrawl(
-              b, "doc_id", "text", idxRoot,
-              spark.read.parquet(cur), next, txnId = s"batch-$id")
-            cur = next
-          }
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    mapping0.write.mode("overwrite").parquet(s"$mapRoot/seed")
+    // two deterministic files (hash-partitioned on doc_id % 2), one per
+    // micro-batch, with near-dup pairs genuinely straddling the batch
+    // boundary. Two batches exercise everything a third did —
+    // cross-batch candidates, index append, mapping fold — at one fold
+    // less of fixed micro-batch machinery; slicing-independence itself is
+    // pinned by the oracle (ANY slicing must equal the full recompute)
+    // and by the batch incremental spec.
+    val stream = stageSlices(spark, delta, 2, in, pmod(col("doc_id"), lit(2)))
+    val mappingBefore = stateOrSeed(spark, mapRoot) _
+    scopedDrain(stream, ck) { (b: DataFrame, id: Long) =>
+      if (!b.isEmpty)
+        graft.operators.Dedup.ingestDeltaCrawl(
+          b, "doc_id", "text", idxRoot,
+          spark.read.parquet(mappingBefore(id)), s"$mapRoot/state_v$id",
+          txnId = s"batch-$id")
     }
-    spark.read.parquet(cur)
+    spark.read.parquet(mappingBefore(Long.MaxValue))
   }
 
-  /** Streaming incremental SCD2 maintenance drained to the interval
-    * table: the post-cut purchase log arrives as a file stream in
-    * TIME-ORDERED single-file micro-batches (files staged sequentially so
-    * modification times ascend — the file source drains oldest-first,
-    * the shape real time-partitioned ingest has), and each batch folds
-    * through [[graft.operators.MergeOps.scd2Merge]] — touched keys' open
-    * intervals close, new ones append, closed history never rewinds, and
-    * the late-data guard stays ON (time-ordered arrival is exactly its
-    * precondition). The oracle is the FULL-recompute window over the
-    * whole log: only a correct N-fold incremental maintenance matches it.
-    */
   /** Streaming weighted (priority) sampling drained per key: documents
     * arrive in single-file micro-batches and each batch folds the per-key
     * top-(k+1) priority candidates
@@ -365,40 +338,19 @@ object StreamingGate {
     val in = scratch("ps_in", dir)
     val stateRoot = scratch("ps_state", dir)
     val ck = scratch("ps_ck", dir)
-    Seq(in, stateRoot, ck).foreach(cleanDir(spark, _))
-    docs.limit(0).write.mode("overwrite").parquet(s"$stateRoot/v_init")
-    docs.repartition(4).write.mode("overwrite").parquet(in)
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    // The fold's input version derives from the BATCH ID, never from a
-    // mutable pointer: batch `id` reads the newest state v<j> with
-    // j < id and overwrites v<id>. On the documented Structured
-    // Streaming retry contract (write succeeded, checkpoint commit
-    // didn't) the replay therefore re-reads the same PRIOR state — a
-    // pointer would have advanced to v<id>, making the fold read the
-    // path it is overwriting (Spark aborts) or double-fold on restart.
-    def stateBefore(id: Long): String = {
-      val vs = Option(new java.io.File(stateRoot).listFiles()).toSeq.flatten
-        .map(_.getName).filter(_.matches("v\\d+")).map(_.drop(1).toLong)
-        .filter(_ < id)
-      if (vs.isEmpty) s"$stateRoot/v_init" else s"$stateRoot/v${vs.max}"
-    }
-    withDrainPartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          if (!b.isEmpty) {
-            Sampling.priorityCandidatesPerKey(
-                spark.read.parquet(stateBefore(id)).unionByName(
-                  b.select(col("lang"), col("doc_id"), col("n_chars"))),
-                "lang", "doc_id", "n_chars", k = 20)
-              .write.mode("overwrite").parquet(s"$stateRoot/v$id")
-          }
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    Seq(stateRoot, ck).foreach(cleanDir(spark, _))
+    docs.limit(0).write.mode("overwrite").parquet(s"$stateRoot/seed")
+    val stream = stageSlices(spark, docs, 4, in)
+    // the fold's input version derives from the batch id, so a replayed
+    // batch re-reads the same prior state (Drain.stateBefore)
+    val stateBefore = stateOrSeed(spark, stateRoot) _
+    scopedDrain(stream, ck) { (b: DataFrame, id: Long) =>
+      if (!b.isEmpty)
+        Sampling.priorityCandidatesPerKey(
+            spark.read.parquet(stateBefore(id)).unionByName(
+              b.select(col("lang"), col("doc_id"), col("n_chars"))),
+            "lang", "doc_id", "n_chars", k = 20)
+          .write.mode("overwrite").parquet(s"$stateRoot/state_v$id")
     }
     Sampling.prioritySamplePerKey(
         spark.read.parquet(stateBefore(Long.MaxValue)),
@@ -408,6 +360,17 @@ object StreamingGate {
         col("priority"), col("est_weight"))
   }
 
+  /** Streaming incremental SCD2 maintenance drained to the interval
+    * table: the post-cut purchase log arrives as a file stream in
+    * TIME-ORDERED single-file micro-batches (files staged sequentially so
+    * modification times ascend — the file source drains oldest-first,
+    * the shape real time-partitioned ingest has), and each batch folds
+    * through [[graft.operators.MergeOps.scd2Merge]] — touched keys' open
+    * intervals close, new ones append, closed history never rewinds, and
+    * the late-data guard stays ON (time-ordered arrival is exactly its
+    * precondition). The oracle is the FULL-recompute window over the
+    * whole log: only a correct N-fold incremental maintenance matches it.
+    */
   def scd2Gate(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{AsOfJoin, MergeOps}
     val ev = Tables.load(spark, dir, "events")
@@ -417,44 +380,32 @@ object StreamingGate {
     val in = scratch("scd2_in", dir)
     val store = scratch("scd2_store", dir)
     val ck = scratch("scd2_ck", dir)
-    Seq(in, store, ck).foreach(cleanDir(spark, _))
+    Seq(store, ck).foreach(cleanDir(spark, _))
     AsOfJoin.scd2Intervals(ev.filter(col("ts") < cut),
         Seq("user_id"), "ts", Seq("event_id"))
-      .write.mode("overwrite").parquet(s"$store/v_init")
+      .write.mode("overwrite").parquet(s"$store/seed")
     // stage three ascending time windows as ordered files (shared helper)
     val bounds = Seq("2024-01-25 00:00:00", "2024-01-28 00:00:00",
       "2200-01-01 00:00:00")
-    stageOrderedSlices(spark, in, bounds.zipWithIndex.map { case (hiS, i) =>
+    val stream = stageOrderedSlices(spark, in, bounds.zipWithIndex.map { case (hiS, i) =>
       val lo = if (i == 0) cut else lit(bounds(i - 1)).cast("timestamp")
       ev.filter(col("ts") >= lo && col("ts") < lit(hiS).cast("timestamp"))
     })
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    var cur = s"$store/v_init"
-    withDrainPartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          if (!b.isEmpty) {
-            val next = s"$store/v$id"
-            MergeOps.scd2Merge(spark.read.parquet(cur), b,
-                Seq("user_id"), "ts", Seq("event_id"))
-              .write.mode("overwrite").parquet(next)
-            cur = next
-          }
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    val stateBefore = stateOrSeed(spark, store) _
+    scopedDrain(stream, ck) { (b: DataFrame, id: Long) =>
+      if (!b.isEmpty)
+        MergeOps.scd2Merge(spark.read.parquet(stateBefore(id)), b,
+            Seq("user_id"), "ts", Seq("event_id"))
+          .write.mode("overwrite").parquet(s"$store/state_v$id")
     }
-    spark.read.parquet(cur)
+    spark.read.parquet(stateBefore(Long.MaxValue))
       .select("user_id", "event_id", "value", "valid_from", "valid_to")
   }
 
   /** Write each slice as one parquet file into `in` with ASCENDING
-    * mtimes, so `maxFilesPerTrigger=1` replays them as ordered
-    * micro-batches (the scd2Gate staging shape, factored).
+    * mtimes and reopen `in` as a `maxFilesPerTrigger=1` stream, which
+    * replays them as ordered micro-batches (every slice has the first
+    * slice's schema).
     *
     * ONE write job for every slice (was one sequential coalesce(1) job
     * per slice, ~3x the fixed job cost): rows are tagged with their slice
@@ -469,8 +420,9 @@ object StreamingGate {
     * empty batches (the audit seq and watermark advance only on rows).
     */
   private def stageOrderedSlices(spark: SparkSession, in: String,
-                                 slices: Seq[DataFrame]): Unit = {
+                                 slices: Seq[DataFrame]): DataFrame = {
     import org.apache.hadoop.fs.Path
+    cleanDir(spark, in)
     val conf = spark.sparkContext.hadoopConfiguration
     val f = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(in), conf)
     f.mkdirs(new Path(in))
@@ -495,6 +447,8 @@ object StreamingGate {
       }
     }
     f.delete(new Path(tmp), true)
+    spark.readStream.schema(slices.head.schema)
+      .option("maxFilesPerTrigger", 1).parquet(in)
   }
 
   /** Watermark late-data ACCOUNTING drained to a table — the operational
@@ -505,9 +459,9 @@ object StreamingGate {
     * watermark entering batch b is max(event time over batches < b)
     * minus the delay, rows below it are late. The audit is explicit
     * relational arithmetic in the drain (one aggregate per batch + a
-    * driver scalar for the running max, the scd2Gate state pattern), so
-    * the oracle can replay it: batch assignment, per-batch maxima, and
-    * the late rule are all deterministic SQL.
+    * driver scalar for the running max), so the oracle can replay it:
+    * batch assignment, per-batch maxima, and the late rule are all
+    * deterministic SQL.
     */
   def lateAuditGate(spark: SparkSession, dir: String): DataFrame = {
     val delayUs = 600L * 1000000L
@@ -525,35 +479,25 @@ object StreamingGate {
     val tagged = ev.withColumn("__b", staged)
     val in = scratch("late_in", dir)
     val ck = scratch("late_ck", dir)
-    Seq(in, ck).foreach(cleanDir(spark, _))
-    stageOrderedSlices(spark, in,
+    cleanDir(spark, ck)
+    val stream = stageOrderedSlices(spark, in,
       (0 to 3).map(i => tagged.filter(col("__b") === i).drop("__b")))
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
     var maxSeenUs = Long.MinValue
     var seq = 0
     val audit = scala.collection.mutable.ArrayBuffer[(Int, Long, Long, Long)]()
-    withDrainPartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          if (!b.isEmpty) {
-            val wm = if (maxSeenUs == Long.MinValue) Long.MinValue
-                     else maxSeenUs - delayUs
-            val late = unix_micros(col("ts")) < lit(wm)
-            val r = b.agg(count(lit(1)).as("n"),
-              coalesce(sum(when(late, 1L)), lit(0L)).as("nl"),
-              coalesce(sum(when(late, col("event_id"))), lit(0L)).as("ls"),
-              max(unix_micros(col("ts"))).as("mx")).head
-            audit += ((seq, r.getLong(0), r.getLong(1), r.getLong(2)))
-            maxSeenUs = math.max(maxSeenUs, r.getLong(3))
-            seq += 1
-          }
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    scopedDrain(stream, ck) { (b: DataFrame, _: Long) =>
+      if (!b.isEmpty) {
+        val wm = if (maxSeenUs == Long.MinValue) Long.MinValue
+                 else maxSeenUs - delayUs
+        val late = unix_micros(col("ts")) < lit(wm)
+        val r = b.agg(count(lit(1)).as("n"),
+          coalesce(sum(when(late, 1L)), lit(0L)).as("nl"),
+          coalesce(sum(when(late, col("event_id"))), lit(0L)).as("ls"),
+          max(unix_micros(col("ts"))).as("mx")).head
+        audit += ((seq, r.getLong(0), r.getLong(1), r.getLong(2)))
+        maxSeenUs = math.max(maxSeenUs, r.getLong(3))
+        seq += 1
+      }
     }
     import spark.implicits._
     audit.toSeq.toDF("batch_seq", "n_total", "n_late", "late_id_sum")
@@ -597,26 +541,15 @@ object StreamingGate {
     val in = scratch("skm_in", dir)
     val mart = scratch("skm_mart", dir)
     val ck = scratch("skm_ck", dir)
-    cleanDir(spark, mart); cleanDir(spark, ck); cleanDir(spark, in)
-    // several staged files + maxFilesPerTrigger=1 -> days really arrive
-    // split across micro-batches and the merge fold has to reconcile
-    // (three batches: every day straddles batches under round-robin
-    // repartition, which is all the reconciliation proof needs — the
-    // oracle pins slicing-independence by matching the full recompute)
-    ev.repartition(3).write.mode("overwrite").parquet(in)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    withDrainPartitions(spark) {
-      val q = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          graft.operators.SketchMart.mergeDaily(b, mart, 32, col("h"), col("day"))
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    cleanDir(spark, mart); cleanDir(spark, ck)
+    // days really arrive split across micro-batches and the merge fold
+    // has to reconcile (three batches: every day straddles batches under
+    // round-robin repartition, which is all the reconciliation proof
+    // needs — the oracle pins slicing-independence by matching the full
+    // recompute)
+    val stream = stageSlices(spark, ev, 3, in)
+    scopedDrain(stream, ck) { (b: DataFrame, _: Long) =>
+      graft.operators.SketchMart.mergeDaily(b, mart, 32, col("h"), col("day"))
     }
     graft.operators.SketchMart.mergedDistinct(spark, mart, 32,
       date_trunc("week", col("day")).cast("date"), "week")
@@ -635,22 +568,15 @@ object StreamingGate {
       .select("event_id", "ts", "user_id", "event_type", "value")
     val in = scratch("vi_in", dir)
     val tbl = scratch("vi_tbl", dir)
-    cleanDir(spark, in); cleanDir(spark, tbl)
-    ev.repartition(4).write.mode("overwrite").parquet(in)
+    cleanDir(spark, tbl)
+    val stream = stageSlices(spark, ev, 4, in)
+    // the session's own shuffle width: this drain is not partition-scoped
     def drainOnce(ck: String): Unit = {
       cleanDir(spark, ck)
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          graft.sinks.VersionedTable.commitBatch(
-            b, tbl, overwrite = false, txnId = s"ingest-$id")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      Drain.run(stream, ck) { (b: DataFrame, id: Long) =>
+        graft.sinks.VersionedTable.commitBatch(
+          b, tbl, overwrite = false, txnId = s"ingest-$id")
+      }
     }
     drainOnce(scratch("vi_ck1", dir))
     drainOnce(scratch("vi_ck2", dir)) // full replay, same txn ids
@@ -680,22 +606,12 @@ object StreamingGate {
     val in = scratch("img_in", dir)
     val idx = scratch("img_idx", dir)
     val ck = scratch("img_ck", dir)
-    Seq(in, idx, ck).foreach(cleanDir(spark, _))
-    media.repartition(3).write.mode("overwrite").parquet(in)
-    val stream = spark.readStream.schema(media.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    withDrainPartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          graft.sinks.VersionedTable.commitBatch(
-            Multimodal.imageHashes(b, "doc_id", "payload"),
-            idx, overwrite = false, txnId = s"img-$id")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    Seq(idx, ck).foreach(cleanDir(spark, _))
+    val stream = stageSlices(spark, media, 3, in)
+    scopedDrain(stream, ck) { (b: DataFrame, id: Long) =>
+      graft.sinks.VersionedTable.commitBatch(
+        Multimodal.imageHashes(b, "doc_id", "payload"),
+        idx, overwrite = false, txnId = s"img-$id")
     }
     Multimodal.hashDupPairs(
       graft.sinks.VersionedTable.read(spark, idx), maxHamming = 8)
@@ -721,22 +637,12 @@ object StreamingGate {
     val in = scratch("vid_in", dir)
     val idx = scratch("vid_idx", dir)
     val ck = scratch("vid_ck", dir)
-    Seq(in, idx, ck).foreach(cleanDir(spark, _))
-    media.repartition(3).write.mode("overwrite").parquet(in)
-    val stream = spark.readStream.schema(media.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    withDrainPartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          graft.sinks.VersionedTable.commitBatch(
-            Multimodal.videoFrameHashes(b, "doc_id", "payload"),
-            idx, overwrite = false, txnId = s"vid-$id")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    Seq(idx, ck).foreach(cleanDir(spark, _))
+    val stream = stageSlices(spark, media, 3, in)
+    scopedDrain(stream, ck) { (b: DataFrame, id: Long) =>
+      graft.sinks.VersionedTable.commitBatch(
+        Multimodal.videoFrameHashes(b, "doc_id", "payload"),
+        idx, overwrite = false, txnId = s"vid-$id")
     }
     Multimodal.videoPairsFromFrameHashes(
       graft.sinks.VersionedTable.read(spark, idx),
@@ -762,31 +668,21 @@ object StreamingGate {
     val idx = scratch("qc_idx", dir)
     val ck = scratch("qc_ck", dir)
     val model = scratch("qc_model", dir)
-    Seq(in, idx, ck, model).foreach(cleanDir(spark, _))
+    Seq(idx, ck, model).foreach(cleanDir(spark, _))
     val sf = QualityClassifier.featurizeSeeded(docs, "doc_id", "text",
       QualityClassifier.sparkDensitySeed, dims = 64)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     sf.count()
     QualityClassifier.trainWeights(sf).write.mode("overwrite").parquet(model)
     sf.unpersist(false)
-    docs.repartition(2).write.mode("overwrite").parquet(in)
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
+    val stream = stageSlices(spark, docs, 2, in)
     // the frozen model is one lazy 64-row scan reused by every batch
     val w = spark.read.parquet(model)
-    withDrainPartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          graft.sinks.VersionedTable.commitBatch(
-            QualityClassifier.score(
-              QualityClassifier.featurize(b, "doc_id", "text", dims = 64), w),
-            idx, overwrite = false, txnId = s"qc-$id")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    scopedDrain(stream, ck) { (b: DataFrame, id: Long) =>
+      graft.sinks.VersionedTable.commitBatch(
+        QualityClassifier.score(
+          QualityClassifier.featurize(b, "doc_id", "text", dims = 64), w),
+        idx, overwrite = false, txnId = s"qc-$id")
     }
     graft.sinks.VersionedTable.read(spark, idx)
   }
@@ -813,28 +709,18 @@ object StreamingGate {
     val in = scratch("ann_in", dir)
     val idx = scratch("ann_delta", dir)
     val ck = scratch("ann_ck", dir)
-    Seq(in, idx, ck).foreach(cleanDir(spark, _))
+    Seq(idx, ck).foreach(cleanDir(spark, _))
     IvfIndex.build(existing, nlist = 16, base)
-    delta.repartition(2).write.mode("overwrite").parquet(in)
-    val stream = spark.readStream.schema(delta.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
+    val stream = stageSlices(spark, delta, 2, in)
     // frozen centroids: one lazy 16-row scan reused by every batch
     val cents = spark.read.parquet(s"$base/centroids")
-    withDrainPartitions(spark) {
-      val qs = stream.writeStream
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          val asn = IvfIndex.assign(b, cents, "vec_id", "embedding")
-          graft.sinks.VersionedTable.commitBatch(
-            b.join(asn, "vec_id")
-              .withColumn("sc", VF.quantScale(col("embedding")))
-              .withColumn("q8", VF.quantize(col("embedding"), col("sc"))),
-            idx, overwrite = false, txnId = s"ann-$id")
-          ()
-        }
-        .start()
-      qs.awaitTermination()
+    scopedDrain(stream, ck) { (b: DataFrame, id: Long) =>
+      val asn = IvfIndex.assign(b, cents, "vec_id", "embedding")
+      graft.sinks.VersionedTable.commitBatch(
+        b.join(asn, "vec_id")
+          .withColumn("sc", VF.quantScale(col("embedding")))
+          .withColumn("q8", VF.quantize(col("embedding"), col("sc"))),
+        idx, overwrite = false, txnId = s"ann-$id")
     }
     val cells = IvfIndex.probedCells(spark, base, q, nprobe = 4)
     val cols = Seq("vec_id", "label", "embedding", "cell").map(col)
@@ -863,23 +749,13 @@ object StreamingGate {
     val in = scratch("va_in", dir)
     val idx = scratch("va_idx", dir)
     val ck = scratch("va_ck", dir)
-    Seq(in, idx, ck).foreach(cleanDir(spark, _))
-    ev.repartition(3).write.mode("overwrite").parquet(in)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    withDrainPartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          graft.sinks.VersionedTable.commitBatch(
-            b.groupBy(to_date(col("ts")).as("day"))
-              .agg(count(lit(1)).as("n")),
-            idx, overwrite = false, txnId = s"va-$id")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    Seq(idx, ck).foreach(cleanDir(spark, _))
+    val stream = stageSlices(spark, ev, 3, in)
+    scopedDrain(stream, ck) { (b: DataFrame, id: Long) =>
+      graft.sinks.VersionedTable.commitBatch(
+        b.groupBy(to_date(col("ts")).as("day"))
+          .agg(count(lit(1)).as("n")),
+        idx, overwrite = false, txnId = s"va-$id")
     }
     val daily = graft.sinks.VersionedTable.read(spark, idx)
       .groupBy("day").agg(sum(col("n")).as("n"))
@@ -903,7 +779,7 @@ object StreamingGate {
     val in = scratch("dr_in", dir)
     val idx = scratch("dr_idx", dir)
     val ck = scratch("dr_ck", dir)
-    Seq(in, idx, ck).foreach(cleanDir(spark, _))
+    Seq(idx, ck).foreach(cleanDir(spark, _))
     // the monitor's configured reference window: one scalar read over
     // the log resolves the period boundary the per-batch binning uses
     val rng = ev.agg(min(to_date(col("ts"))).as("d0"),
@@ -911,26 +787,16 @@ object StreamingGate {
     val (d0, d1) = (rng.getDate(0), rng.getDate(1))
     val cutDays = ((d1.toLocalDate.toEpochDay -
       d0.toLocalDate.toEpochDay) / 2).toInt
-    ev.repartition(3).write.mode("overwrite").parquet(in)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    withDrainPartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          graft.sinks.VersionedTable.commitBatch(
-            b.withColumn("period",
-                when(to_date(col("ts")) <
-                  date_add(lit(d0), cutDays), "A").otherwise("B"))
-              .withColumn("bin", floor(col("value") / 5.0).cast("long"))
-              .groupBy(col("event_type"), col("period"), col("bin"))
-              .agg(count(lit(1)).as("cnt")),
-            idx, overwrite = false, txnId = s"dr-$id")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    val stream = stageSlices(spark, ev, 3, in)
+    scopedDrain(stream, ck) { (b: DataFrame, id: Long) =>
+      graft.sinks.VersionedTable.commitBatch(
+        b.withColumn("period",
+            when(to_date(col("ts")) <
+              date_add(lit(d0), cutDays), "A").otherwise("B"))
+          .withColumn("bin", floor(col("value") / 5.0).cast("long"))
+          .groupBy(col("event_type"), col("period"), col("bin"))
+          .agg(count(lit(1)).as("cnt")),
+        idx, overwrite = false, txnId = s"dr-$id")
     }
     val binned = graft.sinks.VersionedTable.read(spark, idx)
       .groupBy("event_type", "period", "bin")
@@ -957,29 +823,18 @@ object StreamingGate {
     val in = scratch("alrt_in", dir)
     val root = scratch("alrt_state", dir)
     val ck = scratch("alrt_ck", dir)
-    Seq(in, root, ck).foreach(cleanDir(spark, _))
-    stageOrderedSlices(spark, in, Seq(
+    Seq(root, ck).foreach(cleanDir(spark, _))
+    val stream = stageOrderedSlices(spark, in, Seq(
       runs.filter(col("run_id") === "w2"),
       runs.filter(col("run_id") === "w3")))
-    val stream = spark.readStream.schema(runs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    withDrainPartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          if (!b.isEmpty) {
-            // one staged file per monitor run, so the batch's run id is
-            // a single value — read it as the routing txn (a replayed
-            // batch re-routes under the same txn and no-ops)
-            val runId = b.select("run_id").head.getString(0)
-            graft.operators.Alerting.routeAlerts(
-              b.drop("run_id"), root, runId)
-            ()
-          }
-        }
-        .start()
-      q.awaitTermination()
+    scopedDrain(stream, ck) { (b: DataFrame, _: Long) =>
+      if (!b.isEmpty) {
+        // one staged file per monitor run, so the batch's run id is a
+        // single value — read it as the routing txn (a replayed batch
+        // re-routes under the same txn and no-ops)
+        val runId = b.select("run_id").head.getString(0)
+        graft.operators.Alerting.routeAlerts(b.drop("run_id"), root, runId)
+      }
     }
     graft.operators.Alerting.sentAlerts(spark, root)
   }

@@ -41,6 +41,17 @@ class BpeSpec extends SparkSpec {
     assert(odd.toSeq == Seq((0, "aa"), (1, "a")))
   }
 
+  test("training restores the session's AQE and shuffle width, including " +
+      "the width the loop narrows mid-run") {
+    // enter at 5 partitions (not SparkSpec's 8) so the restore is not vacuous
+    graft.core.GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> "5",
+        "spark.sql.adaptive.enabled" -> "true") {
+      Bpe.learnMerges(spark, wf("aaab" -> 3L, "ab" -> 2L), rounds = 2).collect()
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "5")
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    }
+  }
+
   test("applyMerges tokenizes new words with a trained merge list") {
     // (a,a): a,a,b,a,b -> [aa,b,a,b]; then (a,b): -> [aa,b,ab]
     val out = Bpe.applyMerges(wf("aabab" -> 1L), Seq("a" -> "a", "a" -> "b"))

@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf, must be set at session build: the default generated-
-      // class cache holds 100 entries, but this suite compiles far more
-      // distinct codegen units — with the default, the warm-up pass evicts
-      // its own classes and every TIMED query re-pays Janino+JIT (measured
-      // 16.6 s vs 2.5 s warm on t_dedup_contain)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain("graft-bench")
     // Warm-up: run each query once at the TARGET scale so the timed run
     // measures steady-state execution. A small-SF warm-up is not enough:
     // AQE picks different physical plans (hence new codegen) once real
@@ -25,23 +13,9 @@ object Bench {
     // multi-second Janino/JIT costs (measured 21 s cold vs 7 s warm on
     // t_dedup_corpus at sf0.1). Scratch-writing queries are idempotent
     // (overwrite), so the double run is safe.
-    // The timed action: execute the FULL physical plan and count its
-    // output rows. A plain Dataset.count() lets Catalyst optimize work
-    // out of the count that the full query must perform — it provably
-    // drops row-preserving Windows, unique-keyed outer Joins, and
-    // Generates whose columns the count never references (the
-    // CountCollapseAudit tool found 21 gate queries whose count() plan
-    // lost such operators, t_substring_scrub losing 3 joins + 2 windows
-    // + a generate). toRdd runs the query exactly as Verify writes it,
-    // so the bench measures the operator, not a collapsed shadow of it.
-    def runFull(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", sfDir)
     if (warmDir.nonEmpty) {
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try { runFull(fn(spark, warmDir)) } catch { case _: Throwable => () }
-      }
-      spark.catalog.clearCache()
+      SparkEntry.eachQuery(spark, "")((_, fn) => SparkEntry.runFull(fn(spark, warmDir)))
       // settle: let the ContextCleaner/GC drain the warm-up backlog so the
       // first timed query doesn't absorb it (measured +10s on whichever
       // query ran first without this)
@@ -49,24 +23,19 @@ object Bench {
       Thread.sleep(3000)
       spark.range(1000000).selectExpr("sum(id)").collect()
     }
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok =
-        try { runFull(fn(spark, sfDir)); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          failed += name
-          false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // drop query-scoped persisted data and let the ContextCleaner reap
-      // broadcasts/shuffles so later queries aren't taxed by earlier ones
-      spark.catalog.clearCache()
+    val results = SparkEntry.eachQuery(spark, "") { (_, fn) =>
+      // let the ContextCleaner reap the previous query's broadcasts and
+      // shuffles so later queries aren't taxed by earlier ones
       System.gc()
+      val t0 = System.nanoTime()
+      SparkEntry.runFull(fn(spark, sfDir))
+      (System.nanoTime() - t0) / 1e9
+    }.map { case (name, r) =>
+      r.failed.foreach(e => System.err.println(s"[bench] $name FAILED: ${e.getMessage}"))
       // a failed query must not masquerade as a fast success
-      name -> (if (ok) dt else -1.0)
+      name -> r.getOrElse(-1.0)
     }
+    val failed = results.collect { case (name, v) if v < 0 => name }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum

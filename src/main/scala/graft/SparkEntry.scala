@@ -3,9 +3,12 @@ package graft
 import graft.core.GraftSession
 import graft.queries.{TrainingQueries, WarehouseQueries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
+
+  type Query = (SparkSession, String) => DataFrame
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
@@ -17,7 +20,7 @@ object SparkEntry {
     * training-data pipeline extensions). Each function tunes the session
     * idempotently before building its plan.
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  def queries: Map[String, Query] =
     (WarehouseQueries.queries ++ TrainingQueries.queries ++
       graft.streaming.StreamingGate.queries ++
       graft.sources.LakeExports.queries).map {
@@ -34,4 +37,34 @@ object SparkEntry {
     WarehouseQueries.oracles ++ TrainingQueries.oracles ++
       graft.streaming.StreamingGate.oracles ++
       graft.sources.LakeExports.oracles
+
+  /** The timed action: execute the FULL physical plan and count its
+    * output rows. A plain Dataset.count() lets Catalyst optimize work out
+    * of the count that the full query must perform — it provably drops
+    * row-preserving Windows, unique-keyed outer Joins, and Generates whose
+    * columns the count never references (the count-collapse audit found
+    * 21 gate queries whose count() plan lost such operators,
+    * t_substring_scrub losing 3 joins + 2 windows + a generate). toRdd
+    * runs the query exactly as Verify writes it, so a timing measures the
+    * operator, not a collapsed shadow of it.
+    */
+  def runFull(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** Runs `body` on each query of `from` whose name starts with one of the
+    * comma-separated prefixes in `only` (every query when there are none),
+    * one at a time in name order. A non-fatal failure becomes that
+    * query's `Failure` instead of ending the loop. The session's cached
+    * relations are dropped after every query, failed or not: queries that
+    * pin relations (the dedup family's materialize, nearDupIndex) rely on
+    * it, and without it the pins accumulate across the gate surface.
+    */
+  def eachQuery[A](spark: SparkSession, only: String,
+                   from: Map[String, Query] = queries)(
+      body: (String, Query) => A): Seq[(String, Try[A])] = {
+    val prefixes = only.split(",").filter(_.nonEmpty)
+    from.toSeq.filter { case (name, _) => prefixes.isEmpty || prefixes.exists(name.startsWith) }
+      .sortBy(_._1).map { case (name, fn) =>
+        name -> (try Try(body(name, fn)) finally spark.catalog.clearCache())
+      }
+  }
 }

@@ -1,39 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: only run queries whose name starts with the prefix
-    // (local iteration; the driver always passes exactly two args)
+    // optional 3rd arg, for local iteration: only run queries whose name
+    // starts with one of these comma-separated prefixes (the correctness
+    // contract is the two-argument form)
     val (sfDir, outDir) = (args(0), args(1))
-    val prefix = if (args.length > 2) args(2) else ""
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Timestamps stay INT96 parquet (default): pyarrow reads INT96 as
-      // tz-naive, matching the DuckDB oracle; INT64 micros would read back
-      // tz-aware and mismatch. The round-1 w3 failure (9999-12-31 sentinel
-      // wrapping in int64 ns) is fixed by the ns-safe sentinel instead.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = args.lift(2).getOrElse("")
+    val spark = GraftSession.forMain("graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(_._1.startsWith(prefix)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // queries that pin relations (the dedup family's materialize,
-      // nearDupIndex) rely on the session dropping them between queries —
-      // Bench does the same; without this the pins accumulate across the
-      // full gate surface
-      spark.catalog.clearCache()
+    val names = SparkEntry.eachQuery(spark, only) { (name, fn) =>
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }.map { case (name, r) =>
+      r.failed.foreach(e => System.err.println(s"[verify] $name failed: ${e.getMessage}"))
+      name
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -47,8 +30,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(_._1.startsWith(prefix))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val oracles = SparkEntry.oracleSql
+    val json = names.map(k => s"${q(k)}: ${q(oracles(k))}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -31,15 +31,21 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.ui.enabled", "false")
 
-  def getOrCreate(appName: String = "graft"): SparkSession = {
-    val spark = builder(appName).getOrCreate()
-    tune(spark)
+  /** The session every `main` runs on: `local[n]` with shuffle width `n`,
+    * where `n` is `SPARK_GRAFT_CPUS` (default 4), tuned, WARN logging.
+    */
+  def forMain(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = tune(builder(appName, s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .getOrCreate())
+    spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
-  /** Apply runtime-settable defaults to an externally created session
-    * (the Verify/Bench drivers build their own), and register the engine's
-    * native functions. Safe to call repeatedly.
+  /** Apply runtime-settable defaults to a session ([[forMain]]'s, a
+    * test's, or one an embedding application built) and register the
+    * engine's native functions. Safe to call repeatedly.
     */
   def tune(spark: SparkSession): SparkSession = {
     val c = spark.conf

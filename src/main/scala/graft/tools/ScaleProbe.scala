@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.core.GraftSession
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dedup-path scale probe: replicate the documents table `mult`x with
@@ -16,14 +16,8 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark)
+    val spark = GraftSession.forMain("graft-scaleprobe")
+    val cores = spark.sparkContext.defaultParallelism
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
     // LAZY: the xdr/entries modes never touch the replicated corpus, and
@@ -43,35 +37,18 @@ object ScaleProbe {
     }
     lazy val nBig = nBase * mult
 
+    val rec = new Probe.Recorder(spark)
+    def shuffled: Long = rec.stages.map(_.shuffleWriteBytes).sum
     def time[A](name: String)(f: => A): A = {
+      val lastJob = rec.jobs.lastOption.fold(-1)(_._1)
       val t0 = System.nanoTime()
       val r = f
+      rec.jobs.filter { case (id, ms) => id > lastJob && ms > 1000 }.foreach { case (id, ms) =>
+        println(f"[scale]     job=$id%-4d ${ms / 1000.0}%8.2f s")
+      }
       println(f"[scale] $name%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
       r
     }
-
-    val stages = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Int, String)]
-    val jobStart = scala.collection.mutable.Map.empty[Int, Long]
-    val shuffleWritten = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val wall = (for {s <- si.submissionTime; c <- si.completionTime} yield c - s).getOrElse(-1L)
-        val ops = si.rddInfos.map(_.name).filter(_ != null)
-          .filterNot(n => n.startsWith("MapPartitions") || n.startsWith("Shuffled"))
-          .distinct.take(6).mkString(">")
-        stages += ((si.stageId, wall, si.taskMetrics.executorCpuTime / 1000000L,
-          si.numTasks, ops))
-        shuffleWritten.addAndGet(si.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobStart(j.jobId) = j.time
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val dt = (j.time - jobStart.getOrElse(j.jobId, j.time)) / 1000.0
-        if (dt > 1.0) println(f"[scale]     job=${j.jobId}%-4d ${dt}%8.2f s")
-      }
-    })
 
     // SPARK_GRAFT_PROBE_ONLY=corpus: skip the decomposition and run only
     // the end-to-end corpus dedup — the whole probe takes ~4 min, and this
@@ -89,7 +66,7 @@ object ScaleProbe {
       // when-chain fixture plan, a large sequence() literal sends the
       // ANALYZER into a multi-minute DeduplicateRelations walk
       val bigFix = fix
-        .repartition(cpus.toInt)
+        .repartition(cores)
         .crossJoin(broadcast(spark.range(mult.toLong).select(col("id").as("m"))))
         .select((col("k") + col("m") * lit(100000000L)).as("k"), col("bin"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -99,7 +76,7 @@ object ScaleProbe {
         .queryExecution.toRdd.count()
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"[scale] entries: $nEnt%d state records -> $nRows%d routed " +
-        f"rows in $dt%.2f s (${nEnt / dt / cpus.toInt}%.0f records/s/core)")
+        f"rows in $dt%.2f s (${nEnt / dt / cores}%.0f records/s/core)")
       bigFix.unpersist()
       spark.stop(); return
     }
@@ -120,7 +97,7 @@ object ScaleProbe {
       // repartition the SMALL base before the explode so the md5-heavy
       // fixture encode and the replication both run on all cores
       val bigFix = fix
-        .repartition(cpus.toInt)
+        .repartition(cores)
         .select(explode(sequence(lit(0L), lit(mult.toLong - 1L))).as("m"),
           col("k"), col("bin"))
         .select((col("k") + col("m") * lit(100000000L)).as("k"), col("bin"))
@@ -138,7 +115,7 @@ object ScaleProbe {
         .queryExecution.toRdd.count()
       val dtMart = (System.nanoTime() - t1) / 1e9
       println(f"[scale] xdr: $nEnv%d envelopes -> $nOps%d op rows in " +
-        f"$dtFan%.2f s (${nEnv / dtFan / cpus.toInt}%.0f envelopes/s/core " +
+        f"$dtFan%.2f s (${nEnv / dtFan / cores}%.0f envelopes/s/core " +
         f"decode+fanout); mart ($nMart%d groups) $dtMart%.2f s")
       bigFix.unpersist()
       spark.stop(); return
@@ -294,12 +271,12 @@ object ScaleProbe {
           (get_json_object(col("props"), "$.k").cast("long") + lit(10000L)).as("dst"))
       }.reduce(_.unionByName(_))
       def runAt(m: Int): (Long, Double, Long) = {
-        shuffleWritten.set(0L)
+        rec.reset()
         val t0 = System.nanoTime()
         val topNode = graft.operators.LinkAnalysis
           .pageRankTopK(spark, edgesAt(m), "src", "dst", iters = 3, k = 25)
           .orderBy(col("rank_scaled").desc).head.getLong(0)
-        (topNode, (System.nanoTime() - t0) / 1e9, shuffleWritten.get())
+        (topNode, (System.nanoTime() - t0) / 1e9, shuffled)
       }
       val (top1, t1, sh1) = runAt(1)
       println(f"[scale] pagerank 1x:  top=$top1 ${t1}%.2f s shuffle=${sh1 / 1e6}%.1f MB")
@@ -456,22 +433,22 @@ object ScaleProbe {
           (get_json_object(col("props"), "$.k").cast("long") + lit(10000L)).as("dst"))
       }.reduce(_.unionByName(_))
       def hitsAt(m: Int): (Long, Double, Long) = {
-        shuffleWritten.set(0L)
+        rec.reset()
         val t0 = System.nanoTime()
         val top = graft.operators.LinkAnalysis
           .hitsTopK(spark, edgesAt(m), "src", "dst", iters = 2, k = 25)
           .head.getLong(0)
-        (top, (System.nanoTime() - t0) / 1e9, shuffleWritten.get())
+        (top, (System.nanoTime() - t0) / 1e9, shuffled)
       }
       def pprAt(m: Int): (Long, Double, Long) = {
-        shuffleWritten.set(0L)
+        rec.reset()
         val seeds = ev.select(col("user_id")).filter(col("user_id") < 10).distinct()
         val t0 = System.nanoTime()
         val top = graft.operators.LinkAnalysis
           .personalizedPageRankTopK(spark, edgesAt(m), "src", "dst",
             seeds, iters = 3, k = 25)
           .head.getLong(0)
-        (top, (System.nanoTime() - t0) / 1e9, shuffleWritten.get())
+        (top, (System.nanoTime() - t0) / 1e9, shuffled)
       }
       val (h1, th1, sh1) = hitsAt(1)
       val (hM, thM, shM) = hitsAt(mult)
@@ -507,7 +484,7 @@ object ScaleProbe {
     if (sys.env.get("SPARK_GRAFT_PROBE_ONLY").contains("classifier")) {
       import graft.operators.QualityClassifier
       def run(df: DataFrame): (Long, Long, Double, Long) = {
-        shuffleWritten.set(0L)
+        rec.reset()
         val t0 = System.nanoTime()
         val sf = QualityClassifier.featurizeSeeded(df, "doc_id", "text",
           QualityClassifier.sparkDensitySeed, dims = 64)
@@ -518,7 +495,7 @@ object ScaleProbe {
           .agg(sum(when(col("keep"), 1L).otherwise(0L)), count(lit(1))).head
         sf.unpersist(false)
         (agg.getLong(0), agg.getLong(1),
-          (System.nanoTime() - t0) / 1e9, shuffleWritten.get())
+          (System.nanoTime() - t0) / 1e9, shuffled)
       }
       val (k1, n1, t1, s1) = run(base)
       val (kM, nM, tM, sM) = run(big)
@@ -551,7 +528,7 @@ object ScaleProbe {
       }
       def runAt(m: Int): (Double, Long) = {
         val (n, e) = ringAt(m)
-        shuffleWritten.set(0L)
+        rec.reset()
         val t0 = System.nanoTime()
         val lp = LinkAnalysis.labelPropagation(e, "a", "b", rounds = 2)
         val mod = LinkAnalysis.communityModularity(e, "a", "b", lp)
@@ -574,7 +551,7 @@ object ScaleProbe {
           lpTop.head.getLong(3) == 16L,
           s"ring link-prediction head: ${lpTop.head}")
         spark.catalog.clearCache()
-        ((System.nanoTime() - t0) / 1e9, shuffleWritten.get())
+        ((System.nanoTime() - t0) / 1e9, shuffled)
       }
       val (t1, s1) = runAt(1)
       val (tM, sM) = runAt(mult)
@@ -964,13 +941,13 @@ object ScaleProbe {
     val nPairs = if (corpusOnly) -1L else time("minhash_pairs") {
       Dedup.minhashCandidatePairs(big, "doc_id", "text").count()
     }
-    stages.clear()
+    rec.reset()
     val nVerified = if (corpusOnly) -1L else time("jaccard_verified") {
       Dedup.nearDupPairs(big, "doc_id", "text", threshold = 0.5).count()
     }
-    Thread.sleep(2000)
-    stages.sortBy(-_._2).take(8).foreach { case (id, wall, cpu, n, ops) =>
-      println(f"[scale]   verify stage=$id%-4d wall=${wall / 1000.0}%8.2f s cpuSum=${cpu / 1000.0}%8.2f s tasks=$n%-4d $ops")
+    rec.stages.sortBy(-_.wallMs).take(8).foreach { st =>
+      println(f"[scale]   verify stage=${st.id}%-4d wall=${st.wallMs / 1000.0}%8.2f s " +
+        f"cpuSum=${st.cpuMs / 1000.0}%8.2f s tasks=${st.tasks}%-4d ${st.ops}")
     }
     // the distributed min-label loop (forced) on the same pair graph — the
     // >broadcastEdgeLimit path a trillion-doc corpus would take
@@ -1023,13 +1000,13 @@ object ScaleProbe {
       assert(roots == n, s"chain must collapse to one component, got $roots of $n")
     }
 
-    stages.clear()
+    rec.reset()
     val nKept = time("dedup_corpus") {
       Dedup.dedupCorpus(big, "doc_id", "text", threshold = 0.5).count()
     }
-    Thread.sleep(2000)
-    stages.sortBy(-_._2).take(8).foreach { case (id, wall, cpu, n, ops) =>
-      println(f"[scale]   corpus stage=$id%-4d wall=${wall / 1000.0}%8.2f s cpuSum=${cpu / 1000.0}%8.2f s tasks=$n%-4d $ops")
+    rec.stages.sortBy(-_.wallMs).take(8).foreach { st =>
+      println(f"[scale]   corpus stage=${st.id}%-4d wall=${st.wallMs / 1000.0}%8.2f s " +
+        f"cpuSum=${st.cpuMs / 1000.0}%8.2f s tasks=${st.tasks}%-4d ${st.ops}")
     }
     println(s"[scale] pairs=$nPairs verified=$nVerified kept=$nKept of $nBig")
     // every base doc appears `mult` times -> survivors must be <= nBase

@@ -17,4 +17,23 @@ class SparkEntrySpec extends SparkSpec {
   test("entry returns rows on the smoke scale") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
+
+  test("eachQuery reports a query that pins a relation and throws as failed, " +
+      "unpins it, and still runs the next selected query") {
+    spark.catalog.clearCache()
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val qs: Map[String, SparkEntry.Query] = Map(
+      "a_pin_then_throw" -> { (s, _) =>
+        val df = s.range(10).toDF("id")
+        df.cache().count()
+        throw new IllegalStateException("query failed")
+      },
+      "b_next" -> ((s, _) => s.range(3).toDF("id")),
+      "c_not_selected" -> ((_, _) => sys.error("not selected")))
+    val res = SparkEntry.eachQuery(spark, "a_pin,b_", qs)((_, fn) => fn(spark, sfDir).count())
+    assert(res.map(_._1) == Seq("a_pin_then_throw", "b_next"))
+    assert(res.head._2.failed.get.getMessage == "query failed")
+    assert(res(1)._2.get == 3L)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == pinned)
+  }
 }

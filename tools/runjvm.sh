@@ -1,7 +1,7 @@
 #!/bin/bash
 # Direct-JVM runner for graft mains — same flags as build.sbt's forked run,
 # without sbt startup (~40 s saved per invocation). Usage:
-#   tools/runjvm.sh graft.tools.ProfileOne t_dedup_jaccard /root/testdata/sf0.1
+#   tools/runjvm.sh graft.tools.Probe run <sfDir> t_dedup_jaccard
 set -e
 cd "$(dirname "$0")/.."
 ADD_OPENS=""

@@ -66,6 +66,15 @@ object GraftSession {
     spark
   }
 
+  /** Shuffle width for an iterative loop over small, pinned state of
+    * `rows` rows: one partition per 2,000 rows, at least 1 and at most the
+    * session's shuffle width. The loops that use it run with AQE off, so
+    * this is the coalescing call AQE would otherwise have made.
+    */
+  def iterationWidth(spark: SparkSession, rows: Long): Int =
+    math.max(1L, math.min(spark.sessionState.conf.numShufflePartitions.toLong,
+      rows / 2000L + 1)).toInt
+
   /** Run `body` with the given session conf keys set, restoring every key
     * to its value from BEFORE the call in a finally — whatever `body` did
     * to it meanwhile, and also when `body` throws. A leaked override (AQE

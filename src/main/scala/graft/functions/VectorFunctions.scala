@@ -34,7 +34,7 @@ object VectorFunctions {
   /** Native fused-loop variant (graft.plans.CosineSimilarity) — same
     * semantics and bit-identical results, one codegen'd loop instead of
     * three higher-order-function passes. Requires GraftFunctions.register
-    * (done by GraftSession.tune) or the GraftExtensions session extension.
+    * (done by GraftSession.tune).
     */
   def cosineNative(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
 

@@ -98,7 +98,7 @@ object Bpe {
     * and materializing query stages per round — fixed driver latency
     * that dominates a loop over a few hundred rows. For the loop only,
     * AQE goes off and the shuffle width is sized to the symbol volume
-    * (the same rows/2000 rule the rank loop uses); GraftSession.withConf
+    * (GraftSession.iterationWidth, as in the rank loop); GraftSession.withConf
     * restores both. Pair counts, the (cnt desc, sym, nxt) argmax, and the
     * merge windows are partitioning-independent, so results are
     * unchanged on any width.
@@ -119,19 +119,16 @@ object Bpe {
     // learnTuned sets mid-loop is restored on exit
     GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false",
         "spark.sql.shuffle.partitions" -> pWas) {
-      // pWas can hold a non-integer on exotic deployments ("auto" under
-      // some resource managers): fall back to the Spark default
-      learnTuned(spark, wf, rounds,
-        scala.util.Try(pWas.toInt).getOrElse(200))
+      learnTuned(spark, wf, rounds)
     }
   }
 
-  private def learnTuned(spark: SparkSession, wf: DataFrame, rounds: Int,
-                         p: Int): (List[(Int, String, String, Long)], DataFrame) = {
+  private def learnTuned(spark: SparkSession, wf: DataFrame,
+                         rounds: Int): (List[(Int, String, String, Long)], DataFrame) = {
     var syms = initialSymbols(wf).persist(StorageLevel.MEMORY_AND_DISK)
     val nSyms = syms.count()
     spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(1, math.min(p, (nSyms / 2000L).toInt + 1)).toString)
+      GraftSession.iterationWidth(spark, nSyms).toString)
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     // ONE action per round (was two): the argmax over the new state
     // doubles as its persist fill — pairCounts consumes every partition

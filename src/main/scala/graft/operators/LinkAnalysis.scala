@@ -74,7 +74,6 @@ object LinkAnalysis {
                            scale: Long,
                            seeds: Option[DataFrame],
                            lazyFinal: Boolean): (DataFrame, Seq[DataFrame]) = {
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
@@ -116,7 +115,7 @@ object LinkAnalysis {
     // which dominates an iterative loop; a big graph keeps the
     // configured width. The pinned edge/state partitioning below is
     // what keeps every round's big join exchange-free on both sides.
-    val p2 = math.max(1, math.min(p, (n / 2000L).toInt + 1))
+    val p2 = GraftSession.iterationWidth(spark, n)
     val e = e0.repartition(p2, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -264,18 +263,17 @@ object LinkAnalysis {
     // final get would block forever
     require(k >= 1, s"hitsTopK needs k >= 1, got $k")
     GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
-      val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val e0 = edges.select(col(srcCol).cast("long").as("src"),
           col(dstCol).cast("long").as("dst"))
         .filter(col("src").isNotNull && col("dst").isNotNull)
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
       // one scalar action sizes the iteration's pinned partitioning to
-      // the GRAPH (the pageRank p2 rule — AQE is deliberately off, so
+      // the GRAPH (GraftSession.iterationWidth — AQE is deliberately off, so
       // this is the adaptive call it would have made) and doubles as
       // e0's eager fill
       val nE = e0.count()
-      val p2 = math.max(1, math.min(p, (nE / 2000L).toInt + 1))
+      val p2 = GraftSession.iterationWidth(spark, nE)
       val e = e0.repartition(p2, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       // nodes is NOT pinned and never counted: it is read exactly once

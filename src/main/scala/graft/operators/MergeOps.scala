@@ -45,12 +45,6 @@ object MergeOps {
       source.join(target.select(keys.map(col): _*), keys, "left_anti")
         .select(target.columns.map(col).toSeq: _*))
 
-  /** The rows D3 would insert (useful when the caller appends to storage
-    * itself rather than materializing the whole union).
-    */
-  def newRows(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame =
-    source.join(target.select(keys.map(col): _*), keys, "left_anti")
-
   /** Snapshot diff: classify every key as added / removed / changed /
     * unchanged between two versions of a table (the audit a warehouse runs
     * after a backfill or before promoting a rebuilt mart — dbt snapshot /

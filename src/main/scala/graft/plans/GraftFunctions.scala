@@ -1,24 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Engine extension points.
-  *
-  * Installable two ways:
-  *  - at session build time:
-  *    `--conf spark.sql.extensions=graft.plans.GraftExtensions`
-  *  - imperatively on an existing session (the Verify/Bench drivers build
-  *    their own sessions): [[GraftFunctions.register]].
+/** The engine's native SQL functions (`graft_cosine`, `graft_xdr_*`, ...),
+  * installed on a session by [[GraftFunctions.register]], which
+  * `GraftSession.tune` calls.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.descriptors.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => IntervalBroadcastRule)
-  }
-}
-
 object GraftFunctions {
 
   private type Descriptor =
@@ -286,7 +275,7 @@ object GraftFunctions {
       XdrLedgerKeyDecode(children.head)
     })
 
-  private[plans] val descriptors: Seq[Descriptor] =
+  private val descriptors: Seq[Descriptor] =
     Seq(cosineDescriptor, hplaneSigDescriptor, shinglesDescriptor,
       kmvDescriptor, kmvMinsDescriptor, mgTopKDescriptor, hilbertDescriptor,
       nfcDescriptor, strkeyDecodeDescriptor, strkeyEncodeDescriptor,

@@ -19,8 +19,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * exposing `valid_from`/`valid_to`, range predicates spanning both sides,
   * and no cross-side equality — and attaches a broadcast hint, so callers
   * who forget the explicit `broadcast()` still get the survivable plan.
-  * Installed via [[GraftExtensions]] (injectOptimizerRule) or
-  * `spark.experimental.extraOptimizations` (GraftSession.tune).
+  * Installed by GraftSession.tune through
+  * `spark.experimental.extraOptimizations`.
   */
 object IntervalBroadcastRule extends Rule[LogicalPlan] with PredicateHelper {
 

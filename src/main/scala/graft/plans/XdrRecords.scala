@@ -90,6 +90,10 @@ private[plans] final class XdrCursor(b: Array[Byte]) {
     out
   }
 
+  /** 32-byte hash → lowercase hex (64 chars). */
+  def hex32(): UTF8String = UTF8String.fromString(
+    bytes(32).map(x => f"${x & 0xff}%02x").mkString)
+
   /** 32-byte key → SEP-23 G-address (account strkey, version byte 48). */
   def strkey32(): UTF8String = StrkeyCodec.encode(48, bytes(32))
 
@@ -119,8 +123,7 @@ private[plans] final class XdrCursor(b: Array[Byte]) {
     case 1L => val c = assetCode(4); (1L, c, accountId())
     case 2L => val c = assetCode(12); (2L, c, accountId())
     case 3L if poolShareArm =>
-      val hex = bytes(32).map(x => f"${x & 0xff}%02x").mkString
-      (3L, UTF8String.fromString(hex), null)
+      (3L, hex32(), null)
     case _ => fail()
   }
 
@@ -469,8 +472,7 @@ object XdrLiquidityPoolEntry {
   /** Mid-stream parse (no exact-consumption check) — the
     * LedgerEntry data union embeds this record. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
-    val poolId = UTF8String.fromString(
-      c.bytes(32).map(x => f"${x & 0xff}%02x").mkString)
+    val poolId = c.hex32()
     c.expect(0L) // LIQUIDITY_POOL_CONSTANT_PRODUCT, the only arm
     val (aT, aC, aI) = c.asset()
     val (bT, bC, bI) = c.asset()
@@ -560,8 +562,7 @@ object XdrClaimableBalanceEntry {
     * LedgerEntry data union embeds this record. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
     c.expect(0L) // CLAIMABLE_BALANCE_ID_TYPE_V0
-    val balanceId = UTF8String.fromString(
-      c.bytes(32).map(x => f"${x & 0xff}%02x").mkString)
+    val balanceId = c.hex32()
     val nClaimants = c.u32()
     if (nClaimants < 1 || nClaimants > 10) throw XdrCursor.Malformed
     val claimants = new Array[Any](nClaimants.toInt)
@@ -878,8 +879,7 @@ object XdrTtlEntry {
   /** Mid-stream parse (no exact-consumption check) — the
     * LedgerEntry data union embeds this record. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
-    val keyHash = UTF8String.fromString(
-      c.bytes(32).map(x => f"${x & 0xff}%02x").mkString)
+    val keyHash = c.hex32()
     val liveUntil = c.u32()
     new GenericInternalRow(Array[Any](keyHash, liveUntil))
   }
@@ -901,8 +901,7 @@ object XdrContractCodeEntry {
     * LedgerEntry data union embeds this record. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
     c.expect(0L) // ExtensionPoint (v1 cost inputs: boundary)
-    val hash = UTF8String.fromString(
-      c.bytes(32).map(x => f"${x & 0xff}%02x").mkString)
+    val hash = c.hex32()
     val code = c.varBytes(Int.MaxValue)
     val sha = java.security.MessageDigest.getInstance("SHA-256").digest(code)
     new GenericInternalRow(Array[Any](hash, code.length.toLong,
@@ -1027,9 +1026,6 @@ object XdrLedgerKey {
     StructField("setting_id", LongType),
     StructField("key_hash", StringType)))
 
-  private def hex32(c: XdrCursor): UTF8String = UTF8String.fromString(
-    c.bytes(32).map(x => f"${x & 0xff}%02x").mkString)
-
   def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
     val row = parse(c)
     c.done()
@@ -1053,8 +1049,8 @@ object XdrLedgerKey {
         f(1) = c.accountId()
         f(6) = UTF8String.fromBytes(c.varBytes(64))
       case 4L => // CLAIMABLE_BALANCE: ClaimableBalanceID v0
-        c.expect(0L); f(7) = hex32(c)
-      case 5L => f(8) = hex32(c) // LIQUIDITY_POOL
+        c.expect(0L); f(7) = c.hex32()
+      case 5L => f(8) = c.hex32() // LIQUIDITY_POOL
       case 6L => // CONTRACT_DATA: SCAddress + SCVal key + durability
         f(9) = c.u32() match {
           case 0L => c.accountId()
@@ -1066,12 +1062,12 @@ object XdrLedgerKey {
         val dur = c.u32()
         if (dur > 1L) throw XdrCursor.Malformed
         f(13) = dur
-      case 7L => f(14) = hex32(c) // CONTRACT_CODE
+      case 7L => f(14) = c.hex32() // CONTRACT_CODE
       case 8L => // CONFIG_SETTING
         val id = c.u32()
         if (id > 13L) throw XdrCursor.Malformed
         f(15) = id
-      case 9L => f(16) = hex32(c) // TTL
+      case 9L => f(16) = c.hex32() // TTL
       case _ => throw XdrCursor.Malformed
     }
     new GenericInternalRow(f)
@@ -1298,9 +1294,6 @@ object XdrTxEnvelope {
 
   val opFieldCount: Int = operationType.length
 
-  private def hex32(c: XdrCursor): UTF8String = UTF8String.fromString(
-    c.bytes(32).map(x => f"${x & 0xff}%02x").mkString)
-
   private def scAddress(c: XdrCursor): UTF8String = c.u32() match {
     case 0L => c.accountId()
     case 1L => StrkeyCodec.encode(16, c.bytes(32))
@@ -1334,7 +1327,7 @@ object XdrTxEnvelope {
       case _ => throw XdrCursor.Malformed
     }
     c.u32() match { // ContractExecutable
-      case 0L => f(62) = hex32(c) // CONTRACT_EXECUTABLE_WASM
+      case 0L => f(62) = c.hex32() // CONTRACT_EXECUTABLE_WASM
       case 1L => ()               // CONTRACT_EXECUTABLE_STELLAR_ASSET
       case _  => throw XdrCursor.Malformed
     }
@@ -1469,14 +1462,14 @@ object XdrTxEnvelope {
         f(23) = c.i64() // limit
       case 22L => // LIQUIDITY_POOL_DEPOSIT: pool id, max amounts, the
         // min/max Price fractions
-        f(35) = hex32(c)
+        f(35) = c.hex32()
         f(36) = c.i64(); f(37) = c.i64()
         f(40) = c.u32().toInt.toLong; f(41) = c.u32().toInt.toLong
         f(42) = c.u32().toInt.toLong; f(43) = c.u32().toInt.toLong
         if (f(41) == 0L || f(43) == 0L) throw XdrCursor.Malformed
       case 23L => // LIQUIDITY_POOL_WITHDRAW: pool id, shares burned
         // (amount), min amounts out
-        f(35) = hex32(c)
+        f(35) = c.hex32()
         f(6) = c.i64()
         f(38) = c.i64(); f(39) = c.i64()
       case 7L => // ALLOW_TRUST: trustor + AssetCode union + authorize
@@ -1514,7 +1507,7 @@ object XdrTxEnvelope {
         f(49) = nCl
       case 15L | 20L => // CLAIM / CLAWBACK_CLAIMABLE_BALANCE: balance id v0
         c.expect(0L)
-        f(50) = hex32(c)
+        f(50) = c.hex32()
       case 16L => // BEGIN_SPONSORING_FUTURE_RESERVES
         f(51) = c.accountId()
       case 18L => // REVOKE_SPONSORSHIP: a LedgerKey or an (account, signer)
@@ -1846,9 +1839,6 @@ object XdrTxResult {
     StructField("n_op_results", LongType),
     StructField("op_results", ArrayType(opResultType))))
 
-  private def hex32(c: XdrCursor): UTF8String = UTF8String.fromString(
-    c.bytes(32).map(x => f"${x & 0xff}%02x").mkString)
-
   private def i32(c: XdrCursor): Long = c.u32().toInt.toLong
 
   /** ClaimAtom vector → (count, sum sold, sum bought). */
@@ -1924,9 +1914,9 @@ object XdrTxResult {
             f(13) = n; f(14) = total
           }
         case 14L => // CREATE_CLAIMABLE_BALANCE: the created id
-          if (rc == 0L) { c.expect(0L); f(9) = hex32(c) }
+          if (rc == 0L) { c.expect(0L); f(9) = c.hex32() }
         case 24L => // INVOKE_HOST_FUNCTION: the return-value hash
-          if (rc == 0L) f(10) = hex32(c)
+          if (rc == 0L) f(10) = c.hex32()
         case other => // every other op type's result arms are void
           if (other > 26L) throw XdrCursor.Malformed
       }
@@ -1943,7 +1933,7 @@ object XdrTxResult {
     if (inner) { f(3) = fee; f(4) = code } else { f(0) = fee; f(1) = code }
     code match {
       case 1L | -13L if !inner => // txFEE_BUMP_INNER_SUCCESS / _FAILED
-        f(2) = hex32(c) // the inner transaction's hash
+        f(2) = c.hex32() // the inner transaction's hash
         body(c, f, inner = true)
       case 0L | -1L => // txSUCCESS / txFAILED: OperationResult results<>
         val n = c.u32()

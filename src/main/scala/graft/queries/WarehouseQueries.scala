@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.operators._
+import graft.queries.XdrFixture._
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -127,12 +128,6 @@ object WarehouseQueries {
     * streaming drain so both sides decode the identical corpus.
     */
   private[graft] def txEnvelopeFixture(s: SparkSession, dir: String): DataFrame = {
-    val zeros = unhex(lit("000000"))
-    def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-    def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-    val k = col("k"); val ks = k.cast("string")
-    def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
-    val key32 = unhex(concat(md5(ks), md5(concat(ks, lit("a")))))
     val srcAcct = when(pmod(k, lit(4L)) === 0L,
       concat(u32(lit(256L)), i64(lit(7000L) + k), key32))
       .otherwise(concat(u32(lit(0L)), key32))
@@ -141,10 +136,7 @@ object WarehouseQueries {
       .otherwise(u32(lit(0L)))
     val mLen = pmod(k, lit(10L)) + lit(1L)
     val memo = when(pmod(k, lit(3L)) === 1L,
-      concat(u32(lit(1L)), u32(mLen),
-        substring(md5(concat(ks, lit("m"))), 1, 10).substr(lit(1), mLen)
-          .cast("binary"),
-        zeros.substr(lit(1), (lit(4) - pmod(mLen, lit(4))) % lit(4))))
+      concat(u32(lit(1L)), varStr(substring(md5(concat(ks, lit("m"))), 1, 10), mLen)))
       .when(pmod(k, lit(3L)) === 2L, concat(u32(lit(2L)), i64(lit(5000L) + k)))
       .otherwise(u32(lit(0L)))
     val nOp = pmod(k, lit(3L)) + lit(1L)
@@ -167,7 +159,7 @@ object WarehouseQueries {
           concat(u32(lit(1L)), dest, asset,
             i64(lit(20000000L) + k + lit(i.toLong)))
         }
-      when(nOp > i, concat(opSrc, body)).otherwise(unhex(lit("")))
+      when(nOp > i, concat(opSrc, body)).otherwise(empty)
     }
     val nSig = pmod(k, lit(3L))
     def sig(j: Int): Column =
@@ -176,15 +168,13 @@ object WarehouseQueries {
         u32(lit(64L)), unhex(concat(md5(concat(ks, lit(s"p$j"))),
           md5(concat(ks, lit(s"q$j"))), md5(concat(ks, lit(s"r$j"))),
           md5(concat(ks, lit(s"s$j")))))))
-        .otherwise(unhex(lit("")))
+        .otherwise(empty)
     val xdr = concat(
       u32(lit(2L)), srcAcct, u32(lit(100L) * (lit(1L) + pmod(k, lit(3L)))),
       i64(k * lit(4294967296L) + lit(1L)), cond, memo,
       u32(nOp), op(0), op(1), op(2), u32(lit(0L)),
       u32(nSig), sig(0), sig(1))
-    t(s, dir, "orders").filter(col("o_orderkey") % 43 === 0)
-      .select(col("o_orderkey").cast("long").as("k"))
-      .withColumn("bin", unbase64(base64(xdr)))
+    rows(s, dir, "orders", "o_orderkey", 43)(xdr)
   }
 
   /** The s2_tx_ops_ext fixture: one pseudo TransactionV1Envelope per
@@ -199,27 +189,12 @@ object WarehouseQueries {
     * oracle law is about the op bodies.
     */
   private[graft] def txEnvelopeExtFixture(s: SparkSession, dir: String): DataFrame = {
-    val zeros = unhex(lit("000000"))
-    def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-    def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-    val k = col("k"); val ks = k.cast("string")
-    def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
-    def issuer(tag: String) = concat(u32(lit(0L)), h16(tag + "i"), h16(tag + "j"))
-    // Asset union over arms 0/1/2, codes from md5(k‖tag)
-    def asset(sel: Column, tag: String): Column =
-      when(sel === 0L, u32(lit(0L)))
-        .when(sel === 1L, concat(u32(lit(1L)),
-          substring(md5(concat(ks, lit(tag))), 1, 3).cast("binary"),
-          unhex(lit("00")), issuer(tag)))
-        .otherwise(concat(u32(lit(2L)),
-          substring(md5(concat(ks, lit(tag))), 1, 10).cast("binary"),
-          unhex(lit("0000")), issuer(tag)))
     val m = pmod(k, lit(9L))
     val dest = concat(u32(lit(0L)), h16("d"), h16("e"))
     val nPath = pmod(k, lit(3L))
     def pathEl(i: Int): Column =
       when(nPath > i, asset(pmod(k + lit(i.toLong), lit(2L)), s"p$i"))
-        .otherwise(unhex(lit("")))
+        .otherwise(empty)
     val path = concat(u32(nPath), pathEl(0), pathEl(1))
     def pathBody(opType: Long, firstAmt: Long, secondAmt: Long): Column =
       concat(u32(lit(opType)), asset(pmod(k, lit(3L)), "sa"),
@@ -244,10 +219,7 @@ object WarehouseQueries {
       opt(pmod(k, lit(5L)) === 1L, u32(pmod(k, lit(11L)))),
       opt(pmod(k, lit(5L)) === 2L, u32(pmod(k, lit(12L)))),
       opt(pmod(k, lit(7L)) === 0L,
-        concat(u32(hdLen),
-          substring(md5(concat(ks, lit("hd"))), 1, 12).substr(lit(1), hdLen)
-            .cast("binary"),
-          zeros.substr(lit(1), (lit(4) - pmod(hdLen, lit(4))) % lit(4)))),
+        varStr(substring(md5(concat(ks, lit("hd"))), 1, 12), hdLen)),
       opt(pmod(k, lit(4L)) === 0L,
         concat(u32(pmod(k, lit(3L))), h16("sk"), h16("sl"),
           u32(lit(1L) + pmod(k, lit(255L))))))
@@ -275,15 +247,12 @@ object WarehouseQueries {
       .when(m === 7L, lpWithdrawBody)
       .otherwise(offerBody(4L, withId = false))
     val xdr = concat(
-      u32(lit(2L)), u32(lit(0L)),
-      unhex(concat(md5(ks), md5(concat(ks, lit("a"))))),
+      u32(lit(2L)), u32(lit(0L)), key32,
       u32(lit(100L)), i64(k * lit(4294967296L) + lit(1L)),
       u32(lit(0L)), u32(lit(0L)),          // no cond, no memo
       u32(lit(1L)), u32(lit(0L)), opBody,  // one op, no per-op source
       u32(lit(0L)), u32(lit(0L)))          // ext, no signatures
-    t(s, dir, "orders").filter(col("o_orderkey") % 59 === 0)
-      .select(col("o_orderkey").cast("long").as("k"))
-      .withColumn("bin", unbase64(base64(xdr)))
+    rows(s, dir, "orders", "o_orderkey", 59)(xdr)
   }
 
   /** The s2_envelope_kinds fixture: one envelope per order row (k, bin)
@@ -296,12 +265,6 @@ object WarehouseQueries {
     * v1. Shared by the kinds gate and the transaction-grain mart.
     */
   private[graft] def txEnvelopeKindsFixture(s: SparkSession, dir: String): DataFrame = {
-    val zeros = unhex(lit("000000"))
-    def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-    def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-    val k = col("k"); val ks = k.cast("string")
-    def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
-    val key32 = unhex(concat(md5(ks), md5(concat(ks, lit("a")))))
     val fee = u32(lit(100L) + pmod(k, lit(50L)))
     val seq = i64(k * lit(4294967296L) + lit(1L))
     val tb = concat(u32(lit(1L)),
@@ -316,10 +279,8 @@ object WarehouseQueries {
         md5(concat(ks, lit("q0"))), md5(concat(ks, lit("r0"))),
         md5(concat(ks, lit("s0"))))))
     val mLen = pmod(k, lit(10L)) + lit(1L)
-    val memoText = concat(u32(lit(1L)), u32(mLen),
-      substring(md5(concat(ks, lit("m"))), 1, 10).substr(lit(1), mLen)
-        .cast("binary"),
-      zeros.substr(lit(1), (lit(4) - pmod(mLen, lit(4))) % lit(4)))
+    val memoText = concat(u32(lit(1L)),
+      varStr(substring(md5(concat(ks, lit("m"))), 1, 10), mLen))
     val pm4 = pmod(k, lit(4L))
     // PRECOND_V2: the minimal arm (no optionals, zero extra signers) on
     // k%4==2, the full arm (tb + ledger bounds + min seq + two ed25519
@@ -354,9 +315,7 @@ object WarehouseQueries {
       u32(lit(0L)), u32(lit(1L)), sig)
     val km3 = pmod(k, lit(3L))
     val xdr = when(km3 === 0L, v0env).when(km3 === 1L, v1env).otherwise(fbEnv)
-    t(s, dir, "orders").filter(col("o_orderkey") % 61 === 0)
-      .select(col("o_orderkey").cast("long").as("k"))
-      .withColumn("bin", unbase64(base64(xdr)))
+    rows(s, dir, "orders", "o_orderkey", 61)(xdr)
   }
 
   /** The s3_account_entry fixture: one pseudo AccountEntry per customer
@@ -369,19 +328,12 @@ object WarehouseQueries {
     * Shared by the record gate and the account_signers fan-out gate.
     */
   private[graft] def accountEntryFixture(s: SparkSession, dir: String): DataFrame = {
-    val zeros = unhex(lit("000000"))
-    def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-    def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-    val k = col("k"); val ks = k.cast("string")
-    def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
     val hd = pmod(k, lit(13L))
-    val domain = substring(md5(concat(ks, lit("d"))), 1, 12)
-      .substr(lit(1), hd)
     val nS = pmod(k, lit(4L))
     def signer(i: Int): Column =
       when(nS > i, concat(u32(lit(i.toLong)),
         h16(s"s$i"), h16(s"t$i"), u32(lit(10L + i))))
-        .otherwise(unhex(lit("")))
+        .otherwise(empty)
     // the v1 inner ext: plain (k%3==1) vs the v2 sponsorship arm —
     // counters + a SponsorshipDescriptor (optional AccountID) vector of
     // the signer count, each slot present iff (k+i)%3==0 — with the v3
@@ -392,7 +344,7 @@ object WarehouseQueries {
           when(pmod(k + lit(i.toLong), lit(3L)) === 0L,
             concat(u32(lit(1L)), u32(lit(0L)), h16(s"u$i"), h16(s"v$i")))
             .otherwise(u32(lit(0L))))
-          .otherwise(unhex(lit("")))
+          .otherwise(empty)
       val extV3 = when(pmod(k, lit(3L)) === 2L,
         concat(u32(lit(3L)), u32(lit(0L)),
           u32(lit(100000L) + pmod(k, lit(1000L))),
@@ -404,7 +356,7 @@ object WarehouseQueries {
           u32(nS), sponsor(0), sponsor(1), sponsor(2), extV3))
     }
     val xdr = concat(
-      u32(lit(0L)), unhex(concat(md5(ks), md5(concat(ks, lit("a"))))),
+      u32(lit(0L)), key32,
       i64(lit(5000000000L) + k),                     // balance
       i64(k * lit(4294967296L) + pmod(k, lit(100L))), // seqNum
       u32(pmod(k, lit(20L))),                        // numSubEntries
@@ -412,8 +364,7 @@ object WarehouseQueries {
         concat(u32(lit(1L)), u32(lit(0L)), h16("i"), h16("j")))
         .otherwise(u32(lit(0L))),
       u32(pmod(k, lit(8L))),                         // flags
-      concat(u32(hd), domain.cast("binary"),         // string32 domain
-        zeros.substr(lit(1), (lit(4) - pmod(hd, lit(4))) % lit(4))),
+      varStr(substring(md5(concat(ks, lit("d"))), 1, 12), hd), // string32 domain
       unhex(concat(                                  // thresholds[4]
         lpad(hex(lit(1L) + pmod(k, lit(4L))), 2, "0"),
         lpad(hex(pmod(k, lit(3L))), 2, "0"),
@@ -424,9 +375,7 @@ object WarehouseQueries {
         concat(u32(lit(1L)), i64(lit(111222333L) + k), // liabilities
           i64(lit(444555L) + k), extV2(k, nS)))
         .otherwise(u32(lit(0L))))
-    t(s, dir, "customer").filter(col("c_custkey") % 17 === 0)
-      .select(col("c_custkey").cast("long").as("k"))
-      .withColumn("bin", unbase64(base64(xdr)))
+    rows(s, dir, "customer", "c_custkey", 17)(xdr)
   }
 
   /** The per-operation fan-out over a (k, bin) envelope relation: decode,
@@ -522,15 +471,6 @@ object WarehouseQueries {
     * three sponsorship-ext shapes by k%3. Shared by the batch gate and
     * the st_ledger_entries streaming drain. */
   private[graft] def ledgerEntryFixture(s: SparkSession, dir: String): DataFrame = {
-      val zeros = unhex(lit("000000"))
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-      val k = col("k"); val ks = k.cast("string")
-      def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
-      def varStr(strCol: Column, lenCol: Column): Column =
-        concat(u32(lenCol), strCol.substr(lit(1), lenCol).cast("binary"),
-          zeros.substr(lit(1), (lit(4) - pmod(lenCol, lit(4))) % lit(4)))
-      val key32 = unhex(concat(md5(ks), md5(concat(ks, lit("a")))))
       val acct = concat(u32(lit(0L)), key32)
       val tEt = pmod(k, lit(10L))
       val body = when(tEt === 0L, concat(acct, // minimal AccountEntry
@@ -579,9 +519,7 @@ object WarehouseQueries {
         .otherwise(u32(lit(0L)))
       val xdr = concat(u32(lit(9000000L) + pmod(k, lit(100000L))),
         u32(tEt), body, ext)
-      t(s, dir, "customer").filter(col("c_custkey") % 53 === 0)
-        .select(col("c_custkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(xdr)))
+      rows(s, dir, "customer", "c_custkey", 53)(xdr)
   }
 
   /** The per-record LedgerEntry projection over a (k, bin) relation —
@@ -1925,17 +1863,12 @@ object WarehouseQueries {
     // so the native extraction must invert the encode bit-for-bit (the
     // image-decode pixel-law pattern).
     "s2_xdr_decode" -> ((s, dir) => {
-      val ks = col("k").cast("string")
       val xdr = concat(
-        unhex(lpad(hex(pmod(col("k"), lit(100L))), 8, "0")),
+        u32(pmod(k, lit(100L))),
         unhex(concat(md5(ks), md5(concat(ks, lit("x"))))),
-        unhex(lpad(hex(lit(1700000000L) + col("k")), 16, "0")),
-        unhex(lpad(hex(lit(100L) + pmod(col("k"), lit(7L))), 8, "0")))
-      t(s, dir, "orders").filter(col("o_orderkey") % 37 === 0)
-        .select(col("o_orderkey").cast("long").as("k"))
-        // the transport shape the reference lands: a base64 string field
-        .withColumn("xdr_b64", base64(xdr))
-        .withColumn("bin", unbase64(col("xdr_b64")))
+        i64(lit(1700000000L) + k),
+        u32(lit(100L) + pmod(k, lit(7L))))
+      rows(s, dir, "orders", "o_orderkey", 37)(xdr)
         .select(col("k"),
           call_function("graft_xdr_u32", col("bin"), lit(0))
             .as("ledger_version"),
@@ -1959,7 +1892,6 @@ object WarehouseQueries {
     // single-char substitution rejected) are spec-pinned in
     // XdrStrkeySpec.
     "s3_strkey_decode" -> ((s, dir) => {
-      val ks = col("k").cast("string")
       t(s, dir, "customer").filter(col("c_custkey") % 11 === 0)
         .select(col("c_custkey").cast("long").as("k"))
         .withColumn("payload",
@@ -1993,23 +1925,14 @@ object WarehouseQueries {
     // invert the encode across all interior-shape combinations; a
     // truncated header must quarantine to NULL.
     "s2_ledger_header" -> ((s, dir) => {
-      val zeros = unhex(lit("000000"))
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def u64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-      val k = col("k"); val ks = k.cast("string")
-      def h16(tag: String) = unhex(md5(concat(ks, lit(tag)))) // 16 bytes
       def h32(a: String, b: String) = concat(h16(a), h16(b)) // a Hash
-      // opaque<max>: len || bytes || zero-pad to the 4-byte boundary
-      def varOpaque(bytesCol: Column, lenCol: Column): Column =
-        concat(u32(lenCol), bytesCol.substr(lit(1), lenCol),
-          zeros.substr(lit(1), (lit(4) - pmod(lenCol, lit(4))) % lit(4)))
       val nU = pmod(k, lit(3L))
       def upgrade(i: Int): Column =
-        when(nU > i, varOpaque(h16(s"g$i"), pmod(k + lit(i.toLong), lit(4L)) + lit(1L)))
-          .otherwise(unhex(lit("")))
+        when(nU > i, varStr(h16(s"g$i"), pmod(k + lit(i.toLong), lit(4L)) + lit(1L)))
+          .otherwise(empty)
       val scpExt = when(pmod(k, lit(2L)) === 1L,
         concat(u32(lit(1L)), u32(lit(0L)), h32("n", "o"),
-          varOpaque(concat(h16("p"), h16("q"), h16("r2")),
+          varStr(concat(h16("p"), h16("q"), h16("r2")),
             lit(37L) + pmod(k, lit(5L)))))
         .otherwise(u32(lit(0L)))
       val hdrExt = when(pmod(k, lit(5L)) === 0L,
@@ -2019,25 +1942,23 @@ object WarehouseQueries {
         u32(pmod(k, lit(100L))),                       // ledgerVersion
         unhex(concat(md5(ks), md5(concat(ks, lit("x"))))), // prev hash
         h32("t", "u"),                                 // scp.txSetHash
-        u64(lit(1700000000L) + k),                     // scp.closeTime
+        i64(lit(1700000000L) + k),                     // scp.closeTime
         u32(nU), upgrade(0), upgrade(1),               // scp.upgrades<6>
         scpExt,                                        // scp.ext union
         h32("r", "s"),                                 // txSetResultHash
         h32("b", "c"),                                 // bucketListHash
         u32(k),                                        // ledgerSeq
-        u64(lit(1000000000000L) + k),                  // totalCoins
-        u64(lit(7000000L) + k),                        // feePool
+        i64(lit(1000000000000L) + k),                  // totalCoins
+        i64(lit(7000000L) + k),                        // feePool
         u32(pmod(k, lit(11L))),                        // inflationSeq
-        u64(lit(900000000L) + k),                      // idPool
+        i64(lit(900000000L) + k),                      // idPool
         u32(lit(100L) + pmod(k, lit(7L))),             // baseFee
         u32(lit(5000000L) + pmod(k, lit(13L))),        // baseReserve
         u32(lit(1000L) + pmod(k, lit(50L))),           // maxTxSetSize
         concat(h16("s1"), h16("s2"), h16("s3"), h16("s4"),
           h16("s5"), h16("s6"), h16("s7"), h16("s8")), // skipList[4]
         hdrExt)                                        // header ext
-      t(s, dir, "orders").filter(col("o_orderkey") % 41 === 0)
-        .select(col("o_orderkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(xdr))) // the transport shape
+      rows(s, dir, "orders", "o_orderkey", 41)(xdr)
         .withColumn("h", call_function("graft_xdr_ledger_header", col("bin")))
         .select(col("k"),
           col("h.ledger_version").as("ledger_version"),
@@ -2215,15 +2136,6 @@ object WarehouseQueries {
     // full LedgerKey decode), CLAWBACK, SET_TRUST_LINE_FLAGS, and the
     // footprint ops. One op per envelope, arm by k%15.
     "s2_tx_ops_ext2" -> ((s, dir) => {
-      val zeros = unhex(lit("000000"))
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-      val k = col("k"); val ks = k.cast("string")
-      def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
-      def varStr(strCol: Column, lenCol: Column): Column =
-        concat(u32(lenCol), strCol.substr(lit(1), lenCol).cast("binary"),
-          zeros.substr(lit(1), (lit(4) - pmod(lenCol, lit(4))) % lit(4)))
-      val key32 = unhex(concat(md5(ks), md5(concat(ks, lit("a")))))
       val trustor = concat(u32(lit(0L)), h16("d"), h16("e"))
       val m = pmod(k, lit(15L))
       val allowTrust = concat(u32(lit(7L)), trustor,
@@ -2248,7 +2160,7 @@ object WarehouseQueries {
       val createCb = concat(u32(lit(14L)), cbAsset, i64(lit(70000000L) + k),
         u32(lit(1L) + pmod(k, lit(2L))), claimant("c0", "c1"),
         when(pmod(k, lit(2L)) === 1L, claimant("c2", "c3"))
-          .otherwise(unhex(lit(""))))
+          .otherwise(empty))
       val balanceId = concat(u32(lit(0L)), h16("bi"), h16("bj"))
       val revoke = when(pmod(k, lit(2L)) === 0L,
         concat(u32(lit(18L)), u32(lit(0L)), // LedgerKey arm: an OFFER key
@@ -2284,10 +2196,7 @@ object WarehouseQueries {
         u32(lit(0L)), u32(lit(0L)),
         u32(lit(1L)), u32(lit(0L)), opBody,
         u32(lit(0L)), u32(lit(0L)))
-      txOpsExt2Project(
-        t(s, dir, "orders").filter(col("o_orderkey") % 67 === 0)
-          .select(col("o_orderkey").cast("long").as("k"))
-          .withColumn("bin", unbase64(base64(xdr))))
+      txOpsExt2Project(rows(s, dir, "orders", "o_orderkey", 67)(xdr))
     }),
 
     // The Soroban surface through the gate: INVOKE_HOST_FUNCTION across
@@ -2298,21 +2207,12 @@ object WarehouseQueries {
     // SorobanTransactionData tx ext on odd rows (resources + footprint
     // LedgerKey vectors, each key fully parsed).
     "s2_soroban" -> ((s, dir) => {
-      val zeros = unhex(lit("000000"))
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-      val k = col("k"); val ks = k.cast("string")
-      def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
-      def varStr(strCol: Column, lenCol: Column): Column =
-        concat(u32(lenCol), strCol.substr(lit(1), lenCol).cast("binary"),
-          zeros.substr(lit(1), (lit(4) - pmod(lenCol, lit(4))) % lit(4)))
-      val key32 = unhex(concat(md5(ks), md5(concat(ks, lit("a")))))
       val m = pmod(k, lit(4L))
       val fnLen = pmod(k, lit(9L)) + lit(1L)
       val nArgs = pmod(k, lit(3L))
       def arg(i: Int): Column =
         when(nArgs > i, concat(u32(lit(3L)), u32(pmod(k, lit(100L)) + lit(i.toLong))))
-          .otherwise(unhex(lit("")))
+          .otherwise(empty)
       val invokeFn = concat(u32(lit(0L)),
         u32(lit(1L)), h16("ic1"), h16("ic2"), // SCAddress: contract
         varStr(substring(md5(concat(ks, lit("fn"))), 1, 9), fnLen),
@@ -2331,7 +2231,7 @@ object WarehouseQueries {
         unhex(lit("00")), u32(lit(0L)), h16("cai"), h16("caj"),
         u32(lit(1L)),               // executable: stellar asset
         u32(pmod(k, lit(2L))),      // constructorArgs: 0 or 1 SCV_VOID
-        when(pmod(k, lit(2L)) === 1L, u32(lit(1L))).otherwise(unhex(lit(""))))
+        when(pmod(k, lit(2L)) === 1L, u32(lit(1L))).otherwise(empty))
       val hostFn = when(m === 0L, invokeFn).when(m === 1L, createV1)
         .when(m === 2L, upload).otherwise(createV2)
       // k%2 auth entries: source-account credentials + a contract-fn
@@ -2346,7 +2246,7 @@ object WarehouseQueries {
       def roKey(i: Int): Column =
         when(pmod(k, lit(3L)) > i,
           concat(u32(lit(0L)), u32(lit(0L)), h16(s"ro${i}a"), h16(s"ro${i}b")))
-          .otherwise(unhex(lit("")))
+          .otherwise(empty)
       val soroExt = when(pmod(k, lit(2L)) === 1L,
         concat(u32(lit(1L)), u32(lit(0L)),
           u32(pmod(k, lit(3L))), roKey(0), roKey(1),
@@ -2362,9 +2262,7 @@ object WarehouseQueries {
         u32(lit(0L)), u32(lit(0L)),
         u32(lit(1L)), u32(lit(0L)), opBody,
         soroExt, u32(lit(0L)))
-      t(s, dir, "orders").filter(col("o_orderkey") % 71 === 0)
-        .select(col("o_orderkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(xdr)))
+      rows(s, dir, "orders", "o_orderkey", 71)(xdr)
         .withColumn("h", call_function("graft_xdr_tx_envelope", col("bin")))
         .select(col("k"), col("h"),
           posexplode_outer(col("h.operations")).as(Seq("i", "op")))
@@ -2401,23 +2299,14 @@ object WarehouseQueries {
     // result per row, arm by k%9; the op vector explodes OUTER with no
     // null filter so void-code rows keep their envelope columns.
     "s2_tx_results" -> ((s, dir) => {
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-      // SIGNED int32: hex() of a negative long is 16 chars and lpad
-      // truncates keeping the LEFT — encode the two's-complement word
-      def i32e(c: Column) = u32(pmod(c, lit(4294967296L)))
-      val k = col("k"); val ks = k.cast("string")
-      def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
-      val key32 = unhex(concat(md5(ks), md5(concat(ks, lit("a")))))
       val m = pmod(k, lit(9L))
       val fee = i64(lit(100L) + pmod(k, lit(50L)))
       def opInner(t: Long, rc: Long, payload: Column): Column =
         concat(u32(lit(0L)), u32(lit(t)), i32e(lit(rc)), payload)
-      val emptyB = unhex(lit(""))
       val m0 = concat(fee, u32(lit(0L)), u32(lit(2L)),
-        opInner(1L, 0L, emptyB), opInner(11L, 0L, emptyB), u32(lit(0L)))
+        opInner(1L, 0L, empty), opInner(11L, 0L, empty), u32(lit(0L)))
       val m1 = concat(fee, i32e(lit(-1L)), u32(lit(1L)),
-        opInner(1L, -2L, emptyB), u32(lit(0L)))
+        opInner(1L, -2L, empty), u32(lit(0L)))
       val m2 = concat(fee, i32e(lit(-3L)), u32(lit(0L)))
       val m3 = concat(i64(lit(1000L) + k), u32(lit(1L)),
         h16("ih1"), h16("ih2"),
@@ -2430,14 +2319,14 @@ object WarehouseQueries {
           i64(lit(11L)),
           u32(lit(0L)), i64(lit(10L) + pmod(k, lit(100L)) + lit(i.toLong)),
           u32(lit(0L)), i64(lit(20L) + pmod(k, lit(100L)) + lit(i.toLong))))
-          .otherwise(emptyB)
+          .otherwise(empty)
       val eff = pmod(k, lit(3L))
       val offerEntry = concat(u32(lit(0L)), key32, i64(lit(7000000L) + k),
         u32(lit(0L)), u32(lit(0L)), i64(lit(1L)),
         u32(lit(1L)), u32(lit(1L)), u32(lit(0L)), u32(lit(0L)))
       val m4 = concat(fee, u32(lit(0L)), u32(lit(1L)),
         opInner(3L, 0L, concat(u32(nCl), atom(0), atom(1),
-          u32(eff), when(eff < 2L, offerEntry).otherwise(emptyB))),
+          u32(eff), when(eff < 2L, offerEntry).otherwise(empty))),
         u32(lit(0L)))
       val m5 = concat(fee, u32(lit(0L)), u32(lit(1L)),
         opInner(2L, 0L, concat(u32(lit(1L)),
@@ -2450,7 +2339,7 @@ object WarehouseQueries {
       def payout(i: Int): Column =
         when(nCl > i, concat(u32(lit(0L)), h16(s"pd$i"),
           i64(lit(1000L) + pmod(k, lit(100L)) + lit(i.toLong))))
-          .otherwise(emptyB)
+          .otherwise(empty)
       val m6 = concat(fee, u32(lit(0L)), u32(lit(1L)),
         opInner(9L, 0L, concat(u32(nCl), payout(0), payout(1))),
         u32(lit(0L)))
@@ -2463,9 +2352,7 @@ object WarehouseQueries {
       val xdr = when(m === 0L, m0).when(m === 1L, m1).when(m === 2L, m2)
         .when(m === 3L, m3).when(m === 4L, m4).when(m === 5L, m5)
         .when(m === 6L, m6).when(m === 7L, m7).otherwise(m8)
-      t(s, dir, "orders").filter(col("o_orderkey") % 73 === 0)
-        .select(col("o_orderkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(xdr)))
+      rows(s, dir, "orders", "o_orderkey", 73)(xdr)
         .withColumn("h", call_function("graft_xdr_tx_result", col("bin")))
         .select(col("k"), col("h"),
           posexplode_outer(col("h.op_results")).as(Seq("i", "op")))
@@ -2564,9 +2451,6 @@ object WarehouseQueries {
     // explodes to (setting, position, value); the oracle restates the
     // per-position law v(arm,i), with the EvictionIterator bool pinned.
     "s3_config_setting" -> ((s, dir) => {
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-      val k = col("k")
       val a = pmod(k, lit(14L))
       def v(i: Int): Column = (a + lit(1L)) * lit(100000L) + k + lit(7L * i)
       def seqW(widths: String): Column =
@@ -2575,11 +2459,11 @@ object WarehouseQueries {
       val nCp = pmod(k, lit(3L)) + lit(1L)
       def cpEntry(j: Int): Column =
         when(nCp > j, concat(u32(lit(0L)), i64(v(2 * j)), i64(v(2 * j + 1))))
-          .otherwise(unhex(lit("")))
+          .otherwise(empty)
       val costParams = concat(u32(nCp), cpEntry(0), cpEntry(1), cpEntry(2))
       val nW = pmod(k, lit(4L)) + lit(1L)
       def wEl(i: Int): Column =
-        when(nW > i, i64(v(i))).otherwise(unhex(lit("")))
+        when(nW > i, i64(v(i))).otherwise(empty)
       val window = concat(u32(nW), wEl(0), wEl(1), wEl(2), wEl(3))
       val evict = concat(u32(v(0)), u32(pmod(k, lit(2L))), i64(v(2)))
       val body = when(a === 0L, seqW("w"))
@@ -2594,9 +2478,7 @@ object WarehouseQueries {
         .when(a === 11L, seqW("w"))
         .when(a === 12L, window)
         .otherwise(evict)
-      t(s, dir, "customer").filter(col("c_custkey") % 41 === 0)
-        .select(col("c_custkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(concat(u32(a), body))))
+      rows(s, dir, "customer", "c_custkey", 41)(concat(u32(a), body))
         .withColumn("h", call_function("graft_xdr_config_setting", col("bin")))
         .select(col("k"),
           col("h.setting_id").as("setting_id"),
@@ -2616,15 +2498,6 @@ object WarehouseQueries {
     // offer id, data name, the four hash arms, the contract-data
     // address + SCVal key + durability, the config setting id).
     "s3_restored_key" -> ((s, dir) => {
-      val zeros = unhex(lit("000000"))
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-      val k = col("k"); val ks = k.cast("string")
-      def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
-      def varStr(strCol: Column, lenCol: Column): Column =
-        concat(u32(lenCol), strCol.substr(lit(1), lenCol).cast("binary"),
-          zeros.substr(lit(1), (lit(4) - pmod(lenCol, lit(4))) % lit(4)))
-      val key32 = unhex(concat(md5(ks), md5(concat(ks, lit("a")))))
       val acct = concat(u32(lit(0L)), key32)
       val ta = pmod(k, lit(4L))
       val trustAsset = when(ta === 0L, u32(lit(0L)))
@@ -2654,9 +2527,7 @@ object WarehouseQueries {
         .when(tEt === 7L, concat(h16("cc"), h16("cd")))
         .when(tEt === 8L, u32(pmod(k, lit(14L))))
         .otherwise(concat(h16("th"), h16("tu")))
-      t(s, dir, "customer").filter(col("c_custkey") % 43 === 0)
-        .select(col("c_custkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(concat(u32(tEt), body))))
+      rows(s, dir, "customer", "c_custkey", 43)(concat(u32(tEt), body))
         .withColumn("h", call_function("graft_xdr_ledger_key", col("bin")))
         .select(col("k"),
           col("h.entry_type").as("entry_type"),
@@ -2691,11 +2562,6 @@ object WarehouseQueries {
     // (trust_lines, offers). Same fixture-law pattern: every column
     // restated from the row key, addresses via the strkey round-trip.
     "s3_trust_line" -> ((s, dir) => {
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-      val k = col("k"); val ks = k.cast("string")
-      def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
-      val key32 = unhex(concat(md5(ks), md5(concat(ks, lit("a")))))
       val issuer = concat(u32(lit(0L)), h16("f"), h16("g"))
       val at = pmod(k, lit(4L))
       val asset = when(at === 0L, u32(lit(0L)))
@@ -2716,9 +2582,7 @@ object WarehouseQueries {
       val xdr = concat(u32(lit(0L)), key32, asset,
         i64(lit(31337000L) + k), i64(lit(900000000L) + k),
         u32(pmod(k, lit(4L))), ext)
-      t(s, dir, "customer").filter(col("c_custkey") % 19 === 0)
-        .select(col("c_custkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(xdr)))
+      rows(s, dir, "customer", "c_custkey", 19)(xdr)
         .withColumn("h", call_function("graft_xdr_trust_line", col("bin")))
         .select(col("k"),
           lower(hex(call_function("graft_strkey_decode",
@@ -2738,28 +2602,13 @@ object WarehouseQueries {
     }),
 
     "s3_offer_entry" -> ((s, dir) => {
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-      val k = col("k"); val ks = k.cast("string")
-      def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
-      val key32 = unhex(concat(md5(ks), md5(concat(ks, lit("a")))))
-      def asset(sel: Column, tag: String): Column =
-        when(sel === 0L, u32(lit(0L)))
-          .when(sel === 1L, concat(u32(lit(1L)),
-            substring(md5(concat(ks, lit(tag))), 1, 3).cast("binary"),
-            unhex(lit("00")), u32(lit(0L)), h16(tag + "i"), h16(tag + "j")))
-          .otherwise(concat(u32(lit(2L)),
-            substring(md5(concat(ks, lit(tag))), 1, 10).cast("binary"),
-            unhex(lit("0000")), u32(lit(0L)), h16(tag + "i"), h16(tag + "j")))
       val xdr = concat(u32(lit(0L)), key32,
         i64(lit(4000000000L) + k),
         asset(pmod(k, lit(3L)), "s"), asset(pmod(k + lit(1L), lit(3L)), "b"),
         i64(lit(777000L) + k),
         u32(lit(1L) + pmod(k, lit(97L))), u32(lit(1L) + pmod(k, lit(89L))),
         u32(pmod(k, lit(4L))), u32(lit(0L)))
-      t(s, dir, "orders").filter(col("o_orderkey") % 47 === 0)
-        .select(col("o_orderkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(xdr)))
+      rows(s, dir, "orders", "o_orderkey", 47)(xdr)
         .withColumn("h", call_function("graft_xdr_offer", col("bin")))
         .select(col("k"),
           lower(hex(call_function("graft_strkey_decode",
@@ -2791,18 +2640,6 @@ object WarehouseQueries {
     // account_signers, trust_lines, offers, liquidity_pools,
     // claimable_balances.
     "s3_liquidity_pool" -> ((s, dir) => {
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-      val k = col("k"); val ks = k.cast("string")
-      def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
-      def asset(sel: Column, tag: String): Column =
-        when(sel === 0L, u32(lit(0L)))
-          .when(sel === 1L, concat(u32(lit(1L)),
-            substring(md5(concat(ks, lit(tag))), 1, 3).cast("binary"),
-            unhex(lit("00")), u32(lit(0L)), h16(tag + "i"), h16(tag + "j")))
-          .otherwise(concat(u32(lit(2L)),
-            substring(md5(concat(ks, lit(tag))), 1, 10).cast("binary"),
-            unhex(lit("0000")), u32(lit(0L)), h16(tag + "i"), h16(tag + "j")))
       val xdr = concat(
         h16("p"), h16("q"),                            // PoolID
         u32(lit(0L)),                                  // constant product
@@ -2810,9 +2647,7 @@ object WarehouseQueries {
         u32(lit(30L)),                                 // fee (bps)
         i64(lit(111000L) + k), i64(lit(222000L) + k),  // reserves
         i64(lit(333000L) + k), i64(pmod(k, lit(50L)))) // shares, tl count
-      t(s, dir, "customer").filter(col("c_custkey") % 23 === 0)
-        .select(col("c_custkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(xdr)))
+      rows(s, dir, "customer", "c_custkey", 23)(xdr)
         .withColumn("h", call_function("graft_xdr_liquidity_pool", col("bin")))
         .select(col("k"),
           col("h.pool_id").as("pool_id"),
@@ -2834,10 +2669,6 @@ object WarehouseQueries {
     }),
 
     "s3_claimable_balance" -> ((s, dir) => {
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-      val k = col("k"); val ks = k.cast("string")
-      def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
       val pm3 = pmod(k, lit(3L))
       // claimant 0's predicate varies: UNCONDITIONAL | AND(ABS, UNCOND)
       // | NOT(REL) — exercising leaf, vector, and optional arms
@@ -2853,7 +2684,7 @@ object WarehouseQueries {
         concat(u32(lit(0L)), u32(lit(0L)), h16("d1"), h16("e1"),
           u32(lit(2L)), u32(lit(2L)), u32(lit(0L)),
           u32(lit(4L)), i64(lit(1800000L) + k)))
-        .otherwise(unhex(lit("")))
+        .otherwise(empty)
       val asset = when(pmod(k, lit(2L)) === 0L, u32(lit(0L)))
         .otherwise(concat(u32(lit(1L)),
           substring(md5(concat(ks, lit("x"))), 1, 3).cast("binary"),
@@ -2867,9 +2698,7 @@ object WarehouseQueries {
         u32(lit(1L) + pmod(k, lit(2L))),               // claimants<10>
         claimant0, claimant1, asset,
         i64(lit(555000L) + k), ext)
-      t(s, dir, "customer").filter(col("c_custkey") % 29 === 0)
-        .select(col("c_custkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(xdr)))
+      rows(s, dir, "customer", "c_custkey", 29)(xdr)
         .withColumn("h", call_function("graft_xdr_claimable_balance", col("bin")))
         .select(col("k"), col("h"),
           posexplode_outer(col("h.claimants")).as(Seq("i", "cl")))
@@ -2912,17 +2741,8 @@ object WarehouseQueries {
     // SYMBOL key, durability, and an SCVal value tree varying scalar
     // U64 / STRING / VEC / MAP shapes, summarized to queryable columns.
     "s3_contract_data" -> ((s, dir) => {
-      val zeros = unhex(lit("000000"))
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-      val k = col("k"); val ks = k.cast("string")
-      def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
-      def varStr(strCol: Column, lenCol: Column): Column =
-        concat(u32(lenCol), strCol.substr(lit(1), lenCol).cast("binary"),
-          zeros.substr(lit(1), (lit(4) - pmod(lenCol, lit(4))) % lit(4)))
       val contract = when(pmod(k, lit(2L)) === 0L,
-        concat(u32(lit(0L)), u32(lit(0L)),
-          unhex(concat(md5(ks), md5(concat(ks, lit("a")))))))
+        concat(u32(lit(0L)), u32(lit(0L)), key32))
         .otherwise(concat(u32(lit(1L)), h16("h"), h16("i")))
       val keyLen = pmod(k, lit(9L)) + lit(1L)
       val keyVal = concat(u32(lit(15L)), // SCV_SYMBOL
@@ -2952,9 +2772,7 @@ object WarehouseQueries {
             .otherwise(concat(u32(lit(1L)), h16("v1"), h16("v2")))))
       val xdr = concat(u32(lit(0L)), contract, keyVal,
         u32(pmod(k, lit(2L))), valVal)
-      t(s, dir, "customer").filter(col("c_custkey") % 31 === 0)
-        .select(col("c_custkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(xdr)))
+      rows(s, dir, "customer", "c_custkey", 31)(xdr)
         .withColumn("h", call_function("graft_xdr_contract_data", col("bin")))
         .select(col("k"),
           lower(hex(call_function("graft_strkey_decode",
@@ -3001,11 +2819,6 @@ object WarehouseQueries {
     // LedgerEntries and whose removed arm carries a LedgerKey, exploded
     // to one row per change.
     "s3_entry_changes" -> ((s, dir) => {
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-      val k = col("k"); val ks = k.cast("string")
-      def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
-      val key32 = unhex(concat(md5(ks), md5(concat(ks, lit("a")))))
       val lastMod = u32(lit(9000000L) + pmod(k, lit(100000L)))
       val ttlEntry = concat(lastMod, u32(lit(9L)),
         h16("t0a"), h16("t0b"), u32(lit(4000000L) + k), u32(lit(0L)))
@@ -3021,13 +2834,11 @@ object WarehouseQueries {
       val change0 = when(kind0 === 2L, concat(u32(lit(2L)), ttlKey))
         .otherwise(concat(u32(kind0), ttlEntry))
       val change1 = when(n > 1L, concat(u32(lit(0L)), offerEntry))
-        .otherwise(unhex(lit("")))
+        .otherwise(empty)
       val change2 = when(n > 2L, concat(u32(lit(2L)), acctKey))
-        .otherwise(unhex(lit("")))
+        .otherwise(empty)
       val xdr = concat(u32(n), change0, change1, change2)
-      t(s, dir, "customer").filter(col("c_custkey") % 59 === 0)
-        .select(col("c_custkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(xdr)))
+      rows(s, dir, "customer", "c_custkey", 59)(xdr)
         .withColumn("h", call_function("graft_xdr_entry_changes", col("bin")))
         .select(col("k"), col("h.n_changes").as("n_changes"),
           posexplode_outer(col("h.changes")).as(Seq("i", "ch")))
@@ -3052,14 +2863,6 @@ object WarehouseQueries {
     // 256-bit values keep the two high limbs zero so DuckDB's 128-bit
     // HUGEINT can restate them; the four-limb math is spec-pinned.)
     "s3_scval_exotic" -> ((s, dir) => {
-      val zeros = unhex(lit("000000"))
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def i64(c: Column) = unhex(lpad(hex(c), 16, "0"))
-      val k = col("k"); val ks = k.cast("string")
-      def h16(tag: String) = unhex(md5(concat(ks, lit(tag))))
-      def varStr(strCol: Column, lenCol: Column): Column =
-        concat(u32(lenCol), strCol.substr(lit(1), lenCol).cast("binary"),
-          zeros.substr(lit(1), (lit(4) - pmod(lenCol, lit(4))) % lit(4)))
       val m = pmod(k, lit(6L))
       val valVal = when(m === 0L,
         concat(u32(lit(2L)), u32(pmod(k, lit(10L))), u32(pmod(k, lit(1000L)))))
@@ -3080,9 +2883,7 @@ object WarehouseQueries {
       val xdr = concat(u32(lit(0L)),
         concat(u32(lit(1L)), h16("h"), h16("i")), // contract address
         keyVal, u32(lit(1L)), valVal)
-      t(s, dir, "customer").filter(col("c_custkey") % 47 === 0)
-        .select(col("c_custkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(xdr)))
+      rows(s, dir, "customer", "c_custkey", 47)(xdr)
         .withColumn("h", call_function("graft_xdr_contract_data", col("bin")))
         .select(col("k"),
           col("h.val_type").as("val_type"),
@@ -3100,14 +2901,10 @@ object WarehouseQueries {
     // fixture uses ASCII (hex-string) bytes so the DuckDB oracle's
     // VARCHAR-only sha256 hashes the identical byte sequence.
     "s3_ttl" -> ((s, dir) => {
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      val k = col("k"); val ks = k.cast("string")
       val xdr = concat(
         unhex(concat(md5(concat(ks, lit("t"))), md5(concat(ks, lit("u"))))),
         u32(lit(4000000L) + k))
-      t(s, dir, "customer").filter(col("c_custkey") % 37 === 0)
-        .select(col("c_custkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(xdr)))
+      rows(s, dir, "customer", "c_custkey", 37)(xdr)
         .withColumn("h", call_function("graft_xdr_ttl", col("bin")))
         .select(col("k"),
           col("h.key_hash").as("key_hash"),
@@ -3117,20 +2914,12 @@ object WarehouseQueries {
     }),
 
     "s3_contract_code" -> ((s, dir) => {
-      val zeros = unhex(lit("000000"))
-      def u32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      val k = col("k"); val ks = k.cast("string")
-      val cl = pmod(k, lit(40L)) + lit(8L)
-      val codeStr = concat(md5(concat(ks, lit("p"))), md5(concat(ks, lit("q"))))
-        .substr(lit(1), cl)
       val xdr = concat(
         u32(lit(0L)),
         unhex(concat(md5(concat(ks, lit("h"))), md5(concat(ks, lit("i"))))),
-        u32(cl), codeStr.cast("binary"),
-        zeros.substr(lit(1), (lit(4) - pmod(cl, lit(4))) % lit(4)))
-      t(s, dir, "orders").filter(col("o_orderkey") % 53 === 0)
-        .select(col("o_orderkey").cast("long").as("k"))
-        .withColumn("bin", unbase64(base64(xdr)))
+        varStr(concat(md5(concat(ks, lit("p"))), md5(concat(ks, lit("q")))),
+          pmod(k, lit(40L)) + lit(8L)))
+      rows(s, dir, "orders", "o_orderkey", 53)(xdr)
         .withColumn("h", call_function("graft_xdr_contract_code", col("bin")))
         .select(col("k"),
           col("h.code_hash").as("code_hash"),

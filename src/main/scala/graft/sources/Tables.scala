@@ -12,10 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     name match {
@@ -37,7 +33,4 @@ object Tables {
       raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw
   }
-
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -770,11 +770,8 @@ object ScaleProbe {
       // almost nothing, so wall time here reflects the pre-filter's cost,
       // not the saved network volume — the spec asserts semantic equality
       // and the map-side no-exchange shape).
-      val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevAqe = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      try {
+      GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
         val nPlain = time("  join_plain_shuffled") {
           bigEv.join(dim, col("user_id") === col("d_user")).count()
         }
@@ -792,12 +789,6 @@ object ScaleProbe {
         }.count()
         println(f"[scale] bloom reduction: $nFacts fact rows -> $nReduced into the " +
           f"join exchange (${nFacts.toDouble / math.max(nReduced, 1)}%.1fx fewer)")
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-        prevAqe match {
-          case Some(v) => spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
-          case None => spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        }
       }
       spark.stop(); return
     }

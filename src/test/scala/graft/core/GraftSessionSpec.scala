@@ -33,4 +33,18 @@ class GraftSessionSpec extends SparkSpec {
       assert(spark.conf.getOption(key).isEmpty)
     }
   }
+
+  test("iterationWidth gives one partition per 2,000 rows, at least 1 and " +
+      "at most the session width") {
+    GraftSession.withConf(spark, partitions -> "5") {
+      def w(rows: Long) = GraftSession.iterationWidth(spark, rows)
+      assert(w(0L) == 1)
+      assert(w(1999L) == 1)
+      assert(w(2000L) == 2)
+      assert(w(7999L) == 4)
+      assert(w(8000L) == 5)
+      assert(w(1000000000L) == 5)
+      assert(w(Long.MaxValue) == 5)
+    }
+  }
 }

@@ -156,7 +156,7 @@ object AsOfJoin {
     * union-window form when pairs exceed `pairBudgetFactor ×
     * (|facts| + |events|)` — pair volume within a small factor of the
     * data already moved is noise; past it, the blowup is the dominant
-    * term (ScaleProbe's joins mode measured 3.5 s vs 0.5 s at 10× per-
+    * term (`Probe scale`'s joins mode measured 3.5 s vs 0.5 s at 10× per-
     * key density). Output shape is [[asOfUnion]]'s: the fact columns
     * plus the renamed payload of the prevailing event.
     */

@@ -190,14 +190,11 @@ object Dedup {
     * once per reference (measured 6x on the near-dup pipeline). One small
     * eager count turns every later reference into a cache read.
     *
-    * Pinned relations are tracked so long-lived sessions don't accumulate
-    * cache across repeated operator calls: [[releasePinned]] unpersists
-    * everything pinned so far, and operators whose result no longer scans
-    * the pinned subtrees (dedupCorpus after its pairs materialize) call it
-    * themselves. Callers of the pair-returning APIs should call it after
-    * their terminal action.
+    * Inside a [[pinScope]] the pins are collected for the operator to
+    * release once its result no longer scans them (dedupCorpus after its
+    * pairs materialize); outside one they stay cached until the caller's
+    * `clearCache()` after its terminal action.
     */
-  private val pinned = scala.collection.mutable.ListBuffer.empty[DataFrame]
   private val scopePins = new ThreadLocal[scala.collection.mutable.ListBuffer[DataFrame]]
 
   private def materialize(df: DataFrame): DataFrame = {
@@ -216,7 +213,7 @@ object Dedup {
     import org.apache.spark.storage.StorageLevel
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     val scope = scopePins.get()
-    if (scope != null) scope += p else pinned.synchronized { pinned += p }
+    if (scope != null) scope += p
     p
   }
 
@@ -231,15 +228,6 @@ object Dedup {
     scopePins.set(buf)
     try { val r = f; (r, buf.toSeq) }
     finally { if (outer != null) scopePins.set(outer) else scopePins.remove() }
-  }
-
-  /** Unpersist relations pinned OUTSIDE any scope (direct operator calls
-    * on this thread's session). Blocking is false: executors drop blocks
-    * asynchronously, callers don't wait.
-    */
-  def releasePinned(): Unit = pinned.synchronized {
-    pinned.foreach(_.unpersist(false))
-    pinned.clear()
   }
 
   /** Exact set Jaccard from the scored-pair columns — ONE copy shared by
@@ -401,8 +389,8 @@ object Dedup {
     // TWICE (sz_a/sz_b joins) — lazy relations would re-tokenize the whole
     // existing corpus on every scan, the exact cost the index exists to
     // avoid. (In production these are bucketed TABLES; the eager persist
-    // is the in-session stand-in, released via Dedup.releasePinned /
-    // clearCache like every other pinned dedup relation.)
+    // is the in-session stand-in, released by the caller's clearCache
+    // like every other dedup relation pinned outside a pinScope.)
     val dg = materialize(
       shingleRows(docs, idCol, textCol, n)
         .select(col("id"), md5(col("shingle")).as("d"))

@@ -411,6 +411,15 @@ object LinkAnalysis {
     rankTopK(spark, edges, srcCol, dstCol, iters, k, dampNum, dampDen, scale,
       Some(seeds))
 
+  /** The canonical undirected edge list (a, b) with a < b, as longs: one
+    * row per edge, self-loops and null endpoints dropped. */
+  private def undirected(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    edges.select(
+        least(col(aCol), col(bCol)).cast("long").as("a"),
+        greatest(col(aCol), col(bCol)).cast("long").as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
+      .distinct()
+
   /** Degree-ordered triangle counting (the Schank–Wagner / forward
     * algorithm as relational dataflow): undirected edges are canonicalized
     * (a < b, deduped), then ORIENTED from the lower-degree endpoint to the
@@ -446,12 +455,7 @@ object LinkAnalysis {
     * per-query cache clear, in the driver branch immediately. */
   def triangleCorners(edges: DataFrame, aCol: String, bCol: String,
                       maxDriverEdges: Long = 100000L): DataFrame = {
-    val e = edges.select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = undirected(edges, aCol, bCol).persist(StorageLevel.MEMORY_AND_DISK)
     // the CC / kCore regime split, tighter bound (the wedge work is
     // O(m^1.5), so 100k edges caps the driver at ~3e7 set probes): a
     // small graph runs the SAME forward algorithm in memory — the
@@ -540,11 +544,7 @@ object LinkAnalysis {
     // ReuseExchange dedupes within that action — a persist here would
     // leak (this function returns lazily, so it has no release point)
     // for no saved work
-    val e = edges.select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
+    val e = undirected(edges, aCol, bCol)
     val deg = e.select(col("a").as("n"))
       .unionByName(e.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
@@ -608,12 +608,7 @@ object LinkAnalysis {
             maxDriverEdges: Long = 4000000L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = edges.sparkSession
-    val e0 = edges.select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e0 = undirected(edges, aCol, bCol).persist(StorageLevel.MEMORY_AND_DISK)
     val n0 = e0.count()
     if (n0 <= maxDriverEdges) {
       // driver cascade: maintain degrees + live flags, queue every node
@@ -702,11 +697,7 @@ object LinkAnalysis {
     require(rounds >= 1 && rounds <= 20, s"rounds in [1,20], got $rounds")
     val spark = edges.sparkSession
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val und = edges.select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
+    val und = undirected(edges, aCol, bCol)
     val sym = und.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
       .repartition(p, col("dst"))
@@ -768,12 +759,7 @@ object LinkAnalysis {
     */
   def communityModularity(edges: DataFrame, aCol: String, bCol: String,
                           labels: DataFrame): DataFrame = {
-    val e = edges.select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = undirected(edges, aCol, bCol).persist(StorageLevel.MEMORY_AND_DISK)
     // ONE action doing double duty: it reads m AND eagerly fills the
     // pin that the intra and degree legs both re-read — the fully-lazy
     // alternative (m as a broadcast one-row aggregate) would leave e
@@ -827,11 +813,7 @@ object LinkAnalysis {
     */
   def degreeAssortativity(edges: DataFrame, aCol: String,
                           bCol: String): DataFrame = {
-    val e = edges.select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
+    val e = undirected(edges, aCol, bCol)
     val deg = e.select(col("a").as("node"))
       .unionByName(e.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("d"))
@@ -867,12 +849,7 @@ object LinkAnalysis {
     */
   def linkPredictionTopK(edges: DataFrame, aCol: String, bCol: String,
                          topK: Int): DataFrame = {
-    val e = edges.select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = undirected(edges, aCol, bCol).persist(StorageLevel.MEMORY_AND_DISK)
     // eager fill: four subplans read e (both sym legs, the anti-join,
     // deg via sym) and a lazily-pinned relation under concurrent AQE
     // subplans recomputes per reference; released by the session's
@@ -911,7 +888,7 @@ object LinkAnalysis {
     *  - SPARSE form — per-topic equi-join + hash aggregate:
     *    `Σ_t m_t²/2` shuffled co-occurrence instances, linear in users.
     *
-    * ScaleProbe's triangles mode measured the two per-UNIT costs within
+    * `Probe scale`'s triangles mode measured the two per-UNIT costs within
     * ~5% of each other at sf0.1 (40M join instances 16.6 s vs 12.5M mask
     * pairs 4.9 s), so the selector simply compares the unit counts —
     * `|U|²/2` vs `Σ_t m_t²/2` — read as two aggregated scalars off the
@@ -970,7 +947,7 @@ object LinkAnalysis {
   }
 
   /** The measured crossover: per-unit costs of the two forms are near-
-    * equal (ScaleProbe), so pick the form with fewer units; the bitset
+    * equal (`Probe scale` triangles), so pick the form with fewer units; the bitset
     * form additionally needs the domain to fit 128 bits and the mask
     * table to be broadcast-sized. */
   private[graft] def chooseDense(nUsers: Long, sumMSq: Long,
@@ -980,7 +957,7 @@ object LinkAnalysis {
       nUsers.toDouble * nUsers.toDouble / 2.0 <= sumMSq.toDouble / 2.0
 
   /** Support table (ua, ub, c) for distinct (u, tp) pairs `e`, by either
-    * regime — exposed for the regime-equivalence spec and ScaleProbe. */
+    * regime — exposed for the regime-equivalence spec and `Probe scale`. */
   private[graft] def coEngagementSupport(e: DataFrame, dense: Boolean,
                                          domain: Int): DataFrame =
     if (dense) {

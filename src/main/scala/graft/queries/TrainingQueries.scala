@@ -207,6 +207,19 @@ object TrainingQueries {
     }
   }
 
+  /** The user->item graph of the link-analysis gates: (src = user_id,
+    * dst = props.k + 10000). Single-split testdata: rows are spread
+    * (narrow 2-col shuffle) BEFORE the per-row JSON extraction so the
+    * parse runs on every slot (the coEngagementTop500 precedent;
+    * AQE-coalesced noise on a many-split production table). */
+  private def userItemEdges(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "events")
+      .select(col("user_id"), col("props"))
+      .repartition(s.sparkContext.defaultParallelism)
+      .select(
+        col("user_id").as("src"),
+        (get_json_object(col("props"), "$.k").cast("long") + lit(10000L)).as("dst"))
+
   type QFn = (SparkSession, String) => DataFrame
 
   val queries: Map[String, QFn] = Map(
@@ -1351,16 +1364,7 @@ object TrainingQueries {
     // fixed-point, so the oracle replays the rounds exactly; topic nodes
     // have no out-edges, exercising the dangling-mass redistribution.
     "t_pagerank" -> ((s, dir) => {
-      // single-split testdata: spread rows (narrow 2-col shuffle) BEFORE
-      // the per-row JSON extraction so the parse runs on every slot (the
-      // coEngagementTop500 precedent; AQE-coalesced noise on a
-      // many-split production table)
-      val edges = t(s, dir, "events")
-        .select(col("user_id"), col("props"))
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(
-          col("user_id").as("src"),
-          (get_json_object(col("props"), "$.k").cast("long") + lit(10000L)).as("dst"))
+      val edges = userItemEdges(s, dir)
       graft.operators.LinkAnalysis.pageRankTopK(s, edges, "src", "dst",
         iters = 3, k = 25)
     }),
@@ -1371,17 +1375,11 @@ object TrainingQueries {
     // same integer fixed-point rounds, so the oracle replays them with a
     // seeds CTE; off-seed unreachable nodes converge to exactly 0.
     "t_pagerank_seeded" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
       // parsed ONCE and persisted: the seed derivation and the
       // iteration's edge canonicalization are separate actions, and
       // without the pin each would re-run the spread + JSON parse
       // (released by the session's per-query cache clear)
-      val edges = ev
-        .select(col("user_id"), col("props"))
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(
-          col("user_id").as("src"),
-          (get_json_object(col("props"), "$.k").cast("long") + lit(10000L)).as("dst"))
+      val edges = userItemEdges(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // seeds come from VALID EDGE SOURCES, matching the oracle's
       // "SELECT src FROM e WHERE src % 10 = 0" — seeding from raw
@@ -1400,12 +1398,7 @@ object TrainingQueries {
     // content, hubs = the directories pointing at them). Integer
     // fixed-point with max-normalization so every round is exact bigint.
     "t_hits" -> ((s, dir) => {
-      val edges = t(s, dir, "events")
-        .select(col("user_id"), col("props"))
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(
-          col("user_id").as("src"),
-          (get_json_object(col("props"), "$.k").cast("long") + lit(10000L)).as("dst"))
+      val edges = userItemEdges(s, dir)
       graft.operators.LinkAnalysis.hitsTopK(s, edges, "src", "dst",
         iters = 2, k = 25)
     }),

@@ -19,10 +19,12 @@ import scala.util.{Failure, Success, Try}
   * Probe explain <sfDir> <prefixes> <outDir> <suffix>
   * Probe audit   <sfDir> [prefixes]
   * Probe scaling <dataRoot> [prefixes] [outJson]
+  * Probe scale   <sfDir> <mult> <modes>
   * }}}
   * Queries are selected by comma-separated name prefixes (all when
-  * omitted) and run under [[SparkEntry.eachQuery]]. Each mode takes a
-  * session and leaves it running.
+  * omitted) and run under [[SparkEntry.eachQuery]]; `scale` runs the
+  * comma-separated [[Scale.Modes]] on `mult`x replicated inputs. Each mode
+  * takes a session and leaves it running.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -32,6 +34,7 @@ object Probe {
       case "audit" :: sf :: rest => s => audit(s, sf, rest.headOption.getOrElse(""))
       case "scaling" :: root :: rest => s => scaling(s, root,
         rest.headOption.getOrElse(ScalingQueries), rest.lift(1).getOrElse("target/scaling.json"))
+      case "scale" :: sf :: mult :: modes :: Nil => s => Scale.run(s, sf, mult.toInt, modes)
       case _ => System.err.println("usage: see the graft.tools.Probe scaladoc"); sys.exit(2)
     }
     val spark = GraftSession.forMain("graft-probe")

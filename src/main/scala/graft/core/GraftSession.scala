@@ -54,6 +54,12 @@ object GraftSession {
     c.set("spark.sql.adaptive.skewJoin.enabled", "true")
     c.set("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
     c.set("spark.sql.session.timeZone", "UTC")
+    // Parquet TIMESTAMP(NANOS) (events.ts) reads as its raw int64, which
+    // Tables.load truncates to micros as DuckDB does; Spark has no nanos
+    // timestamp to read it as. An engine default, not a loader's scoped
+    // setting: the scan reads the conf at execution time, so a loader
+    // that set it would change every later parquet read in the session.
+    c.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Parquet timestamps stay INT96 (the default): pyarrow/pandas read INT96
     // as tz-NAIVE timestamp[ns], which is what oracle comparisons expect —
     // INT64 micros would come back tz-aware (isAdjustedToUTC) and mismatch.

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** Idempotent del-ins batch loads (D1/D5) — the heart of the reference.
@@ -26,6 +28,72 @@ object DelIns {
     val keyed = batch.select(batchKeys.map(col): _*).distinct()
     target.join(keyed, batchKeys, "left_anti")
       .unionByName(batch.select(target.columns.map(col).toSeq: _*))
+  }
+
+  /** Names a staging directory: Spark's file index skips `_`-prefixed
+    * names, so a reader of the table never sees one. */
+  private[operators] val StagingPrefix = "_staging-"
+
+  /** Replace partitions of the partitioned parquet table at `path` with
+    * the rows of `df`, which carries `partitionCols` — the one commit of
+    * the writers that READ what they replace: the state merge
+    * ([[Warehouse.mergePartitioned]]), the mart refresh
+    * ([[IncrementalMart.refresh]]) and the sketch-mart merge
+    * ([[SketchMart.mergeDaily]]).
+    *
+    *  1. `df` is written once under `<path>/_staging-<uuid>`, clustered by
+    *     the partition columns: a rebalance on them lets AQE write one
+    *     file per partition at small scale and split a partition by its
+    *     advisory size at large scale. No reader sees a staging
+    *     directory ([[StagingPrefix]]), nor one a crash left behind.
+    *  2. The live files stay untouched until that job has committed, so a
+    *     retried task re-reads the pre-merge rows; nothing has to cut the
+    *     lineage first.
+    *  3. The written partitions come from a listing of the staging
+    *     directory, not from a Spark job. Each of them, and each partition
+    *     of `touched` (values in `partitionCols` order), is swapped: the
+    *     live directory is deleted and the staged one, if any, renamed in.
+    *     A touched partition the result has no rows for (all tombstoned, or
+    *     a row-reducing mart) stays deleted.
+    *
+    * Between one partition's delete and its rename the partition is
+    * absent, the same window as Spark's dynamic partition overwrite.
+    */
+  private[operators] def stagedReplace(df: DataFrame, path: String,
+                                       partitionCols: Seq[String],
+                                       touched: Seq[Row]): Unit = {
+    val fs = FileSystem.get(new java.net.URI(path),
+      df.sparkSession.sparkContext.hadoopConfiguration)
+    val staging = new Path(path, StagingPrefix + java.util.UUID.randomUUID())
+    df.hint("rebalance", partitionCols.map(col): _*)
+      .write.partitionBy(partitionCols: _*).parquet(staging.toString)
+    def written(dir: Path, rel: String, depth: Int): Seq[String] =
+      if (depth == 0) Seq(rel)
+      else fs.listStatus(dir).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
+        .flatMap { s =>
+          val name = s.getPath.getName
+          written(s.getPath, if (rel.isEmpty) name else s"$rel/$name", depth - 1)
+        }
+    val staged = written(staging, "", partitionCols.size).toSet
+    // directory names must use Spark's own partition-path escaping —
+    // URL/form encoding diverges (space -> '+', unescaped unicode) — and
+    // a null value must render as its __HIVE_DEFAULT_PARTITION__
+    // directory (String.valueOf would render "null"), or the doomed
+    // directory would be silently missed
+    val touchedDirs = touched.map(r => partitionCols.zipWithIndex.map { case (c, i) =>
+      ExternalCatalogUtils.getPartitionPathString(c, Option(r.get(i)).map(_.toString).orNull)
+    }.mkString("/"))
+    (staged ++ touchedDirs).foreach { rel =>
+      val live = new Path(path, rel)
+      fs.delete(live, true)
+      if (staged.contains(rel)) {
+        fs.mkdirs(live.getParent)
+        if (!fs.rename(new Path(staging, rel), live))
+          sys.error(s"stagedReplace: could not move staged $rel into $path")
+      }
+    }
+    fs.delete(staging, true)
   }
 
   /** Partitioned warehouse table rooted at `path`, partitioned by
@@ -62,7 +130,7 @@ object DelIns {
       * affected keys (the reference's MERGE is transactional in the
       * warehouse, reference
       * dags/stellar_etl_airflow/build_apply_gcs_changes_to_bq_task.py:116-149;
-      * on partitioned parquet the analog is read-merge-overwrite scoped to
+      * on partitioned parquet the analog is read-merge-replace scoped to
       * the key-derived partitions).
       *
       * Contract: the source rows carry the table's partition columns,
@@ -70,9 +138,9 @@ object DelIns {
       * a key lives in exactly one partition and the merge needs to read
       * nothing else. The scan of untouched partitions is pruned at the
       * file listing (MergeSpecTest asserts the scan's partition count),
-      * and dynamic partition overwrite rewrites only directories the
-      * merged result contains; a partition whose rows were ALL tombstoned
-      * produces no output rows, so its directory is dropped explicitly.
+      * and [[stagedReplace]] swaps only the affected directories; a
+      * partition whose rows were ALL tombstoned produces no output rows,
+      * so its directory is dropped.
       */
     def mergePartitioned(source: DataFrame, spec: MergeSpec): Unit = {
       require(partitionCols.nonEmpty, "mergePartitioned needs a partitioned table")
@@ -82,41 +150,13 @@ object DelIns {
         partitionCols.zipWithIndex
           // null-safe equality: `===` on a null partition value is null,
           // so the prune would read ZERO target rows of the null
-          // partition while the dynamic overwrite still rewrites its
-          // directory — silently deleting every unmerged key in it
+          // partition while the replace still swaps its directory —
+          // silently deleting every unmerged key in it
           .map { case (c, i) => col(c) <=> lit(r.get(i)) }
           .reduce(_ && _)
       }.reduce(_ || _)
-      val target = read().filter(prune)
-      // the overwrite reads from the same path it replaces: cut the
-      // merged result's lineage FIRST (eager localCheckpoint), so a lost
-      // block fails the job instead of silently recomputing from
-      // already-overwritten files mid-write
-      val merged = MergeOps.merge(target, source, spec).localCheckpoint()
-      val written = merged.select(partitionCols.map(col): _*).distinct().collect().toSet
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCols: _*).parquet(path)
-      val emptied = affected.filterNot(written.contains)
-      if (emptied.nonEmpty) {
-        // directory names must use Spark's own partition-path escaping —
-        // URL/form encoding diverges (space -> '+', unescaped unicode) and
-        // would silently miss the doomed directory
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-        emptied.foreach { r =>
-          val rel = partitionCols.zipWithIndex.map { case (c, i) =>
-            // a null partition value must render as Spark's
-            // __HIVE_DEFAULT_PARTITION__ directory (getPartitionPathString
-            // maps null/empty there); String.valueOf would render "null"
-            // and miss the doomed directory
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .getPartitionPathString(c,
-                Option(r.get(i)).map(_.toString).orNull)
-          }.mkString("/")
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/$rel"), true)
-        }
-      }
+      stagedReplace(MergeOps.merge(read().filter(prune), source, spec),
+        path, partitionCols, affected)
     }
 
     /** D5/K7 retention: drop partitions older than the cutoff — a metadata

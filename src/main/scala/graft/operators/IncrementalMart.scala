@@ -14,10 +14,9 @@ import org.apache.spark.sql.functions._
   * When a batch lands, ONLY the days the batch touches are recomputed —
   * the fact scan is partition-pruned to those days (a broadcast semi-join
   * on the derived day, which Spark turns into partition filters when the
-  * fact is day-partitioned), and the rewrite is a dynamic partition
-  * overwrite of exactly those mart directories. At 100 TB this is the
-  * difference between a nightly full-mart rebuild and touching 2 of 3650
-  * day partitions.
+  * fact is day-partitioned), and the rewrite replaces exactly those mart
+  * directories. At 100 TB this is the difference between a nightly
+  * full-mart rebuild and touching 2 of 3650 day partitions.
   *
   * Correctness invariant (spec + gate): after any sequence of batches,
   * the stored mart equals `martFn` over the full fact — incremental
@@ -25,8 +24,9 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalMart {
 
-  /** Recompute `martFn` for exactly the days `batch` touches and
-    * dynamic-overwrite those partitions of the mart at `martPath`.
+  /** Recompute `martFn` for exactly the days `batch` touches and replace
+    * those partitions of the mart at `martPath` (one staged write, one
+    * file per day at this scale: [[DelIns.stagedReplace]]).
     *
     * `fact` must already contain the batch (load order: fact first, then
     * refresh). `dayCol` is the fact's event-time column; `martDayCol`
@@ -41,46 +41,25 @@ object IncrementalMart {
               martFn: DataFrame => DataFrame,
               martDayCol: String = "day"): Unit = {
     // day-count-sized driver list (the bounded partition-value-list
-    // pattern): needed both for the join and for the touched-vs-written
-    // audit below; null days were never refreshable (=== null matches
+    // pattern): needed both for the join and for the partitions the
+    // replace swaps; null days were never refreshable (=== null matches
     // nothing), so they are excluded outright
     val days = batch.select(to_date(col(dayCol)).as("p_day")).distinct()
-      .collect().map(_.getDate(0)).filter(_ != null).toSeq
+      .collect().filterNot(_.isNullAt(0)).toSeq
     val daysDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(days.map(org.apache.spark.sql.Row(_)), 1),
+      spark.sparkContext.parallelize(days, 1),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("p_day",
           org.apache.spark.sql.types.DateType))))
     val affected = fact.join(broadcast(daysDf),
       to_date(fact(dayCol)) === daysDf("p_day"), "left_semi")
-    val refreshed = martFn(affected)
-      .withColumn("p_day", col(martDayCol).cast("date"))
-      // one file per refreshed day (small-files discipline)
-      .repartition(col("p_day"))
-      // the written-day audit below reads this relation a second time
-      .localCheckpoint()
-    refreshed.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("p_day")
-      .parquet(martPath)
-    // the full-recompute invariant has a hole dynamic overwrite can't
-    // close: a touched day whose recompute produced ZERO mart rows (a
-    // row-reducing martFn after a del-ins reload) writes no partition,
-    // so the obsolete directory would survive — drop touched-minus-
-    // written explicitly (the mergePartitioned emptied-dir discipline)
-    val written = refreshed.select("p_day").distinct()
-      .collect().map(_.getDate(0)).toSet
-    val emptied = days.filterNot(written.contains)
-    if (emptied.nonEmpty) {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(martPath), spark.sparkContext.hadoopConfiguration)
-      emptied.foreach { d =>
-        val rel = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .getPartitionPathString("p_day", String.valueOf(d))
-        fs.delete(new org.apache.hadoop.fs.Path(s"$martPath/$rel"), true)
-      }
-    }
+    // a touched day whose recompute yields ZERO mart rows (a row-reducing
+    // martFn after a del-ins reload) has no staged partition: passing the
+    // touched days makes the replace drop its obsolete directory, or the
+    // stored mart would no longer equal the full recompute
+    DelIns.stagedReplace(
+      martFn(affected).withColumn("p_day", col(martDayCol).cast("date")),
+      martPath, Seq("p_day"), days)
   }
 
   /** Full (re)materialization — the bootstrap and the equivalence oracle. */

@@ -52,8 +52,8 @@ object SketchMart {
 
   /** MERGE a batch into the daily mart: sketch the batch's rows, combine
     * with each touched day's EXISTING sketch (union + sort + re-slice —
-    * the exact merge the soundness argument covers), dynamic-overwrite
-    * only those day partitions. Unlike [[upsertDaily]] this does not
+    * the exact merge the soundness argument covers), replace only those
+    * day partitions. Unlike [[upsertDaily]] this does not
     * assume the batch carries a whole day, so it is the right fold for
     * STREAMING maintenance (foreachBatch): KMV merge is associative,
     * commutative, and idempotent (set union), so any micro-batch slicing
@@ -77,12 +77,10 @@ object SketchMart {
         .groupBy("day")
         .agg(slice(array_sort(array_distinct(flatten(collect_list(col("mins"))))),
           1, k).as("mins"))
-    // the plan READS the partitions the write replaces — cut lineage
-    // eagerly first (the mergePartitioned pattern) so the overwrite never
-    // scans what it is deleting
-    merged.localCheckpoint().write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("day").parquet(dir)
+    // the plan READS the partitions it replaces: the staged replace
+    // leaves them untouched until the write has committed. Every touched
+    // day has a merged row, so the staged days are all it swaps.
+    DelIns.stagedReplace(merged, dir, Seq("day"), Nil)
   }
 
   /** Merge daily sketches into per-`period` sketches and estimate. The

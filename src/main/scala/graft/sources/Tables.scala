@@ -21,10 +21,8 @@ object Tables {
   }
 
   private def readEvents(spark: SparkSession, path: String): DataFrame = {
-    // Spark can't represent TIMESTAMP(NANOS) natively; read the raw int64
-    // and truncate to micros. Config is session-scoped and harmless when
-    // the file is already micros.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // Spark can't represent TIMESTAMP(NANOS) natively: the session reads
+    // it as the raw int64 (GraftSession.tune), truncated to micros here
     val raw = spark.read.parquet(path)
     val tsType = raw.schema("ts").dataType.typeName
     if (tsType == "long")

@@ -47,4 +47,12 @@ class GraftSessionSpec extends SparkSpec {
       assert(w(Long.MaxValue) == 5)
     }
   }
+
+  test("loading events leaves the session conf unchanged") {
+    val fresh = GraftSession.tune(spark.newSession())
+    val before = fresh.conf.getAll
+    val ev = graft.sources.Tables.load(fresh, sfDir, "events")
+    assert(ev.limit(1).collect().length == 1)
+    assert(fresh.conf.getAll == before)
+  }
 }

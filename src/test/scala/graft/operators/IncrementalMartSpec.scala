@@ -51,6 +51,41 @@ class IncrementalMartSpec extends SparkSpec {
     assert(batchDays.subsetOf(after.keySet))
   }
 
+  test("refresh stages one file per touched day, pins nothing and leaves " +
+      "no staging dir; a crashed one is never read") {
+    val mart = graft.core.Scratch.dir("incmart_staged", sfDir)
+    // a row-level mart: no shuffle of its own, so each of the fact's 4
+    // input splits would write its own file into every day it holds
+    val rows: DataFrame => DataFrame =
+      _.select(to_date(col("ts")).as("day"), col("event_id"), col("value"))
+    val cut = lit("2024-01-20").cast("date")
+    val seed = ev.filter(to_date(col("ts")) < cut)
+    val batch = ev.filter(to_date(col("ts")) >= cut)
+    IncrementalMart.full(seed, mart, rows)
+    // the staging dir of a refresh that crashed before its swap
+    rows(batch).withColumn("value", lit(-1.0)).withColumn("p_day", col("day"))
+      .write.partitionBy("p_day").parquet(s"$mart/${DelIns.StagingPrefix}crashed")
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    IncrementalMart.refresh(spark, seed.unionByName(batch).repartition(4), mart,
+      batch.repartition(4), "ts", rows)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(pinned),
+      "the refresh must not leave a persisted RDD behind")
+    val batchDays = batch.select(to_date(col("ts")).cast("string")).distinct()
+      .collect().map(r => s"p_day=${r.getString(0)}").toSeq
+    assert(batchDays.nonEmpty)
+    batchDays.foreach { d =>
+      val files = new java.io.File(s"$mart/$d").listFiles().map(_.getName)
+        .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+      assert(files.length == 1, s"$d: one data file per touched day, got ${files.toSeq}")
+    }
+    val staging = new java.io.File(mart).listFiles().map(_.getName)
+      .filter(_.startsWith(DelIns.StagingPrefix)).toSet
+    assert(staging == Set(s"${DelIns.StagingPrefix}crashed"), s"staging dirs left: $staging")
+    val stored = spark.read.parquet(mart).select("day", "event_id", "value")
+    assert(stored.exceptAll(rows(ev)).isEmpty && rows(ev).exceptAll(stored).isEmpty,
+      "the mart must equal the full recompute, without the crashed staging rows")
+  }
+
   test("a touched day that recomputes to ZERO mart rows drops its " +
       "partition — dynamic overwrite alone would leave it stale") {
     import spark.implicits._

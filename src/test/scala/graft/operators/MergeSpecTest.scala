@@ -123,6 +123,41 @@ class MergeSpecTest extends SparkSpec {
       s"emptied 'north america' partition dir must be deleted, dirs=$leftDirs")
   }
 
+  test("mergePartitioned stages one file per touched partition, pins " +
+      "nothing and leaves no staging dir; a crashed one is never read") {
+    val root = java.nio.file.Files.createTempDirectory("merge_wh4").toString
+    def part(df: org.apache.spark.sql.DataFrame) = df.withColumn("p", col("k") % 4)
+    // several files per partition, as earlier multi-task writes leave them
+    part((0L until 40L).toDF("k").withColumn("balance", col("k") * 1.0)
+      .withColumn("deleted", lit(false))).repartition(4)
+      .write.mode("overwrite").partitionBy("p").parquet(root)
+    // the staging dir of a merge that crashed before its swap
+    part(Seq((1L, -1.0, false), (100L, -1.0, false)).toDF("k", "balance", "deleted"))
+      .write.partitionBy("p").parquet(s"$root/${DelIns.StagingPrefix}crashed")
+    val wh = new DelIns.Warehouse(spark, root, Seq("p"))
+    def dataFiles(p: Int): Seq[String] =
+      new java.io.File(s"$root/p=$p").listFiles().map(_.getName)
+        .filterNot(n => n.startsWith(".") || n.startsWith("_")).toSeq
+    val untouched = Seq(0, 3).map(dataFiles)
+    // touches partitions 1 (update, tombstone, insert) and 2, from 4 input splits
+    val source = part(Seq((1L, 101.0, false), (5L, 0.0, true), (41L, 141.0, false),
+      (2L, 102.0, false)).toDF("k", "balance", "deleted")).repartition(4)
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    wh.mergePartitioned(source, MergeSpec(Seq("k"), Some("deleted")))
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(pinned),
+      "the merge must not leave a persisted RDD behind")
+    assert(dataFiles(1).size == 1 && dataFiles(2).size == 1,
+      s"one file per touched partition: p=1 ${dataFiles(1)}, p=2 ${dataFiles(2)}")
+    assert(Seq(0, 3).map(dataFiles) == untouched, "untouched partitions were rewritten")
+    val staging = new java.io.File(root).listFiles().map(_.getName)
+      .filter(_.startsWith(DelIns.StagingPrefix)).toSet
+    assert(staging == Set(s"${DelIns.StagingPrefix}crashed"), s"staging dirs left: $staging")
+    val got = wh.read().select("k", "balance").as[(Long, Double)].collect().toMap
+    assert(got.size == 40 && !got.contains(5L) && got(41L) == 141.0 &&
+      got(1L) == 101.0 && got(2L) == 102.0 && !got.values.exists(_ < 0),
+      s"merged table drifted or read the crashed staging dir: $got")
+  }
+
   test("snapshotDiff classifies added/removed/changed/unchanged, null-safely") {
     val before = Seq((1L, Some("a"), 1.0), (2L, None: Option[String], 2.0),
       (3L, Some("c"), 3.0)).toDF("k", "s", "v")

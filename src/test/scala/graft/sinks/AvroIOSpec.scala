@@ -1,6 +1,8 @@
 package graft.sinks
 
 import graft.SparkSpec
+import org.apache.avro.file.{DataFileStream, DataFileWriter}
+import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -79,5 +81,42 @@ class AvroIOSpec extends SparkSpec {
     AvroIO.write(fixture.repartition(4), dir)
     AvroIO.write(fixture.filter(col("id") === 1L).repartition(1), dir)
     assert(AvroIO.read(spark, dir, schema).count() == 1)
+  }
+
+  private def codec(shard: java.io.File): String = {
+    val in = new DataFileStream[GenericRecord](
+      new java.io.FileInputStream(shard), new GenericDatumReader[GenericRecord]())
+    // an absent entry is the spec's "null" codec
+    try Option(in.getMetaString("avro.codec")).getOrElse("null") finally in.close()
+  }
+
+  test("every shard header names deflate") {
+    val dir = java.nio.file.Files.createTempDirectory("avro_codec").toString
+    AvroIO.write(fixture.repartition(4), dir)
+    val shards = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".avro"))
+    assert(shards.length > 1)
+    shards.foreach(f => assert(codec(f) == "deflate", s"${f.getName}: ${codec(f)}"))
+  }
+
+  test("a shard written without a codec, as lakes were before, still reads back") {
+    val legacy = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("s", StringType), StructField("ts", TimestampType)))
+    val avro = AvroIO.avroSchemaFor(legacy)
+    val dir = java.nio.file.Files.createTempDirectory("avro_null_codec").toFile
+    val shard = new java.io.File(dir, "part-00000.avro")
+    val writer = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](avro))
+    writer.create(avro, shard)
+    val at = java.time.Instant.parse("2024-01-15T10:30:00.123456Z")
+    Seq[(Long, String, Any)]((1L, "alpha", at.getEpochSecond * 1000000L + at.getNano / 1000),
+      (2L, null, null)).foreach { case (id, s, ts) =>
+      val rec = new GenericData.Record(avro)
+      rec.put("id", id); rec.put("s", s); rec.put("ts", ts)
+      writer.append(rec)
+    }
+    writer.close()
+    new java.io.File(dir, "_SUCCESS").createNewFile()
+    assert(codec(shard) == "null")
+    val back = AvroIO.read(spark, dir.toString, legacy).orderBy("id").collect().toSeq
+    assert(back == Seq(Row(1L, "alpha", java.sql.Timestamp.from(at)), Row(2L, null, null)))
   }
 }

@@ -21,9 +21,7 @@ object SparkEntry {
     * idempotently before building its plan.
     */
   def queries: Map[String, Query] =
-    (WarehouseQueries.queries ++ TrainingQueries.queries ++
-      graft.streaming.StreamingGate.queries ++
-      graft.sources.LakeExports.queries).map {
+    registries.map(_._1).reduce(_ ++ _).map {
       case (name, fn) =>
         name -> ((s: SparkSession, dir: String) => { GraftSession.tune(s); fn(s, dir) })
     }
@@ -33,10 +31,17 @@ object SparkEntry {
     * components via recursive CTEs, streaming drains via their batch
     * formulations).
     */
-  def oracleSql: Map[String, String] =
-    WarehouseQueries.oracles ++ TrainingQueries.oracles ++
-      graft.streaming.StreamingGate.oracles ++
-      graft.sources.LakeExports.oracles
+  def oracleSql: Map[String, String] = registries.map(_._2).reduce(_ ++ _)
+
+  /** The four gate registries, each (name -> query, name -> oracle SQL),
+    * that [[queries]] and [[oracleSql]] join with `++`. Their names must
+    * not overlap: a name defined twice keeps only the later map's entry.
+    */
+  private[graft] def registries: Seq[(Map[String, Query], Map[String, String])] = Seq(
+    WarehouseQueries.queries -> WarehouseQueries.oracles,
+    TrainingQueries.queries -> TrainingQueries.oracles,
+    graft.streaming.StreamingGate.queries -> graft.streaming.StreamingGate.oracles,
+    graft.sources.LakeExports.queries -> graft.sources.LakeExports.oracles)
 
   /** The timed action: execute the FULL physical plan and count its
     * output rows. A plain Dataset.count() lets Catalyst optimize work out

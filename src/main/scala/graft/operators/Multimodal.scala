@@ -358,35 +358,7 @@ object Multimodal {
             Row(d, false, 0L, 0L, Array.empty[Long])
           else {
             val (w, h) = (img.getWidth, img.getHeight)
-            val raster = img.getRaster
-            val oneBand = raster.getNumBands == 1
-            def luma(x: Int, y: Int): Long =
-              if (oneBand) raster.getSample(x, y, 0).toLong
-              else {
-                val rgb = img.getRGB(x, y)
-                (299L * ((rgb >> 16) & 0xff) + 587L * ((rgb >> 8) & 0xff) +
-                  114L * (rgb & 0xff)) / 1000L
-              }
-            val grid = new Array[Long](gh * gw)
-            var cy = 0
-            while (cy < gh) {
-              val y0 = cy * h / gh; val y1 = (cy + 1) * h / gh
-              var cx = 0
-              while (cx < gw) {
-                val x0 = cx * w / gw; val x1 = (cx + 1) * w / gw
-                var s = 0L
-                var y = y0
-                while (y < y1) {
-                  var x = x0
-                  while (x < x1) { s += luma(x, y); x += 1 }
-                  y += 1
-                }
-                grid(cy * gw + cx) = s / ((x1 - x0).toLong * (y1 - y0))
-                cx += 1
-              }
-              cy += 1
-            }
-            Row(d, true, w.toLong, h.toLong, grid)
+            Row(d, true, w.toLong, h.toLong, boxMeanGrid(w, h, gw, gh, imageLuma(img)))
           }
         }
       }(enc)
@@ -843,6 +815,48 @@ object Multimodal {
       }(enc)
   }
 
+  /** Integer luma of an 8-bit RGB pixel: (299R + 587G + 114B) / 1000. */
+  private def rgbLuma(r: Int, g: Int, b: Int): Long =
+    (299L * r + 587L * g + 114L * b) / 1000L
+
+  /** Luma at (x, y) of a decoded image: the sample of a one-band (gray)
+    * raster, else [[rgbLuma]] of the packed RGB. */
+  private def imageLuma(img: java.awt.image.BufferedImage): (Int, Int) => Long = {
+    val raster = img.getRaster
+    if (raster.getNumBands == 1) (x, y) => raster.getSample(x, y, 0).toLong
+    else (x, y) => {
+      val rgb = img.getRGB(x, y)
+      rgbLuma((rgb >> 16) & 0xff, (rgb >> 8) & 0xff, rgb & 0xff)
+    }
+  }
+
+  /** The `gw` x `gh` grid of truncating box means of `luma` over a `w` x
+    * `h` frame, row-major: cell (cx, cy) averages x in
+    * [cx*w/gw, (cx+1)*w/gw) and y in [cy*h/gh, (cy+1)*h/gh). */
+  private def boxMeanGrid(w: Int, h: Int, gw: Int, gh: Int,
+                          luma: (Int, Int) => Long): Array[Long] = {
+    val grid = new Array[Long](gh * gw)
+    var cy = 0
+    while (cy < gh) {
+      val y0 = cy * h / gh; val y1 = (cy + 1) * h / gh
+      var cx = 0
+      while (cx < gw) {
+        val x0 = cx * w / gw; val x1 = (cx + 1) * w / gw
+        var s = 0L
+        var y = y0
+        while (y < y1) {
+          var x = x0
+          while (x < x1) { s += luma(x, y); x += 1 }
+          y += 1
+        }
+        grid(cy * gw + cx) = s / ((x1 - x0).toLong * (y1 - y0))
+        cx += 1
+      }
+      cy += 1
+    }
+    grid
+  }
+
   /** The container/codec half of [[decodeVideo]]: parse one AVI payload
     * to (width, height, fps, per-frame `gw`x`gh` grid or null). None =
     * the container itself is malformed/unsupported. Exposed for specs. */
@@ -905,46 +919,16 @@ object Multimodal {
           if (fb.length < stride * h) null
           else (x, y) => {
             val o = (if (topDown) y else h - 1 - y) * stride + x * 3
-            (299L * (fb(o + 2) & 0xff) + 587L * (fb(o + 1) & 0xff) +
-              114L * (fb(o) & 0xff)) / 1000L
+            rgbLuma(fb(o + 2) & 0xff, fb(o + 1) & 0xff, fb(o) & 0xff)
           }
         } else {
           val img =
             try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(fb))
             catch { case _: java.io.IOException => null }
           if (img == null || img.getWidth != w || img.getHeight != h) null
-          else if (img.getRaster.getNumBands == 1) {
-            val raster = img.getRaster
-            (x, y) => raster.getSample(x, y, 0).toLong
-          } else (x, y) => {
-            val rgb = img.getRGB(x, y)
-            (299L * ((rgb >> 16) & 0xff) + 587L * ((rgb >> 8) & 0xff) +
-              114L * (rgb & 0xff)) / 1000L
-          }
+          else imageLuma(img)
         }
-      if (luma == null) null
-      else {
-        val grid = new Array[Long](gh * gw)
-        var cy = 0
-        while (cy < gh) {
-          val y0 = cy * h / gh; val y1 = (cy + 1) * h / gh
-          var cx = 0
-          while (cx < gw) {
-            val x0 = cx * w / gw; val x1 = (cx + 1) * w / gw
-            var s = 0L
-            var y = y0
-            while (y < y1) {
-              var x = x0
-              while (x < x1) { s += luma(x, y); x += 1 }
-              y += 1
-            }
-            grid(cy * gw + cx) = s / ((x1 - x0).toLong * (y1 - y0))
-            cx += 1
-          }
-          cy += 1
-        }
-        grid
-      }
+      if (luma == null) null else boxMeanGrid(w, h, gw, gh, luma)
     }
     Some((w, h, fps, grids.toArray))
   }

@@ -1875,16 +1875,10 @@ object TrainingQueries {
       s"sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)"
 
   private val annBruteOracle: String =
-    """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+    s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
       |s AS (
       |  SELECT vec_id, label,
-      |    round(
-      |      list_sum(list_transform(range(1, len(embedding) + 1),
-      |        i -> CAST(embedding[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |         * sqrt(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-      |      6) AS cos
-      |  FROM embeddings, q)
+      |${OracleSql.queryCosine}
       |SELECT vec_id, label, cos FROM s ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin
 
   /** Recall@k oracle: each method's top-k id set (its own full oracle,
@@ -1903,32 +1897,38 @@ object TrainingQueries {
        |FROM (${legs.mkString("\nUNION ALL\n")}) u""".stripMargin
   }
 
-  private val annLshOracle: String =
-    s"""WITH w AS (SELECT ${weightsLiteral(4, 64)} AS m),
+  /** LSH top-10 for vec 0: `planes`-bit signatures, candidates are the
+    * rows that `matchQ` (over `s.s` and the query's `q.qs`) admits. */
+  private def annLshOracleAt(planes: Int, matchQ: String): String =
+    s"""WITH w AS (SELECT ${weightsLiteral(planes, 64)} AS m),
        |sig AS (SELECT vec_id, label, embedding,
-       |  ${sigSql("embedding", 4, 64)} AS s FROM embeddings, w),
+       |  ${sigSql("embedding", planes, 64)} AS s FROM embeddings, w),
        |q AS (SELECT embedding AS qv, s AS qs FROM sig WHERE vec_id = 0)
        |SELECT s.vec_id, s.label, ${cosSql("s.embedding", "q.qv", 64)} AS cos
-       |FROM sig s, q WHERE s.s = q.qs
+       |FROM sig s, q$matchQ
        |ORDER BY cos DESC, s.vec_id LIMIT 10""".stripMargin
 
-  private val embedDedupOracle: String =
-    s"""WITH w AS (SELECT ${weightsLiteral(4, 64)} AS m),
+  private val annLshOracle: String = annLshOracleAt(4, " WHERE s.s = q.qs")
+
+  /** LSH near-dup pairs: `planes`-bit signatures, the pairs whose join
+    * condition `on` admits, verified at cosine >= 0.2. */
+  private def embedDedupOracleAt(planes: Int, on: String): String =
+    s"""WITH w AS (SELECT ${weightsLiteral(planes, 64)} AS m),
        |sig AS (SELECT vec_id, embedding,
-       |  ${sigSql("embedding", 4, 64)} AS s FROM embeddings, w),
+       |  ${sigSql("embedding", planes, 64)} AS s FROM embeddings, w),
        |scored AS (
        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        |    ${cosSql("a.embedding", "b.embedding", 64)} AS cos
-       |  FROM sig a JOIN sig b ON a.s = b.s AND a.vec_id < b.vec_id)
+       |  FROM sig a JOIN sig b$on)
        |SELECT vec_a, vec_b, cos FROM scored WHERE cos >= 0.2""".stripMargin
+
+  private val embedDedupOracle: String =
+    embedDedupOracleAt(4, " ON a.s = b.s AND a.vec_id < b.vec_id")
 
   private def annIvfOracleAt(nprobe: Int): String =
     s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 16),
        |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-       |assign AS (
-       |  SELECT e.vec_id,
-       |    first(c.cid ORDER BY ${cosSql("e.embedding", "c.cvec", 64)} DESC, c.cid) AS cell
-       |  FROM embeddings e, cent c GROUP BY e.vec_id),
+       |${kmeansAssignCte("assign", "cent")},
        |qc AS (SELECT c.cid AS cell FROM cent c, q
        |       ORDER BY ${cosSql("c.cvec", "q.qv", 64)} DESC, c.cid LIMIT $nprobe)
        |SELECT e.vec_id, e.label, ${cosSql("e.embedding", "q.qv", 64)} AS cos
@@ -1962,10 +1962,7 @@ object TrainingQueries {
   private val annIvfBatchOracle: String =
     s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 16),
        |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 5),
-       |assign AS (
-       |  SELECT e.vec_id,
-       |    first(c.cid ORDER BY ${cosSql("e.embedding", "c.cvec", 64)} DESC, c.cid) AS cell
-       |  FROM embeddings e, cent c GROUP BY e.vec_id),
+       |${kmeansAssignCte("assign", "cent")},
        |qcr AS (
        |  SELECT q.qid, c.cid AS cell,
        |    row_number() OVER (PARTITION BY q.qid
@@ -1993,19 +1990,10 @@ object TrainingQueries {
   private val annIvfQuantOracle: String =
     s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 16),
        |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-       |assign AS (
-       |  SELECT e.vec_id,
-       |    first(c.cid ORDER BY ${cosSql("e.embedding", "c.cvec", 64)} DESC, c.cid) AS cell
-       |  FROM embeddings e, cent c GROUP BY e.vec_id),
+       |${kmeansAssignCte("assign", "cent")},
        |qc AS (SELECT c.cid AS cell FROM cent c, q
        |       ORDER BY ${cosSql("c.cvec", "q.qv", 64)} DESC, c.cid LIMIT 4),
-       |s AS (
-       |  SELECT vec_id, label, embedding,
-       |    CASE WHEN list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) = 0
-       |         THEN 0.0
-       |         ELSE 127.0 / list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))))
-       |    END AS sc
-       |  FROM embeddings),
+       |${OracleSql.quantScale},
        |qv AS (
        |  SELECT vec_id, label, sc,
        |    list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * sc) AS BIGINT)) AS q8
@@ -2048,35 +2036,44 @@ object TrainingQueries {
        |$roundCtes""".stripMargin
   }
 
-  private def bpeRoundCtes(rn: Int): String = {
-    val p = rn - 1
-    s"""p$rn AS (
-       |  SELECT word, freq, pos, sym,
-       |    lead(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt
-       |  FROM s$p),
+  private def bpeRoundCtes(rn: Int): String =
+    s"""${bpePairs(rn, "", "s")},
        |best$rn AS (
        |  SELECT sym AS l, nxt AS r, CAST(SUM(freq) AS BIGINT) AS cnt
        |  FROM p$rn WHERE nxt IS NOT NULL GROUP BY sym, nxt
        |  ORDER BY cnt DESC, l, r LIMIT 1),
-       |g$rn AS (
+       |${bpeMerge(rn, "", "s")}""".stripMargin
+
+  /** `<pre>p<rn>`: each symbol of the chain `<chain><rn-1>` with its
+    * successor. */
+  private def bpePairs(rn: Int, pre: String, chain: String): String =
+    s"""${pre}p$rn AS (
+       |  SELECT word, freq, pos, sym,
+       |    lead(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt
+       |  FROM $chain${rn - 1})""".stripMargin
+
+  /** The greedy merge of the pair `best<rn>` over `<pre>p<rn>`: `<pre>g`
+    * and `<pre>t` resolve self-pair runs at even offsets from the run
+    * start, and `<chain><rn>` is the merged symbol chain. */
+  private def bpeMerge(rn: Int, pre: String, chain: String): String =
+    s"""${pre}g$rn AS (
        |  SELECT p.word, p.freq, p.pos, p.sym, p.nxt,
        |    (p.sym = b.l AND p.nxt = b.r) AS m,
        |    CASE WHEN p.sym = b.l AND p.nxt = b.r THEN p.pos -
        |      SUM(CASE WHEN p.sym = b.l AND p.nxt = b.r THEN 1 ELSE 0 END)
        |        OVER (PARTITION BY p.word ORDER BY p.pos ROWS UNBOUNDED PRECEDING)
        |    END AS grp
-       |  FROM p$rn p, best$rn b),
-       |t$rn AS (
+       |  FROM ${pre}p$rn p, best$rn b),
+       |${pre}t$rn AS (
        |  SELECT *, m AND (pos - MIN(pos) OVER (PARTITION BY word, grp)) % 2 = 0 AS take
-       |  FROM g$rn),
-       |s$rn AS (
+       |  FROM ${pre}g$rn),
+       |$chain$rn AS (
        |  SELECT word, freq,
        |    ROW_NUMBER() OVER (PARTITION BY word ORDER BY pos) - 1 AS pos,
        |    CASE WHEN take THEN sym || nxt ELSE sym END AS sym
        |  FROM (SELECT *, lag(take) OVER (PARTITION BY word ORDER BY pos) AS dropped
-       |        FROM t$rn)
+       |        FROM ${pre}t$rn)
        |  WHERE NOT COALESCE(dropped, FALSE))""".stripMargin
-  }
 
   private def bpeTrainOracle(topV: Int, rounds: Int): String = {
     val sel = (1 to rounds).map(rn =>
@@ -2096,31 +2093,8 @@ object TrainingQueries {
     * [[bpeRoundCtes]] but consuming the already-learned `best$rn` pair
     * (no pair-count argmax of its own), over the full-vocabulary chain
     * `y0..y<rounds>`. */
-  private def bpeApplyCtes(rn: Int): String = {
-    val p = rn - 1
-    s"""yp$rn AS (
-       |  SELECT word, freq, pos, sym,
-       |    lead(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt
-       |  FROM y$p),
-       |yg$rn AS (
-       |  SELECT p.word, p.freq, p.pos, p.sym, p.nxt,
-       |    (p.sym = b.l AND p.nxt = b.r) AS m,
-       |    CASE WHEN p.sym = b.l AND p.nxt = b.r THEN p.pos -
-       |      SUM(CASE WHEN p.sym = b.l AND p.nxt = b.r THEN 1 ELSE 0 END)
-       |        OVER (PARTITION BY p.word ORDER BY p.pos ROWS UNBOUNDED PRECEDING)
-       |    END AS grp
-       |  FROM yp$rn p, best$rn b),
-       |yt$rn AS (
-       |  SELECT *, m AND (pos - MIN(pos) OVER (PARTITION BY word, grp)) % 2 = 0 AS take
-       |  FROM yg$rn),
-       |y$rn AS (
-       |  SELECT word, freq,
-       |    ROW_NUMBER() OVER (PARTITION BY word ORDER BY pos) - 1 AS pos,
-       |    CASE WHEN take THEN sym || nxt ELSE sym END AS sym
-       |  FROM (SELECT *, lag(take) OVER (PARTITION BY word ORDER BY pos) AS dropped
-       |        FROM yt$rn)
-       |  WHERE NOT COALESCE(dropped, FALSE))""".stripMargin
-  }
+  private def bpeApplyCtes(rn: Int): String =
+    bpePairs(rn, "y", "y") + ",\n" + bpeMerge(rn, "y", "y")
 
   /** Corpus-tokenization oracle: the learning prefix (top-V words,
     * rounds of argmax+merge) followed by the apply chain over ALL
@@ -2177,14 +2151,7 @@ object TrainingQueries {
          |  SELECT nodes.node, CAST(COALESCE(r.hh, 0) // m.d AS BIGINT) AS h
          |  FROM nodes LEFT JOIN hr$rn r ON nodes.node = r.node, hm$rn m)""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS (
-       |  SELECT DISTINCT CAST(user_id AS BIGINT) AS src,
-       |    CAST(json_extract_string(props, '$$.k') AS BIGINT) + 10000 AS dst
-       |  FROM events
-       |  WHERE user_id IS NOT NULL
-       |    AND TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
-       |nodes AS (SELECT DISTINCT node FROM
-       |  (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
+    s"""${OracleSql.userTopicGraph}
        |h0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS h FROM nodes),
        |$rounds
        |SELECT a.node, a.a AS auth_scaled, h.h AS hub_scaled,
@@ -2195,35 +2162,19 @@ object TrainingQueries {
 
   private def pageRankOracle(iters: Int, k: Int): String = {
     val rounds = (1 to iters).map { rn =>
-      val p = rn - 1
-      s"""c$rn AS (
-         |  SELECT e.dst AS node, CAST(SUM(r.rk // d.deg) AS BIGINT) AS insum
-         |  FROM e JOIN r$p r ON e.src = r.node JOIN outdeg d ON e.src = d.src
-         |  GROUP BY e.dst),
-         |dm$rn AS (
-         |  SELECT CAST(COALESCE(SUM(r.rk), 0) AS BIGINT) AS dm
-         |  FROM r$p r LEFT JOIN outdeg d ON r.node = d.src WHERE d.src IS NULL),
+      s"""${OracleSql.rankInflow(rn)}
          |r$rn AS (
          |  SELECT nodes.node,
          |    CAST((150000000 // n) +
          |      ((COALESCE(c.insum, 0) + (dm // n)) * 85 // 100) AS BIGINT) AS rk
          |  FROM nodes LEFT JOIN c$rn c ON nodes.node = c.node, nt, dm$rn)""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS (
-       |  SELECT DISTINCT CAST(user_id AS BIGINT) AS src,
-       |    CAST(json_extract_string(props, '$$.k') AS BIGINT) + 10000 AS dst
-       |  FROM events
-       |  WHERE user_id IS NOT NULL
-       |    AND TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
-       |nodes AS (SELECT DISTINCT node FROM
-       |  (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
+    s"""${OracleSql.userTopicGraph}
        |outdeg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM e GROUP BY src),
        |nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
        |r0 AS (SELECT node, CAST(1000000000 // n AS BIGINT) AS rk FROM nodes, nt),
        |$rounds
-       |SELECT node, rk AS rank_scaled,
-       |  CAST(rk AS DOUBLE) / 1000000000.0 AS "rank"
-       |FROM r$iters ORDER BY rk DESC, node LIMIT $k""".stripMargin
+       |${OracleSql.rankTopK(iters, k)}""".stripMargin
   }
 
   /** Shared CTE stack for the graph-cohesion oracles: bipartite
@@ -2361,14 +2312,7 @@ object TrainingQueries {
   private def personalizedPageRankOracle(iters: Int, k: Int): String = {
     val seedCase = "CASE WHEN s.node IS NOT NULL THEN"
     val rounds = (1 to iters).map { rn =>
-      val p = rn - 1
-      s"""c$rn AS (
-         |  SELECT e.dst AS node, CAST(SUM(r.rk // d.deg) AS BIGINT) AS insum
-         |  FROM e JOIN r$p r ON e.src = r.node JOIN outdeg d ON e.src = d.src
-         |  GROUP BY e.dst),
-         |dm$rn AS (
-         |  SELECT CAST(COALESCE(SUM(r.rk), 0) AS BIGINT) AS dm
-         |  FROM r$p r LEFT JOIN outdeg d ON r.node = d.src WHERE d.src IS NULL),
+      s"""${OracleSql.rankInflow(rn)}
          |r$rn AS (
          |  SELECT nodes.node,
          |    CAST(($seedCase (150000000 // sn) ELSE 0 END) +
@@ -2377,14 +2321,7 @@ object TrainingQueries {
          |  FROM nodes LEFT JOIN c$rn c ON nodes.node = c.node
          |    LEFT JOIN seeds s ON nodes.node = s.node, snt, dm$rn)""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS (
-       |  SELECT DISTINCT CAST(user_id AS BIGINT) AS src,
-       |    CAST(json_extract_string(props, '$$.k') AS BIGINT) + 10000 AS dst
-       |  FROM events
-       |  WHERE user_id IS NOT NULL
-       |    AND TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
-       |nodes AS (SELECT DISTINCT node FROM
-       |  (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
+    s"""${OracleSql.userTopicGraph}
        |outdeg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM e GROUP BY src),
        |seeds AS (SELECT DISTINCT src AS node FROM e WHERE src % 10 = 0),
        |snt AS (SELECT CAST(COUNT(*) AS BIGINT) AS sn FROM seeds),
@@ -2393,9 +2330,7 @@ object TrainingQueries {
        |    CAST($seedCase 1000000000 // sn ELSE 0 END AS BIGINT) AS rk
        |  FROM nodes LEFT JOIN seeds s ON nodes.node = s.node, snt),
        |$rounds
-       |SELECT node, rk AS rank_scaled,
-       |  CAST(rk AS DOUBLE) / 1000000000.0 AS "rank"
-       |FROM r$iters ORDER BY rk DESC, node LIMIT $k""".stripMargin
+       |${OracleSql.rankTopK(iters, k)}""".stripMargin
   }
 
   /** Shared CTE prefix for the Lloyd-refined oracles: seed centroids, the
@@ -2549,30 +2484,20 @@ object TrainingQueries {
     * half-signature matches the query's.
     */
   private val annLshMultibandOracle: String =
-    s"""WITH w AS (SELECT ${weightsLiteral(8, 64)} AS m),
-       |sig AS (SELECT vec_id, label, embedding,
-       |  ${sigSql("embedding", 8, 64)} AS s FROM embeddings, w),
-       |q AS (SELECT embedding AS qv, s AS qs FROM sig WHERE vec_id = 0)
-       |SELECT s.vec_id, s.label, ${cosSql("s.embedding", "q.qv", 64)} AS cos
-       |FROM sig s, q
-       |WHERE substr(s.s, 1, 4) = substr(q.qs, 1, 4)
-       |   OR substr(s.s, 5, 4) = substr(q.qs, 5, 4)
-       |ORDER BY cos DESC, s.vec_id LIMIT 10""".stripMargin
+    annLshOracleAt(8, """
+      |WHERE substr(s.s, 1, 4) = substr(q.qs, 1, 4)
+      |   OR substr(s.s, 5, 4) = substr(q.qs, 5, 4)""".stripMargin)
 
   private val embedDedupMultibandOracle: String =
-    s"""WITH w AS (SELECT ${weightsLiteral(8, 64)} AS m),
-       |sig AS (SELECT vec_id, embedding,
-       |  ${sigSql("embedding", 8, 64)} AS s FROM embeddings, w),
-       |scored AS (
-       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |    ${cosSql("a.embedding", "b.embedding", 64)} AS cos
-       |  FROM sig a JOIN sig b
-       |    ON (substr(a.s, 1, 4) = substr(b.s, 1, 4)
-       |        OR substr(a.s, 5, 4) = substr(b.s, 5, 4))
-       |   AND a.vec_id < b.vec_id)
-       |SELECT vec_a, vec_b, cos FROM scored WHERE cos >= 0.2""".stripMargin
+    embedDedupOracleAt(8, """
+      |    ON (substr(a.s, 1, 4) = substr(b.s, 1, 4)
+      |        OR substr(a.s, 5, 4) = substr(b.s, 5, 4))
+      |   AND a.vec_id < b.vec_id""".stripMargin)
 
-  private[graft] val dedupCcOracle: String =
+  /** The banded candidate pairs' connected components: a recursive
+    * `reach(node, lbl)` over the symmetric pair edges, every document
+    * reaching itself. */
+  private val shingleComponents: String =
     shingleCtes.replaceFirst("WITH ", "WITH RECURSIVE ") +
       """, edges AS (
         |  SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -2580,18 +2505,14 @@ object TrainingQueries {
         |reach(node, lbl) AS (
         |  SELECT doc_id, doc_id FROM documents
         |  UNION
-        |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
+        |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)""".stripMargin
+
+  private[graft] val dedupCcOracle: String =
+    shingleComponents + """
         |SELECT node AS doc_id, MIN(lbl) AS canonical_id FROM reach GROUP BY node""".stripMargin
 
   private val splitLeakageOracle: String =
-    shingleCtes.replaceFirst("WITH ", "WITH RECURSIVE ") +
-      """, edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b AS src, doc_a AS dst FROM pairs),
-        |reach(node, lbl) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
+    shingleComponents + """,
         |cc AS (SELECT node AS doc_id, MIN(lbl) AS canonical_id FROM reach GROUP BY node),
         |b AS (
         |  SELECT d.lang, d.doc_id,
@@ -2603,33 +2524,7 @@ object TrainingQueries {
         |FROM b GROUP BY 1, 2""".stripMargin
 
   private val bm25Oracle: String =
-    """WITH toks AS (
-      |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '\S+')) AS tok
-      |  FROM documents),
-      |dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY 1),
-      |stats AS (
-      |  SELECT COUNT(*) AS nd,
-      |    CAST(SUM(dl) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avgdl
-      |  FROM dl),
-      |tf AS (
-      |  SELECT doc_id, tok, COUNT(*) AS tf FROM toks
-      |  WHERE tok IN ('spark', 'merge', 'window') GROUP BY 1, 2),
-      |dfq AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1),
-      |scored AS (
-      |  SELECT t.doc_id,
-      |    ((CAST(s.nd AS DOUBLE) - CAST(f.df AS DOUBLE) + 0.5) /
-      |     (CAST(f.df AS DOUBLE) + 0.5))
-      |      * (CAST(t.tf AS DOUBLE) * (1.2 + 1.0)) /
-      |      (CAST(t.tf AS DOUBLE)
-      |        + 1.2 * ((1.0 - 0.75) + 0.75 * CAST(d.dl AS DOUBLE) / s.avgdl)) AS w
-      |  FROM tf t
-      |  JOIN dl d ON t.doc_id = d.doc_id
-      |  JOIN dfq f ON t.tok = f.tok
-      |  CROSS JOIN stats s),
-      |agg AS (
-      |  SELECT doc_id,
-      |    CAST(SUM(CAST(floor(w * 1000000000.0) AS BIGINT)) AS BIGINT) AS score_fp
-      |  FROM scored GROUP BY 1)
+    s"""${OracleSql.bm25("agg")}
       |SELECT doc_id, score_fp, CAST(score_fp AS DOUBLE) / 1000000000.0 AS score
       |FROM agg ORDER BY score_fp DESC, doc_id LIMIT 10""".stripMargin
 
@@ -2642,27 +2537,7 @@ object TrainingQueries {
     val dedupPart = shingleCtes.stripPrefix("WITH ")
       .replace("FROM documents", "FROM kept")
     s"""WITH RECURSIVE qm AS (
-       |  SELECT doc_id,
-       |    CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS n_tokens,
-       |    CAST(coalesce(list_sum(list_transform(regexp_extract_all(text, '\\S+'),
-       |        t -> length(t))), 0) AS DOUBLE)
-       |      / greatest(len(regexp_extract_all(text, '\\S+')), 1) AS mean_tok_len,
-       |    CAST(len(regexp_extract_all(text, '#|\\.\\.\\.')) AS DOUBLE)
-       |      / greatest(len(regexp_extract_all(text, '\\S+')), 1) AS symbol_ratio,
-       |    CAST(len(list_filter(string_split(text, chr(10)),
-       |        l -> regexp_matches(trim(l), '^[-*•]'))) AS DOUBLE)
-       |      / greatest(len(string_split(text, chr(10))), 1) AS bullet_line_ratio,
-       |    CAST(len(list_filter(string_split(text, chr(10)),
-       |        l -> regexp_matches(trim(l), '\\.\\.\\.$$'))) AS DOUBLE)
-       |      / greatest(len(string_split(text, chr(10))), 1) AS ellipsis_line_ratio,
-       |    CAST(len(list_filter(regexp_extract_all(text, '\\S+'),
-       |        t -> regexp_matches(t, '[A-Za-z]'))) AS DOUBLE)
-       |      / greatest(len(regexp_extract_all(text, '\\S+')), 1) AS alpha_word_ratio,
-       |    CAST(len(list_filter(regexp_extract_all(lower(text), '\\S+'),
-       |        t -> list_contains(['the','a','an','of','and','or','to','in','is','it',
-       |                            'for','on','with','as','at','by','from','that','this'], t)))
-       |      AS BIGINT) AS n_stopwords
-       |  FROM documents),
+       |${OracleSql.gopherMetrics},
        |qr AS (
        |  SELECT doc_id FROM qm
        |  WHERE (n_tokens BETWEEN 5 AND 5000)
@@ -2672,12 +2547,7 @@ object TrainingQueries {
        |    AND (n_stopwords >= 2)),
        |kept AS (SELECT d.* FROM documents d JOIN qr USING (doc_id)),
        |$dedupPart, scored AS (
-       |  SELECT p.doc_a, p.doc_b,
-       |    CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-       |      greatest(len(list_distinct(list_concat(sa.shingles, sb.shingles))), 1) AS jaccard
-       |  FROM pairs p
-       |  JOIN sh sa ON sa.doc_id = p.doc_a
-       |  JOIN sh sb ON sb.doc_id = p.doc_b),
+       |${OracleSql.pairJaccard},
        |dup_edges AS (
        |  SELECT doc_a AS src, doc_b AS dst FROM scored WHERE jaccard >= 0.3
        |  UNION SELECT doc_b AS src, doc_a AS dst FROM scored WHERE jaccard >= 0.3),
@@ -2719,13 +2589,8 @@ object TrainingQueries {
 
   private val dedupCorpusOracle: String =
     shingleCtes.replaceFirst("WITH ", "WITH RECURSIVE ") +
-      """, scored AS (
-        |  SELECT p.doc_a, p.doc_b,
-        |    CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-        |      greatest(len(list_distinct(list_concat(sa.shingles, sb.shingles))), 1) AS jaccard
-        |  FROM pairs p
-        |  JOIN sh sa ON sa.doc_id = p.doc_a
-        |  JOIN sh sb ON sb.doc_id = p.doc_b),
+      s""", scored AS (
+        |${OracleSql.pairJaccard},
         |dup_edges AS (
         |  SELECT doc_a AS src, doc_b AS dst FROM scored WHERE jaccard >= 0.3
         |  UNION SELECT doc_b AS src, doc_a AS dst FROM scored WHERE jaccard >= 0.3),
@@ -2790,14 +2655,7 @@ object TrainingQueries {
 
     // same recursive-CTE components, argmax survivor via ROW_NUMBER
     "t_dedup_keep_best" ->
-      (shingleCtes.replaceFirst("WITH ", "WITH RECURSIVE ") +
-        """, edges AS (
-          |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-          |  UNION SELECT doc_b AS src, doc_a AS dst FROM pairs),
-          |reach(node, lbl) AS (
-          |  SELECT doc_id, doc_id FROM documents
-          |  UNION
-          |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
+      (shingleComponents + """,
           |cc AS (
           |  SELECT node AS doc_id, MIN(lbl) AS canonical_id
           |  FROM reach GROUP BY node),
@@ -2834,25 +2692,15 @@ object TrainingQueries {
     "t_dedup_minhash" -> (shingleCtes + "SELECT doc_a, doc_b FROM pairs"),
 
     "t_dedup_jaccard" -> (shingleCtes +
-      """, scored AS (
-        |  SELECT p.doc_a, p.doc_b,
-        |    CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-        |      greatest(len(list_distinct(list_concat(sa.shingles, sb.shingles))), 1) AS jaccard
-        |  FROM pairs p
-        |  JOIN sh sa ON sa.doc_id = p.doc_a
-        |  JOIN sh sb ON sb.doc_id = p.doc_b)
+      s""", scored AS (
+        |${OracleSql.pairJaccard}
         |SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= 0.3""".stripMargin),
 
     // the same banded candidates scored the same way, kept when they
     // verify BELOW the threshold: the mined hard-negative pairs
     "t_hard_negatives" -> (shingleCtes +
-      """, scored AS (
-        |  SELECT p.doc_a, p.doc_b,
-        |    CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-        |      greatest(len(list_distinct(list_concat(sa.shingles, sb.shingles))), 1) AS jaccard
-        |  FROM pairs p
-        |  JOIN sh sa ON sa.doc_id = p.doc_a
-        |  JOIN sh sb ON sb.doc_id = p.doc_b)
+      s""", scored AS (
+        |${OracleSql.pairJaccard}
         |SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard < 0.3""".stripMargin),
 
     "t_dedup_contain" -> (shingleCtes +
@@ -2969,13 +2817,7 @@ object TrainingQueries {
         |FROM documents""".stripMargin,
 
     "t_ann_quant" ->
-      """WITH s AS (
-        |  SELECT vec_id, label, embedding,
-        |    CASE WHEN list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) = 0
-        |         THEN 0.0
-        |         ELSE 127.0 / list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))))
-        |    END AS sc
-        |  FROM embeddings),
+      s"""WITH ${OracleSql.quantScale},
         |qv AS (
         |  SELECT vec_id, label, sc,
         |    list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * sc) AS BIGINT)) AS q
@@ -2992,13 +2834,7 @@ object TrainingQueries {
         |ORDER BY score DESC, vec_id LIMIT 10""".stripMargin,
 
     "t_vec_quantize" ->
-      """WITH s AS (
-        |  SELECT vec_id, label, embedding,
-        |    CASE WHEN list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) = 0
-        |         THEN 0.0
-        |         ELSE 127.0 / list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))))
-        |    END AS sc
-        |  FROM embeddings)
+      s"""WITH ${OracleSql.quantScale}
         |SELECT vec_id, label, round(sc, 6) AS scale,
         |  array_to_string(list_transform(embedding,
         |    x -> CAST(round(CAST(x AS DOUBLE) * sc) AS INTEGER)), ',') AS q8
@@ -3050,15 +2886,7 @@ object TrainingQueries {
     // 8-gram windows with the same short-doc fallback as graft_shingles
     // (the slice clamps, so < 8 tokens collapse to one whole-text gram).
     "t_decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS tk FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, greatest(len(tk) - 7, 1) + 1),
-        |      i -> md5(array_to_string(tk[i:i+7], ' ')))) AS ds
-        |  FROM toks),
-        |shrows AS (SELECT doc_id, unnest(ds) AS d FROM sh),
-        |bench AS (SELECT DISTINCT d FROM shrows WHERE doc_id % 10 = 0)
+      s"""${OracleSql.benchGrams}
         |SELECT r.doc_id, COUNT(*) AS n_hits
         |FROM shrows r JOIN bench b USING (d)
         |WHERE r.doc_id % 10 <> 0
@@ -3075,15 +2903,7 @@ object TrainingQueries {
         |FROM documents""".stripMargin,
 
     "t_novelty" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS tk FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, greatest(len(tk) - 7, 1) + 1),
-        |      i -> md5(array_to_string(tk[i:i+7], ' ')))) AS ds
-        |  FROM toks),
-        |shrows AS (SELECT doc_id, unnest(ds) AS d FROM sh),
-        |bench AS (SELECT DISTINCT d FROM shrows WHERE doc_id % 10 = 0),
+      s"""${OracleSql.benchGrams},
         |j AS (
         |  SELECT r.doc_id, CASE WHEN b.d IS NOT NULL THEN 1 ELSE 0 END AS seen
         |  FROM shrows r LEFT JOIN bench b ON r.d = b.d
@@ -3121,14 +2941,7 @@ object TrainingQueries {
     // priority q = w / ((U+1)/2^52): exact divisions only, top-100 by
     // (q desc, id), tau = the 101st priority, est = greatest(w, tau)
     "t_sample_priority" ->
-      """WITH w AS (
-        |  SELECT doc_id, CAST(n_chars AS BIGINT) AS weight,
-        |    CAST(n_chars AS DOUBLE) AS wd,
-        |    CAST(n_chars AS DOUBLE) /
-        |      ((CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)
-        |              AS BIGINT) AS DOUBLE) + 1.0) / 4503599627370496.0)
-        |      AS priority
-        |  FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0),
+      s"""${OracleSql.priorityWeights("")}
         |r AS (SELECT doc_id, weight, wd, priority,
         |        row_number() OVER (ORDER BY priority DESC, doc_id) AS rn
         |      FROM w),
@@ -3140,14 +2953,7 @@ object TrainingQueries {
 
     // per-lang rank over the same exact priorities, per-group tau
     "t_sample_priority_key" ->
-      """WITH w AS (
-        |  SELECT lang, doc_id, CAST(n_chars AS BIGINT) AS weight,
-        |    CAST(n_chars AS DOUBLE) AS wd,
-        |    CAST(n_chars AS DOUBLE) /
-        |      ((CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)
-        |              AS BIGINT) AS DOUBLE) + 1.0) / 4503599627370496.0)
-        |      AS priority
-        |  FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0),
+      s"""${OracleSql.priorityWeights("lang, ")}
         |r AS (SELECT lang, doc_id, weight, wd, priority,
         |        row_number() OVER (PARTITION BY lang
         |                           ORDER BY priority DESC, doc_id) AS rn
@@ -3434,10 +3240,7 @@ object TrainingQueries {
         |WHERE rank <= 3""".stripMargin,
 
     "t_multimodal_retrieve" ->
-      """WITH f AS (
-        |  SELECT doc_id, text,
-        |    unnest(generate_series(0, (greatest(length(text), 1) - 1) // 256)) AS i
-        |  FROM documents),
+      s"""${OracleSql.documentFrames}
         |fr AS (
         |  SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
         |    md5(substr(text, CAST(i * 256 + 1 AS INTEGER), 64)) AS h
@@ -3463,10 +3266,7 @@ object TrainingQueries {
     // over 1000 skipped — the degenerate-bucket guards), distinct per
     // doc, pair-joined on hash
     "t_multimodal_dedup" ->
-      """WITH f AS (
-        |  SELECT doc_id, text,
-        |    unnest(generate_series(0, (greatest(length(text), 1) - 1) // 256)) AS i
-        |  FROM documents),
+      s"""${OracleSql.documentFrames}
         |h AS (
         |  SELECT DISTINCT doc_id,
         |    md5(substr(text, CAST(i * 256 + 1 AS INTEGER), 64)) AS fh
@@ -3487,10 +3287,7 @@ object TrainingQueries {
         |       JOIN sz sb ON p.doc_b = sb.doc_id""".stripMargin,
 
     "t_multimodal_frames" ->
-      s"""WITH f AS (
-        |  SELECT doc_id, text,
-        |    unnest(generate_series(0, (greatest(length(text), 1) - 1) // 256)) AS i
-        |  FROM documents),
+      s"""${OracleSql.documentFrames}
         |fr AS (
         |  SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
         |    substr(text, CAST(i * 256 + 1 AS INTEGER), 64) AS fstr
@@ -3505,10 +3302,7 @@ object TrainingQueries {
     // SimHash-band candidates over the perceptual hash, Hamming-verified,
     // doc-level corroboration >= 3 close frame pairs
     "t_multimodal_phash" ->
-      s"""WITH f AS (
-        |  SELECT doc_id, text,
-        |    unnest(generate_series(0, (greatest(length(text), 1) - 1) // 256)) AS i
-        |  FROM documents),
+      s"""${OracleSql.documentFrames}
         |fr AS (
         |  SELECT doc_id, substr(text, CAST(i * 256 + 1 AS INTEGER), 64) AS fstr
         |  FROM f),
@@ -3538,29 +3332,12 @@ object TrainingQueries {
     // over floor-boundary blocks and the dHash bit k compares row-major
     // neighbors — pure integer arithmetic end to end on both engines.
     "t_multimodal_decode" ->
-      """WITH px AS (
+      s"""WITH px AS (
         |  SELECT d.doc_id, cy.cy, cx.cx, x.x, y.y,
         |    (d.doc_id * 31 + x.x * 7 + y.y * 13) % 256 AS v
         |  FROM range(24) d(doc_id), range(8) cy(cy), range(9) cx(cx),
         |       range(32) x(x), range(32) y(y)
-        |  WHERE x.x >= (cx.cx * 32) // 9 AND x.x < ((cx.cx + 1) * 32) // 9
-        |    AND y.y >= (cy.cy * 32) // 8 AND y.y < ((cy.cy + 1) * 32) // 8),
-        |cells AS (
-        |  SELECT doc_id, cy, cx,
-        |    CAST(CAST(SUM(v) AS BIGINT) // COUNT(*) AS BIGINT) AS cell
-        |  FROM px GROUP BY 1, 2, 3),
-        |ph AS (
-        |  SELECT a.doc_id,
-        |    CAST(SUM(CASE WHEN a.cell > b.cell THEN
-        |        CASE WHEN a.cy * 8 + a.cx = 63
-        |             THEN CAST(-9223372036854775808 AS HUGEINT)
-        |             ELSE CAST(CAST(1 AS BIGINT)
-        |               << CAST(a.cy * 8 + a.cx AS INTEGER) AS HUGEINT) END
-        |      ELSE 0 END) AS BIGINT) AS phash
-        |  FROM cells a JOIN cells b
-        |    ON b.doc_id = a.doc_id AND b.cy = a.cy AND b.cx = a.cx + 1
-        |  WHERE a.cx < 8
-        |  GROUP BY 1)
+        |${OracleSql.dhash(32, 32, frames = false)}
         |SELECT c.doc_id, CAST(32 AS BIGINT) AS w, CAST(32 AS BIGINT) AS h,
         |  CAST(c.cy * 9 + c.cx AS BIGINT) AS cell_idx, c.cell, ph.phash
         |FROM cells c JOIN ph USING (doc_id)""".stripMargin,
@@ -3569,17 +3346,7 @@ object TrainingQueries {
     // truncating-mean grids, exact integer squared-L2 against doc 0's
     // grid, deterministic (dist2, doc_id) top-10
     "t_image_retrieve" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, cy.cy, cx.cx,
-        |    (d.doc_id * 31 + x.x * 7 + y.y * 13) % 256 AS v
-        |  FROM range(24) d(doc_id), range(8) cy(cy), range(8) cx(cx),
-        |       range(32) x(x), range(32) y(y)
-        |  WHERE x.x >= cx.cx * 4 AND x.x < cx.cx * 4 + 4
-        |    AND y.y >= cy.cy * 4 AND y.y < cy.cy * 4 + 4),
-        |cells AS (
-        |  SELECT doc_id, cy, cx,
-        |    CAST(CAST(SUM(v) AS BIGINT) // 16 AS BIGINT) AS cell
-        |  FROM px GROUP BY 1, 2, 3),
+      s"""${OracleSql.imageBlockCells}
         |qc AS (SELECT cy, cx, cell FROM cells WHERE doc_id = 0)
         |SELECT c.doc_id,
         |  CAST(SUM((c.cell - q.cell) * (c.cell - q.cell)) AS BIGINT)
@@ -3591,20 +3358,11 @@ object TrainingQueries {
     // PCM roundtrip identity, exact integer energy/peak, floor window
     // assignment i*64//3200, gradient-sign fingerprint bits 0..62
     "t_audio_decode" ->
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT d.doc_id, i.i,
         |    ((d.doc_id * 31 + i.i * 7) % 65536) - 32768 AS v
         |  FROM range(16) d(doc_id), range(3200) i(i)),
-        |w AS (
-        |  SELECT doc_id, (i * 64) // 3200 AS wk, SUM(v * v) AS we
-        |  FROM s GROUP BY 1, 2),
-        |fp AS (
-        |  SELECT a.doc_id,
-        |    CAST(SUM(CASE WHEN a.we > b.we
-        |      THEN CAST(1 AS BIGINT) << CAST(a.wk AS INTEGER)
-        |      ELSE 0 END) AS BIGINT) AS afp
-        |  FROM w a JOIN w b ON b.doc_id = a.doc_id AND b.wk = a.wk + 1
-        |  WHERE a.wk < 63 GROUP BY 1),
+        |${OracleSql.audioFingerprint(3200, "afp")},
         |st AS (
         |  SELECT doc_id, CAST(MAX(ABS(v)) AS BIGINT) AS peak,
         |    CAST(SUM(v * v) AS BIGINT) AS energy
@@ -3619,11 +3377,7 @@ object TrainingQueries {
     // envelope-gradient fingerprint (63 bits, sign-safe) -> 16-bit band
     // candidates -> Hamming verify.
     "t_audio_dedup" ->
-      """WITH docs AS (
-        |  SELECT d.doc_id AS doc_id, d.doc_id AS scene, 0 AS sh
-        |  FROM range(24) d(doc_id)
-        |  UNION ALL
-        |  SELECT d.doc_id + 100, d.doc_id, 3 FROM range(6) d(doc_id)),
+      s"""${OracleSql.shiftedDocs(24, 6, 3)}
         |s AS (
         |  SELECT dd.doc_id, i.i,
         |    (((i.i + dd.sh) % 200) - 100)
@@ -3632,16 +3386,7 @@ object TrainingQueries {
         |          + dd.scene * ((i.i + dd.sh) // 200)
         |            * ((i.i + dd.sh) // 200) * 5) % 64) AS v
         |  FROM docs dd, range(12800) i(i)),
-        |w AS (
-        |  SELECT doc_id, (i * 64) // 12800 AS wk, SUM(v * v) AS we
-        |  FROM s GROUP BY 1, 2),
-        |fp AS (
-        |  SELECT a.doc_id,
-        |    CAST(SUM(CASE WHEN a.we > b.we
-        |      THEN CAST(1 AS BIGINT) << CAST(a.wk AS INTEGER)
-        |      ELSE 0 END) AS BIGINT) AS phash
-        |  FROM w a JOIN w b ON b.doc_id = a.doc_id AND b.wk = a.wk + 1
-        |  WHERE a.wk < 63 GROUP BY 1),
+        |${OracleSql.audioFingerprint(12800, "phash")},
         |bands AS (
         |  SELECT doc_id, phash, b.b,
         |    (phash >> CAST(b.b * 16 AS INTEGER)) & 65535 AS v
@@ -3658,17 +3403,7 @@ object TrainingQueries {
     // Stats replayed from the pixel law (8x8 grid, exact 4x4 blocks);
     // the flat doc is a constant fill whose stats are closed-form
     "t_image_stats" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, cy.cy, cx.cx,
-        |    (d.doc_id * 31 + x.x * 7 + y.y * 13) % 256 AS v
-        |  FROM range(24) d(doc_id), range(8) cy(cy), range(8) cx(cx),
-        |       range(32) x(x), range(32) y(y)
-        |  WHERE x.x >= cx.cx * 4 AND x.x < cx.cx * 4 + 4
-        |    AND y.y >= cy.cy * 4 AND y.y < cy.cy * 4 + 4),
-        |cells AS (
-        |  SELECT doc_id, cy, cx,
-        |    CAST(CAST(SUM(v) AS BIGINT) // 16 AS BIGINT) AS cell
-        |  FROM px GROUP BY 1, 2, 3),
+      s"""${OracleSql.imageBlockCells}
         |stats AS (
         |  SELECT doc_id, MIN(cell) AS cell_min, MAX(cell) AS cell_max,
         |    CAST(SUM(cell) AS BIGINT) AS cell_sum
@@ -3681,49 +3416,8 @@ object TrainingQueries {
         |UNION ALL
         |SELECT 500, 32, 32, 77, 77, CAST(77 * 64 AS BIGINT), 77, TRUE""".stripMargin,
 
-    // Replays the whole image-dedup derivation from the pixel law:
-    // decode (identity on the law, PNG lossless) -> truncating block
-    // means -> dHash (bit-63 two's-complement form) -> 16-bit band
-    // candidates -> Hamming verify. Arithmetic >> plus & 65535 keeps
-    // band extraction sign-safe on both engines.
-    "t_image_dedup" ->
-      """WITH docs AS (
-        |  SELECT d.doc_id AS doc_id, d.doc_id AS scene, 0 AS sh FROM range(40) d(doc_id)
-        |  UNION ALL
-        |  SELECT d.doc_id + 100, d.doc_id, 1 FROM range(10) d(doc_id)),
-        |px AS (
-        |  SELECT dd.doc_id, cy.cy, cx.cx,
-        |    (dd.scene * 31 + ((x.x + dd.sh) % 32) * 7 + y.y * 13) % 256 AS v
-        |  FROM docs dd, range(8) cy(cy), range(9) cx(cx),
-        |       range(32) x(x), range(32) y(y)
-        |  WHERE x.x >= (cx.cx * 32) // 9 AND x.x < ((cx.cx + 1) * 32) // 9
-        |    AND y.y >= (cy.cy * 32) // 8 AND y.y < ((cy.cy + 1) * 32) // 8),
-        |cells AS (
-        |  SELECT doc_id, cy, cx,
-        |    CAST(CAST(SUM(v) AS BIGINT) // COUNT(*) AS BIGINT) AS cell
-        |  FROM px GROUP BY 1, 2, 3),
-        |ph AS (
-        |  SELECT a.doc_id,
-        |    CAST(SUM(CASE WHEN a.cell > b.cell THEN
-        |        CASE WHEN a.cy * 8 + a.cx = 63
-        |             THEN CAST(-9223372036854775808 AS HUGEINT)
-        |             ELSE CAST(CAST(1 AS BIGINT)
-        |               << CAST(a.cy * 8 + a.cx AS INTEGER) AS HUGEINT) END
-        |      ELSE 0 END) AS BIGINT) AS phash
-        |  FROM cells a JOIN cells b
-        |    ON b.doc_id = a.doc_id AND b.cy = a.cy AND b.cx = a.cx + 1
-        |  WHERE a.cx < 8
-        |  GROUP BY 1),
-        |bands AS (
-        |  SELECT doc_id, phash, b.b, (phash >> CAST(b.b * 16 AS INTEGER)) & 65535 AS v
-        |  FROM ph, range(4) b(b)),
-        |cand AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-        |    x.phash AS ha, y.phash AS hb
-        |  FROM bands x JOIN bands y
-        |    ON x.b = y.b AND x.v = y.v AND x.doc_id < y.doc_id)
-        |SELECT doc_a, doc_b, CAST(bit_count(xor(ha, hb)) AS BIGINT) AS hamming
-        |FROM cand WHERE bit_count(xor(ha, hb)) <= 8""".stripMargin,
+    // the pixel-law image dedup over 40 scenes + 10 shifted copies
+    "t_image_dedup" -> OracleSql.imageDedup(scenes = 40, shifted = 10),
 
     // Replays the real RIFF/AVI + uncompressed-DIB video decode from the
     // frame LAW: DIB is raw (decode∘encode identity), so every decoded
@@ -3732,30 +3426,12 @@ object TrainingQueries {
     // form, and the container metadata (frame count, fps, duration) is
     // closed-form from the fixture parameters.
     "t_video_decode" ->
-      """WITH px AS (
+      s"""WITH px AS (
         |  SELECT d.doc_id, t.t, cy.cy, cx.cx,
         |    (d.doc_id * 31 + x.x * 7 + y.y * 13 + t.t * 17) % 256 AS v
         |  FROM range(8) d(doc_id), range(6) t(t), range(8) cy(cy),
         |       range(9) cx(cx), range(24) x(x), range(16) y(y)
-        |  WHERE x.x >= (cx.cx * 24) // 9 AND x.x < ((cx.cx + 1) * 24) // 9
-        |    AND y.y >= (cy.cy * 16) // 8 AND y.y < ((cy.cy + 1) * 16) // 8),
-        |cells AS (
-        |  SELECT doc_id, t, cy, cx,
-        |    CAST(CAST(SUM(v) AS BIGINT) // COUNT(*) AS BIGINT) AS cell
-        |  FROM px GROUP BY 1, 2, 3, 4),
-        |ph AS (
-        |  SELECT a.doc_id, a.t,
-        |    CAST(SUM(CASE WHEN a.cell > b.cell THEN
-        |        CASE WHEN a.cy * 8 + a.cx = 63
-        |             THEN CAST(-9223372036854775808 AS HUGEINT)
-        |             ELSE CAST(CAST(1 AS BIGINT)
-        |               << CAST(a.cy * 8 + a.cx AS INTEGER) AS HUGEINT) END
-        |      ELSE 0 END) AS BIGINT) AS phash
-        |  FROM cells a JOIN cells b
-        |    ON b.doc_id = a.doc_id AND b.t = a.t
-        |   AND b.cy = a.cy AND b.cx = a.cx + 1
-        |  WHERE a.cx < 8
-        |  GROUP BY 1, 2)
+        |${OracleSql.dhash(24, 16, frames = true)}
         |SELECT c.doc_id, CAST(c.t AS BIGINT) AS frame_idx,
         |  CAST(24 AS BIGINT) AS w, CAST(16 AS BIGINT) AS h,
         |  CAST(6 AS BIGINT) AS n_frames, CAST(10 AS BIGINT) AS fps,
@@ -3763,60 +3439,8 @@ object TrainingQueries {
         |  CAST(c.cy * 9 + c.cx AS BIGINT) AS cell_idx, c.cell, ph.phash
         |FROM cells c JOIN ph ON ph.doc_id = c.doc_id AND ph.t = c.t""".stripMargin,
 
-    // Replays the whole video-dedup derivation from the frame law:
-    // decode (identity, DIB raw) -> per-frame truncating block means ->
-    // dHash -> 16-bit band candidates at (doc*1024+frame) granularity ->
-    // Hamming verify -> video-pair rollup with the >= 2 shared-frame
-    // floor. Frame pairs inside one video are excluded exactly as the
-    // engine excludes them.
-    "t_video_dedup" ->
-      """WITH docs AS (
-        |  SELECT d.doc_id AS doc_id, d.doc_id AS scene, 0 AS sh
-        |  FROM range(12) d(doc_id)
-        |  UNION ALL
-        |  SELECT d.doc_id + 100, d.doc_id, 1 FROM range(4) d(doc_id)),
-        |px AS (
-        |  SELECT dd.doc_id, t.t, cy.cy, cx.cx,
-        |    (dd.scene * 31 + ((x.x + dd.sh) % 24) * 7 + y.y * 13
-        |      + t.t * 17) % 256 AS v
-        |  FROM docs dd, range(4) t(t), range(8) cy(cy), range(9) cx(cx),
-        |       range(24) x(x), range(16) y(y)
-        |  WHERE x.x >= (cx.cx * 24) // 9 AND x.x < ((cx.cx + 1) * 24) // 9
-        |    AND y.y >= (cy.cy * 16) // 8 AND y.y < ((cy.cy + 1) * 16) // 8),
-        |cells AS (
-        |  SELECT doc_id, t, cy, cx,
-        |    CAST(CAST(SUM(v) AS BIGINT) // COUNT(*) AS BIGINT) AS cell
-        |  FROM px GROUP BY 1, 2, 3, 4),
-        |ph AS (
-        |  SELECT a.doc_id, a.t,
-        |    CAST(SUM(CASE WHEN a.cell > b.cell THEN
-        |        CASE WHEN a.cy * 8 + a.cx = 63
-        |             THEN CAST(-9223372036854775808 AS HUGEINT)
-        |             ELSE CAST(CAST(1 AS BIGINT)
-        |               << CAST(a.cy * 8 + a.cx AS INTEGER) AS HUGEINT) END
-        |      ELSE 0 END) AS BIGINT) AS phash
-        |  FROM cells a JOIN cells b
-        |    ON b.doc_id = a.doc_id AND b.t = a.t
-        |   AND b.cy = a.cy AND b.cx = a.cx + 1
-        |  WHERE a.cx < 8
-        |  GROUP BY 1, 2),
-        |bands AS (
-        |  SELECT doc_id, t, phash, b.b,
-        |    (phash >> CAST(b.b * 16 AS INTEGER)) & 65535 AS v
-        |  FROM ph, range(4) b(b)),
-        |cand AS (
-        |  SELECT DISTINCT x.doc_id AS da, x.t AS ta, y.doc_id AS db,
-        |    y.t AS tb, x.phash AS ha, y.phash AS hb
-        |  FROM bands x JOIN bands y
-        |    ON x.b = y.b AND x.v = y.v
-        |   AND (x.doc_id * 1024 + x.t) < (y.doc_id * 1024 + y.t)),
-        |fp AS (
-        |  SELECT da, db, bit_count(xor(ha, hb)) AS hamming
-        |  FROM cand WHERE bit_count(xor(ha, hb)) <= 8 AND da <> db)
-        |SELECT da AS video_a, db AS video_b,
-        |  CAST(COUNT(*) AS BIGINT) AS n_shared,
-        |  CAST(MIN(hamming) AS BIGINT) AS min_hamming
-        |FROM fp GROUP BY 1, 2 HAVING COUNT(*) >= 2""".stripMargin,
+    // the frame-law video dedup over 12 scenes + 4 shifted copies
+    "t_video_dedup" -> OracleSql.videoDedup(scenes = 12, shifted = 4),
 
     // Re-derives the KMV sketch relationally: distinct hashes -> per-group
     // row_number -> k-th minimum -> the same (k-1)/U(k) estimate, with the
@@ -3855,22 +3479,9 @@ object TrainingQueries {
         |FROM est""".stripMargin,
 
     "t_sketch_kmv" ->
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT DISTINCT event_type, md5(CAST(user_id AS VARCHAR)) AS hv FROM events),
-        |r AS (
-        |  SELECT event_type, hv,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn FROM h),
-        |s AS (
-        |  SELECT event_type, COUNT(*) AS nd,
-        |    max(CASE WHEN rn = 32 THEN hv END) AS kth
-        |  FROM r GROUP BY 1)
-        |SELECT event_type,
-        |  CAST(LEAST(nd, 32) AS BIGINT) AS nd_capped,
-        |  CASE WHEN nd < 32 THEN CAST(nd AS DOUBLE)
-        |       ELSE round(CAST(31 AS DOUBLE) * CAST(4503599627370496 AS DOUBLE)
-        |                  / CAST(CAST('0x' || substr(kth, 1, 13) AS BIGINT) AS DOUBLE), 3)
-        |  END AS est_distinct
-        |FROM s""".stripMargin,
+        |${OracleSql.kmvEstimate("event_type", "h")}""".stripMargin,
 
     // distinct-per-group <= k, so the MG summary is provably exact and
     // the plain count/rank formulation is a true oracle
@@ -3888,11 +3499,7 @@ object TrainingQueries {
     // pruning must be invisible to results: the oracle is the plain
     // full-scan filter
     "t_skip_scan" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-        |FROM events
-        |WHERE user_id BETWEEN 100 AND 300 AND value BETWEEN 10.0 AND 120.0
-        |GROUP BY 1""".stripMargin,
+      OracleSql.boxScan("user_id BETWEEN 100 AND 300 AND value BETWEEN 10.0 AND 120.0"),
 
     // bloom pruning must be invisible to results: the oracle is the plain
     // full-scan IN filter
@@ -3901,11 +3508,7 @@ object TrainingQueries {
         |FROM events WHERE event_id IN (7, 123, 901, 999999)""".stripMargin,
 
     "t_zorder_scan" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-        |FROM events
-        |WHERE user_id BETWEEN 0 AND 150 AND value BETWEEN 0.0 AND 60.0
-        |GROUP BY 1""".stripMargin,
+      OracleSql.boxScan("user_id BETWEEN 0 AND 150 AND value BETWEEN 0.0 AND 60.0"),
 
     // the identical masked xy2d walk, one recursion level per bit
     "t_hilbert_value" ->
@@ -3932,11 +3535,7 @@ object TrainingQueries {
 
     // pruning soundness: clustered+pruned scan == the plain aggregate
     "t_hilbert_scan" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-        |FROM events
-        |WHERE user_id BETWEEN 0 AND 150 AND value BETWEEN 0.0 AND 60.0
-        |GROUP BY 1""".stripMargin,
+      OracleSql.boxScan("user_id BETWEEN 0 AND 150 AND value BETWEEN 0.0 AND 60.0"),
 
     "t_feature_hash" ->
       """WITH tok AS (
@@ -4035,25 +3634,12 @@ object TrainingQueries {
     // each day's cumulative sketch must equal a direct sketch of all
     // hashes up to that day
     "t_growth_curve" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT DISTINCT CAST(ts AS DATE) AS day,
         |    md5(CAST(user_id AS VARCHAR)) AS hv FROM events),
         |days AS (SELECT DISTINCT day FROM d),
         |cum AS (SELECT DISTINCT dd.day, h.hv FROM days dd JOIN d h ON h.day <= dd.day),
-        |r AS (
-        |  SELECT day, hv,
-        |    row_number() OVER (PARTITION BY day ORDER BY hv) AS rn FROM cum),
-        |s AS (
-        |  SELECT day, COUNT(*) AS nd,
-        |    max(CASE WHEN rn = 32 THEN hv END) AS kth
-        |  FROM r GROUP BY 1)
-        |SELECT day,
-        |  CAST(LEAST(nd, 32) AS BIGINT) AS nd_capped,
-        |  CASE WHEN nd < 32 THEN CAST(nd AS DOUBLE)
-        |       ELSE round(CAST(31 AS DOUBLE) * CAST(4503599627370496 AS DOUBLE)
-        |                  / CAST(CAST('0x' || substr(kth, 1, 13) AS BIGINT) AS DOUBLE), 3)
-        |  END AS est_distinct
-        |FROM s""".stripMargin,
+        |${OracleSql.kmvEstimate("day", "cum")}""".stripMargin,
 
     // merged daily histograms vs direct weekly binning — bin counts add,
     // so the two must agree exactly under the shared interpolation rule
@@ -4079,23 +3665,10 @@ object TrainingQueries {
     // the mart query merges per-day sketches; the oracle sketches each
     // week's raw rows directly — equality IS the mergeability proof
     "t_sketch_mart" ->
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT DISTINCT date_trunc('week', CAST(ts AS DATE)) AS week,
         |    md5(CAST(user_id AS VARCHAR)) AS hv FROM events),
-        |r AS (
-        |  SELECT week, hv,
-        |    row_number() OVER (PARTITION BY week ORDER BY hv) AS rn FROM h),
-        |s AS (
-        |  SELECT week, COUNT(*) AS nd,
-        |    max(CASE WHEN rn = 32 THEN hv END) AS kth
-        |  FROM r GROUP BY 1)
-        |SELECT week,
-        |  CAST(LEAST(nd, 32) AS BIGINT) AS nd_capped,
-        |  CASE WHEN nd < 32 THEN CAST(nd AS DOUBLE)
-        |       ELSE round(CAST(31 AS DOUBLE) * CAST(4503599627370496 AS DOUBLE)
-        |                  / CAST(CAST('0x' || substr(kth, 1, 13) AS BIGINT) AS DOUBLE), 3)
-        |  END AS est_distinct
-        |FROM s""".stripMargin,
+        |${OracleSql.kmvEstimate("week", "h")}""".stripMargin,
 
     // CM grid rebuilt from the same md5 bucket rule: counter (r,c) = count
     // of events whose key hashes there; estimate = min over the d rows.
@@ -4135,26 +3708,23 @@ object TrainingQueries {
          |    i -> CAST(e.embedding[i] AS DOUBLE) * m[ps.p + 1][i])), 6) AS proj
          |FROM embeddings e, w, ps""".stripMargin),
 
-    "t_dataset_card" ->
-      """SELECT source, COUNT(*) AS n_docs,
+    "t_dataset_card" -> {
+      val keep =
+        raw"""len(regexp_extract_all(text, '\S+')) >= 5
+          |    AND CAST(len(regexp_extract_all(text, '[^\w\s]')) AS DOUBLE)
+          |        / greatest(len(regexp_extract_all(text, '\S+')), 1) < 0.3
+          |    AND CAST(coalesce(list_sum(list_transform(regexp_extract_all(text, '\S+'),
+          |          t -> length(t))), 0) AS DOUBLE)
+          |        / greatest(len(regexp_extract_all(text, '\S+')), 1) >= 2.0
+          |    THEN 1 END)""".stripMargin
+      raw"""SELECT source, COUNT(*) AS n_docs,
         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
         |  CAST(SUM(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS total_tokens,
         |  COUNT(CASE WHEN lang = 'en' THEN 1 END) AS n_en,
-        |  COUNT(CASE WHEN len(regexp_extract_all(text, '\S+')) >= 5
-        |    AND CAST(len(regexp_extract_all(text, '[^\w\s]')) AS DOUBLE)
-        |        / greatest(len(regexp_extract_all(text, '\S+')), 1) < 0.3
-        |    AND CAST(coalesce(list_sum(list_transform(regexp_extract_all(text, '\S+'),
-        |          t -> length(t))), 0) AS DOUBLE)
-        |        / greatest(len(regexp_extract_all(text, '\S+')), 1) >= 2.0
-        |    THEN 1 END) AS n_quality_keep,
-        |  round(CAST(COUNT(CASE WHEN len(regexp_extract_all(text, '\S+')) >= 5
-        |    AND CAST(len(regexp_extract_all(text, '[^\w\s]')) AS DOUBLE)
-        |        / greatest(len(regexp_extract_all(text, '\S+')), 1) < 0.3
-        |    AND CAST(coalesce(list_sum(list_transform(regexp_extract_all(text, '\S+'),
-        |          t -> length(t))), 0) AS DOUBLE)
-        |        / greatest(len(regexp_extract_all(text, '\S+')), 1) >= 2.0
-        |    THEN 1 END) AS DOUBLE) / COUNT(*), 6) AS keep_rate
-        |FROM documents GROUP BY source""".stripMargin,
+        |  COUNT(CASE WHEN $keep AS n_quality_keep,
+        |  round(CAST(COUNT(CASE WHEN $keep AS DOUBLE) / COUNT(*), 6) AS keep_rate
+        |FROM documents GROUP BY source""".stripMargin
+    },
 
     "t_seq_assemble" ->
       """SELECT user_id, COUNT(*) AS n_events,
@@ -4164,59 +3734,22 @@ object TrainingQueries {
     // The full-recompute pair formulation (t_dedup_jaccard's) restricted
     // to pairs touching the delta — the incremental path's contract.
     "t_dedup_incremental" -> (shingleCtes +
-      """, scored AS (
-        |  SELECT p.doc_a, p.doc_b,
-        |    CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-        |      greatest(len(list_distinct(list_concat(sa.shingles, sb.shingles))), 1) AS jaccard
-        |  FROM pairs p
-        |  JOIN sh sa ON sa.doc_id = p.doc_a
-        |  JOIN sh sb ON sb.doc_id = p.doc_b)
+      s""", scored AS (
+        |${OracleSql.pairJaccard}
         |SELECT doc_a, doc_b, jaccard FROM scored
         |WHERE jaccard >= 0.3 AND (doc_a % 10 = 0 OR doc_b % 10 = 0)""".stripMargin),
 
     "t_bm25" -> bm25Oracle,
 
     "t_hybrid_rrf" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '\S+')) AS tok
-        |  FROM documents),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY 1),
-        |stats AS (
-        |  SELECT COUNT(*) AS nd,
-        |    CAST(SUM(dl) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avgdl
-        |  FROM dl),
-        |tf AS (
-        |  SELECT doc_id, tok, COUNT(*) AS tf FROM toks
-        |  WHERE tok IN ('spark', 'merge', 'window') GROUP BY 1, 2),
-        |dfq AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT t.doc_id,
-        |    ((CAST(s.nd AS DOUBLE) - CAST(f.df AS DOUBLE) + 0.5) /
-        |     (CAST(f.df AS DOUBLE) + 0.5))
-        |      * (CAST(t.tf AS DOUBLE) * (1.2 + 1.0)) /
-        |      (CAST(t.tf AS DOUBLE)
-        |        + 1.2 * ((1.0 - 0.75) + 0.75 * CAST(d.dl AS DOUBLE) / s.avgdl)) AS w
-        |  FROM tf t
-        |  JOIN dl d ON t.doc_id = d.doc_id
-        |  JOIN dfq f ON t.tok = f.tok
-        |  CROSS JOIN stats s),
-        |bm AS (
-        |  SELECT doc_id,
-        |    CAST(SUM(CAST(floor(w * 1000000000.0) AS BIGINT)) AS BIGINT) AS score_fp
-        |  FROM scored GROUP BY 1),
+      s"""${OracleSql.bm25("bm")},
         |lexr AS (
         |  SELECT doc_id, ROW_NUMBER() OVER (ORDER BY score_fp DESC, doc_id) AS r_lex
         |  FROM bm ORDER BY score_fp DESC, doc_id LIMIT 20),
         |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
         |cs AS (
         |  SELECT vec_id,
-        |    round(
-        |      list_sum(list_transform(range(1, len(embedding) + 1),
-        |        i -> CAST(embedding[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-        |      6) AS cos
-        |  FROM embeddings, q),
+        |${OracleSql.queryCosine},
         |semr AS (
         |  SELECT vec_id AS doc_id, ROW_NUMBER() OVER (ORDER BY cos DESC, vec_id) AS r_sem
         |  FROM cs ORDER BY cos DESC, vec_id LIMIT 20),
@@ -4236,7 +3769,7 @@ object TrainingQueries {
     // estimate is the equal-slot fraction, the exact leg is the
     // t_dedup_jaccard formulation without its threshold.
     "t_minhash_est" -> (shingleCtes +
-      """, est AS (
+      s""", est AS (
         |  SELECT p.doc_a, p.doc_b,
         |    CAST(len(list_filter(range(1, 9), j -> sa.sig[j] = sb.sig[j])) AS DOUBLE) / 8
         |      AS est_jaccard
@@ -4244,12 +3777,7 @@ object TrainingQueries {
         |  JOIN sig sa ON sa.doc_id = p.doc_a
         |  JOIN sig sb ON sb.doc_id = p.doc_b),
         |ex AS (
-        |  SELECT p.doc_a, p.doc_b,
-        |    CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-        |      greatest(len(list_distinct(list_concat(sa.shingles, sb.shingles))), 1) AS jaccard
-        |  FROM pairs p
-        |  JOIN sh sa ON sa.doc_id = p.doc_a
-        |  JOIN sh sb ON sb.doc_id = p.doc_b)
+        |${OracleSql.pairJaccard}
         |SELECT e.doc_a, e.doc_b, e.est_jaccard, x.jaccard,
         |  round(abs(e.est_jaccard - x.jaccard), 6) AS abs_err
         |FROM est e JOIN ex x USING (doc_a, doc_b)""".stripMargin),
@@ -4278,28 +3806,8 @@ object TrainingQueries {
     // ints — identical IEEE results on both engines), rounding only the
     // reported columns.
     "t_quality_rules" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
-        |    CAST(coalesce(list_sum(list_transform(regexp_extract_all(text, '\S+'),
-        |        t -> length(t))), 0) AS DOUBLE)
-        |      / greatest(len(regexp_extract_all(text, '\S+')), 1) AS mean_tok_len,
-        |    CAST(len(regexp_extract_all(text, '#|\.\.\.')) AS DOUBLE)
-        |      / greatest(len(regexp_extract_all(text, '\S+')), 1) AS symbol_ratio,
-        |    CAST(len(list_filter(string_split(text, chr(10)),
-        |        l -> regexp_matches(trim(l), '^[-*•]'))) AS DOUBLE)
-        |      / greatest(len(string_split(text, chr(10))), 1) AS bullet_line_ratio,
-        |    CAST(len(list_filter(string_split(text, chr(10)),
-        |        l -> regexp_matches(trim(l), '\.\.\.$'))) AS DOUBLE)
-        |      / greatest(len(string_split(text, chr(10))), 1) AS ellipsis_line_ratio,
-        |    CAST(len(list_filter(regexp_extract_all(text, '\S+'),
-        |        t -> regexp_matches(t, '[A-Za-z]'))) AS DOUBLE)
-        |      / greatest(len(regexp_extract_all(text, '\S+')), 1) AS alpha_word_ratio,
-        |    CAST(len(list_filter(regexp_extract_all(lower(text), '\S+'),
-        |        t -> list_contains(['the','a','an','of','and','or','to','in','is','it',
-        |                            'for','on','with','as','at','by','from','that','this'], t)))
-        |      AS BIGINT) AS n_stopwords
-        |  FROM documents),
+      s"""WITH m AS (
+        |${OracleSql.gopherMetrics},
         |r AS (
         |  SELECT *,
         |    (n_tokens BETWEEN 5 AND 5000) AS r_tok_count,

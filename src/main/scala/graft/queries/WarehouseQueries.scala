@@ -378,10 +378,9 @@ object WarehouseQueries {
     rows(s, dir, "customer", "c_custkey", 17)(xdr)
   }
 
-  /** The per-operation fan-out over a (k, bin) envelope relation: decode,
-    * posexplode the operations array, flatten to the
-    * history_operations-shaped projection. Stateless row transform —
-    * valid on a streaming relation too (the st_xdr_ops drain).
+  /** Decodes each (k, bin) envelope once and fans it out to one row per
+    * operation: (k, h = the decoded envelope, i = the op position, op).
+    * Stateless row transform, valid on a streaming relation too.
     *
     * The explode is the OUTER variant + a post-generate null filter, not
     * a plain posexplode, deliberately: for a non-outer generate Catalyst
@@ -394,11 +393,17 @@ object WarehouseQueries {
     * null-position row the filter drops — row-set identical, half the
     * decode work. Plan-audited in PlanAuditSpec.
     */
-  private[graft] def txOpsProject(df: DataFrame): DataFrame =
+  private def txOpRows(df: DataFrame): DataFrame =
     df.withColumn("h", call_function("graft_xdr_tx_envelope", col("bin")))
       .select(col("k"), col("h"),
         posexplode_outer(col("h.operations")).as(Seq("i", "op")))
       .filter(col("i").isNotNull)
+
+  /** The per-operation fan-out over a (k, bin) envelope relation
+    * ([[txOpRows]]) flattened to the history_operations-shaped
+    * projection; the st_xdr_ops drain runs it on a stream. */
+  private[graft] def txOpsProject(df: DataFrame): DataFrame =
+    txOpRows(df)
       .select(col("k"), col("i").cast("long").as("i"),
         lower(hex(call_function("graft_strkey_decode",
           col("h.source_account")))).as("source_payload_hex"),
@@ -423,15 +428,11 @@ object WarehouseQueries {
           col("op.asset_issuer")))).as("asset_issuer_payload_hex"),
         col("op.amount").as("amount"))
 
-  /** The wave-2 per-op projection over a (k, bin) envelope relation —
-    * the same decode-once outer-generate posture as [[txOpsProject]],
-    * flattening the wave-2 columns (incl. the embedded revoke
-    * LedgerKey's identifying fields). */
+  /** The wave-2 per-op projection over a (k, bin) envelope relation
+    * ([[txOpRows]]), flattening the wave-2 columns (incl. the embedded
+    * revoke LedgerKey's identifying fields). */
   private[graft] def txOpsExt2Project(df: DataFrame): DataFrame =
-    df.withColumn("h", call_function("graft_xdr_tx_envelope", col("bin")))
-      .select(col("k"), col("h"),
-        posexplode_outer(col("h.operations")).as(Seq("i", "op")))
-      .filter(col("i").isNotNull)
+    txOpRows(df)
       .select(col("k"),
         col("op.op_type").as("op_type"),
         lower(hex(call_function("graft_strkey_decode",
@@ -2062,11 +2063,7 @@ object WarehouseQueries {
     // generate + null filter). The oracle restates every column's law
     // from the row key per arm.
     "s2_tx_ops_ext" -> ((s, dir) =>
-      txEnvelopeExtFixture(s, dir)
-        .withColumn("h", call_function("graft_xdr_tx_envelope", col("bin")))
-        .select(col("k"), col("h"),
-          posexplode_outer(col("h.operations")).as(Seq("i", "op")))
-        .filter(col("i").isNotNull)
+      txOpRows(txEnvelopeExtFixture(s, dir))
         .select(col("k"),
           col("op.op_type").as("op_type"),
           lower(hex(call_function("graft_strkey_decode",
@@ -2262,11 +2259,7 @@ object WarehouseQueries {
         u32(lit(0L)), u32(lit(0L)),
         u32(lit(1L)), u32(lit(0L)), opBody,
         soroExt, u32(lit(0L)))
-      rows(s, dir, "orders", "o_orderkey", 71)(xdr)
-        .withColumn("h", call_function("graft_xdr_tx_envelope", col("bin")))
-        .select(col("k"), col("h"),
-          posexplode_outer(col("h.operations")).as(Seq("i", "op")))
-        .filter(col("i").isNotNull)
+      txOpRows(rows(s, dir, "orders", "o_orderkey", 71)(xdr))
         .select(col("k"),
           col("op.op_type").as("op_type"),
           col("op.host_fn_type").as("host_fn_type"),
@@ -3259,6 +3252,46 @@ object WarehouseQueries {
       |UNION ALL
       |SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM src WHERE NOT deleted""".stripMargin
 
+  /** The per-user as-of join oracle: each click's prevailing purchase
+    * price from the half-open [ts, next ts) purchase intervals. */
+  private val asofJoinOracle: String =
+    """WITH intervals AS (
+      |  SELECT user_id AS p_user, value AS price, ts AS valid_from,
+      |    coalesce(lead(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id),
+      |             TIMESTAMP '2200-01-01 00:00:00') AS valid_to
+      |  FROM events WHERE event_type = 'purchase')
+      |SELECT e.event_id, e.user_id, e.ts, p.price
+      |FROM events e LEFT JOIN intervals p
+      |  ON e.user_id = p.p_user AND e.ts >= p.valid_from AND e.ts < p.valid_to
+      |WHERE e.event_type = 'click'""".stripMargin
+
+  /** The global as-of join oracle: each view's prevailing price from
+    * user 42's purchase intervals. */
+  private val asofGlobalOracle: String =
+    """WITH gp AS (
+      |  SELECT value AS global_price, ts AS valid_from,
+      |    coalesce(lead(ts, 1) OVER (ORDER BY ts, event_id),
+      |             TIMESTAMP '2200-01-01 00:00:00') AS valid_to
+      |  FROM events WHERE event_type = 'purchase' AND user_id = 42)
+      |SELECT e.event_id, e.ts, g.global_price
+      |FROM events e LEFT JOIN gp g ON e.ts >= g.valid_from AND e.ts < g.valid_to
+      |WHERE e.event_type = 'view'""".stripMargin
+
+  /** The SCD2 interval law: each purchase valid until the user's next one
+    * (end of time for the last). */
+  private val scd2IntervalsOracle: String =
+    """SELECT user_id, event_id, value, ts AS valid_from,
+      |  coalesce(lead(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id),
+      |           TIMESTAMP '2200-01-01 00:00:00') AS valid_to
+      |FROM events WHERE event_type = 'purchase'""".stripMargin
+
+  /** Per user, the sum of the JSON key `props.k` and the event count. */
+  private val jsonKeySumOracle: String =
+    """SELECT user_id,
+      |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum,
+      |  COUNT(*) AS n
+      |FROM events GROUP BY user_id""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "q1_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
@@ -3313,45 +3346,15 @@ object WarehouseQueries {
         |  SELECT o.*, row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rn
         |  FROM orders o) WHERE rn = 1""".stripMargin,
 
-    "w3_scd2_intervals" ->
-      """SELECT user_id, event_id, value, ts AS valid_from,
-        |  coalesce(lead(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-        |           TIMESTAMP '2200-01-01 00:00:00') AS valid_to
-        |FROM events WHERE event_type = 'purchase'""".stripMargin,
+    "w3_scd2_intervals" -> scd2IntervalsOracle,
 
-    "j3_asof_join" ->
-      """WITH intervals AS (
-        |  SELECT user_id AS p_user, value AS price, ts AS valid_from,
-        |    coalesce(lead(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-        |             TIMESTAMP '2200-01-01 00:00:00') AS valid_to
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT e.event_id, e.user_id, e.ts, p.price
-        |FROM events e LEFT JOIN intervals p
-        |  ON e.user_id = p.p_user AND e.ts >= p.valid_from AND e.ts < p.valid_to
-        |WHERE e.event_type = 'click'""".stripMargin,
+    "j3_asof_join" -> asofJoinOracle,
 
-    "j3_asof_global" ->
-      """WITH gp AS (
-        |  SELECT value AS global_price, ts AS valid_from,
-        |    coalesce(lead(ts, 1) OVER (ORDER BY ts, event_id),
-        |             TIMESTAMP '2200-01-01 00:00:00') AS valid_to
-        |  FROM events WHERE event_type = 'purchase' AND user_id = 42)
-        |SELECT e.event_id, e.ts, g.global_price
-        |FROM events e LEFT JOIN gp g ON e.ts >= g.valid_from AND e.ts < g.valid_to
-        |WHERE e.event_type = 'view'""".stripMargin,
+    "j3_asof_global" -> asofGlobalOracle,
 
     // Identical semantics to j3_asof_join — the union-window execution must
     // be invisible to results.
-    "j3_asof_union" ->
-      """WITH intervals AS (
-        |  SELECT user_id AS p_user, value AS price, ts AS valid_from,
-        |    coalesce(lead(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-        |             TIMESTAMP '2200-01-01 00:00:00') AS valid_to
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT e.event_id, e.user_id, e.ts, p.price
-        |FROM events e LEFT JOIN intervals p
-        |  ON e.user_id = p.p_user AND e.ts >= p.valid_from AND e.ts < p.valid_to
-        |WHERE e.event_type = 'click'""".stripMargin,
+    "j3_asof_union" -> asofJoinOracle,
 
     // sparse-key leg: same interval semantics on the synthetic shard
     "j3_asof_auto_equi" ->
@@ -3370,28 +3373,11 @@ object WarehouseQueries {
         |  ON c.shard = p.shard AND c.ts >= p.valid_from AND c.ts < p.valid_to""".stripMargin,
 
     // regime choice must be invisible: same oracle as the fixed forms
-    "j3_asof_auto" ->
-      """WITH intervals AS (
-        |  SELECT user_id AS p_user, value AS price, ts AS valid_from,
-        |    coalesce(lead(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-        |             TIMESTAMP '2200-01-01 00:00:00') AS valid_to
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT e.event_id, e.user_id, e.ts, p.price
-        |FROM events e LEFT JOIN intervals p
-        |  ON e.user_id = p.p_user AND e.ts >= p.valid_from AND e.ts < p.valid_to
-        |WHERE e.event_type = 'click'""".stripMargin,
+    "j3_asof_auto" -> asofJoinOracle,
 
     // Identical semantics to j3_asof_global — bin replication must be
     // invisible to results.
-    "j3_interval_binned" ->
-      """WITH gp AS (
-        |  SELECT value AS global_price, ts AS valid_from,
-        |    coalesce(lead(ts, 1) OVER (ORDER BY ts, event_id),
-        |             TIMESTAMP '2200-01-01 00:00:00') AS valid_to
-        |  FROM events WHERE event_type = 'purchase' AND user_id = 42)
-        |SELECT e.event_id, e.ts, g.global_price
-        |FROM events e LEFT JOIN gp g ON e.ts >= g.valid_from AND e.ts < g.valid_to
-        |WHERE e.event_type = 'view'""".stripMargin,
+    "j3_interval_binned" -> asofGlobalOracle,
 
     "j1_state_ledger_join" ->
       """SELECT l.l_orderkey, l.l_linenumber, l.l_quantity, o.o_orderdate AS closed_at
@@ -3515,11 +3501,7 @@ object WarehouseQueries {
         |  AND ts < TIMESTAMP '2024-02-01 00:00:00'
         |GROUP BY 1""".stripMargin,
 
-    "d13_scd2_merge" ->
-      """SELECT user_id, event_id, value, ts AS valid_from,
-        |  coalesce(lead(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-        |           TIMESTAMP '2200-01-01 00:00:00') AS valid_to
-        |FROM events WHERE event_type = 'purchase'""".stripMargin,
+    "d13_scd2_merge" -> scd2IntervalsOracle,
 
     "k6_optimize" ->
       """SELECT event_type, COUNT(*) AS n,
@@ -3650,16 +3632,7 @@ object WarehouseQueries {
         |  CAST(tl.slots_milli AS DOUBLE) / NULLIF(tot.minute_total, 0) AS share
         |FROM tl JOIN tot USING (minute_idx)""".stripMargin,
 
-    "a5_cube" ->
-      """SELECT CASE WHEN g_day = 1 THEN DATE '1900-01-01' ELSE day END AS day,
-        |  CASE WHEN g_type = 1 THEN 'ALL' ELSE event_type END AS event_type,
-        |  n, value_sum, g_day, g_type
-        |FROM (
-        |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type, COUNT(*) AS n,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum,
-        |    CAST(GROUPING(CAST(date_trunc('day', ts) AS DATE)) AS BIGINT) AS g_day,
-        |    CAST(GROUPING(event_type) AS BIGINT) AS g_type
-        |  FROM events GROUP BY CUBE(1, 2)) t""".stripMargin,
+    "a5_cube" -> OracleSql.groupingSets("CUBE"),
 
     "w5_ntile" ->
       """WITH t AS (
@@ -3710,16 +3683,7 @@ object WarehouseQueries {
           |  CAST(SUM(CAST(coalesce(value, 0) AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
           |FROM z GROUP BY user_id, grp""".stripMargin),
 
-    "a5_rollup" ->
-      """SELECT CASE WHEN g_day = 1 THEN DATE '1900-01-01' ELSE day END AS day,
-        |  CASE WHEN g_type = 1 THEN 'ALL' ELSE event_type END AS event_type,
-        |  n, value_sum, g_day, g_type
-        |FROM (
-        |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type, COUNT(*) AS n,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum,
-        |    CAST(GROUPING(CAST(date_trunc('day', ts) AS DATE)) AS BIGINT) AS g_day,
-        |    CAST(GROUPING(event_type) AS BIGINT) AS g_type
-        |  FROM events GROUP BY ROLLUP(1, 2)) t""".stripMargin,
+    "a5_rollup" -> OracleSql.groupingSets("ROLLUP"),
 
     "a5_trade_agg" ->
       """SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month, p_brand,
@@ -4889,17 +4853,7 @@ object WarehouseQueries {
     // the routing law restated: w2's failures, plus w3's failures NOT
     // already alerted in w2 (the ledger dedup)
     "qa_alert_route" ->
-      """WITH e AS (SELECT CAST(ts AS DATE) AS day, event_type FROM events),
-        |r AS (SELECT min(day) AS d0,
-        |  date_diff('day', min(day), max(day)) + 1 AS span FROM e),
-        |c AS (SELECT event_type,
-        |  SUM(CASE WHEN least((date_diff('day', r.d0, day) * 3) // r.span, 2) = 0
-        |      THEN 1 ELSE 0 END) AS c1,
-        |  SUM(CASE WHEN least((date_diff('day', r.d0, day) * 3) // r.span, 2) = 1
-        |      THEN 1 ELSE 0 END) AS c2,
-        |  SUM(CASE WHEN least((date_diff('day', r.d0, day) * 3) // r.span, 2) = 2
-        |      THEN 1 ELSE 0 END) AS c3
-        |  FROM e, r GROUP BY 1)
+      s"""${OracleSql.alertWindowCounts}
         |SELECT event_type AS check_key, CAST(c1 - c2 AS BIGINT) AS violations,
         |  'w2' AS txn
         |FROM c WHERE c2 < c1
@@ -4910,17 +4864,7 @@ object WarehouseQueries {
     // the report law: two runs per check, failure counts/rate (dyadic),
     // first failing run id, w3 is always the latest status
     "qa_alert_report" ->
-      """WITH e AS (SELECT CAST(ts AS DATE) AS day, event_type FROM events),
-        |r AS (SELECT min(day) AS d0,
-        |  date_diff('day', min(day), max(day)) + 1 AS span FROM e),
-        |c AS (SELECT event_type,
-        |  SUM(CASE WHEN least((date_diff('day', r.d0, day) * 3) // r.span, 2) = 0
-        |      THEN 1 ELSE 0 END) AS c1,
-        |  SUM(CASE WHEN least((date_diff('day', r.d0, day) * 3) // r.span, 2) = 1
-        |      THEN 1 ELSE 0 END) AS c2,
-        |  SUM(CASE WHEN least((date_diff('day', r.d0, day) * 3) // r.span, 2) = 2
-        |      THEN 1 ELSE 0 END) AS c3
-        |  FROM e, r GROUP BY 1),
+      s"""${OracleSql.alertWindowCounts},
         |runs AS (
         |  SELECT 'w2' AS run_id, event_type AS check_key,
         |    CASE WHEN c2 < c1 THEN 'fail' ELSE 'pass' END AS status,
@@ -5180,17 +5124,9 @@ object WarehouseQueries {
         |  CAST(EXTRACT(quarter FROM o_orderdate) AS BIGINT) AS qtr
         |FROM orders""".stripMargin,
 
-    "p8_json" ->
-      """SELECT user_id,
-        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum,
-        |  COUNT(*) AS n
-        |FROM events GROUP BY user_id""".stripMargin,
+    "p8_json" -> jsonKeySumOracle,
 
-    "p8_variant" ->
-      """SELECT user_id,
-        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum,
-        |  COUNT(*) AS n
-        |FROM events GROUP BY user_id""".stripMargin,
+    "p8_variant" -> jsonKeySumOracle,
 
     "p1_struct_flatten_wide" -> graft.sources.HistoryOperations.wideOracleSql,
 

@@ -520,6 +520,17 @@ object LakeExports {
   private def decSumD(cond: String): String =
     s"CAST(SUM(CASE WHEN $cond THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE)"
 
+  /** The asset key and balance columns of both balance exports' oracles. */
+  private val assetBalanceCols: String =
+    s"""event_type AS asset_type,
+       | upper(event_type) AS asset_code,
+       | 'issuer_' || event_type AS asset_issuer,
+       | 'C' || event_type AS contract_id,
+       | ${decSumD("event_id % 4 = 0")} AS liquidity_pool_balance,
+       | ${decSumD("event_id % 4 = 1")} AS offer_balance,
+       | ${decSumD("event_id % 4 = 2")} AS trustline_balance,
+       | ${decSumD("event_id % 4 = 3")} AS contract_balance""".stripMargin
+
   /** reference dags/queries/generate_avro/account_balances.sql:9-25 —
     * exports the account_balances__daily_agg mart: per (day, account,
     * asset) balance components. The fixture derives the mart itself from
@@ -548,14 +559,7 @@ object LakeExports {
   val accountBalancesOracle: String =
     s"""SELECT CAST(ts AS DATE) AS day,
        | 'acct_' || CAST(user_id % 50 AS VARCHAR) AS account_id,
-       | event_type AS asset_type,
-       | upper(event_type) AS asset_code,
-       | 'issuer_' || event_type AS asset_issuer,
-       | 'C' || event_type AS contract_id,
-       | ${decSumD("event_id % 4 = 0")} AS liquidity_pool_balance,
-       | ${decSumD("event_id % 4 = 1")} AS offer_balance,
-       | ${decSumD("event_id % 4 = 2")} AS trustline_balance,
-       | ${decSumD("event_id % 4 = 3")} AS contract_balance
+       | $assetBalanceCols
        |FROM events
        |WHERE ts >= TIMESTAMP '$EvLo' AND ts < TIMESTAMP '$EvHi'
        |GROUP BY CAST(ts AS DATE), user_id % 50, event_type
@@ -609,14 +613,7 @@ object LakeExports {
        |   AS total_supply
        |FROM (
        |SELECT CAST(ts AS DATE) AS day,
-       | event_type AS asset_type,
-       | upper(event_type) AS asset_code,
-       | 'issuer_' || event_type AS asset_issuer,
-       | 'C' || event_type AS contract_id,
-       | ${decSumD("event_id % 4 = 0")} AS liquidity_pool_balance,
-       | ${decSumD("event_id % 4 = 1")} AS offer_balance,
-       | ${decSumD("event_id % 4 = 2")} AS trustline_balance,
-       | ${decSumD("event_id % 4 = 3")} AS contract_balance,
+       | $assetBalanceCols,
        | COUNT(DISTINCT CASE WHEN event_id % 4 = 0 THEN user_id END)
        |   AS total_accounts_with_liquidity_pool_balance,
        | COUNT(DISTINCT CASE WHEN event_id % 4 = 1 THEN user_id END)

@@ -5,10 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-provided testdata tables (TESTDATA.md).
   *
-  * `events.ts` is written as parquet TIMESTAMP(NANOS); Spark's TimestampType
-  * is microseconds, so we read nanos as long and floor-divide to micros —
-  * exactly the truncation DuckDB applies when it reads the same file, which
-  * keeps oracle comparisons bit-identical.
+  * In the test data (sf0.001, sf0.01, sf0.1) `events.ts` is parquet
+  * TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark loads as
+  * TIMESTAMP_NTZ and `readEvents` passes through unchanged. A writer that
+  * emits TIMESTAMP(NANOS) instead produces a column Spark cannot hold as a
+  * timestamp: the session reads it as the raw int64 (GraftSession.tune),
+  * and `readEvents` integer-divides it to micros — exactly the truncation
+  * DuckDB applies when it reads the same file, which keeps oracle
+  * comparisons bit-identical on such input too.
   */
 object Tables {
 

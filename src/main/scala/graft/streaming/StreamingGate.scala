@@ -910,10 +910,6 @@ object StreamingGate {
     // fold whose accumulated pairs equal the batch relation can match it
     "st_incr_dedup" -> graft.queries.TrainingQueries.dedupCcOracle,
 
-    // whole-corpus replay of the real-decode derivation from the pixel
-    // law (the t_image_dedup oracle over the gate's 30 + 6 fixture):
-    // only an incremental fold whose accumulated index equals the batch
-    // decode can match the banded Hamming pair set
     // the batch volume-anomaly derivation verbatim: associatively
     // folded partial day counts must reproduce the batch daily table
     "st_volume_anomaly" ->
@@ -959,121 +955,23 @@ object StreamingGate {
     // only an incremental fold whose accumulated frame-hash index equals
     // the batch decode can match the video-pair rollup
     "st_video_ingest" ->
-      """WITH docs AS (
-        |  SELECT d.doc_id AS doc_id, d.doc_id AS scene, 0 AS sh
-        |  FROM range(10) d(doc_id)
-        |  UNION ALL
-        |  SELECT d.doc_id + 100, d.doc_id, 1 FROM range(3) d(doc_id)),
-        |px AS (
-        |  SELECT dd.doc_id, t.t, cy.cy, cx.cx,
-        |    (dd.scene * 31 + ((x.x + dd.sh) % 24) * 7 + y.y * 13
-        |      + t.t * 17) % 256 AS v
-        |  FROM docs dd, range(4) t(t), range(8) cy(cy), range(9) cx(cx),
-        |       range(24) x(x), range(16) y(y)
-        |  WHERE x.x >= (cx.cx * 24) // 9 AND x.x < ((cx.cx + 1) * 24) // 9
-        |    AND y.y >= (cy.cy * 16) // 8 AND y.y < ((cy.cy + 1) * 16) // 8),
-        |cells AS (
-        |  SELECT doc_id, t, cy, cx,
-        |    CAST(CAST(SUM(v) AS BIGINT) // COUNT(*) AS BIGINT) AS cell
-        |  FROM px GROUP BY 1, 2, 3, 4),
-        |ph AS (
-        |  SELECT a.doc_id, a.t,
-        |    CAST(SUM(CASE WHEN a.cell > b.cell THEN
-        |        CASE WHEN a.cy * 8 + a.cx = 63
-        |             THEN CAST(-9223372036854775808 AS HUGEINT)
-        |             ELSE CAST(CAST(1 AS BIGINT)
-        |               << CAST(a.cy * 8 + a.cx AS INTEGER) AS HUGEINT) END
-        |      ELSE 0 END) AS BIGINT) AS phash
-        |  FROM cells a JOIN cells b
-        |    ON b.doc_id = a.doc_id AND b.t = a.t
-        |   AND b.cy = a.cy AND b.cx = a.cx + 1
-        |  WHERE a.cx < 8
-        |  GROUP BY 1, 2),
-        |bands AS (
-        |  SELECT doc_id, t, phash, b.b,
-        |    (phash >> CAST(b.b * 16 AS INTEGER)) & 65535 AS v
-        |  FROM ph, range(4) b(b)),
-        |cand AS (
-        |  SELECT DISTINCT x.doc_id AS da, x.t AS ta, y.doc_id AS db,
-        |    y.t AS tb, x.phash AS ha, y.phash AS hb
-        |  FROM bands x JOIN bands y
-        |    ON x.b = y.b AND x.v = y.v
-        |   AND (x.doc_id * 1024 + x.t) < (y.doc_id * 1024 + y.t)),
-        |fp AS (
-        |  SELECT da, db, bit_count(xor(ha, hb)) AS hamming
-        |  FROM cand WHERE bit_count(xor(ha, hb)) <= 8 AND da <> db)
-        |SELECT da AS video_a, db AS video_b,
-        |  CAST(COUNT(*) AS BIGINT) AS n_shared,
-        |  CAST(MIN(hamming) AS BIGINT) AS min_hamming
-        |FROM fp GROUP BY 1, 2 HAVING COUNT(*) >= 2""".stripMargin,
+      graft.queries.OracleSql.videoDedup(scenes = 10, shifted = 3),
 
+    // whole-corpus replay of the real-decode derivation from the pixel
+    // law (the t_image_dedup oracle over the gate's 30 + 6 fixture):
+    // only an incremental fold whose accumulated index equals the batch
+    // decode can match the banded Hamming pair set
     "st_image_ingest" ->
-      """WITH docs AS (
-        |  SELECT d.doc_id AS doc_id, d.doc_id AS scene, 0 AS sh FROM range(30) d(doc_id)
-        |  UNION ALL
-        |  SELECT d.doc_id + 100, d.doc_id, 1 FROM range(6) d(doc_id)),
-        |px AS (
-        |  SELECT dd.doc_id, cy.cy, cx.cx,
-        |    (dd.scene * 31 + ((x.x + dd.sh) % 32) * 7 + y.y * 13) % 256 AS v
-        |  FROM docs dd, range(8) cy(cy), range(9) cx(cx),
-        |       range(32) x(x), range(32) y(y)
-        |  WHERE x.x >= (cx.cx * 32) // 9 AND x.x < ((cx.cx + 1) * 32) // 9
-        |    AND y.y >= (cy.cy * 32) // 8 AND y.y < ((cy.cy + 1) * 32) // 8),
-        |cells AS (
-        |  SELECT doc_id, cy, cx,
-        |    CAST(CAST(SUM(v) AS BIGINT) // COUNT(*) AS BIGINT) AS cell
-        |  FROM px GROUP BY 1, 2, 3),
-        |ph AS (
-        |  SELECT a.doc_id,
-        |    CAST(SUM(CASE WHEN a.cell > b.cell THEN
-        |        CASE WHEN a.cy * 8 + a.cx = 63
-        |             THEN CAST(-9223372036854775808 AS HUGEINT)
-        |             ELSE CAST(CAST(1 AS BIGINT)
-        |               << CAST(a.cy * 8 + a.cx AS INTEGER) AS HUGEINT) END
-        |      ELSE 0 END) AS BIGINT) AS phash
-        |  FROM cells a JOIN cells b
-        |    ON b.doc_id = a.doc_id AND b.cy = a.cy AND b.cx = a.cx + 1
-        |  WHERE a.cx < 8
-        |  GROUP BY 1),
-        |bands AS (
-        |  SELECT doc_id, phash, b.b, (phash >> CAST(b.b * 16 AS INTEGER)) & 65535 AS v
-        |  FROM ph, range(4) b(b)),
-        |cand AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-        |    x.phash AS ha, y.phash AS hb
-        |  FROM bands x JOIN bands y
-        |    ON x.b = y.b AND x.v = y.v AND x.doc_id < y.doc_id)
-        |SELECT doc_a, doc_b, CAST(bit_count(xor(ha, hb)) AS BIGINT) AS hamming
-        |FROM cand WHERE bit_count(xor(ha, hb)) <= 8""".stripMargin,
+      graft.queries.OracleSql.imageDedup(scenes = 30, shifted = 6),
 
     // the whole-corpus batch sampler: only an associative top-(k+1) fold
     // whose state preserves the global (k+1)-th priority can match the
     // estimator threshold exactly
     "st_priority_sample" ->
-      """WITH w AS (
-        |  SELECT lang, doc_id, CAST(n_chars AS BIGINT) AS weight,
-        |    CAST(n_chars AS DOUBLE) AS wd,
-        |    CAST(n_chars AS DOUBLE) /
-        |      ((CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)
-        |              AS BIGINT) AS DOUBLE) + 1.0) / 4503599627370496.0)
-        |      AS priority
-        |  FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0),
-        |r AS (SELECT lang, doc_id, weight, wd, priority,
-        |        row_number() OVER (PARTITION BY lang
-        |                           ORDER BY priority DESC, doc_id) AS rn
-        |      FROM w),
-        |t AS (SELECT lang,
-        |        COALESCE(MAX(CASE WHEN rn = 21 THEN priority END), 0.0) AS tau
-        |      FROM r GROUP BY 1)
-        |SELECT r.lang, r.doc_id, r.weight, r.priority,
-        |  CASE WHEN r.wd > t.tau THEN r.wd ELSE t.tau END AS est_weight
-        |FROM r JOIN t USING (lang) WHERE r.rn <= 20""".stripMargin,
+      graft.queries.TrainingQueries.oracles("t_sample_priority_key"),
 
-    "st_scd2" ->
-      """SELECT user_id, event_id, value, ts AS valid_from,
-        |  coalesce(lead(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-        |           TIMESTAMP '2200-01-01 00:00:00') AS valid_to
-        |FROM events WHERE event_type = 'purchase'""".stripMargin,
+    // the batch interval law verbatim
+    "st_scd2" -> graft.queries.WarehouseQueries.oracles("w3_scd2_intervals"),
 
     "st_sessionize" ->
       """WITH x AS (
@@ -1102,11 +1000,8 @@ object StreamingGate {
         |  event_type, COUNT(*) AS n
         |FROM events GROUP BY 1, 2""".stripMargin,
 
-    "st_dedup" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum,
-        |  CAST(SUM(event_id) AS BIGINT) AS id_sum
-        |FROM events GROUP BY 1""".stripMargin,
+    // the batch per-type aggregate verbatim: each event counted once
+    "st_dedup" -> graft.queries.WarehouseQueries.oracles("k6_optimize"),
 
     // Spark's global-watermark rule replayed relationally: batch = time
     // slice (+1 for the every-7th redelivery), watermark entering batch b
@@ -1139,11 +1034,7 @@ object StreamingGate {
 
     // single-ingestion semantics: the gate ingests TWICE (full replay
     // with identical txn ids) — only idempotent commits hash-match this
-    "st_versioned_ingest" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum,
-        |  CAST(SUM(event_id) AS BIGINT) AS id_sum
-        |FROM events GROUP BY 1""".stripMargin,
+    "st_versioned_ingest" -> graft.queries.WarehouseQueries.oracles("k6_optimize"),
 
     "st_stream_join" ->
       """SELECT p.user_id, p.event_id AS p_id, c.event_id AS c_id,
@@ -1175,24 +1066,7 @@ object StreamingGate {
 
     // identical to t_sketch_mart's oracle: the streamed fold must land on
     // the same mart a batch build would
-    "st_sketch_mart" ->
-      """WITH h AS (
-        |  SELECT DISTINCT date_trunc('week', CAST(ts AS DATE)) AS week,
-        |    md5(CAST(user_id AS VARCHAR)) AS hv FROM events),
-        |r AS (
-        |  SELECT week, hv,
-        |    row_number() OVER (PARTITION BY week ORDER BY hv) AS rn FROM h),
-        |s AS (
-        |  SELECT week, COUNT(*) AS nd,
-        |    max(CASE WHEN rn = 32 THEN hv END) AS kth
-        |  FROM r GROUP BY 1)
-        |SELECT week,
-        |  CAST(LEAST(nd, 32) AS BIGINT) AS nd_capped,
-        |  CASE WHEN nd < 32 THEN CAST(nd AS DOUBLE)
-        |       ELSE round(CAST(31 AS DOUBLE) * CAST(4503599627370496 AS DOUBLE)
-        |                  / CAST(CAST('0x' || substr(kth, 1, 13) AS BIGINT) AS DOUBLE), 3)
-        |  END AS est_distinct
-        |FROM s""".stripMargin,
+    "st_sketch_mart" -> graft.queries.TrainingQueries.oracles("t_sketch_mart"),
 
     "st_heavy_hitters" ->
       """WITH c AS (
@@ -1204,21 +1078,6 @@ object StreamingGate {
         |SELECT user_id, CAST(rank AS BIGINT) AS rank, event_type, cnt
         |FROM r WHERE rank <= 3""".stripMargin,
 
-    "st_kmv_estimate" ->
-      """WITH h AS (
-        |  SELECT DISTINCT event_type, md5(CAST(user_id AS VARCHAR)) AS hv FROM events),
-        |r AS (
-        |  SELECT event_type, hv,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn FROM h),
-        |s AS (
-        |  SELECT event_type, COUNT(*) AS nd,
-        |    max(CASE WHEN rn = 32 THEN hv END) AS kth
-        |  FROM r GROUP BY 1)
-        |SELECT event_type,
-        |  CAST(LEAST(nd, 32) AS BIGINT) AS nd_capped,
-        |  CASE WHEN nd < 32 THEN CAST(nd AS DOUBLE)
-        |       ELSE round(CAST(31 AS DOUBLE) * CAST(4503599627370496 AS DOUBLE)
-        |                  / CAST(CAST('0x' || substr(kth, 1, 13) AS BIGINT) AS DOUBLE), 3)
-        |  END AS est_distinct
-        |FROM s""".stripMargin)
+    // the batch KMV estimate verbatim
+    "st_kmv_estimate" -> graft.queries.TrainingQueries.oracles("t_sketch_kmv"))
 }

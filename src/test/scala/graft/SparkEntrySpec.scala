@@ -14,6 +14,18 @@ class SparkEntrySpec extends SparkSpec {
     assert((o -- q).isEmpty, s"orphaned oracles: ${(o -- q).toSeq.sorted}")
   }
 
+  test("no two registries define the same query or oracle name") {
+    val named = Seq("WarehouseQueries", "TrainingQueries", "StreamingGate", "LakeExports")
+      .zip(SparkEntry.registries)
+    assert(named.size == 4)
+    for (((a, (qa, oa)), i) <- named.zipWithIndex; (b, (qb, ob)) <- named.drop(i + 1)) {
+      val q = qa.keySet.intersect(qb.keySet)
+      val o = oa.keySet.intersect(ob.keySet)
+      assert(q.isEmpty, s"queries in both $a and $b: ${q.toSeq.sorted}")
+      assert(o.isEmpty, s"oracles in both $a and $b: ${o.toSeq.sorted}")
+    }
+  }
+
   test("entry returns rows on the smoke scale") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Pins}
 import graft.queries.{TrainingQueries, WarehouseQueries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.Try
@@ -58,10 +58,11 @@ object SparkEntry {
   /** Runs `body` on each query of `from` whose name starts with one of the
     * comma-separated prefixes in `only` (every query when there are none),
     * one at a time in name order. A non-fatal failure becomes that
-    * query's `Failure` instead of ending the loop. The session's cached
-    * relations are dropped after every query, failed or not: queries that
-    * pin relations (the dedup family's materialize, nearDupIndex) rely on
-    * it, and without it the pins accumulate across the gate surface.
+    * query's `Failure` instead of ending the loop. Each query is the
+    * outermost [[Pins.scope]], so every pin it made, checkpoints
+    * included, is freed when it ends, failed or not; the session's cached
+    * relations are then cleared too, for a relation cached outside
+    * `Pins`.
     */
   def eachQuery[A](spark: SparkSession, only: String,
                    from: Map[String, Query] = queries)(
@@ -69,7 +70,7 @@ object SparkEntry {
     val prefixes = only.split(",").filter(_.nonEmpty)
     from.toSeq.filter { case (name, _) => prefixes.isEmpty || prefixes.exists(name.startsWith) }
       .sortBy(_._1).map { case (name, fn) =>
-        name -> (try Try(body(name, fn)) finally spark.catalog.clearCache())
+        name -> (try Try(Pins.scope(body(name, fn))) finally spark.catalog.clearCache())
       }
   }
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.core.Pins
 import graft.functions.{VectorFunctions => VF}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -393,8 +394,7 @@ object IvfIndex {
           .map(r => if (r.isNullAt(1)) 0L else r.getSeq[Double](1).length.toLong)
           .sum,
         nlist)
-      cents = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), next.schema)
+      cents = Pins.local(spark, rows.toIndexedSeq, next.schema)
     }
     cents
   }

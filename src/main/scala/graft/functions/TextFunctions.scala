@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.core.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -255,7 +256,7 @@ object TextFunctions {
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
                queryTerms: Seq[String], k: Int = 10,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+               k1: Double = 1.2, b: Double = 0.75): DataFrame = Pins.scope {
     require(queryTerms.nonEmpty, "BM25 needs at least one query term")
     // set semantics on the query (the pre-rewrite isin+groupBy behavior):
     // a duplicated term must not double its df or sum its weight twice
@@ -269,14 +270,11 @@ object TextFunctions {
       explode(tokens(lower(col(textCol)))).as("tok"))
     val tfCols = terms.zipWithIndex.map { case (t, i) =>
       count(when(col("tok") === t, 1)).as(s"tf_$i") }
-    val perDoc = toks.groupBy("id")
-      .agg(count(lit(1)).as("dl"), tfCols: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager: the stats broadcast and the tf/dl legs build concurrently
-    // under one action, and concurrent scans of a LAZY persist race to
-    // compute the same partitions (the corpus would tokenize once per
+    // filled eagerly: the stats broadcast and the tf/dl legs build
+    // concurrently under one action (the corpus would tokenize once per
     // leg)
-    perDoc.count()
+    val perDoc = Pins.fill(toks.groupBy("id")
+      .agg(count(lit(1)).as("dl"), tfCols: _*))
     val dl = perDoc.select(col("id"), col("dl"))
     val stats = perDoc.agg(count(lit(1)).as("nd"), sum(col("dl")).as("tot"))
       .select(col("nd"),
@@ -310,11 +308,7 @@ object TextFunctions {
       .select(col("id").as(idCol), col("score_fp"),
         (col("score_fp").cast("double") / lit(1.0e9)).as("score"))
     // the result is ≤ k rows BY CONSTRUCTION: collect it so the perDoc
-    // pin can be released here instead of leaking until some session-
-    // level cache clear (the pageRankTopK pattern)
-    val rows = top.collect()
-    perDoc.unpersist(false)
-    docs.sparkSession.createDataFrame(
-      docs.sparkSession.sparkContext.parallelize(rows.toIndexedSeq, 1), top.schema)
+    // pin is freed with this scope (the pageRankTopK pattern)
+    Pins.local(docs.sparkSession, top.collect().toIndexedSeq, top.schema)
   }
 }

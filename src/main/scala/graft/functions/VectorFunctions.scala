@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.core.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -335,7 +336,7 @@ object VectorFunctions {
     * reads to pick nprobe (take the smallest nprobe whose recall clears
     * the target): one row `(nprobe, n_hits, k, recall)` per candidate,
     * each probe judged against the brute-force ground truth computed
-    * once (persisted, released by the session's per-query clear). The
+    * once (pinned until the caller's scope ends). The
     * sweep is a bounded driver loop over result-sized legs — the corpus
     * is scanned once per candidate probe depth, exactly what the probe
     * costs in production.
@@ -345,8 +346,7 @@ object VectorFunctions {
                  vecCol: String = "embedding"): DataFrame = {
     require(nprobes.nonEmpty && nprobes.forall(np => np >= 1 && np <= nlist),
       s"nprobes must be within [1, $nlist], got $nprobes")
-    val exact = bruteForceTopK(corpus, queryVec, k, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val exact = Pins.keep(bruteForceTopK(corpus, queryVec, k, idCol, vecCol))
     nprobes.map { np =>
       ivfTopK(corpus, queryVec, k, nlist, np, idCol, vecCol)
         .select(col(idCol))

@@ -1,10 +1,9 @@
 package graft.operators
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Pins}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Byte-pair-encoding tokenizer TRAINING as relational dataflow — the
   * map-reduce BPE shape a 100 TB corpus actually runs (Sennrich et al.
@@ -125,7 +124,7 @@ object Bpe {
 
   private def learnTuned(spark: SparkSession, wf: DataFrame,
                          rounds: Int): (List[(Int, String, String, Long)], DataFrame) = {
-    var syms = initialSymbols(wf).persist(StorageLevel.MEMORY_AND_DISK)
+    var syms = Pins.keep(initialSymbols(wf))
     val nSyms = syms.count()
     spark.conf.set("spark.sql.shuffle.partitions",
       GraftSession.iterationWidth(spark, nSyms).toString)
@@ -148,10 +147,10 @@ object Bpe {
       val row = top.get
       val (l, r) = (row.getString(0), row.getString(1))
       merges += ((rnd, l, r, row.getLong(2)))
-      val next = mergeStep(syms, l, r).persist(StorageLevel.MEMORY_AND_DISK)
+      val next = Pins.keep(mergeStep(syms, l, r))
       if (rnd < rounds) top = argmax(next)
       else { next.count(); top = None }
-      syms.unpersist(false)
+      Pins.release(syms)
       syms = next
       rnd += 1
     }
@@ -162,8 +161,7 @@ object Bpe {
     * per round: (round, left_sym, right_sym, merged, pair_count) — the
     * merge table a tokenizer ships. */
   def learnMerges(spark: SparkSession, wf: DataFrame, rounds: Int): DataFrame = {
-    val (merges, syms) = learn(wf, rounds)
-    syms.unpersist(false)
+    val merges = Pins.scope(learn(wf, rounds)._1)
     import spark.implicits._
     merges.toDF("round", "left_sym", "right_sym", "pair_count")
       .select(col("round"), col("left_sym"), col("right_sym"),
@@ -191,8 +189,7 @@ object Bpe {
     */
   def tokenizeCorpus(spark: SparkSession, docs: DataFrame, idCol: String,
                      textCol: String, topV: Int, rounds: Int): DataFrame = {
-    val (merges, syms) = learn(wordFreqs(docs, textCol, topV), rounds)
-    syms.unpersist(false)
+    val merges = Pins.scope(learn(wordFreqs(docs, textCol, topV), rounds)._1)
     val docWords = docs
       .select(col(idCol),
         explode(regexp_extract_all(lower(col(textCol)), lit("\\S+"), lit(0)))
@@ -216,14 +213,10 @@ object Bpe {
     * (result is ≤ `topK` rows, collected so every pinned relation can be
     * released before returning). */
   def vocabDistribution(spark: SparkSession, wf: DataFrame, rounds: Int,
-                        topK: Int = 50): DataFrame = {
-    val (_, syms) = learn(wf, rounds)
-    val out = syms
+                        topK: Int = 50): DataFrame = Pins.scope {
+    val out = learn(wf, rounds)._2
       .groupBy("sym").agg(sum("freq").as("n_tokens"), count(lit(1)).as("n_words"))
       .orderBy(col("n_tokens").desc, col("sym")).limit(topK)
-    val rows = out.collect()
-    syms.unpersist(false)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
+    Pins.local(spark, out.collect().toIndexedSeq, out.schema)
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pins
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -172,7 +173,7 @@ object Dedup {
   def minhashCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
                             n: Int = 3, k: Int = 8, bands: Int = 4): DataFrame = {
     val banded = bandRows(minhashSignatures(docs, idCol, textCol, n, k), k, bands)
-    selfJoinPairs(materialize(banded))
+    selfJoinPairs(Pins.fill(banded))
   }
 
   private def selfJoinPairs(banded: DataFrame): DataFrame = {
@@ -181,53 +182,6 @@ object Dedup {
     a.join(b, col("a.band") === col("b.band") && col("a.id") < col("b.id"))
       .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
       .distinct()
-  }
-
-  /** Persist AND materialize now. A lazy persist inside a plan that scans
-    * the same subtree more than once (self-joins, union legs, the five
-    * dg references in the verify assembly) leaves concurrent scans racing
-    * to compute the same cache partitions — the subtree effectively runs
-    * once per reference (measured 6x on the near-dup pipeline). One small
-    * eager count turns every later reference into a cache read.
-    *
-    * Inside a [[pinScope]] the pins are collected for the operator to
-    * release once its result no longer scans them (dedupCorpus after its
-    * pairs materialize); outside one they stay cached until the caller's
-    * `clearCache()` after its terminal action.
-    */
-  private val scopePins = new ThreadLocal[scala.collection.mutable.ListBuffer[DataFrame]]
-
-  private def materialize(df: DataFrame): DataFrame = {
-    val p = lazyPin(df)
-    p.count()
-    p
-  }
-
-  /** Pin WITHOUT the eager count — for a relation whose cache is filled
-    * as a side effect of a downstream materialize (it sits on the lineage
-    * of an eagerly-counted child) or whose readers are strictly
-    * sequential actions. NOT safe for a relation first read by two
-    * concurrent subplans of one action (the documented AQE recompute
-    * race) — those need [[materialize]]'s eager fill. */
-  private def lazyPin(df: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    val scope = scopePins.get()
-    if (scope != null) scope += p
-    p
-  }
-
-  /** Collect every relation `f` pins into a PRIVATE scope (thread-local,
-    * so a concurrent pipeline on another thread can't be flushed by this
-    * one), returning the result and the scope's pins for the caller to
-    * release after its terminal action.
-    */
-  private def pinScope[A](f: => A): (A, Seq[DataFrame]) = {
-    val outer = scopePins.get()
-    val buf = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    scopePins.set(buf)
-    try { val r = f; (r, buf.toSeq) }
-    finally { if (outer != null) scopePins.set(outer) else scopePins.remove() }
   }
 
   /** Exact set Jaccard from the scored-pair columns — ONE copy shared by
@@ -300,9 +254,9 @@ object Dedup {
     // band self-join runs exactly once. Jaccard over digests equals
     // Jaccard over the shingle sets (md5 is injective for any realistic
     // corpus). At warehouse scale these materializations would be real
-    // tables; eager persist gives the same shape (see [[materialize]] —
+    // tables; eager persist gives the same shape (see [[Pins.fill]] —
     // lazy persists race when one action scans them from several legs).
-    val dg = materialize(
+    val dg = Pins.fill(
       shingleRows(docs, idCol, textCol, n)
         .select(col("id"), md5(col("shingle")).as("d"))
         .distinct())
@@ -312,13 +266,13 @@ object Dedup {
     // the whole digest relation for one column. Banding is derived lazily:
     // re-hashing k short sig strings per doc on each of the self-join's
     // two cache scans is noise next to a second dg pass.
-    val sigsz = materialize(signatureAgg(dg, k, withSize = true))
+    val sigsz = Pins.fill(signatureAgg(dg, k, withSize = true))
     // with a positive threshold the candidate pairs flow into exactly one
     // consumer (the common-count join), so an eager materialization would
     // be a pure barrier + cache write; only the keepZeroOverlap branch
     // scans cands twice (common + the zero-overlap anti-join leg)
     val cands0 = selfJoinPairs(bandRows(sigsz, k, bands))
-    val cands = if (!keepZeroOverlap) cands0 else materialize(cands0)
+    val cands = if (!keepZeroOverlap) cands0 else Pins.fill(cands0)
     val sizes = sigsz.select(col("id"), col("sz"))
     // Common digest count, restricted to candidate pairs. The second join
     // carries the digest in its equi-key, so per-pair work is the merge of
@@ -389,13 +343,12 @@ object Dedup {
     // TWICE (sz_a/sz_b joins) — lazy relations would re-tokenize the whole
     // existing corpus on every scan, the exact cost the index exists to
     // avoid. (In production these are bucketed TABLES; the eager persist
-    // is the in-session stand-in, released by the caller's clearCache
-    // like every other dedup relation pinned outside a pinScope.)
-    val dg = materialize(
+    // is the in-session stand-in, freed when the caller's scope ends.)
+    val dg = Pins.fill(
       shingleRows(docs, idCol, textCol, n)
         .select(col("id"), md5(col("shingle")).as("d"))
         .distinct())
-    val sigsz = materialize(signatureAgg(dg, k, withSize = true))
+    val sigsz = Pins.fill(signatureAgg(dg, k, withSize = true))
     NearDupIndex(dg, bandRows(sigsz, k, bands), sigsz.select(col("id"), col("sz")))
   }
 
@@ -432,7 +385,7 @@ object Dedup {
     val (dDg, dSigsz, _, pairs) =
       deltaBandPairs(delta, idCol, textCol, index, n, k, bands)
     // materialized: read by the touched projection AND the verify join
-    val cands = materialize(pairs)
+    val cands = Pins.fill(pairs)
     // Confine the verify to digests of docs that actually appear in a
     // candidate pair: the touched-id set is bounded by the delta's bucket
     // collisions, so the semi join broadcasts and prunes the index's
@@ -444,7 +397,7 @@ object Dedup {
       .unionByName(cands.select(col("doc_b").as("id"))).distinct()
     // materialized: both verify legs scan this relation — unmaterialized,
     // each leg would re-run the union + semi join over the full index
-    val allDg = materialize(index.digests.unionByName(dDg)
+    val allDg = Pins.fill(index.digests.unionByName(dDg)
       .join(touched, Seq("id"), "left_semi"))
     val sizes = index.sizes.unionByName(dSigsz.select(col("id"), col("sz")))
     val common = cands
@@ -494,12 +447,12 @@ object Dedup {
     // relation tripled the per-crawl fixed job cost for nothing. Their
     // later readers (verify legs, index commits) are sequential actions
     // over the already-filled caches, so the lazy pin is race-free.
-    val dDg = lazyPin(
+    val dDg = Pins.keep(
       shingleRows(delta, idCol, textCol, n)
         .select(col("id"), md5(col("shingle")).as("d"))
         .distinct())
-    val dSigsz = lazyPin(signatureAgg(dDg, k, withSize = true))
-    val dBands = materialize(bandRows(dSigsz, k, bands))
+    val dSigsz = Pins.keep(signatureAgg(dDg, k, withSize = true))
+    val dBands = Pins.fill(bandRows(dSigsz, k, bands))
     val pairs = dBands.as("a")
       .join(index.bands.unionByName(dBands).as("b"),
         col("a.band") === col("b.band") && col("a.id") =!= col("b.id"))
@@ -517,7 +470,7 @@ object Dedup {
     val conf = spark.sparkContext.hadoopConfiguration
     val f = org.apache.hadoop.fs.FileSystem
       .get(new java.net.URI(indexRoot), conf)
-    val (_, pins) = pinScope {
+    Pins.scope {
       val index = loadNearDupIndex(spark, indexRoot)
       // Same guard as the batch incremental path: a re-crawled id would
       // merge both versions' digests under one id and poison every later
@@ -629,7 +582,6 @@ object Dedup {
         Future(commitPart("sizes", dSigsz.select(col("id"), col("sz")))))),
         Duration.Inf)
     }
-    pins.foreach(_.unpersist(false))
   }
 
   /** MinHash calibration in ONE tokenize pass: per candidate pair, the
@@ -644,7 +596,7 @@ object Dedup {
     */
   def minhashCalibration(docs: DataFrame, idCol: String, textCol: String,
                          n: Int = 3, k: Int = 8, bands: Int = 4): DataFrame = {
-    val dg = materialize(
+    val dg = Pins.fill(
       shingleRows(docs, idCol, textCol, n)
         .select(col("id"), md5(col("shingle")).as("d"))
         .distinct())
@@ -657,7 +609,7 @@ object Dedup {
     // eager; the scary taskSum-vs-cpuSum gap is local[32] thread
     // oversubscription, not lock wait) — kept lazy, the extra job is not
     // paid for.
-    val sigsz = lazyPin(signatureAgg(dg, k, withSize = true))
+    val sigsz = Pins.keep(signatureAgg(dg, k, withSize = true))
 
     // The k signature slots ride through the band self-join (they're
     // already on bandRows' parent, 4 hex chars each), so the estimate is
@@ -672,7 +624,7 @@ object Dedup {
     val nEq = (0 until k)
       .map(j => when(col(s"a.sig_$j") === col(s"b.sig_$j"), 1).otherwise(0))
       .reduce(_ + _)
-    val est = materialize(
+    val est = Pins.fill(
       bandedSigs.as("a")
         .join(bandedSigs.as("b"),
           col("a.band") === col("b.band") && col("a.id") < col("b.id"))
@@ -683,7 +635,7 @@ object Dedup {
 
     val touched = pairs.select(col("doc_a").as("id"))
       .unionByName(pairs.select(col("doc_b").as("id"))).distinct()
-    val dgT = materialize(dg.join(touched, Seq("id"), "left_semi"))
+    val dgT = Pins.fill(dg.join(touched, Seq("id"), "left_semi"))
     val common0 = pairs
       .join(dgT.select(col("id").as("doc_a"), col("d")).hint("shuffle_hash"), "doc_a")
       .join(dgT.select(col("id").as("doc_b"), col("d")).hint("shuffle_hash"), Seq("doc_b", "d"))
@@ -806,7 +758,7 @@ object Dedup {
     // representative relation preserves component minima — at pair volume
     // driven by DISTINCT content only. On crawl-shaped corpora this is the
     // difference between millions and hundreds of verify pairs.
-    val (keptIds, pins) = pinScope {
+    val keptIds = Pins.scope {
       // ONE narrow md5 pass + ONE exchange: hash every doc once into
       // (id, content_hash) and take the group canonical as a window min
       // over the hash — the old form scanned the full text twice (once
@@ -814,7 +766,7 @@ object Dedup {
       // paid a groupBy + join + an extra eager materialization for the
       // same result. The window partitions on content_hash (bounded by
       // duplicate-group size, the same key the groupBy shuffled on).
-      val repOf = materialize(
+      val repOf = Pins.fill(
         docs.select(col(idCol), md5(col(textCol)).as("content_hash"))
           .withColumn("rep", min(col(idCol)).over(
             org.apache.spark.sql.expressions.Window.partitionBy("content_hash")))
@@ -825,22 +777,17 @@ object Dedup {
       // joins get the full AQE treatment (the checkpoint path inside
       // connectedComponents executes via .rdd, which skips adaptive
       // re-planning — measured ~2.5x the CPU on the same join)
-      val pairs = nearDupPairs(reps, idCol, textCol, n, k, bands, threshold).persist()
-      pairs.count()
+      val pairs = Pins.fill(nearDupPairs(reps, idCol, textCol, n, k, bands, threshold))
       val comps = connectedComponents(reps, idCol, pairs)
       val canon = repOf.join(
         comps.select(col(idCol).as("rep"), col("canonical_id")), "rep")
-      // The survivor id set is one small column — materialize it eagerly
-      // (localCheckpoint cuts its lineage to repOf/pairs/comps) so every
-      // relation THIS call pinned can be released here rather than
-      // accumulating in a long-lived session; the returned plan is then a
-      // plain semi join of docs against the checkpointed id list.
-      val ids = canon.filter(col(idCol) === col("canonical_id"))
-        .select(col(idCol)).localCheckpoint()
-      pairs.unpersist()
-      ids
+      // The survivor id set is one small column — cut it eagerly (its
+      // lineage to repOf/pairs/comps goes) so every relation THIS call
+      // pinned is freed here rather than accumulating in a long-lived
+      // session; the cut itself outlives the scope, and the returned plan
+      // is a plain semi join of docs against the checkpointed id list.
+      Pins.cut(canon.filter(col(idCol) === col("canonical_id")).select(col(idCol)))
     }
-    pins.foreach(_.unpersist(false))
     docs.join(keptIds, Seq(idCol), "left_semi")
   }
 
@@ -948,7 +895,7 @@ object Dedup {
     // survivors, and the per-doc total all scan this materialized token
     // relation — recomputing it per leg would re-run the tokenizer over
     // the corpus once per consumer.
-    val toks = materialize(spread(docs)
+    val toks = Pins.fill(spread(docs)
       .select(col(idCol).as("id"),
         posexplode_outer(TextFunctions.tokens(lower(col(textCol))))
           .as(Seq("pos", "tok"))))
@@ -1024,19 +971,18 @@ object Dedup {
     // pairs is typically the output of an expensive verify pipeline; the
     // union below scans it twice (once per direction), and a lazy persist
     // leaves the two legs racing to materialize the same cache partitions
-    // (work done twice). An eager localCheckpoint evaluates the pipeline
-    // exactly once and cuts its lineage out of every CC round.
-    val p = pairs.localCheckpoint()
+    // (work done twice). An eager cut evaluates the pipeline exactly once
+    // and cuts its lineage out of every CC round.
+    val p = Pins.cut(pairs)
     // ids are integral by contract (string ids: map through a dense-id
     // dictionary first); the explicit long cast widens int32 ids so the
     // driver union-find's getLong and the min-label fallback's numeric
     // aggregate both see one type instead of crashing on parquet int ids
-    val edges = p.select(col("doc_a").cast("long").as("src"),
+    val edges = Pins.keep(p.select(col("doc_a").cast("long").as("src"),
         col("doc_b").cast("long").as("dst"))
       .union(p.select(col("doc_b").cast("long").as("src"),
         col("doc_a").cast("long").as("dst")))
-      .distinct()
-      .persist()
+      .distinct())
     // Candidate graphs after LSH are sparse by construction (edges << docs),
     // so below a bounded size the component solve is a driver-side
     // union-find + one broadcast join back onto the corpus — the same
@@ -1058,7 +1004,7 @@ object Dedup {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val labelRows = parent.keys.map(n => (n, find(n))).toSeq
-      edges.unpersist(); p.unpersist()
+      Pins.release(edges, p)
       val spark = nodes.sparkSession
       import spark.implicits._
       val labelMap = labelRows.toDF("node", "comp")
@@ -1072,12 +1018,11 @@ object Dedup {
       // re-execute the whole upstream verify pipeline a second time when
       // the star path checkpoints it again
       val out = connectedComponentsStar(nodes, idCol, p, maxIter)
-      edges.unpersist(); p.unpersist()
+      Pins.release(edges, p)
       return out
     }
-    var labels = nodes.select(col(idCol).as("node"))
-      .withColumn("lbl", col("node"))
-      .localCheckpoint()
+    var labels = Pins.cut(nodes.select(col(idCol).as("node"))
+      .withColumn("lbl", col("node")))
     // labels only ever decrease, so sum(lbl) strictly decreases until the
     // fixpoint — one scalar aggregate per round replaces a join-based
     // changed-rows check
@@ -1095,18 +1040,18 @@ object Dedup {
         edges.join(labels, col("src") === col("node"))
           .select(col("dst").as("node"), col("lbl")))
         .groupBy("node").agg(min("lbl").as("lbl"))
-      val next = hop1.union(
+      val next = Pins.cut(hop1.union(
         edges.join(hop1, col("src") === col("node"))
           .select(col("dst").as("node"), col("lbl")))
-        .groupBy("node").agg(min("lbl").as("lbl"))
-        .localCheckpoint()
+        .groupBy("node").agg(min("lbl").as("lbl")))
       val nextSum = lblSum(next)
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
+      Pins.release(labels)
       labels = next
       iter += 1
     }
-    edges.unpersist(); p.unpersist()
+    Pins.release(edges, p)
     labels.select(col("node").as(idCol), col("lbl").as("canonical_id"))
   }
 
@@ -1129,7 +1074,7 @@ object Dedup {
     */
   def connectedComponentsStar(nodes: DataFrame, idCol: String, pairs: DataFrame,
                               maxIter: Int = 20): DataFrame = {
-    val p = pairs.localCheckpoint()
+    val p = Pins.cut(pairs)
     def canon(e: DataFrame): DataFrame =
       e.filter(col("a") =!= col("b"))
         .select(greatest(col("a"), col("b")).as("hi"), least(col("a"), col("b")).as("lo"))
@@ -1159,16 +1104,16 @@ object Dedup {
           .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head
       (row.getLong(0), row.getDecimal(1))
     }
-    var edges = canon(p.select(col("doc_a").as("a"), col("doc_b").as("b")))
-      .localCheckpoint()
+    var edges = Pins.cut(canon(p.select(col("doc_a").as("a"), col("doc_b").as("b"))))
     var sig = signature(edges)
     var converged = edges.isEmpty
     var iter = 0
     while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(edges)).localCheckpoint()
+      val next = Pins.cut(smallStar(largeStar(edges)))
       val nextSig = signature(next)
       converged = nextSig == sig
       sig = nextSig
+      Pins.release(edges)
       edges = next
       iter += 1
     }
@@ -1181,13 +1126,13 @@ object Dedup {
       val residual = edges.select(col("a").as("doc_a"), col("b").as("doc_b"))
       val out = connectedComponents(nodes, idCol, residual,
         distributedAlgo = "minlabel")
-      p.unpersist()
+      Pins.release(p, edges)
       return out
     }
     // at the fixpoint every component is a star rooted at its minimum:
     // (a, b) edges all point a -> root b
     val roots = edges.select(col("a").as("node"), col("b").as("comp"))
-    p.unpersist()
+    Pins.release(p)
     nodes.select(col(idCol).as("node"))
       .join(roots, Seq("node"), "left_outer")
       .select(col("node").as(idCol),

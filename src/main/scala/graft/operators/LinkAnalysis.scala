@@ -1,9 +1,8 @@
 package graft.operators
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Pins}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Link-analysis ranking (PageRank power iteration) as relational
   * dataflow — the domain/host authority score web-corpus curation runs
@@ -30,9 +29,8 @@ import org.apache.spark.storage.StorageLevel
 object LinkAnalysis {
 
   /** Iterated integer PageRank. Input: a directed edge list (duplicates
-    * collapsed here). Returns the scored node table and the persisted
-    * final rank state backing it (node-sized), for the caller to
-    * unpersist after its terminal action.
+    * collapsed here). Returns the scored node table; the pinned rank
+    * state backing it (node-sized) lives until the caller's scope ends.
     *
     * Per round, with d = dampNum/dampDen and N = node count:
     *   contrib(v) = Σ_{u→v} rank(u) div outdeg(u)
@@ -43,14 +41,14 @@ object LinkAnalysis {
   /** `lazyFinal`: skip persisting + reading the LAST round — its dangling
     * mass is never consumed, so a single-action caller (the top-k
     * collect) can execute the final round's plan off the previous
-    * round's cache and save one driver action. The returned pin seq then
-    * includes everything the final plan still reads (edges + previous
-    * rank state); the caller releases them after its terminal action. */
+    * round's cache and save one driver action. The final plan then still
+    * reads the edges and the previous rank state, both pinned until the
+    * caller's scope ends. */
   private def iterate(edges: DataFrame, srcCol: String, dstCol: String,
                       iters: Int, dampNum: Int, dampDen: Int,
                       scale: Long,
                       seeds: Option[DataFrame] = None,
-                      lazyFinal: Boolean = false): (DataFrame, Seq[DataFrame]) = {
+                      lazyFinal: Boolean = false): DataFrame = {
     // The edge list is hash-partitioned on src ONCE (the in-session form
     // of a src-bucketed edge table) and the rank state is partitioned on
     // node with the same partition count, so every round's big join is
@@ -73,19 +71,13 @@ object LinkAnalysis {
                            iters: Int, dampNum: Int, dampDen: Int,
                            scale: Long,
                            seeds: Option[DataFrame],
-                           lazyFinal: Boolean): (DataFrame, Seq[DataFrame]) = {
-    val e0 = edges.select(col(srcCol).cast("long").as("src"),
+                           lazyFinal: Boolean): DataFrame = {
+    // filled eagerly: the first action below (nodes.count) scans e0 from
+    // TWO union legs at once (Pins.fill's race)
+    val e0 = Pins.fill(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Eager fill: the first action below (nodes.count) scans e0 from TWO
-    // union legs at once, and a lazily-pinned relation's concurrent scans
-    // block on each other's cache-fill locks while racing to compute the
-    // same blocks (measured taskSum 176 s vs cpuSum 8.6 s on that stage
-    // at sf0.1 — all lock wait). One eager count fills the cache once and
-    // every later scan is a cache read.
-    e0.count()
+      .distinct())
     // n and the per-round dangling mass are RESULT-sized scalars (one
     // aggregated row each), pulled to the driver and inlined as literals —
     // the standard iterative-driver pattern. Inlining removes two
@@ -94,19 +86,17 @@ object LinkAnalysis {
     // integer arithmetic is unchanged (Scala Long `/` == SQL `div` on
     // the non-negative values here), so the oracle replay is unaffected.
     // The count doubles as the node-cache fill: one job, not two.
-    val nodes = e0.select(col("src").as("node"))
+    val nodes = Pins.keep(e0.select(col("src").as("node"))
       .unionByName(e0.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val n = nodes.count()
     if (n == 0) {
       // empty graph (every edge null-filtered): empty result, not a
       // divide-by-zero — matching the old relational formulation's
       // behavior over zero rows
-      e0.unpersist(false); nodes.unpersist(false)
-      val empty = nodes.select(col("node"), lit(0L).as("rank_scaled"),
+      Pins.release(e0, nodes)
+      return nodes.select(col("node"), lit(0L).as("rank_scaled"),
         lit(0.0).as("rank")).filter(lit(false))
-      return (empty, Seq.empty)
     }
     // The iteration's partition count is sized to the GRAPH, not the
     // session's global shuffle constant (AQE would make this call, but
@@ -116,8 +106,7 @@ object LinkAnalysis {
     // configured width. The pinned edge/state partitioning below is
     // what keeps every round's big join exchange-free on both sides.
     val p2 = GraftSession.iterationWidth(spark, n)
-    val e = e0.repartition(p2, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = Pins.keep(e0.repartition(p2, col("src")))
 
     // Personalization: the teleport vector is uniform over `denom` nodes —
     // the whole graph for classic PageRank, the in-graph seed set for the
@@ -136,10 +125,9 @@ object LinkAnalysis {
     if (denom == 0) {
       // a seed set disjoint from the graph: nothing can ever hold mass —
       // empty result, mirroring the empty-graph exit
-      e0.unpersist(false); e.unpersist(false); nodes.unpersist(false)
-      val empty = nodes.select(col("node"), lit(0L).as("rank_scaled"),
+      Pins.release(e0, e, nodes)
+      return nodes.select(col("node"), lit(0L).as("rank_scaled"),
         lit(0.0).as("rank")).filter(lit(false))
-      return (empty, Seq.empty)
     }
     val flagged = seeds match {
       case None => nodes.withColumn("seed", lit(true))
@@ -158,12 +146,11 @@ object LinkAnalysis {
     // the state, and the dangling mass is a filter-aggregate over the
     // cached state instead of a left_anti join against outdeg.
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    var ranks = flagged
+    var ranks = Pins.keep(flagged
       .join(outdeg.withColumnRenamed("src", "node"), Seq("node"), "left")
       .select(col("node"), col("deg"), col("seed"),
         when(col("seed"), lit(scale / denom)).otherwise(lit(0L)).as("rank"))
-      .repartition(p2, col("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(p2, col("node")))
 
     // ONE action per round: the aggregate that reads the round's dangling
     // mass IS the action that fills the round's cache (the old shape paid
@@ -177,11 +164,9 @@ object LinkAnalysis {
     // the initial fill read nodes (via flagged) and e (via outdeg, which
     // pulled e0's cache through the p2 exchange) — both upstream pins
     // release here; the rounds touch only e and the rank states
-    nodes.unpersist(false)
-    e0.unpersist(false)
+    Pins.release(nodes, e0)
     val base = scale * (dampDen - dampNum) / dampDen / denom
     var finalIsLazy = false
-    var lazyParent: DataFrame = null
     for (r <- 1 to iters) {
       // dangling nodes never appear as e.src, so the contrib join's null
       // `deg` rows are excluded by construction — no filter needed
@@ -198,40 +183,32 @@ object LinkAnalysis {
               s"* $dampNum div $dampDen")
             .as("rank"))
       if (r < iters || !lazyFinal) {
-        val next = nextPlan.persist(StorageLevel.MEMORY_AND_DISK)
+        val next = Pins.keep(nextPlan)
         dm = fillAndDanglingMass(next)
-        ranks.unpersist(false)
+        Pins.release(ranks)
         ranks = next
       } else {
         // the last round's dangling mass feeds nothing: leave the plan
         // lazy for the caller's single action, which reads it off the
-        // PREVIOUS round's cache (kept pinned, along with e, until the
-        // caller's terminal action)
+        // PREVIOUS round's cache (pinned, along with e, until the
+        // caller's scope ends)
         finalIsLazy = true
-        lazyParent = ranks
         ranks = nextPlan
       }
     }
-    val out = ranks.select(col("node"), col("rank").as("rank_scaled"),
+    // `out` only scans the materialized final state unless it is lazy
+    if (!finalIsLazy) Pins.release(e)
+    ranks.select(col("node"), col("rank").as("rank_scaled"),
       (col("rank").cast("double") / lit(scale.toDouble)).as("rank"))
-    if (finalIsLazy) {
-      // `out` still reads e and the (iters-1)th round's cached state —
-      // the caller releases both after its terminal action
-      (out, Seq(e, lazyParent))
-    } else {
-      // inputs are released — `out` only scans the materialized final state
-      e.unpersist(false)
-      (out, Seq(ranks))
-    }
   }
 
-  /** Full scored node table. The backing rank state stays cached until
-    * the session's per-query cache clear; use [[pageRankTopK]] when the
-    * consumer is a top-k read and the pin should be released eagerly. */
+  /** Full scored node table. The backing rank state stays pinned until
+    * the caller's scope ends; use [[pageRankTopK]] when the consumer is a
+    * top-k read and the pin should be released eagerly. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int, dampNum: Int = 85, dampDen: Int = 100,
                scale: Long = 1000000000L): DataFrame =
-    iterate(edges, srcCol, dstCol, iters, dampNum, dampDen, scale)._1
+    iterate(edges, srcCol, dstCol, iters, dampNum, dampDen, scale)
 
   /** Deterministic top-k by rank (ties broken by node id) — the read
     * path a crawl scheduler actually consumes. */
@@ -262,20 +239,18 @@ object LinkAnalysis {
     // CollectMetrics node — the observation would never fire and the
     // final get would block forever
     require(k >= 1, s"hitsTopK needs k >= 1, got $k")
-    GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
-      val e0 = edges.select(col(srcCol).cast("long").as("src"),
+    GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false") { Pins.scope {
+      val e0 = Pins.keep(edges.select(col(srcCol).cast("long").as("src"),
           col(dstCol).cast("long").as("dst"))
         .filter(col("src").isNotNull && col("dst").isNotNull)
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct())
       // one scalar action sizes the iteration's pinned partitioning to
       // the GRAPH (GraftSession.iterationWidth — AQE is deliberately off, so
       // this is the adaptive call it would have made) and doubles as
       // e0's eager fill
       val nE = e0.count()
       val p2 = GraftSession.iterationWidth(spark, nE)
-      val e = e0.repartition(p2, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val e = Pins.keep(e0.repartition(p2, col("src")))
       // nodes is NOT pinned and never counted: it is read exactly once
       // (the final completion join) from the cached edge relation, and
       // the empty-graph exit is read off round 1's max scalar instead —
@@ -312,24 +287,20 @@ object LinkAnalysis {
       for (r <- 1 to iters) {
         // uniform init folds round 1's join away: sum of `scale` over
         // in-edges IS indegree * scale
-        val aRaw = (if (hub == null)
+        val aRaw = Pins.keep(if (hub == null)
             e.groupBy(col("dst")).agg((count(lit(1)) * scale).as("a"))
           else
             e.join(hub.select(col("node").as("src"), col("h")), "src")
               .groupBy(col("dst")).agg(sum(col("h")).as("a")))
-          .persist(StorageLevel.MEMORY_AND_DISK)
         // fills aRaw (and e in round 1); also the last plan that reads
         // the previous round's hRaw (through `hub`), released right after
         val aMax = aRaw.agg(coalesce(max(col("a")), lit(0L))).head.getLong(0)
-        if (hub == null) e0.unpersist(false) // round 1 just filled e
-        if (hRawPrev != null) { hRawPrev.unpersist(false); hRawPrev = null }
+        if (hub == null) Pins.release(e0) // round 1 just filled e
+        if (hRawPrev != null) { Pins.release(hRawPrev); hRawPrev = null }
         if (aMax == 0L) {
           // empty graph (e empty => aRaw empty; scores are positive
-          // otherwise): release every pin before the early exit
-          e.unpersist(false); aRaw.unpersist(false)
-          if (aRawPrev != null) aRawPrev.unpersist(false)
-          return spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
+          // otherwise): the scope frees every pin on the early exit
+          return Pins.local(spark, Nil, outSchema)
         }
         val aDiv = math.max(aMax / scale, 1L)
         auth = aRaw.select(col("dst").as("node"),
@@ -337,10 +308,10 @@ object LinkAnalysis {
         val hPlan = e.join(auth.select(col("node").as("dst"), col("a")), "dst")
           .groupBy(col("src")).agg(sum(col("a")).as("hh"))
         if (r < iters) {
-          val hRaw = hPlan.persist(StorageLevel.MEMORY_AND_DISK)
+          val hRaw = Pins.keep(hPlan)
           // fills hRaw; the last plan reading the previous aRaw (via auth)
           val hMax = hRaw.agg(coalesce(max(col("hh")), lit(0L))).head.getLong(0)
-          if (aRawPrev != null) aRawPrev.unpersist(false)
+          if (aRawPrev != null) Pins.release(aRawPrev)
           val hDiv = math.max(hMax / scale, 1L)
           hub = hRaw.select(col("src").as("node"),
             expr(s"hh div ${hDiv}L").as("h"))
@@ -348,7 +319,7 @@ object LinkAnalysis {
         } else {
           // final half-round: RAW hub sums flow into the collect, which
           // observes their max in the same job — no separate fill action
-          if (aRawPrev != null) aRawPrev.unpersist(false)
+          if (aRawPrev != null) Pins.release(aRawPrev)
           lastHRaw = hPlan.observe(hObs,
             coalesce(max(col("hh")), lit(0L)).as("hm"))
         }
@@ -370,17 +341,13 @@ object LinkAnalysis {
       val rows = out.collect()
       val hMax = hObs.get("hm").asInstanceOf[Long]
       val hDiv = math.max(hMax / scale, 1L)
-      e.unpersist(false)
-      if (aRawPrev != null) aRawPrev.unpersist(false)
       // hh >= 0 by construction (sums of nonnegative normalized auth),
       // so Java integer division equals SQL `div` here
-      val normed = rows.toIndexedSeq.map { row =>
+      Pins.local(spark, rows.toIndexedSeq.map { row =>
         org.apache.spark.sql.Row(row.getLong(0), row.getLong(1),
           row.getLong(2) / hDiv, row.getDouble(3))
-      }
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(normed, 1), outSchema)
-    }
+      }, outSchema)
+    } }
   }
 
   /** Top-k with full cleanup: collects the k result rows (result-sized
@@ -451,11 +418,11 @@ object LinkAnalysis {
     * count (degrees, the orientation join, and the wedge-closing join
     * all scan it from concurrent subplans of one action — a lazy fill
     * would race and re-run the upstream edge derivation once per leg);
-    * in the distributed branch the pin is released by the session's
-    * per-query cache clear, in the driver branch immediately. */
+    * in the distributed branch the pin lives until the caller's scope
+    * ends, in the driver branch it is released immediately. */
   def triangleCorners(edges: DataFrame, aCol: String, bCol: String,
                       maxDriverEdges: Long = 100000L): DataFrame = {
-    val e = undirected(edges, aCol, bCol).persist(StorageLevel.MEMORY_AND_DISK)
+    val e = Pins.keep(undirected(edges, aCol, bCol))
     // the CC / kCore regime split, tighter bound (the wedge work is
     // O(m^1.5), so 100k edges caps the driver at ~3e7 set probes): a
     // small graph runs the SAME forward algorithm in memory — the
@@ -467,7 +434,7 @@ object LinkAnalysis {
     if (nE <= maxDriverEdges) {
       val spark = edges.sparkSession
       val pairs = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      e.unpersist(false)
+      Pins.release(e)
       val deg = scala.collection.mutable.Map.empty[Long, Int]
       pairs.foreach { case (a, b) =>
         deg(a) = deg.getOrElse(a, 0) + 1
@@ -608,14 +575,14 @@ object LinkAnalysis {
             maxDriverEdges: Long = 4000000L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = edges.sparkSession
-    val e0 = undirected(edges, aCol, bCol).persist(StorageLevel.MEMORY_AND_DISK)
+    val e0 = Pins.keep(undirected(edges, aCol, bCol))
     val n0 = e0.count()
     if (n0 <= maxDriverEdges) {
       // driver cascade: maintain degrees + live flags, queue every node
       // that drops below k, remove its edges, enqueue newly-dropped
       // neighbors — each edge is touched O(1) times
       val pairs = e0.collect().map(r => (r.getLong(0), r.getLong(1)))
-      e0.unpersist(false)
+      Pins.release(e0)
       val adj = scala.collection.mutable.Map.empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
       pairs.foreach { case (a, b) =>
         adj.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
@@ -652,13 +619,12 @@ object LinkAnalysis {
           .unionByName(cur.select(col("b").as("n")))
           .groupBy("n").agg(count(lit(1)).as("d"))
         val keep = deg.filter(col("d") >= k).select(col("n"))
-        val next = cur
+        val next = Pins.keep(cur
           .join(keep.select(col("n").as("a")), Seq("a"), "left_semi")
           .join(keep.select(col("n").as("b")), Seq("b"), "left_semi")
-          .select(col("a"), col("b"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .select(col("a"), col("b")))
         val nNext = next.count()
-        cur.unpersist(false)
+        Pins.release(cur)
         stable = nNext == nCur
         nCur = nNext
         cur = next
@@ -698,38 +664,31 @@ object LinkAnalysis {
     val spark = edges.sparkSession
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val und = undirected(edges, aCol, bCol)
-    val sym = und.select(col("a").as("src"), col("b").as("dst"))
+    val sym = Pins.keep(und.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-      .repartition(p, col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = sym.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count()
+      .repartition(p, col("dst")))
+    var labels = Pins.fill(sym.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label")))
     var r = 0
     while (r < rounds) {
       val prev = labels
       // votes arrive over the dst->node join (edge-keyed, co-partitioned
       // with sym's pinned layout); the argmax rides the same hash agg:
       // max of (cnt, -label) IS (most frequent, then smallest label)
-      labels = sym.join(prev, sym("dst") === prev("node"))
+      // filled BEFORE releasing the parent: the final select references
+      // the last round twice (rows + community sizes)
+      labels = Pins.fill(sym.join(prev, sym("dst") === prev("node"))
         .groupBy(col("src"), col("label")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("src"))
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
-        .select(col("src").as("node"), (-col("m.nl")).as("label"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // eager fill BEFORE unpersisting the parent: the final select
-      // references the last round twice (rows + community sizes), and a
-      // lazily-persisted relation under concurrent AQE subplans
-      // recomputes per reference
-      labels.count()
-      prev.unpersist(false)
+        .select(col("src").as("node"), (-col("m.nl")).as("label")))
+      Pins.release(prev)
       r += 1
     }
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("community_size"))
     val out = labels.join(sizes, Seq("label"))
       .select(col("node"), col("label"), col("community_size"))
-    sym.unpersist(false)
+    Pins.release(sym)
     out
   }
 
@@ -759,7 +718,7 @@ object LinkAnalysis {
     */
   def communityModularity(edges: DataFrame, aCol: String, bCol: String,
                           labels: DataFrame): DataFrame = {
-    val e = undirected(edges, aCol, bCol).persist(StorageLevel.MEMORY_AND_DISK)
+    val e = Pins.keep(undirected(edges, aCol, bCol))
     // ONE action doing double duty: it reads m AND eagerly fills the
     // pin that the intra and degree legs both re-read — the fully-lazy
     // alternative (m as a broadcast one-row aggregate) would leave e
@@ -788,9 +747,8 @@ object LinkAnalysis {
       .withColumn("q_num",
         lit(4L * m) * col("intra_edges") -
           col("degree_sum") * col("degree_sum"))
-    // e stays pinned through the caller's terminal action (both the
-    // intra and degree legs read it; released by the session's
-    // per-query cache clear)
+    // e stays pinned until the caller's scope ends (both the intra and
+    // degree legs read it)
     out
   }
 
@@ -849,12 +807,9 @@ object LinkAnalysis {
     */
   def linkPredictionTopK(edges: DataFrame, aCol: String, bCol: String,
                          topK: Int): DataFrame = {
-    val e = undirected(edges, aCol, bCol).persist(StorageLevel.MEMORY_AND_DISK)
-    // eager fill: four subplans read e (both sym legs, the anti-join,
-    // deg via sym) and a lazily-pinned relation under concurrent AQE
-    // subplans recomputes per reference; released by the session's
-    // per-query cache clear
-    e.count()
+    // filled eagerly: four subplans read e (both sym legs, the anti-join,
+    // deg via sym); pinned until the caller's scope ends
+    val e = Pins.fill(undirected(edges, aCol, bCol))
     val sym = e.select(col("a").as("c"), col("b").as("n"))
       .unionByName(e.select(col("b").as("c"), col("a").as("n")))
     val wedges = sym.as("x").join(sym.as("y"),
@@ -917,9 +872,8 @@ object LinkAnalysis {
       case None    => base
     }
     // The distinct pair table feeds the stats AND both legs of either
-    // support form: build it once, released by the session's per-query
-    // cache clear like every query-scoped pin in this engine.
-    val e = bounded.distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    // support form: build it once, pinned until the caller's scope ends.
+    val e = Pins.keep(bounded.distinct())
     // Regime stats AND the cache fill in ONE action over ONE linear
     // single-scan plan: each pair row is exploded into a (0, tp) and a
     // (1, u) tagged key, grouped once, then folded — Σ m_t² (the sparse
@@ -984,13 +938,9 @@ object LinkAnalysis {
   private def rankTopK(spark: SparkSession, edges: DataFrame,
                        srcCol: String, dstCol: String, iters: Int, k: Int,
                        dampNum: Int, dampDen: Int, scale: Long,
-                       seeds: Option[DataFrame]): DataFrame = {
-    val (ranked, pins) = iterate(edges, srcCol, dstCol, iters, dampNum,
-      dampDen, scale, seeds, lazyFinal = true)
-    val out = topK(ranked, k)
-    val rows = out.collect()
-    pins.foreach(_.unpersist(false))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
+                       seeds: Option[DataFrame]): DataFrame = Pins.scope {
+    val out = topK(iterate(edges, srcCol, dstCol, iters, dampNum,
+      dampDen, scale, seeds, lazyFinal = true), k)
+    Pins.local(spark, out.collect().toIndexedSeq, out.schema)
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pins
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -133,10 +134,9 @@ object Multimodal {
                     maxHamming: Int = 8, minShared: Int = 1,
                     maxBucket: Long = 1000L): DataFrame = {
     require(maxHamming >= 0 && minShared >= 1 && maxBucket >= 2)
-    val fr = sampleFrames(docs, idCol, payloadCol, stride, frameLen)
+    val fr = Pins.keep(sampleFrames(docs, idCol, payloadCol, stride, frameLen)
       .filter(col("frame_len") > 0)
-      .select(col("doc_id"), col("phash")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), col("phash")).distinct())
     val banded = fr.select(col("doc_id"), col("phash"),
       explode(sequence(lit(0), lit(3))).as("b"))
       .select(col("doc_id"), col("phash"), col("b"),
@@ -180,17 +180,16 @@ object Multimodal {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
     // persisted: the sizes aggregate and both pair-join legs scan the
-    // distinct (doc, frame_hash) relation (released by the session's
-    // per-query cache clear). Degenerate buckets are guarded like any
+    // distinct (doc, frame_hash) relation (pinned until the caller's
+    // scope ends). Degenerate buckets are guarded like any
     // LSH bucket join: zero-length frames are dropped (every empty
     // payload hashes to the SAME md5(""), an all-pairs bucket), and
     // hash groups larger than maxBucket are skipped — a fingerprint
     // shared by thousands of items is boilerplate, not a duplicate
     // signal, and would cost |group|^2 pairs to say so.
-    val fr = sampleFrames(docs, idCol, payloadCol, stride, frameLen)
+    val fr = Pins.keep(sampleFrames(docs, idCol, payloadCol, stride, frameLen)
       .filter(col("frame_len") > 0)
-      .select(col("doc_id"), col("frame_hash")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), col("frame_hash")).distinct())
     val sizes = fr.groupBy("doc_id").agg(count(lit(1)).as("nf"))
     val hot = fr.groupBy("frame_hash").agg(count(lit(1)).as("nh"))
       .filter(col("nh") > maxBucket).select("frame_hash")
@@ -289,15 +288,12 @@ object Multimodal {
   def hashDupPairs(hashedIn: DataFrame, maxHamming: Int = 8,
                    maxBucket: Long = 1000L): DataFrame = {
     require(maxHamming >= 0 && maxBucket >= 2)
-    val hashed = hashedIn.select(col("doc_id"), col("phash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager fill: the hot-bucket aggregate and BOTH self-join legs read
-    // this pin from concurrent subplans of one action — lazily pinned,
-    // each reference can recompute the expensive upstream (real
-    // image/video decode) per the documented AQE race. The pin is
-    // released by the session's per-query cache clear (Verify/Bench),
-    // like the other lazy-returning dedup relations.
-    hashed.count()
+    // filled eagerly: the hot-bucket aggregate and BOTH self-join legs
+    // read this pin from concurrent subplans of one action, and each
+    // lazy reference could recompute the expensive upstream (real
+    // image/video decode). Pinned until the caller's scope ends, like the
+    // other lazy-returning dedup relations.
+    val hashed = Pins.fill(hashedIn.select(col("doc_id"), col("phash")))
     val banded = hashed.select(col("doc_id"), col("phash"),
       explode(sequence(lit(0), lit(3))).as("b"))
       .select(col("doc_id"), col("phash"), col("b"),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -140,13 +141,11 @@ object QualityChecks {
     * day-count rows (≤ calendar size), never raw data.
     */
   def madAnomaly(df: DataFrame, dayCol: org.apache.spark.sql.Column,
-                 k: Double = 3.0): DataFrame = {
-    val daily = dailyCounts(df, dayCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                 k: Double = 3.0): DataFrame = Pins.scope {
+    val daily = Pins.keep(dailyCounts(df, dayCol))
     val medRow = daily.agg(expr("percentile(n, 0.5)")).head
     if (medRow.isNullAt(0)) {
       // empty input: no days, no medians — an empty result, not an NPE
-      daily.unpersist(false)
       return daily.select(col("day"), col("n"), lit(0.0).as("dev"),
         lit(false).as("is_anomaly")).filter(lit(false))
     }
@@ -155,10 +154,7 @@ object QualityChecks {
     val mad = withDev.agg(expr("percentile(dev, 0.5)")).head.getDouble(0)
     val out = withDev.select(col("day"), col("n"), col("dev"),
       (col("dev") > lit(k * mad)).as("is_anomaly"))
-    val rows = out.collect()
-    daily.unpersist(false)
-    df.sparkSession.createDataFrame(
-      df.sparkSession.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
+    Pins.local(df.sparkSession, out.collect().toIndexedSeq, out.schema)
   }
 
   /** EWMA-smoothed daily volume at alpha = 1/2 — the monitoring
@@ -186,7 +182,7 @@ object QualityChecks {
     * widths; `qa_ewma_long` pins the current contract.
     */
   def ewmaDaily(df: DataFrame,
-                dayCol: org.apache.spark.sql.Column): DataFrame = {
+                dayCol: org.apache.spark.sql.Column): DataFrame = Pins.scope {
     import org.apache.spark.sql.expressions.Window
     // null days dropped EXPLICITLY: Spark windows order nulls first,
     // DuckDB's row_number orders them last — an unfiltered null day
@@ -194,8 +190,7 @@ object QualityChecks {
     // persisted (the madAnomaly precedent): the guard aggregate and the
     // returned plan both read the daily relation — without the cache the
     // raw-table aggregation would run twice
-    val daily = dailyCounts(df, dayCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val daily = Pins.keep(dailyCounts(df, dayCol))
     // the weighted bigint sum is exact only while Σ n_i·2^i fits a long:
     // bound BOTH the day count and the peak daily volume (n_max·2^(d+1)
     // <= Long.Max guarantees the sum; a day-count bound alone would let
@@ -211,27 +206,21 @@ object QualityChecks {
       return ewmaChunked(daily, chunkDays = 32, maxN)
     }
     if (!(nDays == 0 || maxN <= (Long.MaxValue >> (nDays + 1)))) {
-      // release the pin BEFORE throwing — a guard failure must not leak
-      // the cached daily relation for the session lifetime
-      daily.unpersist(false)
+      // the scope frees the daily pin on this throw too
       sys.error(s"ewmaDaily weighted sum would overflow: max daily " +
         s"count $maxN over $nDays days exceeds " +
         s"${Long.MaxValue >> (nDays + 1)}")
     }
     val w = Window.orderBy("day")
-    // materialize the small (calendar-sized) result so the pin can be
-    // released HERE instead of riding the session until a cache clear —
-    // across a long bench session unreleased daily pins accumulate
-    val out = daily.withColumn("rn", row_number().over(w))
+    // cut the small (calendar-sized) result so the daily pin is freed
+    // HERE, with this scope; the cut outlives it
+    Pins.cut(daily.withColumn("rn", row_number().over(w))
       .withColumn("wi", when(col("rn") === 1, lit(4L))
         .otherwise(expr("shiftleft(1L, CAST(rn AS INT))")))
       .withColumn("sw", sum(col("n") * col("wi"))
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select(col("day"), col("n"),
-        (col("sw").cast("double") / pow(lit(2.0), col("rn") + 1)).as("ewma"))
-      .localCheckpoint()
-    daily.unpersist(false)
-    out
+        (col("sw").cast("double") / pow(lit(2.0), col("rn") + 1)).as("ewma")))
   }
 
   private def dailyCounts(df: DataFrame,
@@ -255,69 +244,60 @@ object QualityChecks {
     * returned relation is the calendar-sized daily series itself.
     */
   def ewmaDailyLong(df: DataFrame, dayCol: org.apache.spark.sql.Column,
-                    chunkDays: Int = 32): DataFrame = {
-    val daily = dailyCounts(df, dayCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                    chunkDays: Int = 32): DataFrame = Pins.scope {
+    val daily = Pins.keep(dailyCounts(df, dayCol))
     val maxN = daily.agg(coalesce(max(col("n")), lit(0L))).head.getLong(0)
     ewmaChunked(daily, chunkDays, maxN)
   }
 
-  /** Shared chunked body: `daily` must be persisted by the caller; every
-    * exit path releases it (the result is a collected calendar-sized
-    * local relation, so no plan reads it afterwards). */
+  /** Shared chunked body: `daily` arrives pinned in the caller's scope,
+    * which frees it on every exit path (the result is a collected
+    * calendar-sized local relation, so no plan reads it afterwards). */
   private def ewmaChunked(daily: DataFrame, chunkDays: Int,
                           maxN: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // guards INSIDE the try: `daily` arrives persisted by the caller,
-    // and a guard failure must release the pin, not leak it
-    try {
-      require(chunkDays >= 1 && chunkDays <= 60,
-        s"chunkDays must be in [1, 60], got $chunkDays")
-      // per-CHUNK overflow guard: the weighted sum inside one chunk is
-      // at most maxN · 2^(chunkDays+1); the chunk cut is exactly what
-      // keeps this bound independent of total history length
-      require(maxN <= (Long.MaxValue >> (chunkDays + 2)),
-        s"ewma chunk sum would overflow: max daily count $maxN with " +
-          s"chunkDays=$chunkDays exceeds ${Long.MaxValue >> (chunkDays + 2)} " +
-          "— use a smaller chunkDays")
-      val w = Window.orderBy("day")
-      val inChunk = daily
-        .withColumn("rn", row_number().over(w))
-        .withColumn("ck", expr(s"CAST((rn - 1) div $chunkDays AS BIGINT)"))
-        .withColumn("r", (col("rn") - col("ck") * chunkDays).cast("int"))
-        // the global first row keeps the w_1 = 4 initialization (ewma_1 =
-        // v_1); every other weight is the local 2^r
-        .withColumn("wi", when(col("rn") === 1, lit(4L))
-          .otherwise(expr("shiftleft(1L, r)")))
-        .withColumn("sw", sum(col("n") * col("wi"))
-          .over(Window.partitionBy("ck").orderBy("day")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      // chunk totals: one row per chunk (calendar/chunkDays — bounded),
-      // folded in order on the driver into the carry series E_j
-      val tots = inChunk.groupBy(col("ck"))
-        .agg(expr("max_by(sw, r)").as("t"), max(col("r")).as("s"))
-        .orderBy("ck").collect()
-      var e = 0.0
-      val carriesSeq = tots.map { row =>
-        val ePrev = e
-        e = (2.0 * e + row.getLong(1).toDouble) /
-          math.pow(2.0, row.getInt(2) + 1.0)
-        (row.getLong(0), ePrev)
-      }.toIndexedSeq
-      val spark = daily.sparkSession
-      import spark.implicits._
-      val carries = broadcast(carriesSeq.toDF("ck", "e_prev"))
-      val out = inChunk.join(carries, Seq("ck"))
-        .select(col("day"), col("n"),
-          ((lit(2.0) * col("e_prev") + col("sw").cast("double")) /
-            pow(lit(2.0), col("r") + 1)).as("ewma"))
-      // calendar-sized by construction: collect to release the pin
-      val rows = out.orderBy("day").collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally {
-      daily.unpersist(false)
-    }
+    require(chunkDays >= 1 && chunkDays <= 60,
+      s"chunkDays must be in [1, 60], got $chunkDays")
+    // per-CHUNK overflow guard: the weighted sum inside one chunk is
+    // at most maxN · 2^(chunkDays+1); the chunk cut is exactly what
+    // keeps this bound independent of total history length
+    require(maxN <= (Long.MaxValue >> (chunkDays + 2)),
+      s"ewma chunk sum would overflow: max daily count $maxN with " +
+        s"chunkDays=$chunkDays exceeds ${Long.MaxValue >> (chunkDays + 2)} " +
+        "— use a smaller chunkDays")
+    val w = Window.orderBy("day")
+    val inChunk = daily
+      .withColumn("rn", row_number().over(w))
+      .withColumn("ck", expr(s"CAST((rn - 1) div $chunkDays AS BIGINT)"))
+      .withColumn("r", (col("rn") - col("ck") * chunkDays).cast("int"))
+      // the global first row keeps the w_1 = 4 initialization (ewma_1 =
+      // v_1); every other weight is the local 2^r
+      .withColumn("wi", when(col("rn") === 1, lit(4L))
+        .otherwise(expr("shiftleft(1L, r)")))
+      .withColumn("sw", sum(col("n") * col("wi"))
+        .over(Window.partitionBy("ck").orderBy("day")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    // chunk totals: one row per chunk (calendar/chunkDays — bounded),
+    // folded in order on the driver into the carry series E_j
+    val tots = inChunk.groupBy(col("ck"))
+      .agg(expr("max_by(sw, r)").as("t"), max(col("r")).as("s"))
+      .orderBy("ck").collect()
+    var e = 0.0
+    val carriesSeq = tots.map { row =>
+      val ePrev = e
+      e = (2.0 * e + row.getLong(1).toDouble) /
+        math.pow(2.0, row.getInt(2) + 1.0)
+      (row.getLong(0), ePrev)
+    }.toIndexedSeq
+    val spark = daily.sparkSession
+    import spark.implicits._
+    val carries = broadcast(carriesSeq.toDF("ck", "e_prev"))
+    val out = inChunk.join(carries, Seq("ck"))
+      .select(col("day"), col("n"),
+        ((lit(2.0) * col("e_prev") + col("sw").cast("double")) /
+          pow(lit(2.0), col("r") + 1)).as("ewma"))
+    // calendar-sized by construction: collect to release the pin
+    Pins.local(spark, out.orderBy("day").collect().toIndexedSeq, out.schema)
   }
 
   /** Small-cell suppression — the k-anonymity-style export guard

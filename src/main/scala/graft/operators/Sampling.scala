@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -255,12 +256,11 @@ object Sampling {
     import org.apache.spark.sql.expressions.Window
     // persisted: both the per-bucket windows and the offsets aggregate
     // scan this relation — without the cache the explode+md5 pass runs
-    // twice per query (released by the session's per-query cache clear)
-    val keyed = df
+    // twice per query (pinned until the caller's scope ends)
+    val keyed = Pins.keep(df
       .select(col(idCol), explode(array(epochs.map(lit(_)): _*)).as("epoch"))
       .withColumn("h", md5(concat_ws("|", col("epoch"), col(idCol))))
-      .withColumn("bucket", conv(substring(col("h"), 1, 1), 16, 10).cast("int"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("bucket", conv(substring(col("h"), 1, 1), 16, 10).cast("int")))
     val wb = Window.partitionBy(col("epoch"), col("bucket"))
       .orderBy(col("h"), col(idCol))
     val pos = keyed.withColumn("pos", row_number().over(wb).cast("long") - 1L)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pins
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -60,14 +61,13 @@ object SketchMart {
     * — and any redelivery — converges to the same mart.
     */
   def mergeDaily(batch: DataFrame, dir: String, k: Int,
-                 hash: Column, day: Column): Unit = {
+                 hash: Column, day: Column): Unit = Pins.scope {
     val spark = batch.sparkSession
     // the union leg AND the semi-join probe both read this aggregate:
     // cut it eagerly (days-sized) or the batch sketch executes twice
-    // per micro-batch
-    val newSk = batch.groupBy(day.as("day"))
-      .agg(call_function("graft_kmv_mins", hash, lit(k)).as("mins"))
-      .localCheckpoint()
+    // per micro-batch; the scope frees it once the mart is replaced
+    val newSk = Pins.cut(batch.groupBy(day.as("day"))
+      .agg(call_function("graft_kmv_mins", hash, lit(k)).as("mins")))
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     val merged =

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.Pins
 import graft.functions.{IvfIndex, TextFunctions => TF, VectorFunctions => VF}
 import graft.operators.{Bpe, Dedup, Multimodal, Packing, Sampling, SketchMart}
 import graft.sources.Tables
@@ -191,20 +192,16 @@ object TrainingQueries {
 
   /** The survivor-id build the staging amortizes: Gopher-rule quality
     * gate, then exact+near-dup collapse. One column out. */
-  private[graft] def curationSurvivorIds(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def curationSurvivorIds(s: SparkSession, dir: String): DataFrame = Pins.scope {
     val keep = TF.gopherRules(col("text")).toMap.apply("keep")
-    // persisted across dedupCorpus's internal passes (exact groups,
+    // pinned across dedupCorpus's internal passes (exact groups,
     // representatives, shingles, final semi-join) — each would re-pay
-    // the parquet scan + gopher codegen uncached; released here.
-    val kept = t(s, dir, "documents").filter(keep)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      Dedup.dedupCorpus(kept, "doc_id", "text",
-          n = 3, k = 8, bands = 4, threshold = 0.3)
-        .select("doc_id").localCheckpoint()
-    } finally {
-      kept.unpersist(false)
-    }
+    // the parquet scan + gopher codegen uncached; freed with this scope,
+    // which the returned cut outlives.
+    val kept = Pins.keep(t(s, dir, "documents").filter(keep))
+    Pins.cut(Dedup.dedupCorpus(kept, "doc_id", "text",
+        n = 3, k = 8, bands = 4, threshold = 0.3)
+      .select("doc_id"))
   }
 
   /** The user->item graph of the link-analysis gates: (src = user_id,
@@ -572,8 +569,7 @@ object TrainingQueries {
     "t_ann_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      val exact = VF.bruteForceTopK(emb, q, k = 10)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val exact = Pins.keep(VF.bruteForceTopK(emb, q, k = 10))
       val lsh = VF.lshTopK(emb, q, k = 10, planes = 4, dims = 64)
       val mb = VF.lshTopKMultiband(emb, q, k = 10, planes = 8, dims = 64,
         bands = 2)
@@ -701,10 +697,9 @@ object TrainingQueries {
       val survivors = d.join(stagedCurationSurvivors(s, dir),
         Seq("doc_id"), "left_semi")
       val bench = d.filter(col("doc_id") % 10 === 0)
-      // persisted: the survivor corpus feeds BOTH the decontamination
-      // probe and the final anti-join (released by the per-query clear)
-      val corpus = survivors.filter(col("doc_id") % 10 =!= 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // pinned: the survivor corpus feeds BOTH the decontamination
+      // probe and the final anti-join
+      val corpus = Pins.keep(survivors.filter(col("doc_id") % 10 =!= 0))
       val hits = Dedup.contaminationHits(corpus, bench, "doc_id", "text", n = 8)
       val clean = corpus.join(hits.select(col("id").as("doc_id")),
         Seq("doc_id"), "left_anti")
@@ -920,11 +915,9 @@ object TrainingQueries {
         .select(col("doc_id"), col("source"),
           Sampling.hashBucket(
             concat(col("bg.w1"), lit(" "), col("bg.w2")), nB).as("bk"))
-      val cnts = bg.groupBy("bk")
+      val cnts = Pins.fill(bg.groupBy("bk")
         .agg(count(lit(1)).as("c_s"),
-          count(when(col("source") === "src0", 1)).as("c_t"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cnts.count()
+          count(when(col("source") === "src0", 1)).as("c_t")))
       val totals = cnts.agg(sum(col("c_s")).as("s_tot"),
         sum(col("c_t")).as("t_tot"))
       val ratio = cnts
@@ -1375,12 +1368,10 @@ object TrainingQueries {
     // same integer fixed-point rounds, so the oracle replays them with a
     // seeds CTE; off-seed unreachable nodes converge to exactly 0.
     "t_pagerank_seeded" -> ((s, dir) => {
-      // parsed ONCE and persisted: the seed derivation and the
-      // iteration's edge canonicalization are separate actions, and
-      // without the pin each would re-run the spread + JSON parse
-      // (released by the session's per-query cache clear)
-      val edges = userItemEdges(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // parsed ONCE and pinned: the seed derivation and the iteration's
+      // edge canonicalization are separate actions, and without the pin
+      // each would re-run the spread + JSON parse
+      val edges = Pins.keep(userItemEdges(s, dir))
       // seeds come from VALID EDGE SOURCES, matching the oracle's
       // "SELECT src FROM e WHERE src % 10 = 0" — seeding from raw
       // user_ids would diverge if a no-valid-edge user's id ever
@@ -1778,10 +1769,8 @@ object TrainingQueries {
       // one featurization shared by train+infer, persisted eagerly (a
       // lazily-pinned relation read by two concurrent subplans races
       // and recomputes); the seed rule is a length-free DENSITY test
-      val sf = QC.featurizeSeeded(t(s, dir, "documents"), "doc_id",
-          "text", QC.sparkDensitySeed, dims = 64)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sf.count()
+      val sf = Pins.fill(QC.featurizeSeeded(t(s, dir, "documents"), "doc_id",
+          "text", QC.sparkDensitySeed, dims = 64))
       QC.score(sf.drop("seed"), QC.trainWeights(sf))
     }),
 

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.core.Pins
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -44,19 +45,19 @@ object Ndjson {
     * leg's shape), and the documented workaround — persist the parse — is
     * also the right call here: the split runs per batch FILE (a bounded
     * micro-batch, never the corpus), both legs read the one cached parse,
-    * and the caller unpersists (or clearCache()s) after draining them.
+    * and the caller releases it after draining them.
     */
   final case class QuarantineSplit(good: DataFrame, quarantine: DataFrame,
                                    private val raw: DataFrame) {
-    /** Unpersist the shared parse — call after BOTH legs' actions have
-      * run, or the cached batch stays pinned for the session's lifetime.
+    /** Free the shared parse — call after BOTH legs' actions have run,
+      * or it stays pinned until the caller's scope ends.
       */
-    def release(): Unit = { raw.unpersist(); () }
+    def release(): Unit = Pins.release(raw)
   }
 
   def readWithQuarantine(spark: SparkSession, schema: StructType, paths: String*)
   : QuarantineSplit = {
-    val raw = readPermissive(spark, schema, paths: _*).cache()
+    val raw = Pins.keep(readPermissive(spark, schema, paths: _*))
     val good = raw.filter(org.apache.spark.sql.functions.col("_corrupt_record").isNull)
       .drop("_corrupt_record")
     val bad = raw.filter(org.apache.spark.sql.functions.col("_corrupt_record").isNotNull)

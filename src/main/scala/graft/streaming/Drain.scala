@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Pins
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
@@ -8,7 +9,9 @@ import org.apache.spark.sql.streaming.Trigger
   * blocks until the source is exhausted. Every ingest path and oracle
   * gate drains through [[run]], so the trigger, checkpoint and
   * termination contract is written once; a failing micro-batch fails the
-  * query, and `awaitTermination` rethrows it to the caller.
+  * query, and `awaitTermination` rethrows it to the caller. A batch runs
+  * on the stream's thread, outside the caller's [[Pins.scope]], so each
+  * one runs in a scope of its own that frees its pins when it ends.
   */
 object Drain {
 
@@ -18,7 +21,7 @@ object Drain {
       .outputMode(outputMode)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch(fn)
+      .foreachBatch((b: Dataset[T], id: Long) => Pins.scope(fn(b, id)))
       .start()
       .awaitTermination()
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Pins}
 import graft.sources.Tables
 import graft.typed.Event
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -669,12 +669,10 @@ object StreamingGate {
     val ck = scratch("qc_ck", dir)
     val model = scratch("qc_model", dir)
     Seq(idx, ck, model).foreach(cleanDir(spark, _))
-    val sf = QualityClassifier.featurizeSeeded(docs, "doc_id", "text",
-      QualityClassifier.sparkDensitySeed, dims = 64)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sf.count()
+    val sf = Pins.fill(QualityClassifier.featurizeSeeded(docs, "doc_id", "text",
+      QualityClassifier.sparkDensitySeed, dims = 64))
     QualityClassifier.trainWeights(sf).write.mode("overwrite").parquet(model)
-    sf.unpersist(false)
+    Pins.release(sf)
     val stream = stageSlices(spark, docs, 2, in)
     // the frozen model is one lazy 64-row scan reused by every batch
     val w = spark.read.parquet(model)

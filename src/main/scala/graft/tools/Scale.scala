@@ -1,12 +1,11 @@
 package graft.tools
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Pins}
 import graft.operators.{Dedup, LinkAnalysis, Multimodal}
 import graft.queries.WarehouseQueries
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import scala.collection.immutable.ListMap
 
 /** Scale modes for `Probe scale <sfDir> <mult> <modes>`: each replicates an
@@ -72,8 +71,9 @@ object Scale {
         shift.get(c).fold(col(c))(k => (col(c) + col("__copy") * lit(k)).as(c))): _*)
   }
 
-  /** Runs the comma-separated `modes` in order, clearing the cache after
-    * each; unknown names are rejected before any job runs. */
+  /** Runs the comma-separated `modes` in order, each in its own
+    * [[Pins.scope]] and clearing the cache after each; unknown names are
+    * rejected before any job runs. */
   def run(spark: SparkSession, sfDir: String, mult: Int, modes: String): Unit = {
     val names = modes.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val unknown = names.filterNot(Modes.contains)
@@ -82,7 +82,7 @@ object Scale {
     val c = new Ctx(spark, sfDir, mult, new Probe.Recorder(spark))
     try names.foreach { n =>
       println(s"[scale] == $n at ${mult}x")
-      try Modes(n)(c) finally spark.catalog.clearCache()
+      try Pins.scope(Modes(n)(c)) finally spark.catalog.clearCache()
     } finally c.rec.close()
   }
 
@@ -319,12 +319,11 @@ object Scale {
     def run(df: DataFrame, name: String): (Long, Long, Double, Long) = {
       rec.reset()
       val (agg, t) = timed(name) {
-        val sf = QualityClassifier.featurizeSeeded(df, "doc_id", "text",
-          QualityClassifier.sparkDensitySeed, dims = 64).persist(MEMORY_AND_DISK)
-        sf.count()
+        val sf = Pins.fill(QualityClassifier.featurizeSeeded(df, "doc_id", "text",
+          QualityClassifier.sparkDensitySeed, dims = 64))
         val agg = QualityClassifier.score(sf.drop("seed"), QualityClassifier.trainWeights(sf))
           .agg(sum(when(col("keep"), 1L).otherwise(0L)), count(lit(1))).head
-        sf.unpersist(false)
+        Pins.release(sf)
         agg
       }
       (agg.getLong(0), agg.getLong(1), t, shuffled)
@@ -375,7 +374,7 @@ object Scale {
   private def imageDecode(c: Ctx): Unit = {
     import c._
     val n = mult * 1000
-    val media = Multimodal.synthPngTable(spark, n, 32, 32).persist(MEMORY_AND_DISK)
+    val media = Pins.keep(Multimodal.synthPngTable(spark, n, 32, 32))
     val nEnc = media.count()
     val (decoded, tDec) = timed("  image_decode") {
       Multimodal.decodeGrid(media, "doc_id", "payload", 9, 8)
@@ -393,7 +392,6 @@ object Scale {
     }
     println(f"[scale] imagededup: ${n + n / 10} images, banded dedup " +
       f"$tDup%.2f s, planted copies recovered: $planted of ${n / 10}")
-    media.unpersist()
     assert(planted > 0, "planted shifted copies must surface at scale")
   }
 
@@ -405,7 +403,7 @@ object Scale {
     val nA = mult * 1000
     def wavs(n: Int, idOffset: Long, shift: Int) = Multimodal.synthAmWavTable(spark, n,
       blocks = 64, blockLen = 200, sampleRate = 16000, idOffset = idOffset, shift = shift)
-    val clips = wavs(nA, 0L, 0).persist(MEMORY_AND_DISK)
+    val clips = Pins.keep(wavs(nA, 0L, 0))
     val nEnc = clips.count()
     val (dec, tDec) = timed("  audio_decode") {
       Multimodal.decodeAudio(clips, "doc_id", "payload")
@@ -420,15 +418,12 @@ object Scale {
     }
     println(f"[scale] audiodedup: ${nA + nA / 10} clips, banded dedup " +
       f"$tDup%.2f s, planted copies recovered: $planted of ${nA / 10}")
-    clips.unpersist()
+    Pins.release(clips)
     assert(planted > nA / 20, "most planted shifted copies must surface")
     val nV = mult * 100
-    val avis = Multimodal.synthAviTable(spark, nV, w = 24, h = 16, nFrames = 4, fps = 10)
-      .persist(MEMORY_AND_DISK)
-    avis.count()
+    val avis = Pins.fill(Multimodal.synthAviTable(spark, nV, w = 24, h = 16, nFrames = 4, fps = 10))
     val (vf, tV) = timed("  video_decode")(Multimodal.videoFrameHashes(avis, "doc_id", "payload").count())
     println(f"[scale] videodecode: $nV AVIs -> $vf frames in $tV%.2f s (${vf / tV}%.0f frames/s)")
-    avis.unpersist()
     assert(vf == nV.toLong * 4, "every frame of every AVI must decode")
   }
 
@@ -522,14 +517,12 @@ object Scale {
     * picks the measured winner. */
   private def triangles(c: Ctx): Unit = {
     import c._
-    val e = topicPairs(c).select(col("user_id").cast("long").as("u"), col("tp")).distinct()
-      .persist(MEMORY_AND_DISK)
-    e.count()
+    val e = Pins.fill(topicPairs(c).select(col("user_id").cast("long").as("u"), col("tp")).distinct())
     val (joinTop, tJoin) = timed("  support_equi_join")(top500(e, dense = false))
     val (bitTop, tBit) = timed("  support_bitset")(top500(e, dense = true))
     val (nUsers, inst) = regimeStats(e)
     val pick = LinkAnalysis.chooseDense(nUsers, inst, Some(100), 1L << 21)
-    e.unpersist(false)
+    Pins.release(e)
     println(f"[scale] triangles equi-join $tJoin%.2f s vs bitset $tBit%.2f s " +
       f"(${tJoin / tBit}%.1fx) — identical top-500: ${joinTop == bitTop}")
     println(f"[scale] selector: users=$nUsers sum(m^2)=$inst -> " +
@@ -556,11 +549,10 @@ object Scale {
   private def coEngageX(c: Ctx): Unit = {
     import c._
     val ev = topicPairs(c)
-    def pairsAt(m: Int): DataFrame = ev.select(
+    def pairsAt(m: Int): DataFrame = Pins.fill(ev.select(
       (col("user_id") + pmod(col("event_id"), lit(m.toLong)) * IdShift).as("u"), col("tp"))
-      .distinct().persist(MEMORY_AND_DISK)
+      .distinct())
     val e1 = pairsAt(1)
-    e1.count()
     val (u1, inst1) = regimeStats(e1)
     val (d1, tDense1) = timed("  coengage_dense_1x")(top500(e1, dense = true))
     val (s1, tSparse1) = timed("  coengage_sparse_1x")(top500(e1, dense = false))
@@ -568,9 +560,8 @@ object Scale {
     val pick1 = LinkAnalysis.chooseDense(u1, inst1, Some(100), 1L << 21)
     println(f"[scale] coengage 1x: users=$u1 maskPairs=${u1 * u1 / 2} joinInst=${inst1 / 2} " +
       f"dense $tDense1%.2f s sparse $tSparse1%.2f s -> selector ${if (pick1) "dense" else "sparse"}")
-    e1.unpersist(false)
+    Pins.release(e1)
     val eM = pairsAt(mult)
-    eM.count()
     val (uM, instM) = regimeStats(eM)
     val pickM = LinkAnalysis.chooseDense(uM, instM, Some(100), 1L << 21)
     val (sM, tSparseM) = timed(s"  coengage_sparse_${mult}x")(top500(eM, dense = false))
@@ -578,7 +569,7 @@ object Scale {
     val projDense = denseUnitsM * (tDense1 / (u1.toDouble * u1 / 2.0))
     println(f"[scale] coengage ${mult}x: users=$uM maskPairs=$denseUnitsM%.3g joinInst=${instM / 2} " +
       f"sparse $tSparseM%.2f s vs dense projected $projDense%.1f s -> selector ${if (pickM) "dense" else "sparse"}")
-    eM.unpersist(false)
+    Pins.release(eM)
     assert(pick1, "at 1x the dense form should win and be picked (r5 baseline)")
     assert(sM.size == 500, s"flipped plan must complete: ${sM.size} rows")
     // the flip needs users² > Σ m_t². Both grow with the scale factor
@@ -753,8 +744,7 @@ object Scale {
     * runs there too), then replicated mult-x with shifted keys: every row
     * a DISTINCT record, since the decode cost is per row. */
   private def fixtureAtScale(c: Ctx, fixture: (SparkSession, String) => DataFrame): (DataFrame, Long) = {
-    val big = replicate(fixture(c.spark, c.sfDir).repartition(c.cores), c.mult, "k" -> 100000000L)
-      .persist(MEMORY_AND_DISK)
+    val big = Pins.keep(replicate(fixture(c.spark, c.sfDir).repartition(c.cores), c.mult, "k" -> 100000000L))
     (big, big.count())
   }
 
@@ -776,7 +766,6 @@ object Scale {
     }
     println(f"[scale] xdr: $nEnv%d envelopes -> $nOps%d op rows in $dtFan%.2f s " +
       f"(${nEnv / dtFan / cores}%.0f envelopes/s/core decode+fanout); mart ($nMart%d groups) $dtMart%.2f s")
-    bigFix.unpersist()
   }
 
   /** State-change ingest throughput: the LedgerEntry wire record (the
@@ -790,6 +779,5 @@ object Scale {
     }
     println(f"[scale] entries: $nEnt%d state records -> $nRows%d routed " +
       f"rows in $dt%.2f s (${nEnt / dt / cores}%.0f records/s/core)")
-    bigFix.unpersist()
   }
 }

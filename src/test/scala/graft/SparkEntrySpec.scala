@@ -1,5 +1,8 @@
 package graft
 
+import graft.core.Pins
+import org.apache.spark.sql.functions.col
+
 /** The driver contract itself: every registered query must carry a DuckDB
   * oracle (a query without one silently downgrades to a rows-only check
   * at the driver — this spec makes that a build failure instead), and the
@@ -40,12 +43,18 @@ class SparkEntrySpec extends SparkSpec {
         df.cache().count()
         throw new IllegalStateException("query failed")
       },
+      "b_cut" -> { (s, _) =>
+        val cut = Pins.cut(s.range(5).toDF("id"))
+        assert(s.sparkContext.getPersistentRDDs.keySet != pinned, "the cut holds blocks")
+        cut.filter(col("id") > 1)
+      },
       "b_next" -> ((s, _) => s.range(3).toDF("id")),
       "c_not_selected" -> ((_, _) => sys.error("not selected")))
     val res = SparkEntry.eachQuery(spark, "a_pin,b_", qs)((_, fn) => fn(spark, sfDir).count())
-    assert(res.map(_._1) == Seq("a_pin_then_throw", "b_next"))
+    assert(res.map(_._1) == Seq("a_pin_then_throw", "b_cut", "b_next"))
     assert(res.head._2.failed.get.getMessage == "query failed")
     assert(res(1)._2.get == 3L)
+    assert(res(2)._2.get == 3L)
     assert(spark.sparkContext.getPersistentRDDs.keySet == pinned)
   }
 }

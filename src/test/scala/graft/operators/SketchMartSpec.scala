@@ -166,9 +166,12 @@ class SketchMartSpec extends SparkSpec {
     val oneShot = scratch("m1")
     val sliced = scratch("m2")
     val redelivered = scratch("m3")
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
     foldInto(oneShot, Seq(hexs))                     // everything at once
     foldInto(sliced, hexs.grouped(3).toSeq)          // six tiny batches
     foldInto(redelivered, hexs.grouped(3).toSeq ++ Seq(hexs.take(5)))  // replay
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(pinned),
+      "a merge must not leave its checkpointed batch sketch behind")
     def martOf(dir: String) = spark.read.parquet(dir)
       .orderBy("day").collect()
       .map(r => (r.getDate(1).toString, r.getSeq[String](0))).toSeq

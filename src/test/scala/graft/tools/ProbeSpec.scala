@@ -37,7 +37,7 @@ class ProbeSpec extends SparkSpec {
   test("scale runs a mode at 2x and leaves the session as it was") {
     val conf = spark.conf.getAll
     val pinned = spark.sparkContext.getPersistentRDDs.keySet
-    Scale.run(spark, sfDir, 2, "classifier")
+    Scale.run(spark, sfDir, 2, "semdedup")
     assert(spark.conf.getAll == conf)
     assert(spark.sparkContext.getPersistentRDDs.keySet == pinned)
     assert(spark.range(3).count() == 3)

@@ -60,6 +60,15 @@ object GraftSession {
     // setting: the scan reads the conf at execution time, so a loader
     // that set it would change every later parquet read in the session.
     c.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // Every parquet file the engine writes (history and state tables,
+    // current views, marts, scratch, Verify outputs) is zstd at parquet's
+    // default level; no writer sets a codec of its own. Stored and scanned
+    // bytes are the warehouse's cost unit, and the widest columns are
+    // base32 strkeys (PLAIN-encoded, 56 chars) that snappy leaves at ~0.94
+    // of their size and an entropy coder shrinks. The footer names each
+    // file's codec, so a table whose older partitions are snappy reads and
+    // merges as before: a merge rewrites only what it touches.
+    c.set("spark.sql.parquet.compression.codec", "zstd")
     // Parquet timestamps stay INT96 (the default): pyarrow/pandas read INT96
     // as tz-NAIVE timestamp[ns], which is what oracle comparisons expect —
     // INT64 micros would come back tz-aware (isAdjustedToUTC) and mismatch.

@@ -45,7 +45,8 @@ object DelIns {
     *     the partition columns: a rebalance on them lets AQE write one
     *     file per partition at small scale and split a partition by its
     *     advisory size at large scale. No reader sees a staging
-    *     directory ([[StagingPrefix]]), nor one a crash left behind.
+    *     directory ([[StagingPrefix]]), and one a crash left behind is
+    *     deleted first.
     *  2. The live files stay untouched until that job has committed, so a
     *     retried task re-reads the pre-merge rows; nothing has to cut the
     *     lineage first.
@@ -58,13 +59,23 @@ object DelIns {
     *
     * Between one partition's delete and its rename the partition is
     * absent, the same window as Spark's dynamic partition overwrite.
+    *
+    * One writer per table: the caller must not run two replaces (or a
+    * replace and any other write) on `path` at once. That contract is
+    * what lets a replace first delete every `_staging-*` directory it
+    * finds: with no other writer, each one is the leftover of a replace
+    * that crashed before its swap, never read and otherwise never freed.
     */
   private[operators] def stagedReplace(df: DataFrame, path: String,
                                        partitionCols: Seq[String],
                                        touched: Seq[Row]): Unit = {
     val fs = FileSystem.get(new java.net.URI(path),
       df.sparkSession.sparkContext.hadoopConfiguration)
-    val staging = new Path(path, StagingPrefix + java.util.UUID.randomUUID())
+    val root = new Path(path)
+    if (fs.exists(root))
+      fs.listStatus(root).filter(_.getPath.getName.startsWith(StagingPrefix))
+        .foreach(s => fs.delete(s.getPath, true))
+    val staging = new Path(root, StagingPrefix + java.util.UUID.randomUUID())
     df.hint("rebalance", partitionCols.map(col): _*)
       .write.partitionBy(partitionCols: _*).parquet(staging.toString)
     def written(dir: Path, rel: String, depth: Int): Seq[String] =

@@ -51,18 +51,8 @@ class PinsSpec extends SparkSpec {
   }
 
   test("src/main caches, checkpoints and unpersists only through Pins") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
-    val call = raw"\.persist\(|\.cache\(\)|localCheckpoint\(|unpersist\(".r
-    def files(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val hits = for {
-      f <- files(root) if f.getName.endsWith(".scala") &&
-        f.getPath.replace('\\', '/') != "src/main/scala/graft/core/Pins.scala"
-      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
-      if call.findFirstIn(line).isDefined
-    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
-    assert(files(root).exists(_.getName == "Pins.scala"))
+    val hits = graft.SourceScan.hits(
+      raw"\.persist\(|\.cache\(\)|localCheckpoint\(|unpersist\(".r, "graft/core/Pins.scala")
     assert(hits.isEmpty, hits.mkString("pin calls outside graft.core.Pins:\n", "\n", ""))
   }
 }

@@ -80,7 +80,7 @@ class IncrementalMartSpec extends SparkSpec {
     }
     val staging = new java.io.File(mart).listFiles().map(_.getName)
       .filter(_.startsWith(DelIns.StagingPrefix)).toSet
-    assert(staging == Set(s"${DelIns.StagingPrefix}crashed"), s"staging dirs left: $staging")
+    assert(staging.isEmpty, s"staging dirs left, the crashed one included: $staging")
     val stored = spark.read.parquet(mart).select("day", "event_id", "value")
     assert(stored.exceptAll(rows(ev)).isEmpty && rows(ev).exceptAll(stored).isEmpty,
       "the mart must equal the full recompute, without the crashed staging rows")

@@ -151,7 +151,7 @@ class MergeSpecTest extends SparkSpec {
     assert(Seq(0, 3).map(dataFiles) == untouched, "untouched partitions were rewritten")
     val staging = new java.io.File(root).listFiles().map(_.getName)
       .filter(_.startsWith(DelIns.StagingPrefix)).toSet
-    assert(staging == Set(s"${DelIns.StagingPrefix}crashed"), s"staging dirs left: $staging")
+    assert(staging.isEmpty, s"staging dirs left, the crashed one included: $staging")
     val got = wh.read().select("k", "balance").as[(Long, Double)].collect().toMap
     assert(got.size == 40 && !got.contains(5L) && got(41L) == 141.0 &&
       got(1L) == 101.0 && got(2L) == 102.0 && !got.values.exists(_ < 0),

@@ -196,49 +196,6 @@ object IvfIndex {
       .limit(k)
   }
 
-  /** Deterministic Lloyd refinement of the seed centroids: `iters` rounds
-    * of assign -> per-cell element-wise mean. Everything is reproducible on
-    * any engine:
-    *   - assignment uses the all-double composable cosine (centroid means
-    *     are doubles, not floats) with round-6 + min-cid ties,
-    *   - each dimension's mean is a LEFT-TO-RIGHT double fold over members
-    *     ordered by id (collect_list sorted on (id, value)), divided by the
-    *     member count and rounded to 6 — the same fold the DuckDB oracle's
-    *     ordered list_sum performs, so the centroids match bit-for-bit.
-    * Shape at scale: one posexplode (rows x dims), two hash aggregates per
-    * round — the canonical distributed k-means step.
-    */
-  /** Scale path for [[lloydCentroids]]: per-cell means via a plain hash
-    * aggregate (sum/count — partial, map-side combinable, O(1) state per
-    * (cell, dim) group) instead of the ordered collect_list fold, which
-    * materializes every member per group and is the one unbounded-state
-    * step in the exact path. Double addition is order-dependent in ulps,
-    * so this variant is NOT bit-reproducible across partitionings — the
-    * round-6 absorbs the difference in practice (IvfRecallSpec asserts
-    * ≤1e-6 agreement with the exact fold on the fixture) but the oracle
-    * gate runs the exact path. At 100 TB this is the difference between a
-    * shuffle of (cell, dim, sum, count) triples and collecting every
-    * member vector element into driver-sized lists per group.
-    */
-  def lloydCentroidsFast(corpus: DataFrame, nlist: Int, iters: Int,
-                         idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    var cents = seedCentroids(corpus, nlist, idCol, vecCol)
-      .select(col("cid"), transform(col("cvec"), _.cast("double")).as("cvec"))
-    for (_ <- 1 to iters) {
-      val asn = assign(corpus, cents, idCol, vecCol, nativeCosine = false)
-      val members = corpus
-        .select(col(idCol), posexplode(col(vecCol)).as(Seq("dim", "val")))
-        .join(asn, idCol)
-      cents = members.groupBy(col("cell"), col("dim"))
-        .agg(round(avg(col("val").cast("double")), 6).as("m"))
-        .groupBy(col("cell"))
-        .agg(transform(sort_array(collect_list(struct(col("dim"), col("m")))),
-          _.getField("m")).as("cvec"))
-        .select(col("cell").as("cid"), col("cvec"))
-    }
-    cents
-  }
-
   // ---- Product quantization (PQ) ----
   //
   // The int8 path compresses 4x but still stores every dimension. PQ
@@ -347,6 +304,18 @@ object IvfIndex {
       .limit(k)
   }
 
+  /** Deterministic Lloyd refinement of the seed centroids: `iters` rounds
+    * of assign -> per-cell element-wise mean. Everything is reproducible on
+    * any engine:
+    *   - assignment uses the all-double composable cosine (centroid means
+    *     are doubles, not floats) with round-6 + min-cid ties,
+    *   - each dimension's mean is a LEFT-TO-RIGHT double fold over members
+    *     ordered by id (collect_list sorted on (id, value)), divided by the
+    *     member count and rounded to 6 — the same fold the DuckDB oracle's
+    *     ordered list_sum performs, so the centroids match bit-for-bit.
+    * Shape at scale: one posexplode (rows x dims), two hash aggregates per
+    * round — the canonical distributed k-means step.
+    */
   def lloydCentroids(corpus: DataFrame, nlist: Int, iters: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession

@@ -947,47 +947,29 @@ object Dedup {
     * pairwise near-dup hits into dedup groups ("keep one doc per
     * component").
     *
-    * Distributed min-label propagation: each round joins current labels
-    * across the edge list and takes the per-node min — O(|E|) shuffled work
-    * per round, rounds bounded by component diameter (near-dup components
-    * are shallow in practice; `maxIter` caps pathological chains). Lineage
-    * is cut every round with localCheckpoint so the plan stays flat at any
-    * scale; the driver only ever sees one Boolean (the convergence check),
-    * never the data.
+    * Up to `broadcastEdgeLimit` edges the solve is a driver-side
+    * union-find; past it, [[connectedComponentsStar]] (star contraction,
+    * O(log n) rounds on any diameter, `maxIter` of them at most).
     *
     * @param nodes one row per node id (docs absent from `pairs` form
     *              singleton components)
     * @param pairs (doc_a, doc_b) undirected candidate/duplicate pairs
-    * @param distributedAlgo the over-limit path: "star" (default —
-    *              large-star/small-star contraction, O(log n) rounds on
-    *              any diameter) or "minlabel" (2-hop propagation; fine on
-    *              the shallow components LSH candidate graphs produce,
-    *              kept for the equivalence spec and as a fallback)
     */
   def connectedComponents(nodes: DataFrame, idCol: String, pairs: DataFrame,
                           maxIter: Int = 25,
-                          broadcastEdgeLimit: Long = 4000000L,
-                          distributedAlgo: String = "star"): DataFrame = {
+                          broadcastEdgeLimit: Long = 4000000L): DataFrame = {
     // pairs is typically the output of an expensive verify pipeline; the
     // union below scans it twice (once per direction), and a lazy persist
     // leaves the two legs racing to materialize the same cache partitions
     // (work done twice). An eager cut evaluates the pipeline exactly once
     // and cuts its lineage out of every CC round.
     val p = Pins.cut(pairs)
-    // ids are integral by contract (string ids: map through a dense-id
-    // dictionary first); the explicit long cast widens int32 ids so the
-    // driver union-find's getLong and the min-label fallback's numeric
-    // aggregate both see one type instead of crashing on parquet int ids
-    val edges = Pins.keep(p.select(col("doc_a").cast("long").as("src"),
-        col("doc_b").cast("long").as("dst"))
-      .union(p.select(col("doc_b").cast("long").as("src"),
-        col("doc_a").cast("long").as("dst")))
-      .distinct())
+    val edges = symmetricEdges(p)
     // Candidate graphs after LSH are sparse by construction (edges << docs),
     // so below a bounded size the component solve is a driver-side
     // union-find + one broadcast join back onto the corpus — the same
     // small-side adaptivity AQE applies to join strategy. Past the limit,
-    // fall through to the distributed min-label loop.
+    // star contraction.
     val nEdges = edges.count()
     if (nEdges <= broadcastEdgeLimit) {
       val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -1013,14 +995,41 @@ object Dedup {
         .select(col("node").as(idCol),
           coalesce(col("comp"), col("node")).as("canonical_id"))
     }
-    if (distributedAlgo == "star") {
-      // pass the CHECKPOINTED pairs — handing the raw plan over would
-      // re-execute the whole upstream verify pipeline a second time when
-      // the star path checkpoints it again
-      val out = connectedComponentsStar(nodes, idCol, p, maxIter)
-      Pins.release(edges, p)
-      return out
-    }
+    // pass the CHECKPOINTED pairs — handing the raw plan over would
+    // re-execute the whole upstream verify pipeline a second time when
+    // the star path checkpoints it again
+    val out = connectedComponentsStar(nodes, idCol, p, maxIter)
+    Pins.release(edges, p)
+    out
+  }
+
+  /** Both directions of every pair, as distinct long (src, dst) edges.
+    * Ids are integral by contract (string ids: map through a dense-id
+    * dictionary first); the explicit long cast widens int32 ids so the
+    * driver union-find's getLong and the min-label loop's numeric
+    * aggregate both see one type instead of crashing on parquet int ids.
+    */
+  private def symmetricEdges(p: DataFrame): DataFrame =
+    Pins.keep(p.select(col("doc_a").cast("long").as("src"),
+        col("doc_b").cast("long").as("dst"))
+      .union(p.select(col("doc_b").cast("long").as("src"),
+        col("doc_a").cast("long").as("dst")))
+      .distinct())
+
+  /** Distributed min-label propagation, [[connectedComponentsStar]]'s
+    * finisher when contraction runs out of rounds: each round joins
+    * current labels across the edge list and takes the per-node min —
+    * O(|E|) shuffled work per round, rounds bounded by component diameter
+    * (`maxIter` caps pathological chains). Lineage is cut every round with
+    * localCheckpoint so the plan stays flat at any scale; the driver only
+    * ever sees one scalar per round (the convergence check), never the
+    * data.
+    */
+  private[graft] def minLabelComponents(nodes: DataFrame, idCol: String,
+                                        pairs: DataFrame,
+                                        maxIter: Int = 25): DataFrame = {
+    val p = Pins.cut(pairs)
+    val edges = symmetricEdges(p)
     var labels = Pins.cut(nodes.select(col(idCol).as("node"))
       .withColumn("lbl", col("node")))
     // labels only ever decrease, so sum(lbl) strictly decreases until the
@@ -1069,8 +1078,9 @@ object Dedup {
     * loop. Fixpoint detection: the edge multiset's (count, xxhash sum)
     * signature is stable iff the star graph stopped changing.
     *
-    * Output matches [[connectedComponents]] exactly (min reachable id per
-    * node); the equivalence spec runs both on random + chain graphs.
+    * Output matches the union-find of [[connectedComponents]] exactly (min
+    * reachable id per node); the equivalence spec runs both on random +
+    * chain graphs.
     */
   def connectedComponentsStar(nodes: DataFrame, idCol: String, pairs: DataFrame,
                               maxIter: Int = 20): DataFrame = {
@@ -1124,8 +1134,7 @@ object Dedup {
       // residual graph keeps the one-row-per-node contract instead of
       // silently returning a malformed labeling
       val residual = edges.select(col("a").as("doc_a"), col("b").as("doc_b"))
-      val out = connectedComponents(nodes, idCol, residual,
-        distributedAlgo = "minlabel")
+      val out = minLabelComponents(nodes, idCol, residual)
       Pins.release(p, edges)
       return out
     }

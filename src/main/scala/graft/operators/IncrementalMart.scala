@@ -1,7 +1,9 @@
 package graft.operators
 
+import graft.core.Pins
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StructField, StructType}
 
 /** Incremental mart materialization — the engine-side analog of the
   * reference's incremental dbt models (reference
@@ -46,11 +48,7 @@ object IncrementalMart {
     // nothing), so they are excluded outright
     val days = batch.select(to_date(col(dayCol)).as("p_day")).distinct()
       .collect().filterNot(_.isNullAt(0)).toSeq
-    val daysDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(days, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("p_day",
-          org.apache.spark.sql.types.DateType))))
+    val daysDf = Pins.local(spark, days, StructType(Seq(StructField("p_day", DateType))))
     val affected = fact.join(broadcast(daysDf),
       to_date(fact(dayCol)) === daysDf("p_day"), "left_semi")
     // a touched day whose recompute yields ZERO mart rows (a row-reducing

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{Batch, BatchId, BatchWindow}
+import graft.core.{Batch, BatchId, BatchWindow, Pins}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -43,8 +43,7 @@ object Maintenance {
     import java.time.Instant
     val row = Row(id.value, Batch.naiveRunDate(w),
       startLedger, endLedger, table, Instant.now())
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(row), 1), runStatsSchema)
+    Pins.local(spark, Seq(row), runStatsSchema)
       .write.mode("append").parquet(statsPath)
   }
 

@@ -28,8 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * recognizes as valid-but-outside-its-switch (a fee-bump envelope, an
   * exotic operation type) quarantine the same way: NULL means "this
   * decoder cannot produce the record", the same routing signal either
-  * way. Every expression stays inside WholeStageCodegen — one static
-  * parser call per row.
+  * way. [[XdrDecode]] compiles to one static parser call per row.
   */
 private[plans] object XdrCursor {
   /** Quarantine signal — a stackless control throwable so the hot path
@@ -157,24 +156,48 @@ private[plans] final class XdrCursor(b: Array[Byte]) {
   def done(): Unit = if (p != b.length) fail()
 }
 
-/** Shared entry-point plumbing: run a cursor parse, translate the
-  * quarantine throw to NULL. */
-private[plans] object XdrParse {
-  def apply(b: Array[Byte])(body: XdrCursor => InternalRow): InternalRow =
+/** One whole-record decoder: the SQL function `sqlName(bin)` that
+  * [[XdrDecode]] plans, its result `schema`, and the cursor `parse` that
+  * fills one row of it. Each record is an object, listed once in
+  * [[XdrRecords.all]].
+  */
+abstract class XdrRecord(val sqlName: String) extends Serializable {
+  val schema: StructType
+
+  /** Mid-stream parse (no exact-consumption check): records that embed
+    * this one call it on their own cursor. */
+  private[plans] def parse(c: XdrCursor): InternalRow
+
+  /** The whole buffer as one record: NULL on null input and on any
+    * structural violation, trailing bytes included. */
+  final def decode(b: Array[Byte]): InternalRow =
     if (b == null) null
-    else try body(new XdrCursor(b))
-    catch { case XdrCursor.Malformed => null }
+    else try {
+      val c = new XdrCursor(b)
+      val row = parse(c)
+      c.done()
+      row
+    } catch { case XdrCursor.Malformed => null }
+}
+
+/** Every whole-record decoder, in registration order. */
+object XdrRecords {
+  val all: Seq[XdrRecord] = Seq(XdrLedgerHeader, XdrAccountEntry,
+    XdrTrustLineEntry, XdrOfferEntry, XdrLiquidityPoolEntry,
+    XdrClaimableBalanceEntry, XdrContractDataEntry, XdrTtlEntry,
+    XdrContractCodeEntry, XdrConfigSettingEntry, XdrLedgerKey,
+    XdrLedgerEntry, XdrTxEnvelope, XdrTxResult, XdrLedgerEntryChanges)
 }
 
 /** Full `LedgerHeader` decode (Stellar-ledger.x) — the
   * history_ledgers-shaped record. Variable interior: the SCP value's
   * `upgrades<6>` vector and its BASIC/SIGNED ext union; the v1 header
   * ext carries flags. */
-object XdrRecords {
+object XdrLedgerHeader extends XdrRecord("graft_xdr_ledger_header") {
 
   /** Result schema — history_ledgers-shaped; hashes stay binary (the
     * query hex()es them into the reference's string spelling). */
-  val ledgerHeaderType: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("ledger_version", LongType),
     StructField("previous_ledger_hash", BinaryType),
     StructField("tx_set_hash", BinaryType),
@@ -193,7 +216,7 @@ object XdrRecords {
     StructField("max_tx_set_size", LongType),
     StructField("flags", LongType)))
 
-  def decodeLedgerHeader(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
+  private[plans] def parse(c: XdrCursor): GenericInternalRow = {
     val ledgerVersion = c.u32()
     val prevHash = c.bytes(32)
     val txSetHash = c.bytes(32) // scp.txSetHash
@@ -228,7 +251,6 @@ object XdrRecords {
         val fl = c.u32(); c.expect(0L); fl
       case _ => throw XdrCursor.Malformed
     }
-    c.done()
     new GenericInternalRow(Array[Any](
       ledgerVersion, prevHash, txSetHash, closeTime, nUpgrades, signed,
       txSetResultHash, bucketListHash, ledgerSeq, totalCoins, feePool,
@@ -247,14 +269,14 @@ object XdrRecords {
   * ledger/time — the columns the reference's accounts table stores
   * (num_sponsored / num_sponsoring / sequence_ledger / sequence_time,
   * reference schemas/accounts_schema.json). */
-object XdrAccountEntry {
+object XdrAccountEntry extends XdrRecord("graft_xdr_account_entry") {
 
   val signerType: StructType = StructType(Seq(
     StructField("key", StringType),
     StructField("key_type", LongType),
     StructField("weight", LongType)))
 
-  val accountEntryType: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("account_id", StringType),
     StructField("balance", LongType),
     StructField("sequence_number", LongType),
@@ -276,14 +298,6 @@ object XdrAccountEntry {
     // exploding this array IS the reference's account_signers table
     StructField("signers", ArrayType(signerType))))
 
-  def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
-    val row = parse(c)
-    c.done()
-    row
-  }
-
-  /** Mid-stream parse (no exact-consumption check) — the
-    * LedgerEntry data union embeds this record. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
     val accountId = c.accountId()
     val balance = c.i64()
@@ -356,8 +370,8 @@ object XdrAccountEntry {
   * admits the pool-share arm (PoolID surfaces as the 64-hex-char
   * asset_code with asset_type 3); the nested ext chain carries v1
   * liabilities and the v2 liquidity-pool use count. */
-object XdrTrustLineEntry {
-  val trustLineType: StructType = StructType(Seq(
+object XdrTrustLineEntry extends XdrRecord("graft_xdr_trust_line") {
+  val schema: StructType = StructType(Seq(
     StructField("account_id", StringType),
     StructField("asset_type", LongType),
     StructField("asset_code", StringType),
@@ -369,14 +383,6 @@ object XdrTrustLineEntry {
     StructField("selling_liabilities", LongType),
     StructField("pool_use_count", LongType)))
 
-  def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
-    val row = parse(c)
-    c.done()
-    row
-  }
-
-  /** Mid-stream parse (no exact-consumption check) — the
-    * LedgerEntry data union embeds this record. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
     val accountId = c.accountId()
     val (aType, aCode, aIssuer) = c.asset(poolShareArm = true)
@@ -405,8 +411,8 @@ object XdrTrustLineEntry {
 /** Full `OfferEntry` decode (Stellar-ledger-entries.x) — the
   * reference's `offers` table shape: seller, offer id, both Asset
   * unions, amount, the n/d Price fraction, flags. */
-object XdrOfferEntry {
-  val offerType: StructType = StructType(Seq(
+object XdrOfferEntry extends XdrRecord("graft_xdr_offer") {
+  val schema: StructType = StructType(Seq(
     StructField("seller_id", StringType),
     StructField("offer_id", LongType),
     StructField("selling_asset_type", LongType),
@@ -420,14 +426,6 @@ object XdrOfferEntry {
     StructField("price_d", LongType),
     StructField("flags", LongType)))
 
-  def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
-    val row = parse(c)
-    c.done()
-    row
-  }
-
-  /** Mid-stream parse (no exact-consumption check) — the
-    * LedgerEntry data union embeds this record. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
     val sellerId = c.accountId()
     val offerId = c.i64()
@@ -448,8 +446,8 @@ object XdrOfferEntry {
 /** Full `LiquidityPoolEntry` decode (Stellar-ledger-entries.x) — the
   * reference's `liquidity_pools` table shape: pool id, the
   * constant-product body's asset pair, fee, reserves, share totals. */
-object XdrLiquidityPoolEntry {
-  val liquidityPoolType: StructType = StructType(Seq(
+object XdrLiquidityPoolEntry extends XdrRecord("graft_xdr_liquidity_pool") {
+  val schema: StructType = StructType(Seq(
     StructField("pool_id", StringType),
     StructField("asset_a_type", LongType),
     StructField("asset_a_code", StringType),
@@ -463,14 +461,6 @@ object XdrLiquidityPoolEntry {
     StructField("total_pool_shares", LongType),
     StructField("pool_shares_trust_line_count", LongType)))
 
-  def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
-    val row = parse(c)
-    c.done()
-    row
-  }
-
-  /** Mid-stream parse (no exact-consumption check) — the
-    * LedgerEntry data union embeds this record. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
     val poolId = c.hex32()
     c.expect(0L) // LIQUIDITY_POOL_CONSTANT_PRODUCT, the only arm
@@ -495,7 +485,7 @@ object XdrLiquidityPoolEntry {
   * depth guard and surfaced as per-claimant summary columns — root
   * type, node count, depth, and the earliest absolute-time bound — the
   * queryable shape; claimants explode like signers/operations. */
-object XdrClaimableBalanceEntry {
+object XdrClaimableBalanceEntry extends XdrRecord("graft_xdr_claimable_balance") {
 
   val claimantType: StructType = StructType(Seq(
     StructField("destination", StringType),
@@ -504,7 +494,7 @@ object XdrClaimableBalanceEntry {
     StructField("predicate_depth", LongType),
     StructField("abs_before_min", LongType)))
 
-  val claimableBalanceType: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("balance_id", StringType),
     StructField("asset_type", LongType),
     StructField("asset_code", StringType),
@@ -552,14 +542,6 @@ object XdrClaimableBalanceEntry {
     }
   }
 
-  def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
-    val row = parse(c)
-    c.done()
-    row
-  }
-
-  /** Mid-stream parse (no exact-consumption check) — the
-    * LedgerEntry data union embeds this record. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
     c.expect(0L) // CLAIMABLE_BALANCE_ID_TYPE_V0
     val balanceId = c.hex32()
@@ -608,9 +590,9 @@ object XdrClaimableBalanceEntry {
   * the whole tree renders as the deterministic JSON document the
   * reference's key_decoded / val_decoded columns carry.
   */
-object XdrContractDataEntry {
+object XdrContractDataEntry extends XdrRecord("graft_xdr_contract_data") {
 
-  val contractDataType: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("contract_id", StringType),
     StructField("contract_kind", LongType), // 0 account, 1 contract
     StructField("durability", LongType),    // 0 temporary, 1 persistent
@@ -825,14 +807,6 @@ object XdrContractDataEntry {
     }
   }
 
-  def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
-    val row = parse(c)
-    c.done()
-    row
-  }
-
-  /** Mid-stream parse (no exact-consumption check) — the
-    * LedgerEntry data union embeds this record. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
     c.expect(0L) // ExtensionPoint
     val (contractId: UTF8String, kind) = c.u32() match {
@@ -865,19 +839,11 @@ object XdrContractDataEntry {
   * the pixels-stay-in-the-task posture applied to code). The v1
   * cost-inputs extension is outside this decoder's boundary
   * (quarantines; mechanical to add). */
-object XdrTtlEntry {
-  val ttlType: StructType = StructType(Seq(
+object XdrTtlEntry extends XdrRecord("graft_xdr_ttl") {
+  val schema: StructType = StructType(Seq(
     StructField("key_hash", StringType),
     StructField("live_until_ledger_seq", LongType)))
 
-  def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
-    val row = parse(c)
-    c.done()
-    row
-  }
-
-  /** Mid-stream parse (no exact-consumption check) — the
-    * LedgerEntry data union embeds this record. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
     val keyHash = c.hex32()
     val liveUntil = c.u32()
@@ -885,20 +851,12 @@ object XdrTtlEntry {
   }
 }
 
-object XdrContractCodeEntry {
-  val contractCodeType: StructType = StructType(Seq(
+object XdrContractCodeEntry extends XdrRecord("graft_xdr_contract_code") {
+  val schema: StructType = StructType(Seq(
     StructField("code_hash", StringType),
     StructField("code_size", LongType),
     StructField("code_sha256", StringType)))
 
-  def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
-    val row = parse(c)
-    c.done()
-    row
-  }
-
-  /** Mid-stream parse (no exact-consumption check) — the
-    * LedgerEntry data union embeds this record. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
     c.expect(0L) // ExtensionPoint (v1 cost inputs: boundary)
     val hash = c.hex32()
@@ -928,8 +886,8 @@ object XdrContractCodeEntry {
   * terms) flatten to const/linear pairs; the bucket-list size window
   * (vector<uint64>) passes through. Unknown setting ids quarantine.
   */
-object XdrConfigSettingEntry {
-  val configSettingType: StructType = StructType(Seq(
+object XdrConfigSettingEntry extends XdrRecord("graft_xdr_config_setting") {
+  val schema: StructType = StructType(Seq(
     StructField("setting_id", LongType),
     StructField("n_values", LongType),
     StructField("values", ArrayType(LongType))))
@@ -948,14 +906,6 @@ object XdrConfigSettingEntry {
     11L -> "w",                // EXECUTION_LANES
     13L -> "wbq")              // EVICTION_ITERATOR
 
-  def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
-    val row = parse(c)
-    c.done()
-    row
-  }
-
-  /** Mid-stream parse (no exact-consumption check) — the
-    * LedgerEntry data union embeds this record. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
     val id = c.u32()
     val vals: Array[Any] = id match {
@@ -1006,8 +956,8 @@ object XdrConfigSettingEntry {
   * carries — account, trust-line asset (incl. pool share), offer id,
   * data name, balance/pool/code/TTL hashes, the contract-data address
   * + SCVal key summary + durability, config setting id. */
-object XdrLedgerKey {
-  val ledgerKeyType: StructType = StructType(Seq(
+object XdrLedgerKey extends XdrRecord("graft_xdr_ledger_key") {
+  val schema: StructType = StructType(Seq(
     StructField("entry_type", LongType),
     StructField("account_id", StringType),
     StructField("asset_type", LongType),
@@ -1026,16 +976,10 @@ object XdrLedgerKey {
     StructField("setting_id", LongType),
     StructField("key_hash", StringType)))
 
-  def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
-    val row = parse(c)
-    c.done()
-    row
-  }
-
   /** Mid-stream parse (no exact-consumption check) — the shape embedded
     * records use, e.g. REVOKE_SPONSORSHIP's ledgerKey arm. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
-    val f = new Array[Any](ledgerKeyType.length)
+    val f = new Array[Any](schema.length)
     val t = c.u32()
     f(0) = t
     t match {
@@ -1084,37 +1028,31 @@ object XdrLedgerKey {
   * so an ingest can route by `entry_type` without ten scans. The DATA
   * arm (the classic key-value DataEntry, the one state shape without
   * its own table gate) decodes inline: account, name, value size. */
-object XdrLedgerEntry {
+object XdrLedgerEntry extends XdrRecord("graft_xdr_ledger_entry") {
 
   val dataEntryType: StructType = StructType(Seq(
     StructField("account_id", StringType),
     StructField("data_name", StringType),
     StructField("data_value_size", LongType)))
 
-  val ledgerEntryType: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("last_modified_ledger_seq", LongType),
     StructField("entry_type", LongType),
     StructField("sponsor", StringType),
-    StructField("account", XdrAccountEntry.accountEntryType),
-    StructField("trust_line", XdrTrustLineEntry.trustLineType),
-    StructField("offer", XdrOfferEntry.offerType),
+    StructField("account", XdrAccountEntry.schema),
+    StructField("trust_line", XdrTrustLineEntry.schema),
+    StructField("offer", XdrOfferEntry.schema),
     StructField("data", dataEntryType),
-    StructField("claimable_balance", XdrClaimableBalanceEntry.claimableBalanceType),
-    StructField("liquidity_pool", XdrLiquidityPoolEntry.liquidityPoolType),
-    StructField("contract_data", XdrContractDataEntry.contractDataType),
-    StructField("contract_code", XdrContractCodeEntry.contractCodeType),
-    StructField("config_setting", XdrConfigSettingEntry.configSettingType),
-    StructField("ttl", XdrTtlEntry.ttlType)))
-
-  def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
-    val row = parse(c)
-    c.done()
-    row
-  }
+    StructField("claimable_balance", XdrClaimableBalanceEntry.schema),
+    StructField("liquidity_pool", XdrLiquidityPoolEntry.schema),
+    StructField("contract_data", XdrContractDataEntry.schema),
+    StructField("contract_code", XdrContractCodeEntry.schema),
+    StructField("config_setting", XdrConfigSettingEntry.schema),
+    StructField("ttl", XdrTtlEntry.schema)))
 
   /** Mid-stream parse — LedgerEntryChanges embeds this record. */
   private[plans] def parse(c: XdrCursor): GenericInternalRow = {
-    val f = new Array[Any](ledgerEntryType.length)
+    val f = new Array[Any](schema.length)
     f(0) = c.u32() // lastModifiedLedgerSeq
     val t = c.u32()
     f(1) = t
@@ -1203,7 +1141,7 @@ object XdrLedgerEntry {
   * resource fee, and the footprint's LedgerKey vectors (each key fully
   * parsed via [[XdrLedgerKey]], counts surfaced) — so real Soroban
   * transactions no longer quarantine at the ext. */
-object XdrTxEnvelope {
+object XdrTxEnvelope extends XdrRecord("graft_xdr_tx_envelope") {
 
   /** One `path` element — the reference's repeated asset RECORD. */
   val pathAssetType: StructType = StructType(Seq(
@@ -1277,7 +1215,7 @@ object XdrTxEnvelope {
     StructField("revoke_account", StringType),
     StructField("revoke_signer_key", StringType),
     // the revoked ledger key, decoded in place (all ten arms)
-    StructField("revoke_key", XdrLedgerKey.ledgerKeyType),
+    StructField("revoke_key", XdrLedgerKey.schema),
     // clawback
     StructField("from_account", StringType),
     // Soroban footprint maintenance
@@ -1571,7 +1509,7 @@ object XdrTxEnvelope {
     new GenericInternalRow(f)
   }
 
-  val txEnvelopeType: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("source_account", StringType),
     StructField("muxed_id", LongType),
     StructField("fee", LongType),
@@ -1611,11 +1549,8 @@ object XdrTxEnvelope {
     StructField("n_footprint_ro", LongType),
     StructField("n_footprint_rw", LongType)))
 
-  /** Field count of [[txEnvelopeType]] — row width for the builders. */
-  val envFieldCount: Int = txEnvelopeType.length
-
   /** Parse one transaction body + its DecoratedSignature vector into the
-    * envelope row fields (indices per [[txEnvelopeType]]). `v0` selects
+    * envelope row fields (indices per [[schema]]). `v0` selects
     * the legacy layout: a RAW ed25519 source key (no PublicKey
     * discriminant) and a plain optional-TimeBounds cond arm. The v1
     * layout reads the full Preconditions union (NONE / TIME / V2). */
@@ -1715,8 +1650,8 @@ object XdrTxEnvelope {
     f(11) = nSigs
   }
 
-  def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
-    val f = new Array[Any](envFieldCount)
+  private[plans] def parse(c: XdrCursor): GenericInternalRow = {
+    val f = new Array[Any](schema.length)
     c.u32() match {
       case 0L => // ENVELOPE_TYPE_TX_V0: the legacy pre-protocol-13 layout
         parseTxBody(c, f, v0 = true)
@@ -1739,7 +1674,6 @@ object XdrTxEnvelope {
         f(15) = newMaxFee
       case _ => throw XdrCursor.Malformed
     }
-    c.done()
     new GenericInternalRow(f)
   }
 }
@@ -1752,19 +1686,19 @@ object XdrTxEnvelope {
   * — (change kind, the full entry struct or the key struct) — so an
   * ingest derives every state table from ONE decode of the change
   * stream, the del-ins shape the reference's state DAG applies. */
-object XdrLedgerEntryChanges {
+object XdrLedgerEntryChanges extends XdrRecord("graft_xdr_entry_changes") {
 
   val changeType: StructType = StructType(Seq(
     StructField("change_kind", LongType), // 0 created, 1 updated,
     // 2 removed, 3 state, 4 restored
-    StructField("entry", XdrLedgerEntry.ledgerEntryType),
-    StructField("key", XdrLedgerKey.ledgerKeyType)))
+    StructField("entry", XdrLedgerEntry.schema),
+    StructField("key", XdrLedgerKey.schema)))
 
-  val changesType: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("n_changes", LongType),
     StructField("changes", ArrayType(changeType))))
 
-  def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
+  private[plans] def parse(c: XdrCursor): GenericInternalRow = {
     val n = c.u32()
     if (n > 1024) throw XdrCursor.Malformed
     val out = new Array[Any](n.toInt)
@@ -1782,7 +1716,6 @@ object XdrLedgerEntryChanges {
       }
       i += 1
     }
-    c.done()
     new GenericInternalRow(Array[Any](n, new GenericArrayData(out)))
   }
 }
@@ -1811,7 +1744,7 @@ object XdrLedgerEntryChanges {
   *    kinds: legacy v0 raw-key, order-book, liquidity-pool) are
   *    counted and their sold/bought amounts summed.
   */
-object XdrTxResult {
+object XdrTxResult extends XdrRecord("graft_xdr_tx_result") {
 
   val opResultType: StructType = StructType(Seq(
     StructField("op_code", LongType),
@@ -1830,7 +1763,7 @@ object XdrTxResult {
     StructField("n_payouts", LongType),
     StructField("payout_total", LongType)))
 
-  val txResultType: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("fee_charged", LongType),
     StructField("code", LongType),
     StructField("inner_hash", StringType),
@@ -1897,7 +1830,7 @@ object XdrTxResult {
               case 0L | 1L => // CREATED / UPDATED: the embedded OfferEntry
                 val offer = XdrOfferEntry.parse(c)
                 f(7) = offer.getLong(
-                  XdrOfferEntry.offerType.fieldIndex("offer_id"))
+                  XdrOfferEntry.schema.fieldIndex("offer_id"))
               case 2L => () // DELETED
               case _  => throw XdrCursor.Malformed
             }
@@ -1948,187 +1881,40 @@ object XdrTxResult {
     c.expect(0L) // ext
   }
 
-  def decode(b: Array[Byte]): InternalRow = XdrParse(b) { c =>
-    val f = new Array[Any](txResultType.length)
+  private[plans] def parse(c: XdrCursor): GenericInternalRow = {
+    val f = new Array[Any](schema.length)
     body(c, f, inner = false)
-    c.done()
     new GenericInternalRow(f)
   }
 }
 
-private[plans] abstract class XdrRecordExpression extends UnaryExpression {
+/** `graft_xdr_<name>(bin)`: one whole-record decode of a binary column to
+  * `record.schema` (NULL on malformed input). Its codegen is one static
+  * call to the record object's `decode` per row.
+  */
+case class XdrDecode(child: Expression, record: XdrRecord) extends UnaryExpression {
+  override def dataType: DataType = record.schema
+  override def prettyName: String = record.sqlName
+  // the plan string names the function and its input, not the record object
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires a binary arg, got ${child.dataType}")
   // malformed input decodes to null even when the input is non-null
   override def nullable: Boolean = true
-  /** Fully-qualified static decode entry point for codegen. */
-  protected def staticDecode: String
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override def nullSafeEval(input: Any): Any =
+    record.decode(input.asInstanceOf[Array[Byte]])
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // the record object's static forwarder, e.g. graft.plans.XdrTtlEntry.decode
+    val decode = record.getClass.getName.stripSuffix("$") + ".decode"
     nullSafeCodeGen(ctx, ev, c => {
       s"""
-         |${ev.value} = $staticDecode($c);
+         |${ev.value} = $decode($c);
          |${ev.isNull} = (${ev.value} == null);
        """.stripMargin
     })
-}
-
-/** `graft_xdr_ledger_header(bin)`: full LedgerHeader record decode to a
-  * struct (see [[XdrRecords.ledgerHeaderType]]); NULL on malformed. */
-case class XdrLedgerHeader(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrRecords.ledgerHeaderType
-  override def prettyName: String = "graft_xdr_ledger_header"
-  override protected def staticDecode: String =
-    "graft.plans.XdrRecords.decodeLedgerHeader"
-  override def nullSafeEval(input: Any): Any =
-    XdrRecords.decodeLedgerHeader(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrLedgerHeader =
-    copy(child = newChild)
-}
-
-case class XdrAccountEntryDecode(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrAccountEntry.accountEntryType
-  override def prettyName: String = "graft_xdr_account_entry"
-  override protected def staticDecode: String = "graft.plans.XdrAccountEntry.decode"
-  override def nullSafeEval(input: Any): Any =
-    XdrAccountEntry.decode(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrAccountEntryDecode =
-    copy(child = newChild)
-}
-
-case class XdrTrustLineDecode(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrTrustLineEntry.trustLineType
-  override def prettyName: String = "graft_xdr_trust_line"
-  override protected def staticDecode: String = "graft.plans.XdrTrustLineEntry.decode"
-  override def nullSafeEval(input: Any): Any =
-    XdrTrustLineEntry.decode(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrTrustLineDecode =
-    copy(child = newChild)
-}
-
-case class XdrOfferDecode(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrOfferEntry.offerType
-  override def prettyName: String = "graft_xdr_offer"
-  override protected def staticDecode: String = "graft.plans.XdrOfferEntry.decode"
-  override def nullSafeEval(input: Any): Any =
-    XdrOfferEntry.decode(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrOfferDecode =
-    copy(child = newChild)
-}
-
-case class XdrLiquidityPoolDecode(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrLiquidityPoolEntry.liquidityPoolType
-  override def prettyName: String = "graft_xdr_liquidity_pool"
-  override protected def staticDecode: String =
-    "graft.plans.XdrLiquidityPoolEntry.decode"
-  override def nullSafeEval(input: Any): Any =
-    XdrLiquidityPoolEntry.decode(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrLiquidityPoolDecode =
-    copy(child = newChild)
-}
-
-case class XdrClaimableBalanceDecode(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrClaimableBalanceEntry.claimableBalanceType
-  override def prettyName: String = "graft_xdr_claimable_balance"
-  override protected def staticDecode: String =
-    "graft.plans.XdrClaimableBalanceEntry.decode"
-  override def nullSafeEval(input: Any): Any =
-    XdrClaimableBalanceEntry.decode(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrClaimableBalanceDecode =
-    copy(child = newChild)
-}
-
-case class XdrContractDataDecode(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrContractDataEntry.contractDataType
-  override def prettyName: String = "graft_xdr_contract_data"
-  override protected def staticDecode: String =
-    "graft.plans.XdrContractDataEntry.decode"
-  override def nullSafeEval(input: Any): Any =
-    XdrContractDataEntry.decode(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrContractDataDecode =
-    copy(child = newChild)
-}
-
-case class XdrTtlDecode(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrTtlEntry.ttlType
-  override def prettyName: String = "graft_xdr_ttl"
-  override protected def staticDecode: String = "graft.plans.XdrTtlEntry.decode"
-  override def nullSafeEval(input: Any): Any =
-    XdrTtlEntry.decode(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrTtlDecode =
-    copy(child = newChild)
-}
-
-case class XdrContractCodeDecode(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrContractCodeEntry.contractCodeType
-  override def prettyName: String = "graft_xdr_contract_code"
-  override protected def staticDecode: String =
-    "graft.plans.XdrContractCodeEntry.decode"
-  override def nullSafeEval(input: Any): Any =
-    XdrContractCodeEntry.decode(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrContractCodeDecode =
-    copy(child = newChild)
-}
-
-case class XdrLedgerEntryChangesDecode(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrLedgerEntryChanges.changesType
-  override def prettyName: String = "graft_xdr_entry_changes"
-  override protected def staticDecode: String =
-    "graft.plans.XdrLedgerEntryChanges.decode"
-  override def nullSafeEval(input: Any): Any =
-    XdrLedgerEntryChanges.decode(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrLedgerEntryChangesDecode =
-    copy(child = newChild)
-}
-
-case class XdrTxResultDecode(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrTxResult.txResultType
-  override def prettyName: String = "graft_xdr_tx_result"
-  override protected def staticDecode: String = "graft.plans.XdrTxResult.decode"
-  override def nullSafeEval(input: Any): Any =
-    XdrTxResult.decode(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrTxResultDecode =
-    copy(child = newChild)
-}
-
-case class XdrLedgerEntryDecode(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrLedgerEntry.ledgerEntryType
-  override def prettyName: String = "graft_xdr_ledger_entry"
-  override protected def staticDecode: String = "graft.plans.XdrLedgerEntry.decode"
-  override def nullSafeEval(input: Any): Any =
-    XdrLedgerEntry.decode(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrLedgerEntryDecode =
-    copy(child = newChild)
-}
-
-case class XdrConfigSettingDecode(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrConfigSettingEntry.configSettingType
-  override def prettyName: String = "graft_xdr_config_setting"
-  override protected def staticDecode: String =
-    "graft.plans.XdrConfigSettingEntry.decode"
-  override def nullSafeEval(input: Any): Any =
-    XdrConfigSettingEntry.decode(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrConfigSettingDecode =
-    copy(child = newChild)
-}
-
-case class XdrLedgerKeyDecode(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrLedgerKey.ledgerKeyType
-  override def prettyName: String = "graft_xdr_ledger_key"
-  override protected def staticDecode: String = "graft.plans.XdrLedgerKey.decode"
-  override def nullSafeEval(input: Any): Any =
-    XdrLedgerKey.decode(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrLedgerKeyDecode =
-    copy(child = newChild)
-}
-
-case class XdrTxEnvelopeDecode(child: Expression) extends XdrRecordExpression {
-  override def dataType: DataType = XdrTxEnvelope.txEnvelopeType
-  override def prettyName: String = "graft_xdr_tx_envelope"
-  override protected def staticDecode: String = "graft.plans.XdrTxEnvelope.decode"
-  override def nullSafeEval(input: Any): Any =
-    XdrTxEnvelope.decode(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression): XdrTxEnvelopeDecode =
+  }
+  override protected def withNewChildInternal(newChild: Expression): XdrDecode =
     copy(child = newChild)
 }

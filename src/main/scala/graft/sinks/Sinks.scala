@@ -6,14 +6,10 @@ import org.apache.spark.sql.functions._
 /** Sink family (K1–K8).
   *
   * The reference's sinks are BigQuery load/DML/EXPORT jobs; here they are
-  * partitioned columnar writes. The lake export (K3) is
-  * `EXPORT DATA ... format='avro' ... order by closed_at` in the reference
-  * (reference dags/queries/generate_avro SQL files,
-  * build_bq_generate_avro_job_task.py:26-34); this build ships without the
-  * spark-avro connector jar, so the lake format is Parquet with identical
-  * layout semantics (per-table dir, batch-window path, sortWithinPartitions
-  * on the order key — total order per file, not across files, matching
-  * EXPORT DATA's sharded output).
+  * partitioned columnar writes. The lake export (K3, the reference's
+  * `EXPORT DATA ... format='avro' ... order by closed_at`) is
+  * [[AvroIO.write]]: one Avro container file per partition, each ordered
+  * by a `sortWithinPartitions` on the order key upstream.
   */
 object Sinks {
 
@@ -50,10 +46,6 @@ object Sinks {
   /** K2: truncate-replace (WRITE_TRUNCATE). */
   def truncateReplace(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
-
-  /** K3: ordered lake export of one batch window. */
-  def lakeExport(df: DataFrame, path: String, orderCol: String): Unit =
-    df.sortWithinPartitions(col(orderCol)).write.mode("overwrite").parquet(path)
 
   /** K4: single-file NDJSON export (the reference's TVL feed,
     * reference dags/dbt_stellar_marts_dag.py:162-178). coalesce(1) is only

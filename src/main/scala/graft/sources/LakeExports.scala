@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * batch-window filter on `batch_run_date` and/or `closed_at` + ORDER BY
   * closed_at. The engine side is the same declarative plan — projection,
   * range filter (pushed to the parquet scan), global sort — and
-  * `Sinks.lakeExport` (K3) writes the sorted files; these queries are the
+  * `AvroIO.write` (K3) writes the sorted files; these queries are the
   * SELECT bodies, each wired into the driver's DuckDB hash gate.
   *
   * Fixture rule (same doctrine as the wide tables): each export runs over

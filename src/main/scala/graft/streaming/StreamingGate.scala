@@ -301,14 +301,16 @@ object StreamingGate {
       }
     }
     mapping0.write.mode("overwrite").parquet(s"$mapRoot/seed")
-    // two deterministic files (hash-partitioned on doc_id % 2), one per
+    // two deterministic files (hash-partitioned on doc_id), one per
     // micro-batch, with near-dup pairs genuinely straddling the batch
-    // boundary. Two batches exercise everything a third did —
-    // cross-batch candidates, index append, mapping fold — at one fold
-    // less of fixed micro-batch machinery; slicing-independence itself is
-    // pinned by the oracle (ANY slicing must equal the full recompute)
-    // and by the batch incremental spec.
-    val stream = stageSlices(spark, delta, 2, in, pmod(col("doc_id"), lit(2)))
+    // boundary. Not on doc_id % 2: every delta doc_id is a multiple of
+    // 10, and both values of a 0/1 key hash to the same one of two
+    // partitions, so either leaves one file. Two batches exercise
+    // everything a third did — cross-batch candidates, index append,
+    // mapping fold — at one fold less of fixed micro-batch machinery;
+    // slicing-independence itself is pinned by the oracle (ANY slicing
+    // must equal the full recompute) and by the batch incremental spec.
+    val stream = stageSlices(spark, delta, 2, in, col("doc_id"))
     val mappingBefore = stateOrSeed(spark, mapRoot) _
     scopedDrain(stream, ck) { (b: DataFrame, id: Long) =>
       if (!b.isEmpty)

@@ -56,17 +56,6 @@ class IvfRecallSpec extends SparkSpec {
     }
   }
 
-  test("scale-path Lloyd (hash-agg means) agrees with the exact fold to 1e-6") {
-    val emb = Tables.load(spark, sfDir, "embeddings")
-    val exact = IvfIndex.lloydCentroids(emb, nlist, iters = 2)
-      .select(col("cid"), posexplode(col("cvec")).as(Seq("dim", "v")))
-    val fast = IvfIndex.lloydCentroidsFast(emb, nlist, iters = 2)
-      .select(col("cid"), posexplode(col("cvec")).as(Seq("dim", "vf")))
-    val maxDiff = exact.join(fast, Seq("cid", "dim"))
-      .agg(max(abs(col("v") - col("vf")))).head().getDouble(0)
-    assert(maxDiff <= 1e-6, s"fast/exact centroid divergence $maxDiff")
-  }
-
   test("PQ: m bounded codes per vector, deterministic, useful ADC recall") {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val (m, dsub, ksub) = (8, 8, 16)

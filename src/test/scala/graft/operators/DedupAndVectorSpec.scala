@@ -415,15 +415,14 @@ class DedupAndVectorSpec extends SparkSpec {
     val viaUnionFind = Dedup.connectedComponents(nodes, "doc_id", pairs)
       .as[(Long, Long)].collect().toMap
     assert(viaUnionFind == expected)
-    // both forced distributed paths (the 100 TB shapes) agree exactly
+    // the forced distributed path (the 100 TB shape) and star's min-label
+    // finisher agree exactly
     val viaStar =
       Dedup.connectedComponents(nodes, "doc_id", pairs, broadcastEdgeLimit = 0L)
         .as[(Long, Long)].collect().toMap
     assert(viaStar == expected, "star contraction path drifted")
-    val viaPropagation =
-      Dedup.connectedComponents(nodes, "doc_id", pairs, broadcastEdgeLimit = 0L,
-        distributedAlgo = "minlabel")
-        .as[(Long, Long)].collect().toMap
+    val viaPropagation = Dedup.minLabelComponents(nodes, "doc_id", pairs)
+      .as[(Long, Long)].collect().toMap
     assert(viaPropagation == expected)
   }
 

@@ -12,22 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class XdrFuzzSpec extends AnyFunSuite {
 
-  private val decoders: Seq[(String, Array[Byte] => AnyRef)] = Seq(
-    "ledger_header" -> (XdrRecords.decodeLedgerHeader(_)),
-    "account_entry" -> (XdrAccountEntry.decode(_)),
-    "trust_line" -> (XdrTrustLineEntry.decode(_)),
-    "offer" -> (XdrOfferEntry.decode(_)),
-    "liquidity_pool" -> (XdrLiquidityPoolEntry.decode(_)),
-    "claimable_balance" -> (XdrClaimableBalanceEntry.decode(_)),
-    "contract_data" -> (XdrContractDataEntry.decode(_)),
-    "ttl" -> (XdrTtlEntry.decode(_)),
-    "contract_code" -> (XdrContractCodeEntry.decode(_)),
-    "config_setting" -> (XdrConfigSettingEntry.decode(_)),
-    "ledger_key" -> (XdrLedgerKey.decode(_)),
-    "ledger_entry" -> (XdrLedgerEntry.decode(_)),
-    "tx_envelope" -> (XdrTxEnvelope.decode(_)),
-    "tx_result" -> (XdrTxResult.decode(_)),
-    "entry_changes" -> (XdrLedgerEntryChanges.decode(_)))
+  // the registered record list itself, so a record added later cannot
+  // skip this battery
+  private val decoders: Seq[(String, Array[Byte] => AnyRef)] =
+    XdrRecords.all.map(r => r.sqlName -> (r.decode(_)))
 
   test("random bytes never throw: every decoder returns row-or-null on " +
       "arbitrary buffers of every small size and on larger random blobs") {

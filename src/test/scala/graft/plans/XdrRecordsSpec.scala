@@ -75,7 +75,7 @@ class XdrRecordsSpec extends SparkSpec {
       val buf = encode(23L, 1700000099L,
         (0 until nUp).map(i => Array.tabulate[Byte](i * 3 + 1)(j => (j + i).toByte)),
         signedExt, 424242L, 1000000007L, flags)
-      val r = XdrRecords.decodeLedgerHeader(buf)
+      val r = XdrLedgerHeader.decode(buf)
       assert(r != null, s"shape nUp=$nUp signed=$signedExt flags=$flags")
       assert(r.getLong(0) == 23L)
       assert(r.getBinary(1).toSeq == hash(1).toSeq)
@@ -99,12 +99,12 @@ class XdrRecordsSpec extends SparkSpec {
       "extension of a valid header decodes to null — no partial records") {
     shapes.foreach { buf =>
       (0 until buf.length).foreach { n =>
-        assert(XdrRecords.decodeLedgerHeader(buf.take(n)) == null,
+        assert(XdrLedgerHeader.decode(buf.take(n)) == null,
           s"prefix of $n/${buf.length} bytes must not decode")
       }
-      assert(XdrRecords.decodeLedgerHeader(buf :+ 0.toByte) == null,
+      assert(XdrLedgerHeader.decode(buf :+ 0.toByte) == null,
         "trailing garbage must not decode")
-      assert(XdrRecords.decodeLedgerHeader(buf) != null, "the full record does")
+      assert(XdrLedgerHeader.decode(buf) != null, "the full record does")
     }
   }
 
@@ -113,25 +113,25 @@ class XdrRecordsSpec extends SparkSpec {
     // upgrade count 7 exceeds upgrades<6>
     val sevenUp = encode(1L, 1L, (0 until 7).map(_ => Array[Byte](1)),
       signedExt = false, 1L, 1L, None)
-    assert(XdrRecords.decodeLedgerHeader(sevenUp) == null)
+    assert(XdrLedgerHeader.decode(sevenUp) == null)
     // a signature longer than opaque<64>
     val longSig = encode(1L, 1L, Nil, signedExt = true, 1L, 1L, None, sigLen = 65)
-    assert(XdrRecords.decodeLedgerHeader(longSig) == null)
+    assert(XdrLedgerHeader.decode(longSig) == null)
     // nonzero XDR padding byte inside an upgrade element
     val padded = encode(1L, 1L, Seq(Array[Byte](9)), signedExt = false, 1L, 1L, None)
     val padIdx = 4 + 32 + 32 + 8 + 4 + 4 + 1 // first pad byte of the upgrade
     assert(padded(padIdx) == 0, "layout self-check")
     val corrupt = padded.clone(); corrupt(padIdx) = 1
-    assert(XdrRecords.decodeLedgerHeader(corrupt) == null)
+    assert(XdrLedgerHeader.decode(corrupt) == null)
     // unknown scp ext discriminant (2): flip the BASIC marker
     val basic = encode(1L, 1L, Nil, signedExt = false, 1L, 1L, None)
     val extIdx = 4 + 32 + 32 + 8 + 4 // scp ext u32 starts here (0 upgrades)
     val badExt = basic.clone(); badExt(extIdx + 3) = 2
-    assert(XdrRecords.decodeLedgerHeader(badExt) == null)
+    assert(XdrLedgerHeader.decode(badExt) == null)
     // unknown node key type (1) under a SIGNED ext
     val signedBuf = encode(1L, 1L, Nil, signedExt = true, 1L, 1L, None)
     val badKey = signedBuf.clone(); badKey(extIdx + 7) = 1
-    assert(XdrRecords.decodeLedgerHeader(badKey) == null)
+    assert(XdrLedgerHeader.decode(badKey) == null)
   }
 
   /** Sponsorship ext shape: counters, per-slot descriptor presence, and
@@ -443,7 +443,7 @@ class XdrRecordsSpec extends SparkSpec {
       "(ledger bounds, min seq num/age/gap, extra signers) invert " +
       "independent encoders; over-limit extra signers and unknown inner " +
       "kinds reject") {
-    val ET = XdrTxEnvelope.txEnvelopeType
+    val ET = XdrTxEnvelope.schema
     def ix(n: String) = ET.fieldIndex(n)
     def encodeV0(timeBounds: Boolean): Array[Byte] = {
       val w = new OpW()
@@ -824,9 +824,9 @@ class XdrRecordsSpec extends SparkSpec {
     val rv0 = decode1(new OpW().w32(18L).w32(0L)
       .w32(2L).acct(54).w64(99L).bytes)
     assert(rv0.getLong(ix("revoke_kind")) == 0L)
-    val rk = rv0.getStruct(ix("revoke_key"), XdrLedgerKey.ledgerKeyType.length)
+    val rk = rv0.getStruct(ix("revoke_key"), XdrLedgerKey.schema.length)
     assert(rk.getLong(0) == 2L) // OFFER
-    assert(rk.getLong(XdrLedgerKey.ledgerKeyType.fieldIndex("offer_id")) == 99L)
+    assert(rk.getLong(XdrLedgerKey.schema.fieldIndex("offer_id")) == 99L)
     // ...and the signer arm
     val rv1 = decode1(new OpW().w32(18L).w32(1L).acct(55).w32(0L).h(56).bytes)
     assert(rv1.getLong(ix("revoke_kind")) == 1L)
@@ -868,7 +868,7 @@ class XdrRecordsSpec extends SparkSpec {
       "interiors and over-limit vectors reject") {
     val OT = XdrTxEnvelope.operationType
     def ix(n: String) = OT.fieldIndex(n)
-    val ET = XdrTxEnvelope.txEnvelopeType
+    val ET = XdrTxEnvelope.schema
     def ex(n: String) = ET.fieldIndex(n)
     var dbgN = 0
     def decode1(body: Array[Byte]) = {
@@ -1065,7 +1065,7 @@ class XdrRecordsSpec extends SparkSpec {
   test("LedgerKey: all ten arms invert independent encoders with the " +
       "arm's identifying columns set and the rest null; unknown arms, " +
       "bad durability, and prefixes reject") {
-    val LK = XdrLedgerKey.ledgerKeyType
+    val LK = XdrLedgerKey.schema
     def ix(n: String) = LK.fieldIndex(n)
     def enc(t: Long)(body: OpW => Unit): Array[Byte] = {
       val w = new OpW().w32(t); body(w); w.bytes
@@ -1654,7 +1654,7 @@ class XdrRecordsSpec extends SparkSpec {
   test("LedgerEntry wire record: the data union dispatches to all ten " +
       "per-type parsers, the v1 ext carries the sponsor, and strict " +
       "prefixes/unknown types reject") {
-    val LE = XdrLedgerEntry.ledgerEntryType
+    val LE = XdrLedgerEntry.schema
     def ix(n: String) = LE.fieldIndex(n)
     def wrap(t: Long, entry: Array[Byte], ext: Int): Array[Byte] = {
       val w = new OpW().w32(777L).w32(t)
@@ -1673,15 +1673,15 @@ class XdrRecordsSpec extends SparkSpec {
     assert(StrkeyCodec.decodePayload(
       r0.getUTF8String(ix("sponsor"))).toSeq == hash(90).toSeq)
     assert(r0.getStruct(ix("account"),
-      XdrAccountEntry.accountEntryType.length).getLong(1) == 999L)
+      XdrAccountEntry.schema.length).getLong(1) == 999L)
     assert(r0.isNullAt(ix("offer")) && r0.isNullAt(ix("ttl")))
     val tl = XdrLedgerEntry.decode(wrap(1L, encodeTrustLine(0, 0), 0))
     assert(tl.getStruct(ix("trust_line"),
-      XdrTrustLineEntry.trustLineType.length).getLong(4) == 5000L)
+      XdrTrustLineEntry.schema.length).getLong(4) == 5000L)
     assert(tl.isNullAt(ix("sponsor")))
     val off = XdrLedgerEntry.decode(wrap(2L, encodeOffer(0, 0), 1))
     assert(off.getStruct(ix("offer"),
-      XdrOfferEntry.offerType.length).getLong(1) == 12345L)
+      XdrOfferEntry.schema.length).getLong(1) == 12345L)
     assert(off.isNullAt(ix("sponsor")))
     val dW = new OpW().acct(91).w32(2L)
     dW.bb.write("ab".getBytes("UTF-8"), 0, 2); dW.bb.write(0); dW.bb.write(0)
@@ -1694,28 +1694,28 @@ class XdrRecordsSpec extends SparkSpec {
     val cb = XdrLedgerEntry.decode(
       wrap(4L, encodeClaimable(Seq(Uncond), nativeAsset = true, None), 0))
     assert(cb.getStruct(ix("claimable_balance"),
-      XdrClaimableBalanceEntry.claimableBalanceType.length).getLong(4) == 987654L)
+      XdrClaimableBalanceEntry.schema.length).getLong(4) == 987654L)
     val lpW = new OpW().h(93).w32(0L).w32(0L).w32(0L).w32(30L)
       .w64(1L).w64(2L).w64(3L).w64(4L)
     val lp = XdrLedgerEntry.decode(wrap(5L, lpW.bytes, 0))
     assert(lp.getStruct(ix("liquidity_pool"),
-      XdrLiquidityPoolEntry.liquidityPoolType.length).getLong(7) == 30L)
+      XdrLiquidityPoolEntry.schema.length).getLong(7) == 30L)
     val cd = XdrLedgerEntry.decode(
       wrap(6L, encodeContractData(contractAccount = true, SvSym("k"), 1L,
         SvVoid), 0))
     assert(cd.getStruct(ix("contract_data"),
-      XdrContractDataEntry.contractDataType.length).getLong(3) == 15L)
+      XdrContractDataEntry.schema.length).getLong(3) == 15L)
     val ccW = new OpW().w32(0L).h(94).w32(3L)
     ccW.bb.write(Array[Byte](7, 8, 9, 0), 0, 4)
     val cc = XdrLedgerEntry.decode(wrap(7L, ccW.bytes, 0))
     assert(cc.getStruct(ix("contract_code"),
-      XdrContractCodeEntry.contractCodeType.length).getLong(1) == 3L)
+      XdrContractCodeEntry.schema.length).getLong(1) == 3L)
     val cs = XdrLedgerEntry.decode(wrap(8L, new OpW().w32(0L).w32(5L).bytes, 0))
     assert(cs.getStruct(ix("config_setting"),
-      XdrConfigSettingEntry.configSettingType.length).getLong(0) == 0L)
+      XdrConfigSettingEntry.schema.length).getLong(0) == 0L)
     val tr = XdrLedgerEntry.decode(wrap(9L, new OpW().h(92).w32(123L).bytes, 0))
     assert(tr.getStruct(ix("ttl"),
-      XdrTtlEntry.ttlType.length).getLong(1) == 123L)
+      XdrTtlEntry.schema.length).getLong(1) == 123L)
     assert(XdrLedgerEntry.decode(
       wrap(10L, Array.empty[Byte], 0)) == null, "unknown entry type")
     val full = wrap(0L, acctBytes, 2)
@@ -1744,16 +1744,16 @@ class XdrRecordsSpec extends SparkSpec {
       val ch = arr.getStruct(i, CT.length)
       assert(ch.getLong(cix("change_kind")) == Seq(0L, 1L, 3L, 4L)(i))
       assert(ch.isNullAt(cix("key")))
-      val e = ch.getStruct(cix("entry"), XdrLedgerEntry.ledgerEntryType.length)
+      val e = ch.getStruct(cix("entry"), XdrLedgerEntry.schema.length)
       assert(e.getLong(1) == 9L) // TTL arm
     }
     val rm = arr.getStruct(4, CT.length)
     assert(rm.getLong(cix("change_kind")) == 2L && rm.isNullAt(cix("entry")))
-    assert(rm.getStruct(cix("key"), XdrLedgerKey.ledgerKeyType.length)
+    assert(rm.getStruct(cix("key"), XdrLedgerKey.schema.length)
       .getLong(0) == 9L)
     val rm2 = arr.getStruct(5, CT.length)
     assert(StrkeyCodec.decodePayload(
-      rm2.getStruct(cix("key"), XdrLedgerKey.ledgerKeyType.length)
+      rm2.getStruct(cix("key"), XdrLedgerKey.schema.length)
         .getUTF8String(1)).toSeq == hash(93).toSeq)
     // empty vector is a valid record
     assert(XdrLedgerEntryChanges.decode(new OpW().w32(0L).bytes)
@@ -1774,7 +1774,7 @@ class XdrRecordsSpec extends SparkSpec {
       "inflation payouts, created balance id, host-fn return hash, " +
       "path-payment tail) invert an independent encoder; bad codes, " +
       "bad atoms, and prefixes reject") {
-    val TR = XdrTxResult.txResultType
+    val TR = XdrTxResult.schema
     val OR = XdrTxResult.opResultType
     def tix(n: String) = TR.fieldIndex(n)
     def oix(n: String) = OR.fieldIndex(n)
@@ -1909,7 +1909,7 @@ class XdrRecordsSpec extends SparkSpec {
     val got = df.collect().sortBy(_.getLong(0))
     assert(got.length == shapes.length)
     got.foreach { r =>
-      val interp = XdrRecords.decodeLedgerHeader(shapes(r.getLong(0).toInt))
+      val interp = XdrLedgerHeader.decode(shapes(r.getLong(0).toInt))
       assert(r.getLong(1) == interp.getLong(8))
       assert(r.getLong(2) == interp.getLong(4))
       assert(r.getBoolean(3) == interp.getBoolean(5))

@@ -25,14 +25,6 @@ class SinksSpec extends SparkSpec {
       == 2 * d1.count())
   }
 
-  test("lakeExport writes sorted-within-partition files") {
-    val root = tmp()
-    val o = Tables.load(spark, sfDir, "orders")
-    Sinks.lakeExport(o, s"$root/lake", "o_orderdate")
-    val back = spark.read.parquet(s"$root/lake")
-    assert(back.count() == o.count())
-  }
-
   test("jsonExport emits a single NDJSON file") {
     val root = tmp()
     Sinks.jsonExport(Tables.load(spark, sfDir, "region"), s"$root/feed")

@@ -64,4 +64,12 @@ class DrainSpec extends SparkSpec {
     assert(Drain.stateBefore(spark, root, 10L).contains(s"$root/state_v2"))
     assert(Drain.stateBefore(spark, root, Long.MaxValue).contains(s"$root/state_v10"))
   }
+
+  test("st_incr_dedup drains its delta crawl in two micro-batches, so " +
+      "near-dup pairs can straddle a batch boundary") {
+    StreamingGate.incrDedupGate(spark, sfDir).count()
+    val mapRoot = new java.io.File(graft.core.Scratch.dir("stream_incr_map", sfDir))
+    val versions = mapRoot.list().filter(_.startsWith("state_v")).sorted.toSeq
+    assert(versions == Seq("state_v0", "state_v1"))
+  }
 }

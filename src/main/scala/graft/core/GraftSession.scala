@@ -23,6 +23,12 @@ object GraftSession {
       // static conf: the default 100-entry generated-class cache evicts
       // under a many-query session and every re-run re-pays Janino+JIT
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // static conf: with artifact isolation on (the default outside
+      // spark-shell) every streaming query's cloned session gives its tasks
+      // a fresh class loader, and the codegen cache is keyed by (loader,
+      // source), so each drain recompiled byte-identical classes. The
+      // engine adds no session artifacts, so there is nothing to isolate.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

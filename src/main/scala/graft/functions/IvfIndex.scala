@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.core.Pins
 import graft.functions.{VectorFunctions => VF}
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -96,7 +97,7 @@ object IvfIndex {
     */
   def appendDelta(spark: SparkSession, dir: String, delta: DataFrame,
                   idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = Parquet.read(spark, s"$dir/centroids")
     val asn = assign(delta, cents, idCol, vecCol)
     delta.join(asn, idCol)
       .withColumn("sc", VF.quantScale(col(vecCol)))
@@ -111,7 +112,7 @@ object IvfIndex {
     */
   def probedCells(spark: SparkSession, dir: String, queryVec: DataFrame,
                   nprobe: Int, vecCol: String = "embedding"): Seq[Long] = {
-    spark.read.parquet(s"$dir/centroids")
+    Parquet.read(spark, s"$dir/centroids")
       .crossJoin(broadcast(queryVec.select(col(vecCol).as("__qv"))))
       .withColumn("qc", round(VF.cosineNative(col("cvec"), col("__qv")), 6))
       .orderBy(col("qc").desc, col("cid"))
@@ -128,7 +129,7 @@ object IvfIndex {
            k: Int, nprobe: Int,
            idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val cells = probedCells(spark, dir, queryVec, nprobe, vecCol)
-    topKOver(spark.read.parquet(s"$dir/index")
+    topKOver(Parquet.read(spark, s"$dir/index")
       .filter(col("cell").isin(cells: _*)), queryVec, k, idCol, vecCol)
   }
 
@@ -157,7 +158,7 @@ object IvfIndex {
     val q = broadcast(
       queryVec.withColumn("scref", VF.quantScale(col(vecCol)))
         .select(VF.quantize(col(vecCol), col("scref")).as("qref"), col("scref")))
-    spark.read.parquet(s"$dir/index")
+    Parquet.read(spark, s"$dir/index")
       .filter(col("cell").isin(cells: _*))
       .crossJoin(q)
       .withColumn("dp",

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,7 +67,7 @@ object DataSkipping {
     * manifests — min/max merge associatively).
     */
   def manifest(spark: SparkSession, dir: String, cols: Seq[String]): DataFrame =
-    spark.read.parquet(dir)
+    Parquet.read(spark, dir)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"),
         cols.flatMap(c => Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max"))): _*)
@@ -117,7 +118,7 @@ object DataSkipping {
     // was pruned and an empty, correctly-typed frame must come from
     // somewhere
     if (files.isEmpty) schemaFrom.filter(lit(false))
-    else spark.read.parquet(files: _*)
+    else Parquet.read(spark, files: _*)
   }
 
   private def manifestPaths(spark: SparkSession, dir: String): Seq[String] = {
@@ -149,7 +150,7 @@ object DataSkipping {
     // one manifest row's path, headOption so an empty manifest reports
     // itself instead of a bare NoSuchElement
     val df = readViaPrunedManifest(spark, manifestOut,
-      schemaFrom = spark.read.parquet(
+      schemaFrom = Parquet.read(spark,
         manifest.select(col("file")).limit(1).collect().headOption
           .map(_.getString(0))
           .getOrElse(sys.error(
@@ -196,7 +197,7 @@ object DataSkipping {
     */
   def bloomManifest(spark: SparkSession, dir: String, colName: String,
                     m: Int, k: Int): DataFrame =
-    spark.read.parquet(dir)
+    Parquet.read(spark, dir)
       .select(input_file_name().as("file"),
         explode(bloomBits(col(colName), m, k)).as("bit"))
       .groupBy("file")
@@ -235,7 +236,7 @@ object DataSkipping {
     writePrunedManifest(
       bloomPrunedManifestRows(manifest, values, m, k), manifestOut)
     val df = readViaPrunedManifest(spark, manifestOut,
-      schemaFrom = spark.read.parquet(
+      schemaFrom = Parquet.read(spark,
         manifest.select(col("file")).limit(1).collect().headOption
           .map(_.getString(0))
           .getOrElse(sys.error(

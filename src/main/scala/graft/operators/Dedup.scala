@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.core.Pins
 import graft.functions.TextFunctions
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -332,8 +333,8 @@ object Dedup {
     // ingestDeltaCrawl renames in; hidden (.tmp_* / _SUCCESS) entries are
     // filtered by the file index, so a crashed append's tmp dir is
     // invisible to readers
-    def part(p: String) = spark.read
-      .option("recursiveFileLookup", "true").parquet(s"$root/$p")
+    def part(p: String) =
+      Parquet.read(spark, Map("recursiveFileLookup" -> "true"), s"$root/$p")
     NearDupIndex(part("digests"), part("bands"), part("sizes"))
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Parquet
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -135,7 +136,7 @@ object DelIns {
         .parquet(path)
     }
 
-    def read(): DataFrame = spark.read.parquet(path)
+    def read(): DataFrame = Parquet.read(spark, path)
 
     /** D2/D3 merge against storage that touches ONLY partitions holding
       * affected keys (the reference's MERGE is transactional in the

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.core.{Batch, BatchId, BatchWindow, Pins}
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,7 +24,7 @@ object Maintenance {
 
   /** D6: truncate a parquet table in place, preserving its schema. */
   def truncate(spark: SparkSession, path: String): Unit = {
-    val schema = spark.read.parquet(path).schema
+    val schema = Parquet.read(spark, path).schema
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
       .write.mode("overwrite").parquet(path)
   }
@@ -154,7 +155,7 @@ object Maintenance {
     require(!hasPartitionDirs,
       s"compact targets a leaf/partition dir; $norm has partition subdirs — compact each")
     fs.delete(tmp, true); fs.delete(old, true)
-    val src = spark.read.parquet(norm)
+    val src = Parquet.read(spark, norm)
     val shaped = clusterKey match {
       case Some(k) =>
         src.withColumn("__ck", k)

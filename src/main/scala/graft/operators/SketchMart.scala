@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.core.Pins
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,7 +74,7 @@ object SketchMart {
     val merged =
       if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) newSk
       else newSk.unionByName(
-          spark.read.parquet(dir).join(newSk.select("day"), Seq("day"), "left_semi"))
+          Parquet.read(spark, dir).join(newSk.select("day"), Seq("day"), "left_semi"))
         .groupBy("day")
         .agg(slice(array_sort(array_distinct(flatten(collect_list(col("mins"))))),
           1, k).as("mins"))
@@ -91,7 +92,7 @@ object SketchMart {
     */
   def mergedDistinct(spark: SparkSession, dir: String, k: Int,
                      period: Column, periodName: String): DataFrame =
-    spark.read.parquet(dir)
+    Parquet.read(spark, dir)
       .groupBy(period.as(periodName))
       .agg(slice(array_sort(array_distinct(flatten(collect_list(col("mins"))))),
         1, k).as("u"))
@@ -106,7 +107,7 @@ object SketchMart {
   def cumulativeDistinct(spark: SparkSession, dir: String, k: Int): DataFrame = {
     val w = Window.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spark.read.parquet(dir)
+    Parquet.read(spark, dir)
       .withColumn("u",
         slice(array_sort(array_distinct(flatten(collect_list(col("mins")).over(w)))),
           1, k))
@@ -185,7 +186,7 @@ object SketchMart {
   def mergedHistQuantiles(spark: SparkSession, dir: String, width: Double,
                           period: Column, periodName: String,
                           qs: Seq[Double]): DataFrame = {
-    val bins = spark.read.parquet(dir)
+    val bins = Parquet.read(spark, dir)
       .groupBy(period.as(periodName), col("bin"))
       .agg(sum(col("cnt")).as("cnt"))
     val byBin = Window.partitionBy(periodName).orderBy("bin")
@@ -244,7 +245,7 @@ object SketchMart {
   def cmEstimates(spark: SparkSession, dir: String, d: Int, w: Int,
                   probes: DataFrame, probeKey: String,
                   dayFilter: Column = lit(true)): DataFrame = {
-    val counters = spark.read.parquet(dir).filter(dayFilter)
+    val counters = Parquet.read(spark, dir).filter(dayFilter)
       .groupBy("r", "c").agg(sum("n").as("n"))
     val rc = probes.select(col(probeKey),
         explode(array((0 until d).map(r =>

@@ -3,7 +3,7 @@ package graft.queries
 import graft.core.Pins
 import graft.functions.{IvfIndex, TextFunctions => TF, VectorFunctions => VF}
 import graft.operators.{Bpe, Dedup, Multimodal, Packing, Sampling, SketchMart}
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -58,7 +58,7 @@ object TrainingQueries {
       coEngagementTop500Fresh(s, dir)
         .write.mode("overwrite").parquet(s"$root/top500")
     }
-    s.read.parquet(s"$root/top500")
+    Parquet.read(s, s"$root/top500")
   }
 
   /** The degree-ordered orientation of [[coEngagementTop500]] as a staged
@@ -75,7 +75,7 @@ object TrainingQueries {
         .orientedEdges(coEngagementTop500(s, dir), "ua", "ub")
         .write.mode("overwrite").parquet(s"$root/oriented500")
     }
-    s.read.parquet(s"$root/oriented500")
+    Parquet.read(s, s"$root/oriented500")
   }
 
   private[graft] def lpaLabels3Fresh(s: SparkSession, dir: String): DataFrame =
@@ -98,7 +98,7 @@ object TrainingQueries {
       lpaLabels3Fresh(s, dir)
         .write.mode("overwrite").parquet(s"$root/labels")
     }
-    s.read.parquet(s"$root/labels")
+    Parquet.read(s, s"$root/labels")
   }
 
   /** Deterministic scratch location for the IVF index of one source dir —
@@ -171,7 +171,7 @@ object TrainingQueries {
           Dedup.minhashCandidatePairs(existing, "doc_id", "text", n = 3, k = 8, bands = 4))
         .write.mode("overwrite").parquet(s"$root/mapping")
     }
-    (Dedup.loadNearDupIndex(s, root), s.read.parquet(s"$root/mapping"))
+    (Dedup.loadNearDupIndex(s, root), Parquet.read(s, s"$root/mapping"))
   }
 
   /** Staged survivor-id set for the curation gate: quality gate + corpus
@@ -187,7 +187,7 @@ object TrainingQueries {
     stageOnce(s, dir, root, probe = "ids") {
       curationSurvivorIds(s, dir).write.mode("overwrite").parquet(s"$root/ids")
     }
-    s.read.parquet(s"$root/ids")
+    Parquet.read(s, s"$root/ids")
   }
 
   /** The survivor-id build the staging amortizes: Gopher-rule quality

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.operators._
 import graft.queries.XdrFixture._
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1307,7 +1307,7 @@ object WarehouseQueries {
         .crossJoin(split.quarantine.agg(count(lit(1)).as("n_bad")))
         .write.mode("overwrite").parquet(res)
       split.release()
-      s.read.parquet(res)
+      Parquet.read(s, res)
     }),
 
     // D11: snapshot diff — classify every key added/removed/changed/
@@ -1340,7 +1340,7 @@ object WarehouseQueries {
         .filter(col("o_orderkey") % 2 =!= 0)
       v1.write.mode("overwrite").parquet(out)
       v2.write.mode("append").parquet(out)
-      s.read.option("mergeSchema", "true").parquet(out)
+      Parquet.read(s, Map("mergeSchema" -> "true"), out)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), sum(col("o_orderkey")).as("id_sum"))
     }),
@@ -1428,7 +1428,7 @@ object WarehouseQueries {
       val sub = t(s, dir, "orders").filter(col("o_orderstatus") === "O")
       graft.sinks.Sinks.truncateReplace(sub, src)
       graft.sinks.Sinks.copyTable(s, src, dst)
-      s.read.parquet(dst)
+      Parquet.read(s, dst)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("o_totalprice"))).cast("double").as("price_sum"),
@@ -1449,7 +1449,7 @@ object WarehouseQueries {
         Maintenance.dailyIncrement(ev, "ts", "2024-01-15")
           .withColumn("p_day", to_date(col("ts"))),
         sandbox, Seq.empty, clusterCols = Seq("event_type"))
-      s.read.parquet(sandbox)
+      Parquet.read(s, sandbox)
         .groupBy(col("p_day").as("day"))
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("value"))).cast("double").as("value_sum"),
@@ -1481,7 +1481,7 @@ object WarehouseQueries {
       val sub = t(s, dir, "customer").filter(col("c_custkey") % 3 === 0)
       graft.sinks.Sinks.truncateReplace(sub, src)
       val v1 = graft.sinks.Sinks.snapshot(s, src, root, "v1")
-      s.read.parquet(v1)
+      Parquet.read(s, v1)
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("c_acctbal"))).cast("double").as("bal_sum"),
@@ -1612,7 +1612,7 @@ object WarehouseQueries {
         load()
         if (i == 1) load() // retried chunk: same batch, same partitions, no-op
       }
-      s.read.parquet(wh)
+      Parquet.read(s, wh)
         .groupBy(col("p_day"))
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("value"))).cast("double").as("value_sum"),
@@ -1634,7 +1634,7 @@ object WarehouseQueries {
       AsOfJoin.scd2Intervals(ev.filter(col("ts") < cut),
           Seq("user_id"), "ts", Seq("event_id"))
         .write.mode("overwrite").parquet(store)
-      MergeOps.scd2Merge(s.read.parquet(store), ev.filter(col("ts") >= cut),
+      MergeOps.scd2Merge(Parquet.read(s, store), ev.filter(col("ts") >= cut),
           Seq("user_id"), "ts", Seq("event_id"))
         .select("user_id", "event_id", "value", "valid_from", "valid_to")
     }),
@@ -1673,7 +1673,7 @@ object WarehouseQueries {
       graft.sinks.Sinks.sandboxCtas(t(s, dir, "events"), box, "ts", 600)
       new DelIns.Warehouse(s, box, Seq("p_day"))
         .expirePartitions("2024-01-10", "p_day")
-      s.read.parquet(box)
+      Parquet.read(s, box)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("value"))).cast("double").as("value_sum"),
@@ -1716,7 +1716,7 @@ object WarehouseQueries {
       graft.sinks.Sinks.partitionedAppend(
         o.filter(col("o_orderkey") % 2 === 1), tbl,
         Seq("p_month"), clusterCols = Seq("o_custkey"))
-      s.read.parquet(tbl)
+      Parquet.read(s, tbl)
         .groupBy(col("p_month"))
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("o_totalprice"))).cast("double").as("price_sum"),
@@ -1732,7 +1732,7 @@ object WarehouseQueries {
       val c = t(s, dir, "customer")
       graft.sinks.Sinks.truncateReplace(c.filter(col("c_custkey") % 2 === 0), tbl)
       graft.sinks.Sinks.truncateReplace(c.filter(col("c_custkey") % 7 === 0), tbl)
-      s.read.parquet(tbl)
+      Parquet.read(s, tbl)
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("c_acctbal"))).cast("double").as("bal_sum"),
@@ -1766,7 +1766,7 @@ object WarehouseQueries {
       Maintenance.truncate(s, tbl)
       graft.sinks.Sinks.partitionedAppend(
         sup.filter(col("s_suppkey") % 2 === 1), tbl, Seq.empty)
-      s.read.parquet(tbl)
+      Parquet.read(s, tbl)
         .groupBy(col("s_nationkey"))
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("s_acctbal"))).cast("double").as("bal_sum"),
@@ -1790,7 +1790,7 @@ object WarehouseQueries {
         graft.core.BatchId("run1", "ledgers"), w1, 100L, 200L, "ledgers")
       Maintenance.appendRunStats(s, ledger,
         graft.core.BatchId("run2", "ledgers"), w2, 200L, 300L, "ledgers")
-      s.read.parquet(ledger)
+      Parquet.read(s, ledger)
         .select(col("batch_id"), col("batch_run_date"),
           col("start_ledger"), col("end_ledger"), col("table_name"))
     }),
@@ -1816,7 +1816,7 @@ object WarehouseQueries {
         StructField("o_orderstatus", StringType),
         StructField("o_totalprice", DoubleType)))
       graft.sources.Csv.loadLatest(s, schema, inbox, "partner_", target)
-      s.read.parquet(target)
+      Parquet.read(s, target)
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("o_totalprice"))).cast("double").as("price_sum"),
@@ -2939,7 +2939,7 @@ object WarehouseQueries {
             sum(dec2(col("value"))).cast("double").as("value_sum"))
       IncrementalMart.full(seed, mart, martFn)
       IncrementalMart.refresh(s, seed.unionByName(batch), mart, batch, "ts", martFn)
-      s.read.parquet(mart).select("day", "event_type", "n", "value_sum")
+      Parquet.read(s, mart).select("day", "event_type", "n", "value_sum")
     }),
 
     // dbt-test surface through the gate: singular + recency checks over

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -56,7 +57,7 @@ object Sinks {
 
   /** K5: table copy. */
   def copyTable(spark: SparkSession, srcPath: String, dstPath: String): Unit =
-    truncateReplace(spark.read.parquet(srcPath), dstPath)
+    truncateReplace(Parquet.read(spark, srcPath), dstPath)
 
   /** K6: snapshot clone — versioned directory copies in lieu of BigQuery's
     * `CLONE ... FOR SYSTEM_TIME AS OF` (reference

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.sources.Parquet
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -385,7 +386,7 @@ object VersionedTable {
       .getOrElse(sys.error(s"VersionedTable: no versions at $root"))
     val files = readManifest(f, root, v)
     require(files.nonEmpty, s"VersionedTable: empty manifest $root v$v")
-    spark.read.parquet(files: _*)
+    Parquet.read(spark, files: _*)
   }
 
   /** METADATA-ONLY clone of `srcRoot` at `version` into `dstRoot`: the
@@ -425,7 +426,7 @@ object VersionedTable {
     val removed = (before -- after).toSeq.sorted
     def tagged(files: Seq[String], op: String): Option[DataFrame] =
       if (files.isEmpty) None
-      else Some(spark.read.parquet(files: _*).withColumn("_change_type", lit(op)))
+      else Some(Parquet.read(spark, files: _*).withColumn("_change_type", lit(op)))
     (tagged(added, "insert"), tagged(removed, "delete")) match {
       case (Some(i), Some(d)) => i.unionByName(d)
       case (Some(i), None)    => i

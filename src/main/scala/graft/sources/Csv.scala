@@ -29,6 +29,6 @@ object Csv {
     graft.operators.Maintenance.latestFileByPrefix(spark, dir, prefix).map { f =>
       val df = read(spark, schema, f)
       graft.sinks.Sinks.truncateReplace(df, targetPath)
-      spark.read.parquet(targetPath).count()
+      Parquet.read(spark, targetPath).count()
     }
 }

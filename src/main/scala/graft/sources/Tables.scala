@@ -20,14 +20,14 @@ object Tables {
     val path = s"$sfDir/$name.parquet"
     name match {
       case "events" => readEvents(spark, path)
-      case _        => spark.read.parquet(path)
+      case _        => Parquet.read(spark, path)
     }
   }
 
   private def readEvents(spark: SparkSession, path: String): DataFrame = {
     // Spark can't represent TIMESTAMP(NANOS) natively: the session reads
     // it as the raw int64 (GraftSession.tune), truncated to micros here
-    val raw = spark.read.parquet(path)
+    val raw = Parquet.read(spark, path)
     val tsType = raw.schema("ts").dataType.typeName
     if (tsType == "long")
       // integer div, not double div: ns values ~1.7e18 exceed double's 2^53

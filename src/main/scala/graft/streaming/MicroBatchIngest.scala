@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.core.{Batch, BatchId, BatchWindow}
 import graft.operators.DelIns
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
@@ -112,7 +113,7 @@ object MicroBatchIngest {
     // tracks the newest version THIS run wrote, for the return value only
     @volatile var lastWritten: Option[String] = None
     Drain.run(changes, checkpoint) { (batch: DataFrame, batchId: Long) =>
-      val prev = Drain.stateBefore(spark, stateRoot, batchId).map(spark.read.parquet(_))
+      val prev = Drain.stateBefore(spark, stateRoot, batchId).map(Parquet.read(spark, _))
       val union = prev.fold(batch)(_.unionByName(batch))
       val next = graft.operators.CurrentState
         .lastByKeyAgg(union, keys, Seq(versionCol))

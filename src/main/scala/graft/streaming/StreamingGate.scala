@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.core.{GraftSession, Pins}
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 import graft.typed.Event
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -119,7 +119,7 @@ object StreamingGate {
     drain(MicroBatchIngest.sessionize(stream, gap), out, ck)
     def back(c: String) =
       (if (tsWasNtz) col(c).cast(TimestampNTZType) else col(c)).as(c)
-    spark.read.parquet(out)
+    Parquet.read(spark, out)
       .filter(col("start_ts") < lit(flushTs))
       .select(col("user_id"), back("start_ts"), back("end_ts"), col("n_events"))
   }
@@ -136,7 +136,7 @@ object StreamingGate {
     val ck = scratch("dd_ck", dir)
     val stream = stage(spark, ev.unionByName(redelivered), in)
     drain(MicroBatchIngest.streamingDedup(stream, "ts", Seq("event_id")), out, ck)
-    spark.read.parquet(out)
+    Parquet.read(spark, out)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 2))).cast("double").as("value_sum"),
@@ -170,7 +170,7 @@ object StreamingGate {
     val ck = scratch("wc_ck", dir)
     val stream = stage(spark, ev.unionByName(flush), in)
     drain(MicroBatchIngest.windowedCounts(stream, "ts", "event_type"), out, ck)
-    spark.read.parquet(out)
+    Parquet.read(spark, out)
       .filter(col("window.start") < lit(flushTs))
       .select(
         (if (tsWasNtz) col("window.start").cast(TimestampNTZType)
@@ -194,7 +194,7 @@ object StreamingGate {
     val stream = stage(spark, pairs.toDF(), in).as[(String, String)]
     drain(MicroBatchIngest.streamingDistinctEstimate(stream, k), out, ck,
       withBatchId = true, outputMode = "update")
-    spark.read.parquet(out)
+    Parquet.read(spark, out)
       .groupBy(col("key"))
       .agg(max_by(struct(col("n_distinct_capped"), col("est_distinct")),
         col("__batch")).as("fin"))
@@ -232,7 +232,7 @@ object StreamingGate {
     val stream = stageSlices(spark, seed.unionByName(changes), 4, in)
     val fin = MicroBatchIngest.mergeDrain(
       stream, Seq("o_orderkey"), "version", state, ck)
-    spark.read.parquet(fin)
+    Parquet.read(spark, fin)
       .filter(!col("deleted"))
       .select(col("o_orderkey"),
         col("o_totalprice").cast(DecimalType(18, 2)).cast("double").as("totalprice"),
@@ -253,7 +253,7 @@ object StreamingGate {
     val p = stage(spark, ev.filter(col("event_type") === "purchase"), inP)
     val c = stage(spark, ev.filter(col("event_type") === "click"), inC)
     drain(MicroBatchIngest.streamStreamAttribution(p, c), out, ck)
-    spark.read.parquet(out)
+    Parquet.read(spark, out)
       .select(col("user_id"), col("p_id"), col("c_id"), col("p_ts"), col("c_ts"))
   }
 
@@ -316,10 +316,10 @@ object StreamingGate {
       if (!b.isEmpty)
         graft.operators.Dedup.ingestDeltaCrawl(
           b, "doc_id", "text", idxRoot,
-          spark.read.parquet(mappingBefore(id)), s"$mapRoot/state_v$id",
+          Parquet.read(spark, mappingBefore(id)), s"$mapRoot/state_v$id",
           txnId = s"batch-$id")
     }
-    spark.read.parquet(mappingBefore(Long.MaxValue))
+    Parquet.read(spark, mappingBefore(Long.MaxValue))
   }
 
   /** Streaming weighted (priority) sampling drained per key: documents
@@ -349,13 +349,13 @@ object StreamingGate {
     scopedDrain(stream, ck) { (b: DataFrame, id: Long) =>
       if (!b.isEmpty)
         Sampling.priorityCandidatesPerKey(
-            spark.read.parquet(stateBefore(id)).unionByName(
+            Parquet.read(spark, stateBefore(id)).unionByName(
               b.select(col("lang"), col("doc_id"), col("n_chars"))),
             "lang", "doc_id", "n_chars", k = 20)
           .write.mode("overwrite").parquet(s"$stateRoot/state_v$id")
     }
     Sampling.prioritySamplePerKey(
-        spark.read.parquet(stateBefore(Long.MaxValue)),
+        Parquet.read(spark, stateBefore(Long.MaxValue)),
         "lang", "doc_id", "n_chars", k = 20)
       .select(col("lang"), col("doc_id"),
         col("n_chars").cast("long").as("weight"),
@@ -396,11 +396,11 @@ object StreamingGate {
     val stateBefore = stateOrSeed(spark, store) _
     scopedDrain(stream, ck) { (b: DataFrame, id: Long) =>
       if (!b.isEmpty)
-        MergeOps.scd2Merge(spark.read.parquet(stateBefore(id)), b,
+        MergeOps.scd2Merge(Parquet.read(spark, stateBefore(id)), b,
             Seq("user_id"), "ts", Seq("event_id"))
           .write.mode("overwrite").parquet(s"$store/state_v$id")
     }
-    spark.read.parquet(stateBefore(Long.MaxValue))
+    Parquet.read(spark, stateBefore(Long.MaxValue))
       .select("user_id", "event_id", "value", "valid_from", "valid_to")
   }
 
@@ -520,7 +520,7 @@ object StreamingGate {
     val stream = stage(spark, pairs.toDF(), in).as[(Long, String)]
     drain(MicroBatchIngest.streamingHeavyHitters(stream, k = 8), out, ck,
       withBatchId = true, outputMode = "update")
-    spark.read.parquet(out)
+    Parquet.read(spark, out)
       .groupBy(col("_1").as("user_id"))
       .agg(max_by(col("_2"), col("__batch")).as("items"))
       .select(col("user_id"), posexplode(slice(col("items"), 1, 3)).as(Seq("r0", "e")))
@@ -677,7 +677,7 @@ object StreamingGate {
     Pins.release(sf)
     val stream = stageSlices(spark, docs, 2, in)
     // the frozen model is one lazy 64-row scan reused by every batch
-    val w = spark.read.parquet(model)
+    val w = Parquet.read(spark, model)
     scopedDrain(stream, ck) { (b: DataFrame, id: Long) =>
       graft.sinks.VersionedTable.commitBatch(
         QualityClassifier.score(
@@ -713,7 +713,7 @@ object StreamingGate {
     IvfIndex.build(existing, nlist = 16, base)
     val stream = stageSlices(spark, delta, 2, in)
     // frozen centroids: one lazy 16-row scan reused by every batch
-    val cents = spark.read.parquet(s"$base/centroids")
+    val cents = Parquet.read(spark, s"$base/centroids")
     scopedDrain(stream, ck) { (b: DataFrame, id: Long) =>
       val asn = IvfIndex.assign(b, cents, "vec_id", "embedding")
       graft.sinks.VersionedTable.commitBatch(
@@ -724,7 +724,7 @@ object StreamingGate {
     }
     val cells = IvfIndex.probedCells(spark, base, q, nprobe = 4)
     val cols = Seq("vec_id", "label", "embedding", "cell").map(col)
-    val scan = spark.read.parquet(s"$base/index").select(cols: _*)
+    val scan = Parquet.read(spark, s"$base/index").select(cols: _*)
       .unionByName(graft.sinks.VersionedTable.read(spark, idx)
         .select(cols: _*))
       .filter(col("cell").isin(cells: _*))
@@ -854,7 +854,7 @@ object StreamingGate {
     val ck = scratch("xdrops_ck", dir)
     val stream = stage(spark, fixture, in)
     drain(graft.queries.WarehouseQueries.txOpsProject(stream), out, ck)
-    spark.read.parquet(out)
+    Parquet.read(spark, out)
   }
 
   /** State-change ingest IN-STREAM: LedgerEntry wire records (the
@@ -874,7 +874,7 @@ object StreamingGate {
     val ck = scratch("ldgent_ck", dir)
     val stream = stage(spark, fixture, in)
     drain(graft.queries.WarehouseQueries.ledgerEntryProject(stream), out, ck)
-    spark.read.parquet(out)
+    Parquet.read(spark, out)
   }
 
   val queries: Map[String, QFn] = Map(

@@ -3,7 +3,7 @@ package graft.tools
 import graft.core.{GraftSession, Pins}
 import graft.operators.{Dedup, LinkAnalysis, Multimodal}
 import graft.queries.WarehouseQueries
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.ListMap
@@ -21,7 +21,7 @@ object Scale {
     * the replicated documents or embeddings. */
   final class Ctx(val spark: SparkSession, val sfDir: String, val mult: Int, val rec: Probe.Recorder) {
     val cores: Int = spark.sparkContext.defaultParallelism
-    lazy val base: DataFrame = spark.read.parquet(s"$sfDir/documents.parquet")
+    lazy val base: DataFrame = Parquet.read(spark, s"$sfDir/documents.parquet")
     lazy val nBase: Long = base.count()
     lazy val big: DataFrame = {
       val b = replicate(base.select("doc_id", "text", "lang", "n_chars"), mult, "doc_id" -> IdShift)
@@ -29,7 +29,7 @@ object Scale {
       b
     }
     lazy val events: DataFrame = Tables.load(spark, sfDir, "events")
-    lazy val emb: DataFrame = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    lazy val emb: DataFrame = Parquet.read(spark, s"$sfDir/embeddings.parquet")
     lazy val bigEmb: DataFrame =
       replicate(emb.select("vec_id", "embedding", "label"), mult, "vec_id" -> IdShift)
 
@@ -222,12 +222,12 @@ object Scale {
       val crawl = base.select((col("doc_id") + lit(m.toLong * IdShift)).as("doc_id"), col("text"))
       val (_, dt) = timed(f"  crawl $m%2d (index ${m}x base)") {
         Dedup.ingestDeltaCrawl(crawl, "doc_id", "text", s"$tmp/idx",
-          spark.read.parquet(s"$tmp/m${m - 1}"), s"$tmp/m$m", txnId = s"crawl-$m")
+          Parquet.read(spark, s"$tmp/m${m - 1}"), s"$tmp/m$m", txnId = s"crawl-$m")
       }
       spark.catalog.clearCache()
       dt
     }
-    val nFinal = spark.read.parquet(s"$tmp/m${mult - 1}").count()
+    val nFinal = Parquet.read(spark, s"$tmp/m${mult - 1}").count()
     println(f"[scale] crawlstream: first ${walls.head}%.2f s, " +
       f"last ${walls.last}%.2f s (index grew ${mult - 1}x), mapping rows=$nFinal")
   }

@@ -70,6 +70,26 @@ class MicroBatchIngestSpec extends SparkSpec {
       .select("batch_insert_ts").distinct().count() == 1)
   }
 
+  test("a second drain of the same window compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val schema = SchemaRegistry.fromJson(schemaJson)
+    // each drain is a new streaming query on a cloned session; its tasks
+    // must find the classes the first drain generated
+    def drain(tag: String): Long = {
+      val root = Files.createTempDirectory(s"stream_codegen_$tag").toString
+      val in = s"$root/in"; Files.createDirectories(java.nio.file.Paths.get(in))
+      Files.writeString(java.nio.file.Paths.get(s"$in/100-200-ledgers.txt"),
+        """{"sequence": 100, "closed_at": "2026-01-13T00:05:07Z"}
+          |{"sequence": 101, "closed_at": "2026-01-13T00:05:12Z"}""".stripMargin)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      MicroBatchIngest.runAvailableNow(spark, schema, s"$in/*.txt",
+        s"$root/wh", s"$root/ckpt", "run1", "ledgers", window)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    drain("first")
+    assert(drain("second") == 0L)
+  }
+
   test("NTZ ingest proof: batch_run_date lands TIMESTAMP_NTZ and del-ins " +
       "delete predicates match NTZ batches byte-identically") {
     import org.apache.spark.sql.types.TimestampNTZType

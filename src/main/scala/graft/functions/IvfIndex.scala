@@ -64,9 +64,8 @@ object IvfIndex {
     * codes. All corpus columns pass through, so the query path needs no
     * join back to the source table.
     */
-  def build(corpus: DataFrame, nlist: Int, dir: String,
-            idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    validateSeeds(corpus, nlist, idCol)
+  def build(corpus: DataFrame, nlist: Int, dir: String): Unit = {
+    validateSeeds(corpus, nlist, "vec_id")
     val spark = corpus.sparkSession
     // drop the whole index dir first: under dynamic partition-overwrite
     // (which the warehouse paths enable transiently, and any caller might
@@ -75,12 +74,12 @@ object IvfIndex {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-    val cents = seedCentroids(corpus, nlist, idCol, vecCol)
+    val cents = seedCentroids(corpus, nlist, "vec_id", "embedding")
     cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    val asn = assign(corpus, cents, idCol, vecCol)
-    corpus.join(asn, idCol)
-      .withColumn("sc", VF.quantScale(col(vecCol)))
-      .withColumn("q8", VF.quantize(col(vecCol), col("sc")))
+    val asn = assign(corpus, cents, "vec_id", "embedding")
+    corpus.join(asn, "vec_id")
+      .withColumn("sc", VF.quantScale(col("embedding")))
+      .withColumn("q8", VF.quantize(col("embedding"), col("sc")))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/index")
   }
 
@@ -95,13 +94,12 @@ object IvfIndex {
     * rebuild action — drifted centroids degrade recall, not correctness,
     * exactly as in any IVF deployment.
     */
-  def appendDelta(spark: SparkSession, dir: String, delta: DataFrame,
-                  idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+  def appendDelta(spark: SparkSession, dir: String, delta: DataFrame): Unit = {
     val cents = Parquet.read(spark, s"$dir/centroids")
-    val asn = assign(delta, cents, idCol, vecCol)
-    delta.join(asn, idCol)
-      .withColumn("sc", VF.quantScale(col(vecCol)))
-      .withColumn("q8", VF.quantize(col(vecCol), col("sc")))
+    val asn = assign(delta, cents, "vec_id", "embedding")
+    delta.join(asn, "vec_id")
+      .withColumn("sc", VF.quantScale(col("embedding")))
+      .withColumn("q8", VF.quantize(col("embedding"), col("sc")))
       .write.mode("append").partitionBy("cell").parquet(s"$dir/index")
   }
 
@@ -111,9 +109,9 @@ object IvfIndex {
     * corpus size (it scales with nlist, not rows).
     */
   def probedCells(spark: SparkSession, dir: String, queryVec: DataFrame,
-                  nprobe: Int, vecCol: String = "embedding"): Seq[Long] = {
+                  nprobe: Int): Seq[Long] = {
     Parquet.read(spark, s"$dir/centroids")
-      .crossJoin(broadcast(queryVec.select(col(vecCol).as("__qv"))))
+      .crossJoin(broadcast(queryVec.select(col("embedding").as("__qv"))))
       .withColumn("qc", round(VF.cosineNative(col("cvec"), col("__qv")), 6))
       .orderBy(col("qc").desc, col("cid"))
       .limit(nprobe)
@@ -126,24 +124,21 @@ object IvfIndex {
     * (PlanAuditSpec asserts this).
     */
   def topK(spark: SparkSession, dir: String, queryVec: DataFrame,
-           k: Int, nprobe: Int,
-           idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cells = probedCells(spark, dir, queryVec, nprobe, vecCol)
+           k: Int, nprobe: Int): DataFrame = {
+    val cells = probedCells(spark, dir, queryVec, nprobe)
     topKOver(Parquet.read(spark, s"$dir/index")
-      .filter(col("cell").isin(cells: _*)), queryVec, k, idCol, vecCol)
+      .filter(col("cell").isin(cells: _*)), queryVec, k)
   }
 
   /** The ranking half of [[topK]] over an ALREADY-ASSEMBLED probed scan
     * (e.g. base index ∪ a streamed delta index) — ONE definition of the
     * ranking contract (round cos to 6, tie-break by id, TakeOrdered k)
     * so every probe path ranks identically. */
-  def topKOver(scan: DataFrame, queryVec: DataFrame, k: Int,
-               idCol: String = "vec_id",
-               vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(queryVec.select(col(vecCol).as("__qv")))
+  def topKOver(scan: DataFrame, queryVec: DataFrame, k: Int): DataFrame = {
+    val q = broadcast(queryVec.select(col("embedding").as("__qv")))
     scan.crossJoin(q)
-      .withColumn("cos", round(VF.cosineNative(col(vecCol), col("__qv")), 6))
-      .orderBy(col("cos").desc, col(idCol))
+      .withColumn("cos", round(VF.cosineNative(col("embedding"), col("__qv")), 6))
+      .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
   }
 
@@ -152,12 +147,11 @@ object IvfIndex {
     * reads a quarter of the float bytes and multiplies integers.
     */
   def topKQuant(spark: SparkSession, dir: String, queryVec: DataFrame,
-                k: Int, nprobe: Int,
-                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cells = probedCells(spark, dir, queryVec, nprobe, vecCol)
+                k: Int, nprobe: Int): DataFrame = {
+    val cells = probedCells(spark, dir, queryVec, nprobe)
     val q = broadcast(
-      queryVec.withColumn("scref", VF.quantScale(col(vecCol)))
-        .select(VF.quantize(col(vecCol), col("scref")).as("qref"), col("scref")))
+      queryVec.withColumn("scref", VF.quantScale(col("embedding")))
+        .select(VF.quantize(col("embedding"), col("scref")).as("qref"), col("scref")))
     Parquet.read(spark, s"$dir/index")
       .filter(col("cell").isin(cells: _*))
       .crossJoin(q)
@@ -171,7 +165,7 @@ object IvfIndex {
         when(col("sc") === 0.0 || col("scref") === 0.0, lit(0.0))
           .otherwise(round(
             col("dp").cast("double") / (col("sc") * col("scref")), 3)))
-      .orderBy(desc("score"), col(idCol))
+      .orderBy(desc("score"), col("vec_id"))
       .limit(k)
   }
 
@@ -181,19 +175,18 @@ object IvfIndex {
     * native float expression (corpus x query are both float vectors).
     */
   def topKWithCentroids(corpus: DataFrame, centroids: DataFrame, queryVec: DataFrame,
-                        k: Int, nprobe: Int,
-                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val asn = assign(corpus, centroids, idCol, vecCol, nativeCosine = false)
-    val q = broadcast(queryVec.select(col(vecCol).as("__qv")))
+                        k: Int, nprobe: Int): DataFrame = {
+    val asn = assign(corpus, centroids, "vec_id", "embedding", nativeCosine = false)
+    val q = broadcast(queryVec.select(col("embedding").as("__qv")))
     val probed = broadcast(centroids.crossJoin(q)
       .withColumn("qc", round(VF.cosine(col("cvec"), col("__qv")), 6))
       .orderBy(col("qc").desc, col("cid"))
       .limit(nprobe)
       .select(col("cid").as("cell")))
-    corpus.join(asn.join(probed, "cell"), idCol)
+    corpus.join(asn.join(probed, "cell"), "vec_id")
       .crossJoin(q)
-      .withColumn("cos", round(VF.cosineNative(col(vecCol), col("__qv")), 6))
-      .orderBy(col("cos").desc, col(idCol))
+      .withColumn("cos", round(VF.cosineNative(col("embedding"), col("__qv")), 6))
+      .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
   }
 
@@ -217,13 +210,12 @@ object IvfIndex {
   /** Seed codebooks: (u, j, cvec) — subspace u's codeword j is dims
     * [u*dsub, (u+1)*dsub) of the vector with id j.
     */
-  def pqCodebooks(corpus: DataFrame, m: Int, dsub: Int, ksub: Int,
-                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    validateSeeds(corpus, ksub, idCol)
-    corpus.filter(col(idCol) < ksub)
-      .select(col(idCol).as("j"), explode(array((0 until m).map(u =>
+  def pqCodebooks(corpus: DataFrame, m: Int, dsub: Int, ksub: Int): DataFrame = {
+    validateSeeds(corpus, ksub, "vec_id")
+    corpus.filter(col("vec_id") < ksub)
+      .select(col("vec_id").as("j"), explode(array((0 until m).map(u =>
         struct(lit(u).as("u"),
-          transform(slice(col(vecCol), u * dsub + 1, dsub), _.cast("double"))
+          transform(slice(col("embedding"), u * dsub + 1, dsub), _.cast("double"))
             .as("cvec"))): _*)).as("s"))
       .select(col("s.u").as("u"), col("j"), col("s.cvec").as("cvec"))
   }
@@ -233,19 +225,18 @@ object IvfIndex {
     * (rows x m), a broadcast join against the m x ksub codebook, two
     * hash aggregates — no shuffle of vector data beyond the code rows.
     */
-  def pqCodes(corpus: DataFrame, codebooks: DataFrame, m: Int, dsub: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    corpus.select(col(idCol), explode(array((0 until m).map(u =>
-        struct(lit(u).as("u"), slice(col(vecCol), u * dsub + 1, dsub).as("sv"))): _*)).as("s"))
-      .select(col(idCol), col("s.u").as("u"), col("s.sv").as("sv"))
+  def pqCodes(corpus: DataFrame, codebooks: DataFrame, m: Int, dsub: Int): DataFrame =
+    corpus.select(col("vec_id"), explode(array((0 until m).map(u =>
+        struct(lit(u).as("u"), slice(col("embedding"), u * dsub + 1, dsub).as("sv"))): _*)).as("s"))
+      .select(col("vec_id"), col("s.u").as("u"), col("s.sv").as("sv"))
       .join(broadcast(codebooks), "u")
       .withColumn("l2", round(aggregate(
         zip_with(col("sv"), col("cvec"),
           (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
         lit(0.0), _ + _), 6))
-      .groupBy(col(idCol), col("u"))
+      .groupBy(col("vec_id"), col("u"))
       .agg(min(struct(col("l2"), col("j"))).getField("j").as("code"))
-      .groupBy(col(idCol))
+      .groupBy(col("vec_id"))
       .agg(transform(sort_array(collect_list(struct(col("u"), col("code")))),
         _.getField("code")).as("codes"))
 
@@ -255,27 +246,26 @@ object IvfIndex {
     * touches only (id, codes).
     */
   def pqTopK(corpus: DataFrame, codes: DataFrame, codebooks: DataFrame,
-             queryVec: DataFrame, k: Int, m: Int, dsub: Int,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+             queryVec: DataFrame, k: Int, m: Int, dsub: Int): DataFrame = {
     val lut = codebooks
-      .crossJoin(broadcast(queryVec.select(col(vecCol).as("__qv"))))
+      .crossJoin(broadcast(queryVec.select(col("embedding").as("__qv"))))
       .withColumn("s6", round(aggregate(
         zip_with(slice(col("__qv"), col("u") * dsub + 1, lit(dsub)), col("cvec"),
           (x, c) => x.cast("double") * c),
         lit(0.0), _ + _) * 1e6).cast("long"))
       .select(col("u"), col("j"), col("s6"))
     val adc = codes
-      .select(col(idCol), posexplode(col("codes")).as(Seq("cu", "code")))
+      .select(col("vec_id"), posexplode(col("codes")).as(Seq("cu", "code")))
       .join(broadcast(lut), col("cu") === col("u") && col("code") === col("j"))
-      .groupBy(col(idCol))
+      .groupBy(col("vec_id"))
       .agg(round(sum(col("s6")).cast("double") / 1e6, 3).as("score"))
     // metadata columns (label here) pass through when present — a
     // hardcoded col("label") would break every external corpus without
     // one at analysis time
     val passthrough = corpus.columns.filter(_ == "label").map(col).toSeq
-    corpus.select((col(idCol) +: passthrough): _*)
-      .join(adc, idCol)
-      .orderBy(col("score").desc, col(idCol))
+    corpus.select((col("vec_id") +: passthrough): _*)
+      .join(adc, "vec_id")
+      .orderBy(col("score").desc, col("vec_id"))
       .limit(k)
   }
 
@@ -290,18 +280,17 @@ object IvfIndex {
     * rows.
     */
   def pqRerankTopK(corpus: DataFrame, codes: DataFrame, codebooks: DataFrame,
-                   queryVec: DataFrame, k: Int, shortlist: Int, m: Int, dsub: Int,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                   queryVec: DataFrame, k: Int, shortlist: Int, m: Int, dsub: Int): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val short = pqTopK(corpus, codes, codebooks, queryVec, shortlist, m, dsub,
-      idCol, vecCol).select(col(idCol))
+    val short = pqTopK(corpus, codes, codebooks, queryVec, shortlist, m, dsub)
+      .select(col("vec_id"))
     val passthrough = corpus.columns.filter(_ == "label").map(col).toSeq
-    corpus.join(broadcast(short), idCol)
-      .crossJoin(broadcast(queryVec.select(col(vecCol).as("__qv"))))
+    corpus.join(broadcast(short), "vec_id")
+      .crossJoin(broadcast(queryVec.select(col("embedding").as("__qv"))))
       .withColumn("cos",
-        round(VectorFunctions.cosineNative(col(vecCol), col("__qv")), 6))
-      .select((col(idCol) +: passthrough) :+ col("cos"): _*)
-      .orderBy(col("cos").desc, col(idCol))
+        round(VectorFunctions.cosineNative(col("embedding"), col("__qv")), 6))
+      .select((col("vec_id") +: passthrough) :+ col("cos"): _*)
+      .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
   }
 
@@ -317,19 +306,18 @@ object IvfIndex {
     * Shape at scale: one posexplode (rows x dims), two hash aggregates per
     * round — the canonical distributed k-means step.
     */
-  def lloydCentroids(corpus: DataFrame, nlist: Int, iters: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def lloydCentroids(corpus: DataFrame, nlist: Int, iters: Int): DataFrame = {
     val spark = corpus.sparkSession
-    var cents = seedCentroids(corpus, nlist, idCol, vecCol)
+    var cents = seedCentroids(corpus, nlist, "vec_id", "embedding")
       .select(col("cid"), transform(col("cvec"), _.cast("double")).as("cvec"))
     for (_ <- 1 to iters) {
-      val asn = assign(corpus, cents, idCol, vecCol, nativeCosine = false)
+      val asn = assign(corpus, cents, "vec_id", "embedding", nativeCosine = false)
       val members = corpus
-        .select(col(idCol), posexplode(col(vecCol)).as(Seq("dim", "val")))
-        .join(asn, idCol)
+        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "val")))
+        .join(asn, "vec_id")
       val next = members.groupBy(col("cell"), col("dim"))
         .agg(sort_array(collect_list(
-          struct(col(idCol).as("i"), col("val").cast("double").as("v")))).as("vs"))
+          struct(col("vec_id").as("i"), col("val").cast("double").as("v")))).as("vs"))
         .select(col("cell"), col("dim"),
           round(
             aggregate(col("vs"), lit(0.0), (acc, s) => acc + s.getField("v")) /

@@ -189,10 +189,6 @@ object TextFunctions {
           element_at(toks, i + 1).as("w2"))))
       .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
 
-  /** Convenience for single-expression contexts (tests, small inputs):
-    * tokenizes inline — see [[bigramsFromTokens]] for the hot path. */
-  def bigrams(text: Column): Column = bigramsFromTokens(tokens(lower(text)))
-
   // ---- chunking -----------------------------------------------------------
 
   /** Fixed-size character chunking with stride (overlap = size - stride):
@@ -255,9 +251,10 @@ object TextFunctions {
     * sort of the corpus.
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
-               queryTerms: Seq[String], k: Int = 10,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame = Pins.scope {
+               queryTerms: Seq[String], k: Int = 10): DataFrame = Pins.scope {
     require(queryTerms.nonEmpty, "BM25 needs at least one query term")
+    // the standard Okapi constants
+    val (k1, b) = (1.2, 0.75)
     // set semantics on the query (the pre-rewrite isin+groupBy behavior):
     // a duplicated term must not double its df or sum its weight twice
     val terms = queryTerms.distinct

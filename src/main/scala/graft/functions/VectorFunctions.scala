@@ -64,13 +64,12 @@ object VectorFunctions {
     * pass over the corpus followed by a k-row reduction — the exact-answer
     * baseline every ANN variant is judged against.
     */
-  def bruteForceTopK(corpus: DataFrame, queryVec: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(queryVec.select(col(vecCol).as("__qv")))
+  def bruteForceTopK(corpus: DataFrame, queryVec: DataFrame, k: Int): DataFrame = {
+    val q = broadcast(queryVec.select(col("embedding").as("__qv")))
     corpus.crossJoin(q)
-      .withColumn("cos", round(cosineNative(col(vecCol), col("__qv")), 6))
+      .withColumn("cos", round(cosineNative(col("embedding"), col("__qv")), 6))
       .drop("__qv")
-      .orderBy(col("cos").desc, col(idCol))
+      .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
   }
 
@@ -91,28 +90,14 @@ object VectorFunctions {
     ((digest(0) >> 4) & 0xf) - 7.5
   }
 
-  /** Native single-node signature (graft.plans.HyperplaneSig). The
-    * composable variant below is bit-identical but builds a planes*dims-term
-    * expression tree whose one-time Catalyst+Janino cost is minutes at
-    * 4x64; the native node plans in constant time and fuses into one loop.
+  /** Native single-node signature (graft.plans.HyperplaneSig). A
+    * builtin-only formulation (HyperplaneSigSpec keeps one as its
+    * reference) is bit-identical but builds a planes*dims-term expression
+    * tree whose one-time Catalyst+Janino cost is minutes at 4x64; the
+    * native node plans in constant time and fuses into one loop.
     */
   def hyperplaneSig(vec: Column, planes: Int, dims: Int): Column =
     call_function("graft_hplane_sig", vec, lit(planes), lit(dims))
-
-  /** Reference formulation from builtin functions only — used by the spec
-    * that proves the native expression bit-equal, and by sessions without
-    * the graft function registry.
-    */
-  def hyperplaneSigComposable(vec: Column, planes: Int, dims: Int): Column = {
-    val bits = (0 until planes).map { p =>
-      val terms = (0 until dims).map { d =>
-        vec.getItem(d).cast("double") * lit(planeWeight(p, d))
-      }
-      val proj = terms.reduce(_ + _)
-      when(proj >= 0, lit(1)).otherwise(lit(0)).cast("string")
-    }
-    concat_ws("", bits: _*)
-  }
 
   /** Deterministic Johnson–Lindenstrauss random projection: `outDims`
     * pseudo-random weight rows (the [[planeWeight]] grid — exact halves,
@@ -137,9 +122,8 @@ object VectorFunctions {
     * native cosine for the verify — the embedding analog of MinHash+Jaccard.
     * Output: (vec_a, vec_b, cos) for bucket-sharing pairs with cos >= tau.
     */
-  def embedNearDupPairs(corpus: DataFrame, planes: Int, dims: Int, tau: Double,
-                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val sigd = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
+  def embedNearDupPairs(corpus: DataFrame, planes: Int, dims: Int, tau: Double): DataFrame = {
+    val sigd = corpus.select(col("vec_id").as("id"), col("embedding").as("v"))
       .withColumn("sig", hyperplaneSig(col("v"), planes, dims))
     val a = sigd.select(col("id").as("vec_a"), col("v").as("va"), col("sig"))
     val b = sigd.select(col("id").as("vec_b"), col("v").as("vb"), col("sig"))
@@ -163,42 +147,36 @@ object VectorFunctions {
     * (materialized once as a bucketed table keyed by cell in a real
     * deployment), and a query touches only the probed cells' partitions.
     */
-  /** Pass validate = true to assert ids 0..nlist-1 exist before planning
-    * — it costs one pruned-scan count ACTION, so it's off by default here
-    * (plan-building must stay lazy); [[IvfIndex.build]], which is an
-    * action anyway, always validates.
+  /** Does not assert that ids 0..nlist-1 exist — that costs one
+    * pruned-scan count ACTION, and plan-building must stay lazy;
+    * [[IvfIndex.build]], which is an action anyway, always validates.
     */
   def ivfAssignments(corpus: DataFrame, nlist: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding",
-                     validate: Boolean = false): DataFrame = {
-    if (validate) IvfIndex.validateSeeds(corpus, nlist, idCol)
+                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     IvfIndex.assign(corpus,
       IvfIndex.seedCentroids(corpus, nlist, idCol, vecCol), idCol, vecCol)
   }
 
-  /** Composable IVF query. Pass `assignments` (the output of
-    * [[ivfAssignments]], typically materialized as a cell-partitioned
-    * table — see [[IvfIndex]] for the full index/query split with
-    * storage-level pruning) to skip the per-query assignment pass; without
-    * it the assignment is recomputed, which is only sane for one-off
-    * queries at modest scale.
+  /** Composable IVF query. The cell assignment ([[ivfAssignments]]) is
+    * recomputed per query, which is only sane for one-off queries at
+    * modest scale — see [[IvfIndex]] for the full index/query split with
+    * a materialized, cell-partitioned assignment and storage-level
+    * pruning.
     */
-  def ivfTopK(corpus: DataFrame, queryVec: DataFrame, k: Int, nlist: Int, nprobe: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              assignments: Option[DataFrame] = None): DataFrame = {
-    val cent = corpus.filter(col(idCol) < nlist)
-      .select(col(idCol).as("cid"), col(vecCol).as("cvec"))
-    val q = broadcast(queryVec.select(col(vecCol).as("__qv")))
+  def ivfTopK(corpus: DataFrame, queryVec: DataFrame, k: Int, nlist: Int, nprobe: Int): DataFrame = {
+    val cent = corpus.filter(col("vec_id") < nlist)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val q = broadcast(queryVec.select(col("embedding").as("__qv")))
     val probed = broadcast(cent.crossJoin(q)
       .withColumn("qc", round(cosineNative(col("cvec"), col("__qv")), 6))
       .orderBy(col("qc").desc, col("cid"))
       .limit(nprobe)
       .select(col("cid").as("cell")))
-    val asn = assignments.getOrElse(ivfAssignments(corpus, nlist, idCol, vecCol))
-    corpus.join(asn.join(probed, "cell"), idCol)
+    val asn = ivfAssignments(corpus, nlist, "vec_id", "embedding")
+    corpus.join(asn.join(probed, "cell"), "vec_id")
       .crossJoin(q)
-      .withColumn("cos", round(cosineNative(col(vecCol), col("__qv")), 6))
-      .orderBy(col("cos").desc, col(idCol))
+      .withColumn("cos", round(cosineNative(col("embedding"), col("__qv")), 6))
+      .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
   }
 
@@ -208,46 +186,42 @@ object VectorFunctions {
     * probe list comes from a rank window over the (centroids × queries)
     * cross (centroid-sized, broadcast), and the exact top-k per query is
     * a row_number window partitioned by query id — bounded partitions,
-    * never a global sort. `queries` carries (qidCol, vecCol).
+    * never a global sort. `queries` carries (qid, embedding).
     */
   def ivfTopKBatch(corpus: DataFrame, queries: DataFrame, k: Int,
-                   nlist: Int, nprobe: Int,
-                   idCol: String = "vec_id", vecCol: String = "embedding",
-                   qidCol: String = "qid",
-                   assignments: Option[DataFrame] = None): DataFrame = {
+                   nlist: Int, nprobe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cent = corpus.filter(col(idCol) < nlist)
-      .select(col(idCol).as("cid"), col(vecCol).as("cvec"))
-    val q = queries.select(col(qidCol).as("__qid"), col(vecCol).as("__qv"))
+    val cent = corpus.filter(col("vec_id") < nlist)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val q = queries.select(col("qid").as("__qid"), col("embedding").as("__qv"))
     val wProbe = Window.partitionBy("__qid").orderBy(col("qc").desc, col("cid"))
     val probed = broadcast(cent.crossJoin(broadcast(q))
       .withColumn("qc", round(cosineNative(col("cvec"), col("__qv")), 6))
       .withColumn("rn", row_number().over(wProbe))
       .filter(col("rn") <= nprobe)
       .select(col("__qid").as("pqid"), col("cid").as("cell")))
-    val asn = assignments.getOrElse(ivfAssignments(corpus, nlist, idCol, vecCol))
-    val wTop = Window.partitionBy("pqid").orderBy(col("cos").desc, col(idCol))
+    val asn = ivfAssignments(corpus, nlist)
+    val wTop = Window.partitionBy("pqid").orderBy(col("cos").desc, col("vec_id"))
     corpus
-      .join(asn.join(probed, "cell").select(col(idCol), col("pqid")), idCol)
+      .join(asn.join(probed, "cell").select(col("vec_id"), col("pqid")), "vec_id")
       .join(broadcast(q), col("pqid") === col("__qid"))
-      .withColumn("cos", round(cosineNative(col(vecCol), col("__qv")), 6))
+      .withColumn("cos", round(cosineNative(col("embedding"), col("__qv")), 6))
       .withColumn("rank", row_number().over(wTop).cast("long"))
       .filter(col("rank") <= k)
-      .withColumn(qidCol, col("pqid"))
+      .withColumn("qid", col("pqid"))
       .drop("pqid", "__qid", "__qv")
   }
 
   /** Bucketed ANN: exact top-k within the query's LSH bucket. */
-  def lshTopK(corpus: DataFrame, queryVec: DataFrame, k: Int, planes: Int, dims: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val sigd = corpus.withColumn("__sig", hyperplaneSig(col(vecCol), planes, dims))
+  def lshTopK(corpus: DataFrame, queryVec: DataFrame, k: Int, planes: Int, dims: Int): DataFrame = {
+    val sigd = corpus.withColumn("__sig", hyperplaneSig(col("embedding"), planes, dims))
     val q = broadcast(queryVec
-      .select(col(vecCol).as("__qv"))
+      .select(col("embedding").as("__qv"))
       .withColumn("__qsig", hyperplaneSig(col("__qv"), planes, dims)))
     sigd.join(q, col("__sig") === col("__qsig"))
-      .withColumn("cos", round(cosineNative(col(vecCol), col("__qv")), 6))
+      .withColumn("cos", round(cosineNative(col("embedding"), col("__qv")), 6))
       .drop("__qv", "__qsig", "__sig")
-      .orderBy(col("cos").desc, col(idCol))
+      .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
   }
 
@@ -273,21 +247,20 @@ object VectorFunctions {
     * bucketed table and the probe touches only the query's `bands` buckets.
     */
   def lshTopKMultiband(corpus: DataFrame, queryVec: DataFrame, k: Int,
-                       planes: Int, dims: Int, bands: Int,
-                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                       planes: Int, dims: Int, bands: Int): DataFrame = {
     val qb = broadcast(queryVec
-      .select(explode(hyperplaneBands(col(vecCol), planes, dims, bands)).as("__b")))
+      .select(explode(hyperplaneBands(col("embedding"), planes, dims, bands)).as("__b")))
     val cand = corpus
-      .select(col(idCol),
-        explode(hyperplaneBands(col(vecCol), planes, dims, bands)).as("__b"))
+      .select(col("vec_id"),
+        explode(hyperplaneBands(col("embedding"), planes, dims, bands)).as("__b"))
       .join(qb, "__b")
-      .select(idCol).distinct()
-    val q = broadcast(queryVec.select(col(vecCol).as("__qv")))
-    corpus.join(cand, Seq(idCol), "left_semi")
+      .select("vec_id").distinct()
+    val q = broadcast(queryVec.select(col("embedding").as("__qv")))
+    corpus.join(cand, Seq("vec_id"), "left_semi")
       .crossJoin(q)
-      .withColumn("cos", round(cosineNative(col(vecCol), col("__qv")), 6))
+      .withColumn("cos", round(cosineNative(col("embedding"), col("__qv")), 6))
       .drop("__qv")
-      .orderBy(col("cos").desc, col(idCol))
+      .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
   }
 
@@ -298,18 +271,16 @@ object VectorFunctions {
     * until the bounded verify step.
     */
   def embedNearDupPairsMultiband(corpus: DataFrame, planes: Int, dims: Int,
-                                 bands: Int, tau: Double,
-                                 idCol: String = "vec_id",
-                                 vecCol: String = "embedding"): DataFrame = {
-    val banded = corpus.select(col(idCol).as("id"),
-      explode(hyperplaneBands(col(vecCol), planes, dims, bands)).as("__b"))
+                                 bands: Int, tau: Double): DataFrame = {
+    val banded = corpus.select(col("vec_id").as("id"),
+      explode(hyperplaneBands(col("embedding"), planes, dims, bands)).as("__b"))
     val pairs = banded.as("a")
       .join(banded.as("b"),
         col("a.__b") === col("b.__b") && col("a.id") < col("b.id"))
       .select(col("a.id").as("vec_a"), col("b.id").as("vec_b"))
       .distinct()
-    val va = corpus.select(col(idCol).as("vec_a"), col(vecCol).as("__va"))
-    val vb = corpus.select(col(idCol).as("vec_b"), col(vecCol).as("__vb"))
+    val va = corpus.select(col("vec_id").as("vec_a"), col("embedding").as("__va"))
+    val vb = corpus.select(col("vec_id").as("vec_b"), col("embedding").as("__vb"))
     pairs.join(va, "vec_a").join(vb, "vec_b")
       .withColumn("cos", round(cosineNative(col("__va"), col("__vb")), 6))
       .filter(col("cos") >= tau)
@@ -324,9 +295,8 @@ object VectorFunctions {
     * is a semi-join + two scalar counts over result-sized data — run it
     * per (query, method) and union the rows into a recall mart.
     */
-  def recallAtK(approx: DataFrame, exact: DataFrame, method: String,
-                idCol: String = "vec_id"): DataFrame =
-    approx.select(col(idCol)).join(exact.select(col(idCol)), Seq(idCol), "left_semi")
+  def recallAtK(approx: DataFrame, exact: DataFrame, method: String): DataFrame =
+    approx.select(col("vec_id")).join(exact.select(col("vec_id")), Seq("vec_id"), "left_semi")
       .agg(count(lit(1)).as("n_hits"))
       .crossJoin(exact.agg(count(lit(1)).as("k")))
       .select(lit(method).as("method"), col("n_hits"), col("k"),
@@ -342,15 +312,14 @@ object VectorFunctions {
     * costs in production.
     */
   def tuneNprobe(corpus: DataFrame, queryVec: DataFrame, k: Int, nlist: Int,
-                 nprobes: Seq[Int], idCol: String = "vec_id",
-                 vecCol: String = "embedding"): DataFrame = {
+                 nprobes: Seq[Int]): DataFrame = {
     require(nprobes.nonEmpty && nprobes.forall(np => np >= 1 && np <= nlist),
       s"nprobes must be within [1, $nlist], got $nprobes")
-    val exact = Pins.keep(bruteForceTopK(corpus, queryVec, k, idCol, vecCol))
+    val exact = Pins.keep(bruteForceTopK(corpus, queryVec, k))
     nprobes.map { np =>
-      ivfTopK(corpus, queryVec, k, nlist, np, idCol, vecCol)
-        .select(col(idCol))
-        .join(exact.select(col(idCol)), Seq(idCol), "left_semi")
+      ivfTopK(corpus, queryVec, k, nlist, np)
+        .select(col("vec_id"))
+        .join(exact.select(col("vec_id")), Seq("vec_id"), "left_semi")
         .agg(count(lit(1)).as("n_hits"))
         .crossJoin(exact.agg(count(lit(1)).as("k")))
         .select(lit(np.toLong).as("nprobe"), col("n_hits"), col("k"),

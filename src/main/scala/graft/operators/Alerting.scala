@@ -122,36 +122,25 @@ object Alerting {
     * violation count. One hash aggregate; max_by gives the latest
     * status without a window over the history.
     *
-    * Run ORDER: pass `runOrderCol` naming an orderable column (a run
-    * timestamp, a numeric sequence) when one exists — first/latest key
-    * on it directly. Without one, run ids themselves are the order key
-    * and must sort LEXICOGRAPHICALLY in run order (ISO timestamps,
+    * Run ORDER: run ids are the order key and must sort
+    * LEXICOGRAPHICALLY in run order (ISO timestamps,
     * zero-padded sequence ids); that constraint is ENFORCED, not just
     * documented: the aggregate also computes the latest run under the
     * one plausible rival ordering (length-then-lex, which ranks the
     * unpadded run-9 < run-10 correctly where plain lex inverts them),
     * and any check where the two orderings disagree on the latest run
     * fails the query with a raise_error naming both candidates — an
-    * unpadded scheme misreports loudly instead of silently. Schemes
-    * where id length varies legitimately should pass `runOrderCol`.
+    * unpadded scheme misreports loudly instead of silently.
     *
     * The guard's REACH is exactly length-inconsistency: an id scheme
     * that is equal-length but non-chronological (e.g. 'MM-DD-YYYY'
     * dates) agrees under both orderings and still silently misreports
-    * first/latest — no ordering oracle exists inside the ids alone, so
-    * such schemes MUST pass `runOrderCol`. And because raise_error
-    * evaluates inside the aggregate, one inconsistent check_key fails
-    * the ENTIRE report at collect time; set `ambiguousAsFlag` to true
-    * to instead surface the disagreement per row — an
-    * `order_ambiguous` boolean column, with BOTH order-derived columns
-    * (last_status and first_failed_run) nulled on the ambiguous rows —
-    * so one bad scheme quarantines its own rows without taking down
-    * every other check's report. The order-free counters (n_runs,
-    * n_failures, fail_rate, worst_violations) stay populated.
+    * first/latest — no ordering oracle exists inside the ids alone. And
+    * because raise_error evaluates inside the aggregate, one
+    * inconsistent check_key fails the ENTIRE report at collect time.
     */
-  def runReport(history: DataFrame, runOrderCol: Option[String] = None,
-                ambiguousAsFlag: Boolean = false): DataFrame = {
-    val ord = col(runOrderCol.getOrElse("run_id"))
+  def runReport(history: DataFrame): DataFrame = {
+    val ord = col("run_id")
     val base = history
       .withColumn("failed",
         lower(col("status")).isin("fail", "error"))
@@ -170,29 +159,13 @@ object Alerting {
         max(col("run_id")).as("_lex_last"),
         max_by(col("run_id"), struct(length(col("run_id")), col("run_id")))
           .as("_len_last"))
-    val guarded =
-      if (runOrderCol.isDefined) base
-      else if (ambiguousAsFlag)
-        // BOTH order-derived columns are quarantined: first_failed_run is
-        // a min_by over the same run_id ordering last_status maxes over,
-        // so leaving it populated would silently misreport on exactly the
-        // rows the flag marks. n_runs/n_failures/fail_rate/
-        // worst_violations are order-free and stay.
-        base.withColumn("order_ambiguous",
-            col("_lex_last") =!= col("_len_last"))
-          .withColumn("last_status",
-            when(col("order_ambiguous"), lit(null: String))
-              .otherwise(col("last_status")))
-          .withColumn("first_failed_run",
-            when(col("order_ambiguous"), lit(null: String))
-              .otherwise(col("first_failed_run")))
-      else base.withColumn("last_status",
+    base.withColumn("last_status",
         when(col("_lex_last") =!= col("_len_last"),
           raise_error(concat(
             lit("runReport: run ids do not order consistently ("),
             col("_lex_last"), lit(" vs "), col("_len_last"),
-            lit(") — zero-pad sequence ids or pass runOrderCol"))))
+            lit(") — zero-pad sequence ids"))))
           .otherwise(col("last_status")))
-    guarded.drop("_lex_last", "_len_last")
+      .drop("_lex_last", "_len_last")
   }
 }

@@ -71,14 +71,6 @@ object AsOfJoin {
     log.withColumn("__r", rank().over(w)).filter(col("__r") === 1).drop("__r")
   }
 
-  /** Global latest row — the reference's unpartitioned `rank() over (order by
-    * ts desc)` (reference dags/ddls/queries/v_liquidity_pool_value.sql:62)
-    * would shuffle everything to one partition; orderBy(...).limit(1) is the
-    * scale-safe equivalent (per-partition top-1 then a single-row reduce).
-    */
-  def globalLatest(df: DataFrame, orderCols: Seq[String]): DataFrame =
-    df.orderBy(orderCols.map(c => col(c).desc): _*).limit(1)
-
   /** Union-window as-of join — the LARGE-intervals scale path for [[asOf]].
     *
     * [[asOf]] runs as an equi join on the key with the range predicate as a

@@ -210,13 +210,12 @@ object Bpe {
   /** Trained-vocabulary token distribution: the top symbols by token
     * volume after `rounds` merges — the sanity mart read before shipping
     * a tokenizer. Aggregates the training loop's final state directly
-    * (result is ≤ `topK` rows, collected so every pinned relation can be
+    * (result is ≤ 50 rows, collected so every pinned relation can be
     * released before returning). */
-  def vocabDistribution(spark: SparkSession, wf: DataFrame, rounds: Int,
-                        topK: Int = 50): DataFrame = Pins.scope {
+  def vocabDistribution(spark: SparkSession, wf: DataFrame, rounds: Int): DataFrame = Pins.scope {
     val out = learn(wf, rounds)._2
       .groupBy("sym").agg(sum("freq").as("n_tokens"), count(lit(1)).as("n_words"))
-      .orderBy(col("n_tokens").desc, col("sym")).limit(topK)
+      .orderBy(col("n_tokens").desc, col("sym")).limit(50)
     Pins.local(spark, out.collect().toIndexedSeq, out.schema)
   }
 }

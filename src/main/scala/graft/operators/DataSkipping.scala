@@ -83,15 +83,6 @@ object DataSkipping {
       m.filter(col(s"${c}_max") >= lit(lo) && col(s"${c}_min") <= lit(hi))
     }
 
-  /** Diagnostic/driver-bounded form of [[prunedManifestRows]] (spec
-    * assertions, file-count reporting). NOT on the read path — the read
-    * path goes through [[writePrunedManifest]]/[[readViaPrunedManifest]]
-    * so the surviving set never materializes as a query collect.
-    */
-  def pruneFiles(manifest: DataFrame, boxes: Seq[(String, Any, Any)]): Seq[String] =
-    prunedManifestRows(manifest, boxes)
-      .select(col("file")).collect().map(_.getString(0)).toSeq
-
   /** Persist the surviving file set as a PRUNED-MANIFEST artifact (one
     * path per line, distributed text write — the symlink-manifest
     * pattern lake engines hand each other). At 10^5–10^6 files this is
@@ -217,13 +208,6 @@ object DataSkipping {
     }.reduce(_ || _)
     manifest.filter(hit)
   }
-
-  /** Diagnostic/driver-bounded candidate list — NOT on the read path
-    * (see [[pruneFiles]]). */
-  def bloomPruneFiles(manifest: DataFrame, values: Seq[String],
-                      m: Int, k: Int): Seq[String] =
-    bloomPrunedManifestRows(manifest, values, m, k)
-      .select(col("file")).collect().map(_.getString(0)).toSeq
 
   /** Bloom-pruned IN-list read: only candidate files are opened, then the
     * exact IN predicate applies (false positives filtered here). Same

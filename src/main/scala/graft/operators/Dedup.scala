@@ -21,14 +21,12 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Exact dedup via content hash (optionally normalization-insensitive).
+  /** Exact dedup via content hash (md5 of the raw text).
     * Output: one row per distinct content with canonical (min) id and the
     * duplicate count.
     */
-  def exactGroups(docs: DataFrame, idCol: String, textCol: String,
-                  normalize: Boolean = false): DataFrame = {
-    val key = if (normalize) TextFunctions.fingerprintMd5(col(textCol)) else md5(col(textCol))
-    docs.withColumn("content_hash", key)
+  def exactGroups(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    docs.withColumn("content_hash", md5(col(textCol)))
       .groupBy("content_hash")
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("dup_count"))
   }
@@ -42,33 +40,12 @@ object Dedup {
     * an array-lambda formulation falls foul of CollapseProject inlining the
     * tokenizer per element (186 CPU-s measured), and the relational
     * posexplode + window-lead alternative pays a shuffle and a per-doc sort
-    * whose only purpose is adjacency ([[shingleRowsWindowed]], kept for the
-    * equivalence spec). The fused pass needs neither.
+    * whose only purpose is adjacency (ShingleArraySpec keeps it as the
+    * reference formulation). The fused pass needs neither.
     */
   def shingleRows(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     spread(docs).select(col(idCol).as("id"),
       explode(call_function("graft_shingles", lower(col(textCol)), lit(n))).as("shingle"))
-
-  /** Reference relational formulation from builtin operators only — proves
-    * the native expression equivalent, and serves sessions without the
-    * graft function registry.
-    */
-  def shingleRowsWindowed(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("id").orderBy("pos")
-    val toks = spread(docs)
-      .select(col(idCol).as("id"),
-        posexplode_outer(TextFunctions.tokens(lower(col(textCol)))).as(Seq("pos", "tok")))
-    val parts = (0 until n).map(j => if (j == 0) col("tok") else lead(col("tok"), j).over(w))
-    toks
-      .select(col("id"), col("pos"),
-        concat_ws(" ", parts: _*).as("shingle"),
-        parts.last.isNotNull.as("full"))
-      // full shingles only; position 0 also fires for short/empty docs so
-      // every doc keeps at least one (possibly partial or "") shingle
-      .filter(coalesce(col("pos"), lit(0)) === 0 || col("full"))
-      .select(col("id"), col("shingle"))
-  }
 
   /** Documents often arrive as a handful of files; without a spread the
     * whole tokenize+hash pipeline serializes onto one task per file (and a
@@ -465,8 +442,7 @@ object Dedup {
 
   def ingestDeltaCrawl(delta: DataFrame, idCol: String, textCol: String,
                        indexRoot: String, mapping: DataFrame, mappingOut: String,
-                       txnId: String,
-                       n: Int = 3, k: Int = 8, bands: Int = 4): Unit = {
+                       txnId: String): Unit = {
     val spark = delta.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     val f = org.apache.hadoop.fs.FileSystem
@@ -488,7 +464,7 @@ object Dedup {
             "from the index before their new versions are ingested")
       }
       val (dDg, dSigsz, dBands, pairs) =
-        deltaBandPairs(delta, idCol, textCol, index, n, k, bands)
+        deltaBandPairs(delta, idCol, textCol, index, n = 3, k = 8, bands = 4)
       // The mapping fold is safe on RETRY even if the previous attempt's
       // index appends landed: a delta band already in the index collides
       // only with other ids (a.id != b.id) and duplicate pairs distinct
@@ -938,11 +914,6 @@ object Dedup {
         coalesce(col("clean_text"), lit("")).as("clean_text"))
   }
 
-  /** Exact n-gram Jaccard for a pair of (distinct) shingle-set columns. */
-  def jaccard(shA: Column, shB: Column): Column =
-    size(array_intersect(shA, shB)).cast("double") /
-      greatest(size(array_union(shA, shB)), lit(1)).cast("double")
-
   /** Connected components over an undirected duplicate-pair graph: every
     * node gets the minimum id reachable from it (`canonical_id`), turning
     * pairwise near-dup hits into dedup groups ("keep one doc per
@@ -950,14 +921,13 @@ object Dedup {
     *
     * Up to `broadcastEdgeLimit` edges the solve is a driver-side
     * union-find; past it, [[connectedComponentsStar]] (star contraction,
-    * O(log n) rounds on any diameter, `maxIter` of them at most).
+    * O(log n) rounds on any diameter, 25 of them at most).
     *
     * @param nodes one row per node id (docs absent from `pairs` form
     *              singleton components)
     * @param pairs (doc_a, doc_b) undirected candidate/duplicate pairs
     */
   def connectedComponents(nodes: DataFrame, idCol: String, pairs: DataFrame,
-                          maxIter: Int = 25,
                           broadcastEdgeLimit: Long = 4000000L): DataFrame = {
     // pairs is typically the output of an expensive verify pipeline; the
     // union below scans it twice (once per direction), and a lazy persist
@@ -999,7 +969,7 @@ object Dedup {
     // pass the CHECKPOINTED pairs — handing the raw plan over would
     // re-execute the whole upstream verify pipeline a second time when
     // the star path checkpoints it again
-    val out = connectedComponentsStar(nodes, idCol, p, maxIter)
+    val out = connectedComponentsStar(nodes, idCol, p, maxIter = 25)
     Pins.release(edges, p)
     out
   }
@@ -1021,14 +991,13 @@ object Dedup {
     * finisher when contraction runs out of rounds: each round joins
     * current labels across the edge list and takes the per-node min —
     * O(|E|) shuffled work per round, rounds bounded by component diameter
-    * (`maxIter` caps pathological chains). Lineage is cut every round with
+    * (25 rounds cap pathological chains). Lineage is cut every round with
     * localCheckpoint so the plan stays flat at any scale; the driver only
     * ever sees one scalar per round (the convergence check), never the
     * data.
     */
   private[graft] def minLabelComponents(nodes: DataFrame, idCol: String,
-                                        pairs: DataFrame,
-                                        maxIter: Int = 25): DataFrame = {
+                                        pairs: DataFrame): DataFrame = {
     val p = Pins.cut(pairs)
     val edges = symmetricEdges(p)
     var labels = Pins.cut(nodes.select(col(idCol).as("node"))
@@ -1042,7 +1011,7 @@ object Dedup {
     var prevSum = lblSum(labels)
     var converged = false
     var iter = 0
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < 25) {
       // two propagation hops per materialization round: near-dup components
       // are shallow, so this roughly halves the checkpoint + convergence
       // jobs (the per-round fixed cost dominates the tiny per-hop work)

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * over the crawl link graph to prioritize fetching and weight quality
   * (Common-Crawl-style pipelines rank hosts exactly this way).
   *
-  * All arithmetic is INTEGER fixed-point: ranks live in `scale` units
-  * (default 1e9) and every step is bigint multiply / integer-divide, so
+  * All arithmetic is INTEGER fixed-point: ranks live in [[RankScale]]
+  * (1e9) units and every step is bigint multiply / integer-divide, so
   * the result is bit-identical on any engine and any partitioning — no
   * float summation order anywhere. The oracle replays the rounds
   * relationally with the same integer ops.
@@ -28,15 +28,21 @@ import org.apache.spark.sql.functions._
   */
 object LinkAnalysis {
 
+  /** Fixed-point unit of every rank and score: 1.0 is 1e9. */
+  private val RankScale = 1000000000L
+  /** PageRank damping d = DampNum / DampDen = 0.85. */
+  private val DampNum = 85
+  private val DampDen = 100
+
   /** Iterated integer PageRank. Input: a directed edge list (duplicates
     * collapsed here). Returns the scored node table; the pinned rank
     * state backing it (node-sized) lives until the caller's scope ends.
     *
-    * Per round, with d = dampNum/dampDen and N = node count:
+    * Per round, with d = DampNum/DampDen and N = node count:
     *   contrib(v) = Σ_{u→v} rank(u) div outdeg(u)
     *   share     = (Σ_{dangling u} rank(u)) div N
-    *   rank'(v)  = (scale·(dampDen−dampNum) div dampDen div N)
-    *             + ((contrib(v) + share) · dampNum div dampDen)
+    *   rank'(v)  = (RankScale·(DampDen−DampNum) div DampDen div N)
+    *             + ((contrib(v) + share) · DampNum div DampDen)
     */
   /** `lazyFinal`: skip persisting + reading the LAST round — its dangling
     * mass is never consumed, so a single-action caller (the top-k
@@ -45,8 +51,7 @@ object LinkAnalysis {
     * reads the edges and the previous rank state, both pinned until the
     * caller's scope ends. */
   private def iterate(edges: DataFrame, srcCol: String, dstCol: String,
-                      iters: Int, dampNum: Int, dampDen: Int,
-                      scale: Long,
+                      iters: Int,
                       seeds: Option[DataFrame] = None,
                       lazyFinal: Boolean = false): DataFrame = {
     // The edge list is hash-partitioned on src ONCE (the in-session form
@@ -61,15 +66,13 @@ object LinkAnalysis {
     // round, and the driver-side latency of ~40 extra micro-jobs dominates
     // an iterative loop over node-sized tables (measured ~2x at sf0.1).
     GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
-      iterateNoAqe(spark, edges, srcCol, dstCol, iters, dampNum, dampDen,
-        scale, seeds, lazyFinal)
+      iterateNoAqe(spark, edges, srcCol, dstCol, iters, seeds, lazyFinal)
     }
   }
 
   private def iterateNoAqe(spark: SparkSession, edges: DataFrame,
                            srcCol: String, dstCol: String,
-                           iters: Int, dampNum: Int, dampDen: Int,
-                           scale: Long,
+                           iters: Int,
                            seeds: Option[DataFrame],
                            lazyFinal: Boolean): DataFrame = {
     // filled eagerly: the first action below (nodes.count) scans e0 from
@@ -149,7 +152,7 @@ object LinkAnalysis {
     var ranks = Pins.keep(flagged
       .join(outdeg.withColumnRenamed("src", "node"), Seq("node"), "left")
       .select(col("node"), col("deg"), col("seed"),
-        when(col("seed"), lit(scale / denom)).otherwise(lit(0L)).as("rank"))
+        when(col("seed"), lit(RankScale / denom)).otherwise(lit(0L)).as("rank"))
       .repartition(p2, col("node")))
 
     // ONE action per round: the aggregate that reads the round's dangling
@@ -165,7 +168,7 @@ object LinkAnalysis {
     // pulled e0's cache through the p2 exchange) — both upstream pins
     // release here; the rounds touch only e and the rank states
     Pins.release(nodes, e0)
-    val base = scale * (dampDen - dampNum) / dampDen / denom
+    val base = RankScale * (DampDen - DampNum) / DampDen / denom
     var finalIsLazy = false
     for (r <- 1 to iters) {
       // dangling nodes never appear as e.src, so the contrib join's null
@@ -180,7 +183,7 @@ object LinkAnalysis {
         .select(col("node"), col("deg"), col("seed"),
           expr(s"if(seed, ${base}L, 0L) + " +
               s"(coalesce(insum, 0L) + if(seed, ${share}L, 0L)) " +
-              s"* $dampNum div $dampDen")
+              s"* $DampNum div $DampDen")
             .as("rank"))
       if (r < iters || !lazyFinal) {
         val next = Pins.keep(nextPlan)
@@ -199,16 +202,15 @@ object LinkAnalysis {
     // `out` only scans the materialized final state unless it is lazy
     if (!finalIsLazy) Pins.release(e)
     ranks.select(col("node"), col("rank").as("rank_scaled"),
-      (col("rank").cast("double") / lit(scale.toDouble)).as("rank"))
+      (col("rank").cast("double") / lit(RankScale.toDouble)).as("rank"))
   }
 
   /** Full scored node table. The backing rank state stays pinned until
     * the caller's scope ends; use [[pageRankTopK]] when the consumer is a
     * top-k read and the pin should be released eagerly. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, dampNum: Int = 85, dampDen: Int = 100,
-               scale: Long = 1000000000L): DataFrame =
-    iterate(edges, srcCol, dstCol, iters, dampNum, dampDen, scale)
+               iters: Int): DataFrame =
+    iterate(edges, srcCol, dstCol, iters)
 
   /** Deterministic top-k by rank (ties broken by node id) — the read
     * path a crawl scheduler actually consumes. */
@@ -219,12 +221,12 @@ object LinkAnalysis {
     * companion to [[pageRank]]: on a crawl graph, authorities are the
     * link-endorsed content pages and hubs the directories pointing at
     * them, the complementary prioritization signal to PageRank's random
-    * surfer. Scores live in `scale` units; each half-round is one
+    * surfer. Scores live in [[RankScale]] units; each half-round is one
     * edge-keyed join + bigint sum, then a MAX-normalization by integer
-    * division (`x div (max div scale)`) instead of the classical L2 norm
+    * division (`x div (max div RankScale)`) instead of the classical L2 norm
     * — same fixed point direction, but every operation stays exact
     * bigint, so results are bit-identical across engines and
-    * partitionings and the (max div scale) divisor keeps every
+    * partitionings and the (max div RankScale) divisor keeps every
     * intermediate below 2^63 by construction. The two max scalars per
     * round are aggregated reads inlined as literals (the [[pageRank]]
     * dangling-mass pattern). Same scale posture as PageRank: edges
@@ -232,8 +234,7 @@ object LinkAnalysis {
     * map-side-combinable sums.
     */
   def hitsTopK(spark: SparkSession, edges: DataFrame,
-               srcCol: String, dstCol: String, iters: Int, k: Int,
-               scale: Long = 1000000000L): DataFrame = {
+               srcCol: String, dstCol: String, iters: Int, k: Int): DataFrame = {
     require(iters >= 1, s"hitsTopK needs at least one iteration, got $iters")
     // k = 0 would optimize the limit to an empty relation, pruning the
     // CollectMetrics node — the observation would never fire and the
@@ -278,17 +279,17 @@ object LinkAnalysis {
       // left join (a node absent from a raw sum contributes exactly what
       // a zero-valued row would); only the FINAL output completes
       // against `nodes` to surface zero-scored rows.
-      var hub: DataFrame = null // null = round 1's uniform `scale` init
+      var hub: DataFrame = null // null = round 1's uniform RankScale init
       var auth: DataFrame = null
       var aRawPrev: DataFrame = null
       var hRawPrev: DataFrame = null
       var lastHRaw: DataFrame = null
       val hObs = org.apache.spark.sql.Observation()
       for (r <- 1 to iters) {
-        // uniform init folds round 1's join away: sum of `scale` over
-        // in-edges IS indegree * scale
+        // uniform init folds round 1's join away: sum of RankScale over
+        // in-edges IS indegree * RankScale
         val aRaw = Pins.keep(if (hub == null)
-            e.groupBy(col("dst")).agg((count(lit(1)) * scale).as("a"))
+            e.groupBy(col("dst")).agg((count(lit(1)) * RankScale).as("a"))
           else
             e.join(hub.select(col("node").as("src"), col("h")), "src")
               .groupBy(col("dst")).agg(sum(col("h")).as("a")))
@@ -302,7 +303,7 @@ object LinkAnalysis {
           // otherwise): the scope frees every pin on the early exit
           return Pins.local(spark, Nil, outSchema)
         }
-        val aDiv = math.max(aMax / scale, 1L)
+        val aDiv = math.max(aMax / RankScale, 1L)
         auth = aRaw.select(col("dst").as("node"),
           expr(s"a div ${aDiv}L").as("a"))
         val hPlan = e.join(auth.select(col("node").as("dst"), col("a")), "dst")
@@ -312,7 +313,7 @@ object LinkAnalysis {
           // fills hRaw; the last plan reading the previous aRaw (via auth)
           val hMax = hRaw.agg(coalesce(max(col("hh")), lit(0L))).head.getLong(0)
           if (aRawPrev != null) Pins.release(aRawPrev)
-          val hDiv = math.max(hMax / scale, 1L)
+          val hDiv = math.max(hMax / RankScale, 1L)
           hub = hRaw.select(col("src").as("node"),
             expr(s"hh div ${hDiv}L").as("h"))
           hRawPrev = hRaw
@@ -336,11 +337,11 @@ object LinkAnalysis {
           coalesce(col("a"), lit(0L)).as("auth_scaled"),
           coalesce(col("hh"), lit(0L)).as("hh"),
           (coalesce(col("a"), lit(0L)).cast("double") /
-            lit(scale.toDouble)).as("auth"))
+            lit(RankScale.toDouble)).as("auth"))
         .orderBy(col("auth_scaled").desc, col("node")).limit(k)
       val rows = out.collect()
       val hMax = hObs.get("hm").asInstanceOf[Long]
-      val hDiv = math.max(hMax / scale, 1L)
+      val hDiv = math.max(hMax / RankScale, 1L)
       // hh >= 0 by construction (sums of nonnegative normalized auth),
       // so Java integer division equals SQL `div` here
       Pins.local(spark, rows.toIndexedSeq.map { row =>
@@ -354,10 +355,8 @@ object LinkAnalysis {
     * by construction) so the iteration's node-sized rank pin can be
     * released before returning. */
   def pageRankTopK(spark: SparkSession, edges: DataFrame,
-                   srcCol: String, dstCol: String, iters: Int, k: Int,
-                   dampNum: Int = 85, dampDen: Int = 100,
-                   scale: Long = 1000000000L): DataFrame =
-    rankTopK(spark, edges, srcCol, dstCol, iters, k, dampNum, dampDen, scale, None)
+                   srcCol: String, dstCol: String, iters: Int, k: Int): DataFrame =
+    rankTopK(spark, edges, srcCol, dstCol, iters, k, None)
 
   /** Personalized PageRank (Haveliwala's topic-sensitive variant, the
     * "expand from these trusted hosts" crawl-frontier score): identical
@@ -372,11 +371,8 @@ object LinkAnalysis {
     */
   def personalizedPageRankTopK(spark: SparkSession, edges: DataFrame,
                                srcCol: String, dstCol: String,
-                               seeds: DataFrame, iters: Int, k: Int,
-                               dampNum: Int = 85, dampDen: Int = 100,
-                               scale: Long = 1000000000L): DataFrame =
-    rankTopK(spark, edges, srcCol, dstCol, iters, k, dampNum, dampDen, scale,
-      Some(seeds))
+                               seeds: DataFrame, iters: Int, k: Int): DataFrame =
+    rankTopK(spark, edges, srcCol, dstCol, iters, k, Some(seeds))
 
   /** The canonical undirected edge list (a, b) with a < b, as longs: one
     * row per edge, self-loops and null endpoints dropped. */
@@ -565,13 +561,12 @@ object LinkAnalysis {
     * node-sized state, monotonically shrinking input, convergence read
     * by the edge count in the same scalar action that fills the round's
     * cache (no edge removed => no degree changed => stable). Rounds are
-    * bounded by `maxRounds` — peeling depth on real graphs is small
+    * bounded by 50 — peeling depth on real graphs is small
     * (the degeneracy argument); hitting the bound throws rather than
     * silently returning a non-core. Both regimes compute the same
     * unique k-core (`LinkAnalysisSpec` forces and compares them).
     */
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
-            maxRounds: Int = 50,
             maxDriverEdges: Long = 4000000L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = edges.sparkSession
@@ -613,8 +608,8 @@ object LinkAnalysis {
       var stable = nCur == 0L
       while (!stable) {
         rounds += 1
-        if (rounds > maxRounds)
-          sys.error(s"kCore did not converge in $maxRounds rounds")
+        if (rounds > 50)
+          sys.error("kCore did not converge in 50 rounds")
         val deg = cur.select(col("a").as("n"))
           .unionByName(cur.select(col("b").as("n")))
           .groupBy("n").agg(count(lit(1)).as("d"))
@@ -839,7 +834,7 @@ object LinkAnalysis {
     *    broadcast mask table: `|U|²/2` cheap pairs, no shuffle of
     *    co-occurrence instances. Eligible only when the topic domain
     *    fits the bitset (≤128) and the mask table is broadcast-sized
-    *    (`maxDenseUsers`).
+    *    (at most 2^21 users).
     *  - SPARSE form — per-topic equi-join + hash aggregate:
     *    `Σ_t m_t²/2` shuffled co-occurrence instances, linear in users.
     *
@@ -862,8 +857,7 @@ object LinkAnalysis {
     * unbounded topic vocabulary: the sparse form is used unconditionally.
     */
   def coEngagementEdges(pairs: DataFrame, userCol: String, topicCol: String,
-                        topK: Int, topicDomain: Option[Int] = Some(100),
-                        maxDenseUsers: Long = 1L << 21): DataFrame = {
+                        topK: Int, topicDomain: Option[Int] = Some(100)): DataFrame = {
     val base = pairs.select(col(userCol).cast("long").as("u"),
         col(topicCol).cast("long").as("tp"))
       .filter(col("u").isNotNull && col("tp").isNotNull)
@@ -895,7 +889,7 @@ object LinkAnalysis {
         coalesce(sum(when(col("kind") === 1, lit(1L))), lit(0L)).as("nu"))
       .head
     val (inst, nUsers) = (stats.getLong(0), stats.getLong(1))
-    val dense = chooseDense(nUsers, inst, topicDomain, maxDenseUsers)
+    val dense = chooseDense(nUsers, inst, topicDomain, 1L << 21)
     val sup = coEngagementSupport(e, dense, topicDomain.getOrElse(0))
     sup.orderBy(col("c").desc, col("ua"), col("ub")).limit(topK)
   }
@@ -937,10 +931,8 @@ object LinkAnalysis {
 
   private def rankTopK(spark: SparkSession, edges: DataFrame,
                        srcCol: String, dstCol: String, iters: Int, k: Int,
-                       dampNum: Int, dampDen: Int, scale: Long,
                        seeds: Option[DataFrame]): DataFrame = Pins.scope {
-    val out = topK(iterate(edges, srcCol, dstCol, iters, dampNum,
-      dampDen, scale, seeds, lazyFinal = true), k)
+    val out = topK(iterate(edges, srcCol, dstCol, iters, seeds, lazyFinal = true), k)
     Pins.local(spark, out.collect().toIndexedSeq, out.schema)
   }
 }

@@ -100,28 +100,25 @@ object MergeOps {
     * driver oracle states verbatim; the precondition that makes the
     * equality hold — no update older than a touched key's open
     * `valid_from` (late data is a backfill rewrite, not this fold) — is
-    * enforced with a key-sized aggregate when `validate` is on.
+    * enforced with a key-sized aggregate.
     */
   def scd2Merge(target: DataFrame, updates: DataFrame, keys: Seq[String],
-                tsCol: String, tieBreak: Seq[String] = Seq.empty,
-                validate: Boolean = true): DataFrame = {
+                tsCol: String, tieBreak: Seq[String] = Seq.empty): DataFrame = {
     val sentinel = lit(AsOfJoin.EndOfTime).cast("timestamp")
     val touched = updates.select(keys.map(col): _*).distinct()
     val tTouched = target.join(touched, keys, "left_semi")
     val tUntouched = target.join(touched, keys, "left_anti")
     val open = tTouched.filter(col("valid_to") === sentinel)
     val closed = tTouched.filter(col("valid_to") =!= sentinel)
-    if (validate) {
-      val late = updates.groupBy(keys.map(col): _*)
-        .agg(min(col(tsCol)).as("__min_ts"))
-        .join(open.groupBy(keys.map(col): _*)
-          .agg(max(col("valid_from")).as("__open_from")), keys)
-        .filter(col("__min_ts") < col("__open_from"))
-        .limit(1).count()
-      require(late == 0,
-        "scd2Merge: update batch contains rows older than a key's open " +
-          "interval — late data must go through a backfill rewrite")
-    }
+    val late = updates.groupBy(keys.map(col): _*)
+      .agg(min(col(tsCol)).as("__min_ts"))
+      .join(open.groupBy(keys.map(col): _*)
+        .agg(max(col("valid_from")).as("__open_from")), keys)
+      .filter(col("__min_ts") < col("__open_from"))
+      .limit(1).count()
+    require(late == 0,
+      "scd2Merge: update batch contains rows older than a key's open " +
+        "interval — late data must go through a backfill rewrite")
     val log = open.drop("valid_from", "valid_to").unionByName(updates)
     closed.unionByName(AsOfJoin.scd2Intervals(log, keys, tsCol, tieBreak))
       .unionByName(tUntouched)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * feature-extraction runs per partition so codec/model initialization
   * amortizes across a batch of rows (the same batching shape `mapInPandas`
   * gives Python). IMAGE decode is REAL — JDK `javax.imageio`, headless
-  * ([[decodeGrid]], [[resizeImage]], [[dhash64]], [[imageStats]]) — and so
+  * ([[decodeGrid]], [[dhash64]], [[imageStats]]) — and so
   * are AUDIO — JDK `javax.sound.sampled` WAV/PCM ([[decodeAudio]], exact
   * stats + the windowed-energy fingerprint) — and VIDEO: [[decodeVideo]]
   * parses the RIFF/AVI container with pure byte arithmetic and decodes
@@ -126,14 +126,13 @@ object Multimodal {
     * shared band by pigeonhole; higher budgets trade recall like any
     * LSH), so only (band, value) keys shuffle and the Hamming verify is
     * candidate-confined: the MinHash-LSH cost envelope at frame-hash
-    * granularity. Hot bands (> maxBucket frames) are skipped like any
+    * granularity. Hot bands (> 1000 frames) are skipped like any
     * boilerplate bucket; empty frames never hash-pair.
     */
   def phashDupPairs(docs: DataFrame, idCol: String, payloadCol: String,
                     stride: Int = 256, frameLen: Int = 64,
-                    maxHamming: Int = 8, minShared: Int = 1,
-                    maxBucket: Long = 1000L): DataFrame = {
-    require(maxHamming >= 0 && minShared >= 1 && maxBucket >= 2)
+                    maxHamming: Int = 8, minShared: Int = 1): DataFrame = {
+    require(maxHamming >= 0 && minShared >= 1)
     val fr = Pins.keep(sampleFrames(docs, idCol, payloadCol, stride, frameLen)
       .filter(col("frame_len") > 0)
       .select(col("doc_id"), col("phash")).distinct())
@@ -142,7 +141,7 @@ object Multimodal {
       .select(col("doc_id"), col("phash"), col("b"),
         expr("(phash >> (b * 16)) & 65535").as("v"))
     val hot = banded.groupBy("b", "v").agg(count(lit(1)).as("nh"))
-      .filter(col("nh") > maxBucket).select("b", "v")
+      .filter(col("nh") > 1000L).select("b", "v")
     val cool = banded.join(broadcast(hot), Seq("b", "v"), "left_anti")
     val cand = cool.as("x").join(cool.as("y"),
         col("x.b") === col("y.b") && col("x.v") === col("y.v") &&
@@ -234,7 +233,7 @@ object Multimodal {
   }
 
   /** Deterministic synthetic image table: `n` grayscale `w`x`h` PNGs,
-    * pixel(x, y) of doc (idOffset + i) = ((idOffset + i)*31 +
+    * pixel(x, y) of doc (idOffset + i) = (i*31 +
     * ((x + xShift) mod w)*7 + y*13) mod 256 — a REAL encoded binary
     * payload whose decoded values an oracle can derive from the law.
     * `xShift` produces cyclically-shifted COPIES of the same scene
@@ -242,17 +241,16 @@ object Multimodal {
     * near-identical content). Distributed via range + per-partition
     * encode (the fixture analog of a production decode scan's shape). */
   def synthPngTable(spark: SparkSession, n: Int, w: Int, h: Int,
-                    idOffset: Long = 0L, xShift: Int = 0,
-                    sceneOffset: Long = 0L): DataFrame = {
+                    idOffset: Long = 0L, xShift: Int = 0): DataFrame = {
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("payload", BinaryType)))
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
     spark.range(n).toDF("doc_id").mapPartitions { rows =>
       rows.map { r =>
-        val scene = r.getLong(0) + sceneOffset
-        Row(r.getLong(0) + idOffset, pngBytes(w, h)((x, y) =>
-          ((scene * 31 + ((x + xShift) % w) * 7 + y * 13) % 256).toInt))
+        val i = r.getLong(0)
+        Row(i + idOffset, pngBytes(w, h)((x, y) =>
+          ((i * 31 + ((x + xShift) % w) * 7 + y * 13) % 256).toInt))
       }
     }(enc)
   }
@@ -384,13 +382,13 @@ object Multimodal {
     * contrast filter leg an image-corpus curation pass runs before
     * training: per image the decoded dimensions, the grid's min/max/sum
     * intensity (integers — exactly replayable), the integer mean, and
-    * the `is_flat` verdict (max-min spread under `flatSpread` — blank
+    * the `is_flat` verdict (max-min spread under 8 — blank
     * frames, solid fills, footer slates). Computed on the [[decodeGrid]]
     * cells, so the scan stays one decode pass and the stats are fused
     * array folds (codegen, no UDF past the decode).
     */
   def imageStats(media: DataFrame, idCol: String, payloadCol: String,
-                 gw: Int = 8, gh: Int = 8, flatSpread: Int = 8): DataFrame =
+                 gw: Int = 8, gh: Int = 8): DataFrame =
     decodeGrid(media, idCol, payloadCol, gw, gh)
       .filter(col("ok"))
       .select(col("doc_id"), col("w"), col("h"),
@@ -398,42 +396,7 @@ object Multimodal {
         expr("array_max(grid)").as("cell_max"),
         expr("aggregate(grid, CAST(0 AS BIGINT), (a, x) -> a + x)").as("cell_sum"))
       .withColumn("cell_mean", expr(s"cell_sum div ${gw * gh}L"))
-      .withColumn("is_flat", col("cell_max") - col("cell_min") < flatSpread)
-
-  /** REAL resize: decode the payload, area-average resample to
-    * `targetW`x`targetH` (the same exact integer arithmetic as
-    * [[decodeGrid]] — a resized image IS the decode grid re-encoded),
-    * and re-encode as grayscale PNG. Per-partition batched; undecodable
-    * payloads keep their row with ok = false and a null payload.
-    */
-  def resizeImage(media: DataFrame, idCol: String, payloadCol: String,
-                  targetW: Int, targetH: Int): DataFrame = {
-    require(targetW >= 1 && targetH >= 1)
-    val grids = decodeGrid(media, idCol, payloadCol, targetW, targetH)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("ok", BooleanType),
-      StructField("orig_w", LongType),
-      StructField("orig_h", LongType),
-      StructField("payload", BinaryType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    grids.mapPartitions { rows =>
-      rows.map { r =>
-        val ok = r.getBoolean(1)
-        if (!ok) Row(r.getLong(0), false, 0L, 0L, null)
-        else {
-          // the array column surfaces as a primitive long[] here
-          val grid: Array[Long] = r.get(4) match {
-            case a: Array[Long] => a
-            case s: scala.collection.Seq[_] =>
-              s.asInstanceOf[scala.collection.Seq[Long]].toArray
-          }
-          Row(r.getLong(0), true, r.getLong(2), r.getLong(3),
-            pngBytes(targetW, targetH)((x, y) => grid(y * targetW + x).toInt))
-        }
-      }
-    }(enc)
-  }
+      .withColumn("is_flat", col("cell_max") - col("cell_min") < 8)
 
   // ---- real audio decode (JDK javax.sound.sampled — WAV/PCM needs no
   // external codec): WAV encode for deterministic fixtures, decode ->
@@ -469,11 +432,9 @@ object Multimodal {
   }
 
   /** Deterministic synthetic audio table: `n` mono 16-bit WAVs, sample i
-    * of doc d = ((d*31 + (i + shift)*7) mod 65536) - 32768. `shift`
-    * produces time-shifted COPIES (the perceptual-dedup fixture). */
+    * of doc d = ((d*31 + i*7) mod 65536) - 32768. */
   def synthWavTable(spark: SparkSession, n: Int, nSamples: Int,
-                    sampleRate: Int, idOffset: Long = 0L,
-                    shift: Int = 0): DataFrame = {
+                    sampleRate: Int): DataFrame = {
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("payload", BinaryType)))
@@ -481,8 +442,8 @@ object Multimodal {
     spark.range(n).toDF("doc_id").mapPartitions { rows =>
       rows.map { r =>
         val d = r.getLong(0)
-        Row(d + idOffset, wavBytes(nSamples, sampleRate)(i =>
-          (((d * 31 + (i + shift).toLong * 7) % 65536) - 32768).toInt))
+        Row(d, wavBytes(nSamples, sampleRate)(i =>
+          (((d * 31 + i.toLong * 7) % 65536) - 32768).toInt))
       }
     }(enc)
   }
@@ -644,15 +605,15 @@ object Multimodal {
   // law), so a SQL oracle replays a real binary VIDEO decode the same way
   // the PNG/PCM tricks made images and audio checkable.
 
-  private val FOURCC_MJPG = 0x47504a4d // 'MJPG' little-endian
+  private[operators] val FOURCC_MJPG = 0x47504a4d // 'MJPG' little-endian
 
   /** Encode one AVI container (RIFF -> hdrl(avih, strl(strh,strf)) ->
     * movi) around pre-built frame payloads. `biCompression` 0 writes
     * '00db' uncompressed-DIB chunks; [[FOURCC_MJPG]] writes '00dc' JPEG
     * chunks. Little-endian throughout; odd chunks pad to RIFF word
     * alignment. */
-  private def aviContainer(w: Int, h: Int, fps: Int, biCompression: Int,
-                           frames: Seq[Array[Byte]]): Array[Byte] = {
+  private[operators] def aviContainer(w: Int, h: Int, fps: Int, biCompression: Int,
+                                      frames: Seq[Array[Byte]]): Array[Byte] = {
     require(fps >= 1 && fps <= 1000000)
     val chunkId = if (biCompression == 0) "00db" else "00dc"
     val moviBody = 4 + frames.map(f => 8 + f.length + (f.length & 1)).sum
@@ -720,43 +681,23 @@ object Multimodal {
     aviContainer(w, h, fps, 0,
       (0 until nFrames).map(t => dibFrame(w, h)(f(t, _, _))))
 
-  /** Encode one MJPEG AVI: each frame law is JPEG-encoded by
-    * javax.imageio and wrapped in '00dc' chunks — the REAL lossy-codec
-    * fixture (spec-checked by Hamming tolerance, not an exact oracle). */
-  def aviMjpegBytes(w: Int, h: Int, nFrames: Int, fps: Int)
-                   (f: (Int, Int, Int) => Int): Array[Byte] =
-    aviContainer(w, h, fps, FOURCC_MJPG, (0 until nFrames).map { t =>
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-      val raster = img.getRaster
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) { raster.setSample(x, y, 0, f(t, x, y) & 0xff); x += 1 }
-        y += 1
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "jpg", bos)
-      bos.toByteArray
-    })
-
   /** Deterministic synthetic video table: `n` AVIs of `nFrames`
     * `w`x`h` frames, pixel (x, y) of frame t in doc (idOffset + i) =
-    * ((i + sceneOffset)*31 + ((x + xShift) mod w)*7 + y*13 + t*17) mod
+    * (i*31 + ((x + xShift) mod w)*7 + y*13 + t*17) mod
     * 256. `xShift` produces per-frame-shifted COPIES of the same scene
     * under fresh doc ids (the video perceptual-dedup fixture). */
   def synthAviTable(spark: SparkSession, n: Int, w: Int, h: Int,
                     nFrames: Int, fps: Int = 10, idOffset: Long = 0L,
-                    xShift: Int = 0, sceneOffset: Long = 0L): DataFrame = {
+                    xShift: Int = 0): DataFrame = {
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("payload", BinaryType)))
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
     spark.range(n).toDF("doc_id").mapPartitions { rows =>
       rows.map { r =>
-        val scene = r.getLong(0) + sceneOffset
-        Row(r.getLong(0) + idOffset, aviBytes(w, h, nFrames, fps)((t, x, y) =>
-          ((scene * 31 + ((x + xShift) % w) * 7 + y * 13 + t * 17) % 256).toInt))
+        val i = r.getLong(0)
+        Row(i + idOffset, aviBytes(w, h, nFrames, fps)((t, x, y) =>
+          ((i * 31 + ((x + xShift) % w) * 7 + y * 13 + t * 17) % 256).toInt))
       }
     }(enc)
   }
@@ -949,10 +890,9 @@ object Multimodal {
     * decode task, shuffles carry 8-byte hashes, the verify is
     * candidate-confined, and the final rollup is frame-pair-sized. */
   def videoDupPairs(media: DataFrame, idCol: String, payloadCol: String,
-                    maxHamming: Int = 8, minShared: Int = 2,
-                    maxBucket: Long = 1000L): DataFrame =
+                    maxHamming: Int = 8, minShared: Int = 2): DataFrame =
     videoPairsFromFrameHashes(videoFrameHashes(media, idCol, payloadCol),
-      maxHamming, minShared, maxBucket)
+      maxHamming, minShared)
 
   /** The candidate/verify/rollup half of [[videoDupPairs]] over a
     * prepared (doc_id, frame_idx, phash) relation — the form an
@@ -965,8 +905,7 @@ object Multimodal {
     * row raises rather than silently corrupting pair identity —
     * observable, never wrong. */
   def videoPairsFromFrameHashes(fhIn: DataFrame, maxHamming: Int = 8,
-                                minShared: Int = 2,
-                                maxBucket: Long = 1000L): DataFrame = {
+                                minShared: Int = 2): DataFrame = {
     val fh = fhIn
       .select((col("doc_id") * 1024 +
         when(col("frame_idx").between(0, 1023), col("frame_idx"))
@@ -975,7 +914,7 @@ object Multimodal {
             coalesce(col("frame_idx").cast("string"), lit("null")))))
         ).as("doc_id"),
         col("phash"))
-    hashDupPairs(fh, maxHamming, maxBucket)
+    hashDupPairs(fh, maxHamming)
       .select(expr("doc_a div 1024").as("video_a"),
         expr("doc_b div 1024").as("video_b"), col("hamming"))
       .filter(col("video_a") =!= col("video_b"))

@@ -309,22 +309,20 @@ object QualityChecks {
     * no join, no window; at 100 TB this is two hash-agg passes over
     * cell-count rows, not raw data, after the first aggregate.
     */
-  def suppressSmallCells(df: DataFrame, dims: Seq[String], k: Long,
-                         sentinel: String = "__suppressed__"): DataFrame = {
+  def suppressSmallCells(df: DataFrame, dims: Seq[String], k: Long): DataFrame = {
+    val sentinel = "__suppressed__"
     require(dims.nonEmpty && k >= 1, s"need dims and k >= 1, got $dims / $k")
     val counts = df.groupBy(dims.map(col): _*).agg(count(lit(1)).as("n"))
     // A dims value NATURALLY equal to the sentinel would silently merge
     // real data into the suppression bucket (and confuse the secondary-
     // suppression filter) — fail the run loudly instead, in the plan
     // itself (stays lazy and distributed; evaluated over cell-count
-    // rows, not raw data). Callers with a colliding domain pass a
-    // different sentinel.
+    // rows, not raw data).
     val rekeyed = counts.select(
       dims.map(d =>
         when(col(d) === lit(sentinel),
           raise_error(lit(s"suppressSmallCells: column '$d' naturally " +
-            s"contains the sentinel value '$sentinel' — choose another " +
-            "sentinel")))
+            s"contains the sentinel value '$sentinel'")))
           .otherwise(when(col("n") < k, lit(sentinel)).otherwise(col(d)))
           .as(d)) :+
         col("n"): _*)

@@ -30,23 +30,22 @@ object Sampling {
       .cast("int")
   }
 
-  /** Keep rows whose bucket < pctBuckets — a deterministic `pctBuckets /
-    * buckets` sample.
+  /** Keep rows whose bucket < pctBuckets — a deterministic `pctBuckets`
+    * percent sample.
     */
-  def deterministicSample(df: DataFrame, idCol: String,
-                          pctBuckets: Int, buckets: Int = 100): DataFrame =
-    df.filter(hashBucket(col(idCol), buckets) < pctBuckets)
+  def deterministicSample(df: DataFrame, idCol: String, pctBuckets: Int): DataFrame =
+    df.filter(hashBucket(col(idCol)) < pctBuckets)
 
   /** Stamp a train/val/test split column: buckets [0, train) → train,
-    * [train, train+val) → val, the rest → test. Rows never migrate between
-    * splits when data is re-partitioned, re-ordered, or re-loaded.
+    * [train, train+val) → val, the rest → test, out of 100. Rows never
+    * migrate between splits when data is re-partitioned, re-ordered, or
+    * re-loaded.
     */
   def hashSplit(df: DataFrame, idCol: String,
-                trainBuckets: Int = 80, valBuckets: Int = 10,
-                buckets: Int = 100): DataFrame = {
-    require(trainBuckets + valBuckets < buckets,
+                trainBuckets: Int = 80, valBuckets: Int = 10): DataFrame = {
+    require(trainBuckets + valBuckets < 100,
       "train + val must leave room for the test split")
-    val b = hashBucket(col(idCol), buckets)
+    val b = hashBucket(col(idCol))
     df.withColumn("split",
       when(b < trainBuckets, lit("train"))
         .when(b < trainBuckets + valBuckets, lit("val"))
@@ -62,34 +61,29 @@ object Sampling {
     * own canonical id, so their assignment matches what a plain id-keyed
     * split of the canonical ids would give. The join is an id-keyed
     * equi-join (mapping is node-sized) and the split itself stays a
-    * narrow md5 projection.
+    * narrow md5 projection. The split is [[hashSplit]]'s 80/10/10.
     */
-  def leakageGuardedSplit(df: DataFrame, mapping: DataFrame, idCol: String,
-                          trainBuckets: Int = 80, valBuckets: Int = 10,
-                          buckets: Int = 100): DataFrame = {
-    require(trainBuckets + valBuckets < buckets,
-      "train + val must leave room for the test split")
-    val b = hashBucket(col("canonical_id"), buckets)
+  def leakageGuardedSplit(df: DataFrame, mapping: DataFrame, idCol: String): DataFrame = {
+    val b = hashBucket(col("canonical_id"))
     // LEFT join + own-id fallback: a doc absent from the mapping (e.g. a
     // mapping built from the pairs relation only) is its own singleton
     // component — an inner join would silently drop it from every split
     df.join(mapping.select(col(idCol), col("canonical_id")), Seq(idCol), "left")
       .withColumn("canonical_id", coalesce(col("canonical_id"), col(idCol)))
       .withColumn("split",
-        when(b < trainBuckets, lit("train"))
-          .when(b < trainBuckets + valBuckets, lit("val"))
+        when(b < 80, lit("train"))
+          .when(b < 90, lit("val"))
           .otherwise(lit("test")))
   }
 
-  /** Per-stratum sampling rates (bucket thresholds out of `buckets`), e.g.
+  /** Per-stratum sampling rates (bucket thresholds out of 100), e.g.
     * downsample dominant languages while keeping the tail: a row survives
     * iff its bucket < the threshold for its stratum (`default` when the
     * stratum is unlisted).
     */
   def stratifiedSample(df: DataFrame, strataCol: String, idCol: String,
-                       thresholds: Map[String, Int], default: Int,
-                       buckets: Int = 100): DataFrame = {
-    val b = hashBucket(col(idCol), buckets)
+                       thresholds: Map[String, Int], default: Int): DataFrame = {
+    val b = hashBucket(col(idCol))
     val cutoff = thresholds.foldLeft(lit(default)) { case (acc, (stratum, t)) =>
       when(col(strataCol) === stratum, lit(t)).otherwise(acc)
     }
@@ -97,15 +91,14 @@ object Sampling {
   }
 
   /** Mixture sampling toward per-stratum target rates expressed as an
-    * arbitrary cutoff EXPRESSION (buckets out of `buckets`) — the general
+    * arbitrary cutoff EXPRESSION (buckets out of 100) — the general
     * form of [[stratifiedSample]] for when rates are computed rather than
     * enumerated: a mixture config joined in, a function of the source
     * name, a temperature-scaled weight. Same scale posture: a stateless
     * per-row filter over the scan.
     */
-  def mixtureSample(df: DataFrame, idCol: String, cutoff: Column,
-                    buckets: Int = 100): DataFrame =
-    df.filter(hashBucket(col(idCol), buckets) < cutoff)
+  def mixtureSample(df: DataFrame, idCol: String, cutoff: Column): DataFrame =
+    df.filter(hashBucket(col(idCol)) < cutoff)
 
   /** Deterministic FRACTIONAL upsampling — the other half of mixture
     * targeting. [[mixtureSample]] hits rates below 1 by dropping rows;
@@ -114,21 +107,19 @@ object Sampling {
     * a deterministic frac(w) slice, selected by the same md5 bucket rule
     * as every other sampler here so the multiset is reproducible across
     * runs, engines, and partitionings. Each copy is tagged with an
-    * `epoch` column (1-based) so downstream epoch-wise shuffling
-    * ([[deterministicShuffle]] salted by epoch) de-correlates the
-    * repeats. weight < 1 degenerates to exactly [[mixtureSample]]'s
+    * `epoch` column (1-based) so downstream epoch-wise shuffling (a
+    * salted hash order per epoch) de-correlates the repeats. weight < 1 degenerates to exactly [[mixtureSample]]'s
     * semantics (0 full copies, a frac(w) sample).
     *
     * Scale shape: a narrow per-row transform — no shuffle, no join;
     * array_repeat + posexplode multiplies rows map-side, so the operator
     * composes with whatever partitioning the downstream writer wants.
     */
-  def upsample(df: DataFrame, idCol: String, weight: Column,
-               buckets: Int = 100): DataFrame = {
+  def upsample(df: DataFrame, idCol: String, weight: Column): DataFrame = {
     val whole = floor(weight).cast("int")
-    val extraBuckets = round((weight - floor(weight)) * buckets)
+    val extraBuckets = round((weight - floor(weight)) * 100)
     val copies = whole +
-      when(hashBucket(col(idCol), buckets) < extraBuckets, 1).otherwise(0)
+      when(hashBucket(col(idCol)) < extraBuckets, 1).otherwise(0)
     df.select(col("*"),
         posexplode(array_repeat(lit(1), greatest(copies, lit(0)))).as(Seq("__e", "__x")))
       .withColumn("epoch", (col("__e") + 1).cast("long"))
@@ -203,25 +194,6 @@ object Sampling {
       .filter(col("cum_tokens") <= budget)
   }
 
-  /** Deterministic global shuffle for epoch ordering: sort by a salted
-    * hash of the id. A different salt reshuffles; the same salt reproduces
-    * the exact order. At scale prefer [[shuffledPartitions]] — a total
-    * order is one range shuffle, fine for export, wasteful for training
-    * shards that only need per-shard randomness.
-    */
-  def deterministicShuffle(df: DataFrame, idCol: String, salt: String): DataFrame =
-    df.orderBy(md5(concat(lit(salt), col(idCol).cast("string"))))
-
-  /** Scale path for epoch shuffling: hash-repartition rows into `n` shards
-    * by salted hash and randomize order only within each shard — one
-    * hash shuffle, no global sort, which is exactly what a data loader
-    * consuming shards needs.
-    */
-  def shuffledPartitions(df: DataFrame, idCol: String, salt: String, n: Int): DataFrame = {
-    val h = md5(concat(lit(salt), col(idCol).cast("string")))
-    df.repartition(n, h).sortWithinPartitions(h)
-  }
-
   /** Deterministic k-fold cross-validation assignments: every row gets
     * its md5 bucket in [0, k), and each rotation f marks bucket f as
     * `test`, the rest `train` — (id, fold, role) for all k rotations in
@@ -241,8 +213,8 @@ object Sampling {
   /** MATERIALIZED epoch order: (epoch, id, position) with position the
     * exact global rank of md5(epoch || '|' || id) — the shard-able
     * "which example is step k of epoch e" table a reproducible training
-    * run needs (checkpoint resume, example-order audits), where
-    * [[deterministicShuffle]] only emits rows in order. The global
+    * run needs (checkpoint resume, example-order audits), not just rows
+    * emitted in that order. The global
     * position is computed WITHOUT a single-partition window: the order
     * key's first hex digit buckets rows 16 ways consistently with the
     * global order (the bucket is a prefix of the sort key), each

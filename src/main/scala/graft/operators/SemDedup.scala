@@ -35,33 +35,19 @@ object SemDedup {
   private def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-  /** Same-cell pairs with cosine ≥ tau, under centroids refined by `iters`
+  /** (cell, vec_id, embedding) under centroids refined by `iters`
     * deterministic Lloyd rounds (the [[IvfIndex.lloydCentroids]] rule, so
-    * the oracle regenerates the identical cells round by round).
-    */
-  def semanticPairs(emb: DataFrame, nlist: Int, iters: Int, tau: Double,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    val e = spread(emb)
-    cellPairs(assigned(e, nlist, iters, idCol, vecCol), tau, idCol, vecCol)
+    * the oracle regenerates the identical cells round by round). */
+  private def assigned(emb: DataFrame, nlist: Int, iters: Int): DataFrame = {
+    val cents = IvfIndex.lloydCentroids(emb, nlist, iters)
+    val asn = IvfIndex.assign(emb, cents, "vec_id", "embedding", nativeCosine = false)
+    emb.join(asn, "vec_id").select(col("cell"), col("vec_id"), col("embedding"))
   }
 
-  /** (cell, id, vec) under the refined centroids — the clustered table
-    * both entry points pair over. */
-  private def assigned(emb: DataFrame, nlist: Int, iters: Int,
-                       idCol: String, vecCol: String): DataFrame = {
-    val cents = IvfIndex.lloydCentroids(emb, nlist, iters, idCol, vecCol)
-    val asn = IvfIndex.assign(emb, cents, idCol, vecCol, nativeCosine = false)
-    emb.join(asn, idCol).select(col("cell"), col(idCol), col(vecCol))
-  }
-
-  /** ONE pair rule (cell-confined self-join, rounded cosine, >= tau) —
-    * a second copy could silently drift from the shared oracle on
-    * precision or tie-break. */
-  private def cellPairs(m: DataFrame, tau: Double,
-                        idCol: String, vecCol: String): DataFrame = {
-    val a = m.select(col("cell"), col(idCol).as("vec_a"), col(vecCol).as("va"))
-    val b = m.select(col("cell"), col(idCol).as("vec_b"), col(vecCol).as("vb"))
+  /** The pair rule: cell-confined self-join, rounded cosine, >= tau. */
+  private def cellPairs(m: DataFrame, tau: Double): DataFrame = {
+    val a = m.select(col("cell"), col("vec_id").as("vec_a"), col("embedding").as("va"))
+    val b = m.select(col("cell"), col("vec_id").as("vec_b"), col("embedding").as("vb"))
     a.join(b, Seq("cell"))
       .filter(col("vec_a") < col("vec_b"))
       .withColumn("cos", round(VF.cosineNative(col("va"), col("vb")), 6))
@@ -75,17 +61,15 @@ object SemDedup {
     * it); survivors whose near-dup lives in another cell are the
     * documented recall miss.
     */
-  def semDedup(emb: DataFrame, nlist: Int, iters: Int, tau: Double,
-               idCol: String = "vec_id",
-               vecCol: String = "embedding"): DataFrame = {
+  def semDedup(emb: DataFrame, nlist: Int, iters: Int, tau: Double): DataFrame = {
     val e = spread(emb)
-    val m = assigned(e, nlist, iters, idCol, vecCol)
-    val pairs = cellPairs(m, tau, idCol, vecCol)
+    val m = assigned(e, nlist, iters)
+    val pairs = cellPairs(m, tau)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    val cc = Dedup.connectedComponents(e.select(col(idCol)), idCol, pairs)
-    m.select(col(idCol), col("cell"))
-      .join(cc, idCol)
-      .select(col(idCol), col("cell"), col("canonical_id"),
-        (col(idCol) === col("canonical_id")).as("keep"))
+    val cc = Dedup.connectedComponents(e.select(col("vec_id")), "vec_id", pairs)
+    m.select(col("vec_id"), col("cell"))
+      .join(cc, "vec_id")
+      .select(col("vec_id"), col("cell"), col("canonical_id"),
+        (col("vec_id") === col("canonical_id")).as("keep"))
   }
 }

@@ -26,40 +26,26 @@ import org.apache.spark.sql.functions._
 object SketchMart {
 
   /** Build (overwrite) the daily sketch mart: (day, mins array). Written
-    * day-PARTITIONED — the same layout [[upsertDaily]]/[[mergeDaily]]
-    * maintain, so a full build followed by incremental maintenance is
-    * one directory structure (a flat build would leave root-level files
-    * the dynamic partition overwrite never replaces: conflicting leaf
-    * depths or double-counted days on the next read). */
+    * day-PARTITIONED — the same layout [[mergeDaily]] maintains, so a
+    * full build followed by incremental maintenance is one directory
+    * structure (a flat build would leave root-level files the partition
+    * replace never replaces: conflicting leaf depths or double-counted
+    * days on the next read). */
   def buildDaily(events: DataFrame, dir: String, k: Int,
                  hash: Column, day: Column): Unit =
     events.groupBy(day.as("day"))
       .agg(call_function("graft_kmv_mins", hash, lit(k)).as("mins"))
       .write.mode("overwrite").partitionBy("day").parquet(dir)
 
-  /** Incremental maintenance: sketch ONLY the days present in `batch` and
-    * dynamic-overwrite exactly those day partitions — the rest of the
-    * mart's files are never read or rewritten. Correct under the same
-    * del-ins contract as the warehouse loads (a batch carries ALL of its
-    * days' rows); at 100 TB this is the difference between one day's scan
-    * per load and a full-history rebuild.
-    */
-  def upsertDaily(batch: DataFrame, dir: String, k: Int,
-                  hash: Column, day: Column): Unit =
-    batch.groupBy(day.as("day"))
-      .agg(call_function("graft_kmv_mins", hash, lit(k)).as("mins"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("day").parquet(dir)
-
   /** MERGE a batch into the daily mart: sketch the batch's rows, combine
     * with each touched day's EXISTING sketch (union + sort + re-slice —
     * the exact merge the soundness argument covers), replace only those
-    * day partitions. Unlike [[upsertDaily]] this does not
-    * assume the batch carries a whole day, so it is the right fold for
-    * STREAMING maintenance (foreachBatch): KMV merge is associative,
-    * commutative, and idempotent (set union), so any micro-batch slicing
-    * — and any redelivery — converges to the same mart.
+    * day partitions; the rest of the mart's files are never read or
+    * rewritten. It does not assume the batch carries a whole day, so it
+    * is the right fold for STREAMING maintenance (foreachBatch): KMV
+    * merge is associative, commutative, and idempotent (set union), so
+    * any micro-batch slicing — and any redelivery — converges to the
+    * same mart.
     */
   def mergeDaily(batch: DataFrame, dir: String, k: Int,
                  hash: Column, day: Column): Unit = Pins.scope {
@@ -238,14 +224,13 @@ object SketchMart {
       .agg(count(lit(1)).as("n"))
       .write.mode("overwrite").partitionBy("day").parquet(dir)
 
-  /** Estimate each probe key's occurrence count over the mart days that
-    * pass `dayFilter`: merge counters by addition, probe min over rows.
-    * Probes that hash to counters no day ever touched read as 0.
+  /** Estimate each probe key's occurrence count over the mart's days:
+    * merge counters by addition, probe min over rows. Probes that hash to
+    * counters no day ever touched read as 0.
     */
   def cmEstimates(spark: SparkSession, dir: String, d: Int, w: Int,
-                  probes: DataFrame, probeKey: String,
-                  dayFilter: Column = lit(true)): DataFrame = {
-    val counters = Parquet.read(spark, dir).filter(dayFilter)
+                  probes: DataFrame, probeKey: String): DataFrame = {
+    val counters = Parquet.read(spark, dir)
       .groupBy("r", "c").agg(sum("n").as("n"))
     val rc = probes.select(col(probeKey),
         explode(array((0 until d).map(r =>

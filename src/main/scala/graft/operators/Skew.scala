@@ -26,24 +26,17 @@ object Skew {
   def saltColumn(cols: Seq[Column], salts: Int): Column =
     pmod(xxhash64(cols: _*), lit(salts))
 
+  /** Inner join only: the BUILD side is replicated salts times, so a
+    * join type that emits unmatched build rows would emit each of them
+    * salts times. */
   def saltedJoin(facts: DataFrame, build: DataFrame, keys: Seq[String],
-                 salts: Int, joinType: String = "inner",
-                 factSaltSource: Seq[String] = Nil): DataFrame = {
+                 salts: Int, factSaltSource: Seq[String] = Nil): DataFrame = {
     require(salts > 0, "salts must be positive")
-    // the BUILD side is replicated salts times, so any join type that
-    // emits unmatched build rows (right/full outer) would emit each of
-    // them salts times — an inflation the unsalted join this operator
-    // must equal never produces; fact-side-preserving types are safe
-    // (the fact side is salted, not replicated)
-    require(Set("inner", "left", "leftouter", "leftsemi", "leftanti")
-        .contains(joinType.toLowerCase.replace("_", "")),
-      s"saltedJoin cannot preserve unmatched BUILD rows (joinType=" +
-        s"$joinType): each would surface once per salt replica")
     val saltSrc = if (factSaltSource.nonEmpty) factSaltSource else facts.columns.toSeq
     val salted = facts.withColumn("__salt", saltColumn(saltSrc.map(facts(_)), salts))
     val replicated = build.withColumn("__salt",
       explode(sequence(lit(0L), lit((salts - 1).toLong))))
-    salted.join(replicated, keys :+ "__salt", joinType).drop("__salt")
+    salted.join(replicated, keys :+ "__salt", "inner").drop("__salt")
   }
 
   /** Bloom semi-join reduction: shrink the FACT side before the shuffle
@@ -69,15 +62,9 @@ object Skew {
 
   def bloomReduceJoin(fact: DataFrame, dim: DataFrame,
                       factKey: String, dimKey: String,
-                      m: Int, k: Int, joinType: String = "inner"): DataFrame = {
-    // the bloom prefilter DROPS fact rows that cannot match — exactly
-    // what a fact-preserving outer join must keep (null-padded), so the
-    // equals-the-plain-join guarantee only holds for join types that
-    // discard unmatched fact rows anyway
-    require(Set("inner", "leftsemi", "right", "rightouter")
-        .contains(joinType.toLowerCase.replace("_", "")),
-      s"bloomReduceJoin drops non-matching FACT rows before the join " +
-        s"(joinType=$joinType would need them null-padded)")
+                      m: Int, k: Int): DataFrame = {
+    // inner only: the bloom prefilter DROPS fact rows that cannot match,
+    // exactly what a fact-preserving outer join must keep (null-padded)
     val bits = dim
       .select(explode(array((0 until k).map(i =>
         bloomJoinBit(col(dimKey), i, m)): _*)).as("__bit"))
@@ -86,6 +73,6 @@ object Skew {
       f.join(broadcast(bits), bloomJoinBit(col(factKey), i, m) === col("__bit"),
         "left_semi")
     }
-    reduced.join(dim, reduced(factKey) === dim(dimKey), joinType)
+    reduced.join(dim, reduced(factKey) === dim(dimKey), "inner")
   }
 }

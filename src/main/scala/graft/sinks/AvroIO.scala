@@ -39,14 +39,14 @@ object AvroIO {
 
   private val DeflateLevel = 6
 
-  def avroSchemaFor(schema: StructType, recordName: String = "GraftRow"): Schema = {
+  def avroSchemaFor(schema: StructType): Schema = {
     val fields = schema.fields.map { f =>
-      val base = avroTypeFor(f.dataType, s"${recordName}_${f.name}")
+      val base = avroTypeFor(f.dataType, s"GraftRow_${f.name}")
       val t = if (f.nullable) Schema.createUnion(
         java.util.Arrays.asList(Schema.create(Schema.Type.NULL), base)) else base
       new Schema.Field(f.name, t, null, if (f.nullable) Schema.Field.NULL_DEFAULT_VALUE else null)
     }
-    val rec = Schema.createRecord(recordName, null, "graft", false)
+    val rec = Schema.createRecord("GraftRow", null, "graft", false)
     rec.setFields(java.util.Arrays.asList(fields: _*))
     rec
   }

@@ -87,15 +87,13 @@ object Sinks {
 
   /** Bucketed catalog table — the vanilla-Spark analog of the reference's
     * clustering declarations (reference airflow_variables_prod.json cluster
-    * fields): co-partitioned, co-sorted storage so repeated joins/aggs on
-    * the bucket key run with NO exchange and NO sort. At 100 TB this turns
+    * fields): co-partitioned storage so repeated joins/aggs on the bucket
+    * key run with NO exchange. At 100 TB this turns
     * the nightly fact-to-fact joins from full shuffles into local merges.
     */
   def writeBucketed(df: DataFrame, table: String, buckets: Int,
-                    bucketCols: Seq[String], sortCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite").format("parquet")
+                    bucketCols: Seq[String]): Unit =
+    df.write.mode("overwrite").format("parquet")
       .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
       .saveAsTable(table)
-  }
 }

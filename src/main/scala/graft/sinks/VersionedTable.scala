@@ -523,12 +523,12 @@ object VersionedTable {
   def datasetRefresh(spark: SparkSession, srcRoot: String, dstRoot: String,
                      suffix: String = "",
                      asOfMillis: Option[Long] = None,
-                     excludePattern: String = "_.*bkp_[0-9]{8}",
                      views: Seq[String] = Seq.empty): DataFrame = {
     import spark.implicits._
     val f = fs(spark, srcRoot)
     val srcPath = new Path(srcRoot)
-    val exclude = excludePattern.r
+    // the reference's backup-table skip rule
+    val exclude = "_.*bkp_[0-9]{8}".r
     val tableRows: Seq[(String, String)] =
       if (!f.exists(srcPath)) Seq(("missing_dataset", srcPath.getName))
       else {

@@ -48,13 +48,4 @@ object SchemaRegistry {
     val dt = if (mode == "REPEATED") ArrayType(base, containsNull = true) else base
     StructField(name, dt, nullable = mode != "REQUIRED" && mode != "REPEATED")
   }
-
-  /** Lineage triple appended to every ingested table (SURVEY §1.1). */
-  val lineageFields: Seq[StructField] = Seq(
-    StructField("batch_id", StringType),
-    StructField("batch_run_date", TimestampNTZType),
-    StructField("batch_insert_ts", TimestampType))
-
-  def withLineage(s: StructType): StructType =
-    StructType(s.fields.toSeq ++ lineageFields)
 }

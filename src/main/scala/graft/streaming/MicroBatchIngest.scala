@@ -128,18 +128,17 @@ object MicroBatchIngest {
   }
 
   /** Watermarked stream-stream interval join: attach to each purchase the
-    * same user's clicks from the preceding `windowSeconds` — last-touch
+    * same user's clicks from the preceding 30 minutes — last-touch
     * attribution, the canonical TWO-SIDED streaming state shape (every
     * prior stateful op here keeps state on one side only). The range
     * predicate plus both watermarks is what lets Spark garbage-collect
-    * both join buffers: a click older than `watermark + windowSeconds`
-    * can never match a future purchase, so state stays bounded at any
-    * stream length — an unconstrained stream-stream join would buffer
-    * forever.
+    * both join buffers: a click older than the 30-minute watermark plus
+    * the 30-minute window can never match a future purchase, so state
+    * stays bounded at any stream length — an unconstrained stream-stream
+    * join would buffer forever.
     */
-  def streamStreamAttribution(purchases: DataFrame, clicks: DataFrame,
-                              windowSeconds: Long = 1800L,
-                              watermark: String = "30 minutes"): DataFrame = {
+  def streamStreamAttribution(purchases: DataFrame, clicks: DataFrame): DataFrame = {
+    val watermark = "30 minutes"
     val (p0, pNtz) = toEventTime(
       purchases.select(col("event_id").as("p_id"), col("ts").as("p_ts"),
         col("user_id").as("p_user")),
@@ -152,7 +151,7 @@ object MicroBatchIngest {
     val c = c0.withWatermark("c_ts", watermark)
     val joined = p.join(c,
       col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $windowSeconds SECONDS") &&
+        col("c_ts") >= col("p_ts") - expr("INTERVAL 1800 SECONDS") &&
         col("c_ts") <= col("p_ts"))
       .select(col("p_user").as("user_id"), col("p_id"), col("c_id"),
         col("p_ts"), col("c_ts"))
@@ -163,20 +162,16 @@ object MicroBatchIngest {
     * the reference's 10-minute batch stats table records per run
     * (reference dags/stellar_etl_airflow/build_batch_stats.py:9-43), kept
     * incremental here by watermarked state instead of full recompute.
+    * 10-minute windows under a 30-minute watermark; sums the `value` column.
     */
-  def windowedCounts(events: DataFrame, tsCol: String, keyCol: String,
-                     windowLen: String = "10 minutes",
-                     watermark: String = "30 minutes",
-                     valueCol: String = "value"): DataFrame = {
+  def windowedCounts(events: DataFrame, tsCol: String, keyCol: String): DataFrame = {
     // output window bounds stay TIMESTAMP even for NTZ input: the struct is
     // a derived bucket label, not the caller's column
     val (adapted, _) = toEventTime(events, Seq(tsCol))
     adapted
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLen), col(keyCol))
-      // the summed column is a declared parameter, not an undeclared
-      // 'value' requirement a generic (tsCol, keyCol) signature hides
-      .agg(count(lit(1)).as("n"), sum(col(valueCol)).as("value_sum"))
+      .withWatermark(tsCol, "30 minutes")
+      .groupBy(window(col(tsCol), "10 minutes"), col(keyCol))
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("value_sum"))
   }
 
   /** Streaming exact dedup: drop redelivered events by id, with state
@@ -186,12 +181,11 @@ object MicroBatchIngest {
     * it by event time is what keeps the state store finite at 100 TB/day —
     * dropDuplicates without a watermark would grow state forever.
     */
-  def streamingDedup(events: DataFrame, tsCol: String, idCols: Seq[String],
-                     watermark: String = "30 minutes"): DataFrame = {
+  def streamingDedup(events: DataFrame, tsCol: String, idCols: Seq[String]): DataFrame = {
     val (adapted, ntz) = toEventTime(events, Seq(tsCol))
     fromEventTime(
       adapted
-        .withWatermark(tsCol, watermark)
+        .withWatermark(tsCol, "30 minutes")
         .dropDuplicatesWithinWatermark(idCols),
       ntz)
   }
@@ -252,28 +246,6 @@ object MicroBatchIngest {
               math.max(open.map(_.end_ts.getTime + gapMs).min, wm + 1L))
           }
           closed.iterator
-      }
-  }
-
-  /** Custom keyed state across micro-batches: running per-user totals via
-    * mapGroupsWithState. Each trigger folds its new events into the user's
-    * persisted state and emits the updated row — the Structured Streaming
-    * form of an incrementally-maintained per-entity aggregate (state lives
-    * in the checkpointed state store, sized by distinct keys, not history).
-    */
-  def statefulUserTotals(events: org.apache.spark.sql.Dataset[graft.typed.Event])
-  : org.apache.spark.sql.Dataset[graft.typed.UserAgg] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-        (uid: Long, it: Iterator[graft.typed.Event], state: GroupState[graft.typed.UserAgg]) =>
-          var n = state.getOption.map(_.n).getOrElse(0L)
-          var total = state.getOption.map(_.total).getOrElse(0.0)
-          it.foreach { e => n += 1; total += e.value.getOrElse(0.0) }
-          val next = graft.typed.UserAgg(uid, n, total)
-          state.update(next)
-          next
       }
   }
 

@@ -80,8 +80,10 @@ class TextPipelineSpec extends SparkSpec {
     import spark.implicits._
     val fixture = Seq((1L, "alpha beta gamma"), (2L, "solo"), (3L, ""))
       .toDF("doc_id", "text")
+    // the t_bigram_lm / t_lm_filter path: tokenize once, pair the tokens
+    val bigrams = TextFunctions.bigramsFromTokens(TextFunctions.tokens(lower(col("text"))))
     val counts = fixture.select(col("doc_id"),
-      size(TextFunctions.bigrams(col("text"))).as("nb"),
+      size(bigrams).as("nb"),
       size(TextFunctions.tokens(lower(col("text")))).as("nt"))
       .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2))).toMap
     assert(counts(1L) == ((2, 3)))
@@ -89,7 +91,7 @@ class TextPipelineSpec extends SparkSpec {
     assert(counts(3L) == ((0, 0)))
     // order preserved: first bigram of doc 1 is (alpha, beta)
     val first = fixture.filter(col("doc_id") === 1)
-      .select(element_at(TextFunctions.bigrams(col("text")), 1)).head().getStruct(0)
+      .select(element_at(bigrams, 1)).head().getStruct(0)
     assert(first.getString(0) == "alpha" && first.getString(1) == "beta")
   }
 

@@ -90,42 +90,15 @@ class AlertingSpec extends SparkSpec {
   }
 
   test("runReport run-order guard: an unpadded id scheme (run-9 vs " +
-      "run-10) fails loudly; an explicit runOrderCol resolves it") {
-    val hist = Seq(
-      ("run-9", 9L, "volume", "fail", 1L), ("run-10", 10L, "volume", "pass", 0L))
-      .toDF("run_id", "run_seq", "check_key", "status", "violations")
+      "run-10) fails loudly") {
+    val hist = Seq(("run-9", "volume", "fail", 1L), ("run-10", "volume", "pass", 0L))
+      .toDF("run_id", "check_key", "status", "violations")
     val e = intercept[Exception] {
-      Alerting.runReport(hist.drop("run_seq")).collect()
+      Alerting.runReport(hist).collect()
     }
     def chain(t: Throwable): String =
       if (t == null) "" else t.getMessage + " | " + chain(t.getCause)
     assert(chain(e).contains("order consistently"))
-    // keyed on the numeric sequence: run-10 is latest → pass
-    val rep = Alerting.runReport(hist, Some("run_seq")).collect()
-      .map(r => r.getString(0) -> r).toMap
-    assert(rep("volume").getString(5) == "pass")
-    assert(rep("volume").getString(4) == "run-9")
-  }
-
-  test("runReport ambiguousAsFlag: the inconsistent check quarantines " +
-      "per row (order_ambiguous + null last_status) while every other " +
-      "check's report row survives") {
-    val hist = Seq(
-      ("run-9", "volume", "fail", 1L), ("run-10", "volume", "pass", 0L),
-      ("run-1", "fk", "pass", 0L), ("run-2", "fk", "fail", 3L))
-      .toDF("run_id", "check_key", "status", "violations")
-    val rep = Alerting.runReport(hist, ambiguousAsFlag = true).collect()
-      .map(r => r.getString(0) -> r).toMap
-    val vol = rep("volume")
-    assert(vol.getBoolean(vol.fieldIndex("order_ambiguous")))
-    assert(vol.isNullAt(vol.fieldIndex("last_status")))
-    // first_failed_run rides the same ambiguous ordering — quarantined too
-    assert(vol.isNullAt(vol.fieldIndex("first_failed_run")))
-    val fk = rep("fk")
-    assert(!fk.getBoolean(fk.fieldIndex("order_ambiguous")))
-    assert(fk.getString(fk.fieldIndex("last_status")) == "fail")
-    assert(fk.getString(fk.fieldIndex("first_failed_run")) == "run-2")
-    assert(fk.getLong(fk.fieldIndex("n_runs")) == 2L)
   }
 
   test("runReport: totals, dyadic rate, first failing run, latest " +

@@ -159,13 +159,4 @@ class AsOfJoinSpec extends SparkSpec {
       s"bin replication must become an equi join on __b:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"no cartesian:\n$plan")
   }
-
-  test("globalLatest avoids a single-partition global window") {
-    val log = (1 to 1000).map(i => (i.toLong, ts("2024-01-01 00:00:00"), i.toDouble))
-      .toDF("id", "t", "v")
-    val latest = AsOfJoin.globalLatest(log, Seq("v"))
-    assert(latest.select("id").as[Long].head() == 1000L)
-    val plan = latest.queryExecution.executedPlan.toString
-    assert(plan.contains("TakeOrderedAndProject"), s"expected top-k operator in:\n$plan")
-  }
 }

@@ -11,6 +11,10 @@ class DataSkippingSpec extends SparkSpec {
   private def scratch(tag: String) =
     graft.core.Scratch.dir(tag, "dataskipspec")
 
+  /** The surviving files of a pruned manifest, collected for assertions. */
+  private def files(rows: org.apache.spark.sql.DataFrame): Seq[String] =
+    rows.select("file").collect().map(_.getString(0)).toSeq
+
   test("zValue interleaves bits like the reference Morton code") {
     def morton(a: Long, b: Long, bits: Int): Long =
       (0 until bits).map(i =>
@@ -38,7 +42,7 @@ class DataSkippingSpec extends SparkSpec {
       col("value").between(5.0, 200.0))
     assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
     // and it actually skipped files
-    assert(DataSkipping.pruneFiles(mf, boxes).size < nFiles)
+    assert(files(DataSkipping.prunedManifestRows(mf, boxes)).size < nFiles)
   }
 
   test("an empty candidate set still returns a correctly-typed empty result") {
@@ -62,8 +66,8 @@ class DataSkippingSpec extends SparkSpec {
     // a value-only predicate: the user_id-sorted layout cannot prune at
     // all (every file spans the full value range), z-order can
     val valueBox = Seq[(String, Any, Any)](("value", 0.0, 30.0))
-    val linHit = DataSkipping.pruneFiles(linMf, valueBox).size
-    val zHit = DataSkipping.pruneFiles(zMf, valueBox).size
+    val linHit = files(DataSkipping.prunedManifestRows(linMf, valueBox)).size
+    val zHit = files(DataSkipping.prunedManifestRows(zMf, valueBox)).size
     assert(zHit < linHit,
       s"z-order should prune a value-only box: z=$zHit vs linear=$linHit")
     // both layouts return identical rows for the same 2-d box
@@ -200,9 +204,9 @@ class DataSkippingSpec extends SparkSpec {
     // manifest keeps every file (each spans the whole event_id domain),
     // bloom narrows to (almost) just the containing file
     val probe = Seq("17")
-    val zoneHit = DataSkipping.pruneFiles(zoneMf,
-      Seq(("event_id", 17L, 17L))).size
-    val bloomHit = DataSkipping.bloomPruneFiles(bloomMf, probe, m, k).size
+    val zoneHit = files(DataSkipping.prunedManifestRows(zoneMf,
+      Seq(("event_id", 17L, 17L)))).size
+    val bloomHit = files(DataSkipping.bloomPrunedManifestRows(bloomMf, probe, m, k)).size
     assert(bloomHit < zoneHit,
       s"bloom ($bloomHit) should out-prune event_id zone maps ($zoneHit)")
     assert(bloomHit <= 1 + nFiles / 4,

@@ -2,8 +2,10 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.sources.Tables
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Multimodal plumbing — frame sampling, REAL javax.imageio decode /
   * resample / dHash — and the sort-free oldest-per-key aggregate.
@@ -11,6 +13,53 @@ import org.apache.spark.sql.functions._
 class MultimodalSpec extends SparkSpec {
 
   import spark.implicits._
+
+  /** REAL resize: decode the payload, area-average resample to
+    * `targetW`x`targetH` (the same exact integer arithmetic as
+    * `decodeGrid` — a resized image IS the decode grid re-encoded), and
+    * re-encode as grayscale PNG. Undecodable payloads keep their row with
+    * ok = false and a null payload. */
+  private def resizeImage(media: DataFrame, idCol: String, payloadCol: String,
+                          targetW: Int, targetH: Int): DataFrame = {
+    val grids = Multimodal.decodeGrid(media, idCol, payloadCol, targetW, targetH)
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("ok", BooleanType),
+      StructField("orig_w", LongType),
+      StructField("orig_h", LongType),
+      StructField("payload", BinaryType)))
+    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
+    grids.mapPartitions { rows =>
+      rows.map { r =>
+        if (!r.getBoolean(1)) Row(r.getLong(0), false, 0L, 0L, null)
+        else {
+          // the array column surfaces as a primitive long[] here
+          val grid: Array[Long] = r.get(4) match {
+            case a: Array[Long] => a
+            case s: scala.collection.Seq[_] =>
+              s.asInstanceOf[scala.collection.Seq[Long]].toArray
+          }
+          Row(r.getLong(0), true, r.getLong(2), r.getLong(3),
+            Multimodal.pngBytes(targetW, targetH)((x, y) => grid(y * targetW + x).toInt))
+        }
+      }
+    }(enc)
+  }
+
+  /** Encode one MJPEG AVI: each frame law is JPEG-encoded by
+    * javax.imageio and wrapped in '00dc' chunks — the REAL lossy-codec
+    * fixture (checked by Hamming tolerance, not an exact oracle). */
+  private def aviMjpegBytes(w: Int, h: Int, nFrames: Int, fps: Int)
+                           (f: (Int, Int, Int) => Int): Array[Byte] =
+    Multimodal.aviContainer(w, h, fps, Multimodal.FOURCC_MJPG, (0 until nFrames).map { t =>
+      val img = new java.awt.image.BufferedImage(
+        w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+      val raster = img.getRaster
+      for (y <- 0 until h; x <- 0 until w) raster.setSample(x, y, 0, f(t, x, y) & 0xff)
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "jpg", bos)
+      bos.toByteArray
+    })
 
   test("sampleFrames: strided frames, empty payload keeps one empty frame") {
     val docs = Seq(
@@ -69,7 +118,7 @@ class MultimodalSpec extends SparkSpec {
     // size is byte-identical here: one deterministic PNG writer on
     // identical pixels reproduces the file, which is itself a roundtrip
     // exactness proof but not a dedup fixture.)
-    val recompressed = Multimodal.resizeImage(
+    val recompressed = resizeImage(
       Seq((1L, a)).toDF("doc_id", "payload"), "doc_id", "payload",
       targetW = 18, targetH = 16).collect()(0).getAs[Array[Byte]]("payload")
     val other = Multimodal.pngBytes(36, 32)((x, y) => ((x * x + 3 * y * y) % 251))
@@ -92,10 +141,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("imageDupPairs: planted shifted copies pair within the Hamming " +
       "budget across distinct byte payloads; hot monochrome bands are skipped") {
-    // scenes far apart (sceneOffset spreads the law's constant term) so
-    // cross-scene coincidences don't obscure the planted pairs
-    val base = Multimodal.synthPngTable(spark, n = 6, w = 32, h = 32,
-      sceneOffset = 0L)
+    val base = Multimodal.synthPngTable(spark, n = 6, w = 32, h = 32)
     val copies = Multimodal.synthPngTable(spark, n = 6, w = 32, h = 32,
       idOffset = 100L, xShift = 1)
     val media = base.unionByName(copies)
@@ -141,7 +187,7 @@ class MultimodalSpec extends SparkSpec {
   test("resizeImage: real decode + area-average resample + PNG re-encode; " +
       "the resized payload decodes back to exactly the decodeGrid cells") {
     val media = Multimodal.synthPngTable(spark, n = 2, w = 32, h = 32)
-    val resized = Multimodal.resizeImage(media, "doc_id", "payload",
+    val resized = resizeImage(media, "doc_id", "payload",
       targetW = 8, targetH = 8)
     val rows = resized.orderBy("doc_id").collect()
     assert(rows.forall(r => r.getBoolean(1) && r.getLong(2) == 32L))
@@ -153,7 +199,7 @@ class MultimodalSpec extends SparkSpec {
       .orderBy("doc_id").collect().map(_.getSeq[Long](4))
     assert(back.toSeq == direct.toSeq)
     // undecodable input keeps an ok=false row with a null payload
-    val bad = Multimodal.resizeImage(
+    val bad = resizeImage(
       Seq((7L, Array[Byte](9, 9))).toDF("doc_id", "payload"),
       "doc_id", "payload", 8, 8).collect()(0)
     assert(!bad.getBoolean(1) && bad.get(4) == null)
@@ -397,7 +443,7 @@ class MultimodalSpec extends SparkSpec {
       "JPEG codec — right shape, and each frame's dHash lands near the " +
       "lossless DIB hash of the same scene") {
     val (w, h, nF) = (64, 48, 3)
-    val media = Seq((7L, Multimodal.aviMjpegBytes(w, h, nF, 5)(
+    val media = Seq((7L, aviMjpegBytes(w, h, nF, 5)(
       (t, x, y) => vLaw(7L, 0, w)(t, x, y).toInt))).toDF("doc_id", "payload")
     val out = Multimodal.decodeVideo(media, "doc_id", "payload", gw = 9, gh = 8)
       .orderBy("frame_idx").collect()

@@ -49,15 +49,6 @@ class SamplingSpec extends SparkSpec {
     assert(math.abs(kept("b") / 5000.0 - 0.05) < 0.02)
   }
 
-  test("deterministicShuffle reproduces with the same salt, differs across salts") {
-    val df = (1L to 500L).toDF("id")
-    def order(salt: String) =
-      Sampling.deterministicShuffle(df, "id", salt).select("id").collect().map(_.getLong(0)).toSeq
-    assert(order("epoch1") == order("epoch1"))
-    assert(order("epoch1") != order("epoch2"))
-    assert(order("epoch1").sorted == (1L to 500L))
-  }
-
   test("kFold: folds partition the corpus; every rotation's test is its " +
       "bucket exactly; assignments shared across tables by id") {
     val df = (1L to 1000L).toDF("id")
@@ -131,15 +122,6 @@ class SamplingSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(p.contains("WindowGroupLimit") && p.contains("Partial"),
       s"expected partial WindowGroupLimit in:\n$p")
-  }
-
-  test("shuffledPartitions: one hash exchange, no global sort, content preserved") {
-    val df = (1L to 5000L).toDF("id")
-    val out = Sampling.shuffledPartitions(df, "id", "epoch1", n = 8)
-    val plan = out.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    assert(!plan.contains("rangepartitioning"), s"global sort leaked into:\n$plan")
-    assert(out.rdd.getNumPartitions == 8)
-    assert(out.select(sum("id")).head.getLong(0) == 5000L * 5001 / 2)
   }
 
   test("upsample: epoch copies, sub-1 weights match mixtureSample, no shuffle") {

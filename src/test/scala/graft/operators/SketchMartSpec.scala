@@ -106,8 +106,8 @@ class SketchMartSpec extends SparkSpec {
       .collect().map(_.getDate(0))
     assert(days.length >= 2)
     val last = days.last
-    // seed with all but the last day, then upsert the last day's batch
-    SketchMart.upsertDaily(ev.filter(col("day") < lit(last)), dir, 16,
+    // seed with all but the last day, then merge the last day's batch
+    SketchMart.mergeDaily(ev.filter(col("day") < lit(last)), dir, 16,
       col("h"), col("day"))
     def fileStates(): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -116,7 +116,7 @@ class SketchMartSpec extends SparkSpec {
         .map(f => f.getPath -> f.lastModified()).toMap
     }
     val before = fileStates()
-    SketchMart.upsertDaily(ev.filter(col("day") === lit(last)), dir, 16,
+    SketchMart.mergeDaily(ev.filter(col("day") === lit(last)), dir, 16,
       col("h"), col("day"))
     val after = fileStates()
     // every pre-existing file survives bit-untouched
@@ -212,10 +212,10 @@ class SketchMartSpec extends SparkSpec {
     joined.foreach { case (u, e, t) =>
       assert(e >= t, s"CM undercounted user $u: est $e < true $t") }
 
-    // a restricted day range must equal a CM built over just those days
+    // a restricted day range (one day partition) must equal a CM built
+    // over just that day
     val someDay = ev.select(to_date(col("ts")).as("d0")).orderBy("d0").head.getDate(0)
-    val ranged = SketchMart.cmEstimates(spark, dir, d, w, probes, "user_id",
-      col("day") === lit(someDay))
+    val ranged = SketchMart.cmEstimates(spark, s"$dir/day=$someDay", d, w, probes, "user_id")
     val dir2 = scratch("cm1day")
     SketchMart.buildCmDaily(ev.filter(to_date(col("ts")) === lit(someDay)),
       dir2, d, w, col("user_id"), to_date(col("ts")))

@@ -31,8 +31,8 @@ class SkewAndBucketSpec extends SparkSpec {
       .select(col("l_orderkey"), col("l_quantity"))
     val o = Tables.load(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
-    Sinks.writeBucketed(li, "li_b", 8, Seq("l_orderkey"), Seq("l_orderkey"))
-    Sinks.writeBucketed(o, "o_b", 8, Seq("o_orderkey"), Seq("o_orderkey"))
+    Sinks.writeBucketed(li, "li_b", 8, Seq("l_orderkey"))
+    Sinks.writeBucketed(o, "o_b", 8, Seq("o_orderkey"))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

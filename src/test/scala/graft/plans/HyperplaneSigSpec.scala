@@ -3,6 +3,7 @@ package graft.plans
 import graft.SparkSpec
 import graft.functions.VectorFunctions
 import graft.sources.Tables
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class HyperplaneSigSpec extends SparkSpec {
@@ -14,11 +15,24 @@ class HyperplaneSigSpec extends SparkSpec {
     GraftFunctions.register(spark)
   }
 
+  /** Reference formulation from builtin functions only: the native
+    * expression must equal it bit for bit. */
+  private def hyperplaneSigComposable(vec: Column, planes: Int, dims: Int): Column = {
+    val bits = (0 until planes).map { p =>
+      val terms = (0 until dims).map { d =>
+        vec.getItem(d).cast("double") * lit(VectorFunctions.planeWeight(p, d))
+      }
+      val proj = terms.reduce(_ + _)
+      when(proj >= 0, lit(1)).otherwise(lit(0)).cast("string")
+    }
+    concat_ws("", bits: _*)
+  }
+
   test("native signature is bit-identical to the composable formulation") {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val both = emb.select(
       VectorFunctions.hyperplaneSig(col("embedding"), 4, 64).as("native"),
-      VectorFunctions.hyperplaneSigComposable(col("embedding"), 4, 64).as("fold"))
+      hyperplaneSigComposable(col("embedding"), 4, 64).as("fold"))
     assert(both.filter(col("native") =!= col("fold")).count() == 0)
     assert(both.filter(length(col("native")) =!= 4).count() == 0)
   }

@@ -1,18 +1,40 @@
 package graft.plans
 
 import graft.SparkSpec
+import graft.functions.TextFunctions
 import graft.operators.Dedup
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class ShingleArraySpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** Reference relational formulation from builtin operators only:
+    * posexplode the tokens, then window-lead the next n-1 of each doc. */
+  private def shingleRowsWindowed(docs: DataFrame, idCol: String, textCol: String,
+                                  n: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("id").orderBy("pos")
+    val toks = Dedup.spread(docs)
+      .select(col(idCol).as("id"),
+        posexplode_outer(TextFunctions.tokens(lower(col(textCol)))).as(Seq("pos", "tok")))
+    val parts = (0 until n).map(j => if (j == 0) col("tok") else lead(col("tok"), j).over(w))
+    toks
+      .select(col("id"), col("pos"),
+        concat_ws(" ", parts: _*).as("shingle"),
+        parts.last.isNotNull.as("full"))
+      // full shingles only; position 0 also fires for short/empty docs so
+      // every doc keeps at least one (possibly partial or "") shingle
+      .filter(coalesce(col("pos"), lit(0)) === 0 || col("full"))
+      .select(col("id"), col("shingle"))
+  }
+
   test("native shingles equal the relational window formulation on testdata") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val a = Dedup.shingleRows(docs, "doc_id", "text", 3)
       .groupBy("id", "shingle").count()
-    val b = Dedup.shingleRowsWindowed(docs, "doc_id", "text", 3)
+    val b = shingleRowsWindowed(docs, "doc_id", "text", 3)
       .groupBy("id", "shingle").count()
     assert(a.join(b, Seq("id", "shingle", "count"), "full_outer")
       .filter(col("count").isNull).isEmpty,
@@ -27,7 +49,7 @@ class ShingleArraySpec extends SparkSpec {
       (7L, "x  y   z")).toDF("doc_id", "text")
     val native = Dedup.shingleRows(docs, "doc_id", "text", 3)
       .orderBy("id", "shingle").as[(Long, String)].collect().toSeq
-    val windowed = Dedup.shingleRowsWindowed(docs, "doc_id", "text", 3)
+    val windowed = shingleRowsWindowed(docs, "doc_id", "text", 3)
       .orderBy("id", "shingle").as[(Long, String)].collect().toSeq
     assert(native == windowed, s"\nnative:   $native\nwindowed: $windowed")
     // empty and whitespace-only docs keep exactly one "" shingle

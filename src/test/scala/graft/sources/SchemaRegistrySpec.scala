@@ -44,12 +44,4 @@ class SchemaRegistrySpec extends AnyFunSuite {
     assert(details("claimants").dataType ==
       ArrayType(StructType(Seq(StructField("destination", StringType))), containsNull = true))
   }
-
-  test("lineage triple appends batch_id/batch_run_date/batch_insert_ts") {
-    val s = SchemaRegistry.withLineage(SchemaRegistry.fromJson(json))
-    assert(s.fieldNames.takeRight(3).toSeq ==
-      Seq("batch_id", "batch_run_date", "batch_insert_ts"))
-    assert(s("batch_run_date").dataType == TimestampNTZType)
-    assert(s("batch_insert_ts").dataType == TimestampType)
-  }
 }
